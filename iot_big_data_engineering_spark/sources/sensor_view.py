@@ -4,10 +4,15 @@ The driver's deterministic ``events`` table stands in for the reference's
 sensor stream until a dedicated sensor fixture exists. The mapping is defined
 TWICE, deliberately kept adjacent so they cannot drift:
 
-- :func:`sensor_readings` / :func:`quality_checked` — the Spark DataFrame
-  form (what the engine actually runs);
+- ``_READINGS_SELECT`` / ``_QUALITY_WHERE`` / ``_QUALITY_SELECT`` — the
+  Spark SQL expression text that :func:`map_events` and
+  :func:`apply_quality` run as one ``selectExpr`` for the mapping, then one
+  ``where`` and one ``selectExpr`` for the quality stage (what the engine
+  actually runs, batch and streaming alike). Building the view from SQL
+  text costs a handful of driver calls, not one per ``Column`` node;
 - :data:`SENSOR_ORACLE_CTE` — the equivalent DuckDB SQL CTE prefix used by
-  every oracle query.
+  every oracle query, written directly below the Spark text so the two
+  can be diffed line by line.
 
 Mapping (events column → sensor field):
     ts → ts,  printf('VH_%05d', user_id) → vehicle_id,
@@ -28,7 +33,7 @@ Quality stage semantics (reference SensorDataProcessor.scala:141-186):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .tables import load_table
 
@@ -46,17 +51,7 @@ _ANOMALY_DEFAULT_SCORE = 0.5
 def map_events(e: DataFrame) -> DataFrame:
     """Map an events-shaped DataFrame (batch OR streaming) onto the
     canonical sensor-reading shape."""
-    return e.select(
-        F.col("ts"),
-        F.concat(
-            F.col("event_type"), F.lit("_"), (F.col("event_id") % 100).cast("string")
-        ).alias("sensor_id"),
-        F.format_string("VH_%05d", F.col("user_id")).alias("vehicle_id"),
-        F.col("event_type").alias("sensor_type"),
-        F.col("value"),
-        F.col("props").alias("measurements"),
-        F.get_json_object(F.col("props"), "$.k").cast("int").alias("k"),
-    )
+    return e.selectExpr(*_READINGS_SELECT)
 
 
 def sensor_readings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,57 +59,70 @@ def sensor_readings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return map_events(load_table(spark, sf_dir, "events"))
 
 
-def _q_int_col() -> F.Column:
-    """P2 core — integer completeness count 0..5 (reference
-    SensorDataProcessor.scala:148-154). Kept as an exact integer so that
-    aggregated quality averages are order-independent (sum of ints), then
-    normalized to [0,1] once (SURVEY §7.4.2)."""
-    terms = [
-        F.when(F.col(c).isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        for c in ["ts", "sensor_id", "vehicle_id", "sensor_type", "value"]
-    ]
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return total
-
-
-def _anomaly_score_col() -> F.Column:
-    """P4 — chained when over sensor_type-specific thresholds (reference
-    SensorDataProcessor.scala:176-183)."""
-    expr = None
-    for stype, threshold, score in _ANOMALY_RULES:
-        cond = (F.col("sensor_type") == stype) & (F.col("value") > threshold)
-        expr = F.when(cond, score) if expr is None else expr.when(cond, score)
-    expr = expr.when(
-        F.col("value") > _ANOMALY_DEFAULT_THRESHOLD, _ANOMALY_DEFAULT_SCORE
-    )
-    return expr.otherwise(F.lit(0.0))
-
-
 def apply_quality(s: DataFrame) -> DataFrame:
     """P1+P2+P3+P4 applied to a sensor-reading DataFrame (batch OR
     streaming) — the analog of table ``sensor_quality_checked``
     (reference docker/init-db.sql:5-18)."""
-    return (
-        s.filter(
-            F.col("ts").isNotNull()
-            & F.col("sensor_id").isNotNull()
-            & F.col("vehicle_id").isNotNull()
-            & F.col("sensor_type").isNotNull()
-        )
-        .withColumn("q_int", _q_int_col())
-        .withColumn("quality_score", F.col("q_int") / F.lit(5.0))
-        .withColumn("anomaly_score", _anomaly_score_col())
-        .withColumn(
-            "processing_timestamp", F.col("ts") + F.expr("INTERVAL 5 SECONDS")
-        )
-    )
+    return s.where(_QUALITY_WHERE).selectExpr(*_QUALITY_SELECT)
 
 
 def quality_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch convenience: events table → sensor mapping → quality stage."""
     return apply_quality(sensor_readings(spark, sf_dir))
+
+
+# ---------------------------------------------------------------------------
+# Spark SQL form, run by map_events / apply_quality. Every non-integer
+# literal is CAST to DOUBLE: Spark SQL parses ``5.0`` as DECIMAL, which
+# would turn quality_score into DECIMAL(17,6). quality_score reads q_int
+# as a lateral column alias, so q_int is computed once (the optimized plan
+# keeps it in its own Project, as withColumn did).
+# ---------------------------------------------------------------------------
+def _double(x: float) -> str:
+    return f"CAST({x!r} AS DOUBLE)"
+
+
+_READINGS_SELECT = (
+    "ts",
+    "concat(event_type, '_', CAST(event_id % 100 AS STRING)) AS sensor_id",
+    "format_string('VH_%05d', user_id) AS vehicle_id",
+    "event_type AS sensor_type",
+    "value",
+    "props AS measurements",
+    "CAST(get_json_object(props, '$.k') AS INT) AS k",
+)
+
+# P2 core — integer completeness count 0..5 (reference
+# SensorDataProcessor.scala:148-154). Kept as an exact integer so that
+# aggregated quality averages are order-independent (sum of ints), then
+# normalized to [0,1] once (SURVEY §7.4.2).
+_Q_INT = """((CASE WHEN ts IS NOT NULL THEN 1 ELSE 0 END)
+     + (CASE WHEN sensor_id IS NOT NULL THEN 1 ELSE 0 END)
+     + (CASE WHEN vehicle_id IS NOT NULL THEN 1 ELSE 0 END)
+     + (CASE WHEN sensor_type IS NOT NULL THEN 1 ELSE 0 END)
+     + (CASE WHEN value IS NOT NULL THEN 1 ELSE 0 END))"""
+
+# P4 — chained CASE over sensor_type-specific thresholds (reference
+# SensorDataProcessor.scala:176-183).
+_spark_anomaly_whens = "\n        ".join(
+    f"WHEN sensor_type = '{stype}' AND value > {_double(thr)} THEN {_double(score)}"
+    for stype, thr, score in _ANOMALY_RULES
+)
+
+_QUALITY_WHERE = """ts IS NOT NULL AND sensor_id IS NOT NULL
+    AND vehicle_id IS NOT NULL AND sensor_type IS NOT NULL"""
+
+_QUALITY_SELECT = (
+    "*",
+    f"{_Q_INT} AS q_int",
+    f"q_int / {_double(5.0)} AS quality_score",
+    f"""CASE
+        {_spark_anomaly_whens}
+        WHEN value > {_double(_ANOMALY_DEFAULT_THRESHOLD)} THEN {_double(_ANOMALY_DEFAULT_SCORE)}
+        ELSE {_double(0.0)}
+    END AS anomaly_score""",
+    "ts + INTERVAL 5 SECONDS AS processing_timestamp",
+)
 
 
 # ---------------------------------------------------------------------------
