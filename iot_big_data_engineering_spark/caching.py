@@ -10,9 +10,19 @@ queries to return the executor storage memory.
 
 At real scale the equivalent move is writing the intermediate to a table
 once and reading it back — the cache registry is the single-session stand-in.
+
+Operators that stage intermediate tables on local disk (state stores,
+stream inputs, index round-trips) own those files for one call only:
+:func:`scratch_dir` scopes the tree, and :func:`collect_local` detaches the
+bounded result from it before it goes.
 """
 
 from __future__ import annotations
+
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -35,3 +45,21 @@ def release_caches() -> int:
             pass  # session already stopped — nothing to release
     _TRACKED.clear()
     return n
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh local directory, removed with its contents on every exit
+    from the ``with`` block, including a raise."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def collect_local(df: DataFrame) -> DataFrame:
+    """Materialize a bounded result on the driver and return it as a local
+    frame, so it stays valid after the scratch files it was read from are
+    deleted."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)

@@ -44,7 +44,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..caching import track
+from ..caching import collect_local, scratch_dir, track
 from ..functions import text as X
 from ..functions import vectors as V
 from ..functions.rounding import fround
@@ -1381,9 +1381,6 @@ ORDER BY query_id
     doc="S9: IVF index persisted partitionBy(cell) + centroid table, reloaded in a fresh lineage — search identical",
 )
 def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     np = _np()
     corpus, q = _corpus_queries_planted(spark, sf_dir)
     corpus = track(corpus.persist())
@@ -1391,8 +1388,7 @@ def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: consumed by the partitioned write AND the build-side
     # fingerprint — one Arrow assignment pass, not two
     indexed = track(assign_cells(corpus, cent).persist())
-    tmp = tempfile.mkdtemp(prefix="iotx_s9_")
-    try:
+    with scratch_dir("iotx_s9_") as tmp:
         assign_path = os.path.join(tmp, "assignments")
         cent_path = os.path.join(tmp, "centroids")
         # cluster by cell BEFORE the partitioned write: without it every
@@ -1460,12 +1456,8 @@ def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("index_roundtrip_exact", F.lit(matches))
             .orderBy("query_id")
         )
-        # materialize the nq-row certificate BEFORE the scratch index is
-        # deleted — the plan reads the reloaded parquet lazily
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # nq rows — the plan reads the reloaded parquet lazily
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..caching import collect_local, scratch_dir, track
 from ..functions import hashing as _hashing
 from ..functions.rounding import fround
 from ..registry import register
@@ -85,6 +86,29 @@ def merge_states(*states: DataFrame) -> DataFrame:
     )
 
 
+def finalize_rollup(merged: DataFrame, rows: DataFrame) -> DataFrame:
+    """The A17 result from a merged partial state: the exact mergeable
+    columns finalized, ``unique_vehicles`` as the exact distinct count over
+    the quality ``rows`` the state summarizes, and the state's HLL estimate
+    certified against it."""
+    exact = rows.groupBy("sensor_type").agg(
+        F.countDistinct("vehicle_id").alias("exact_veh")
+    )
+    est = F.hll_sketch_estimate("veh_sketch")
+    return merged.join(exact, "sensor_type").select(
+        "sensor_type",
+        F.col("n").alias("record_count"),
+        fround(
+            F.col("sq").cast("double") / (F.lit(5.0) * F.col("n").cast("double")),
+            _R,
+        ).alias("avg_quality_score"),
+        F.col("min_ts").alias("first_reading"),
+        F.col("max_ts").alias("last_reading"),
+        F.col("exact_veh").alias("unique_vehicles"),
+        _sketch_ok(est, F.col("exact_veh")).alias("sketch_within_3rse"),
+    )
+
+
 A17_ORACLE = (
     SENSOR_ORACLE_CTE
     + f"""
@@ -112,8 +136,6 @@ def a17_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     full recompute — equality proves the maintenance algebra. The split
     bound is a one-row aggregate joined in as a broadcast (no driver
     collect, no literal baked into the plan)."""
-    from ..caching import track
-
     # the demo recomputes history state from raw rows (in production that
     # state is already materialized — only the delta branch runs daily);
     # persist the quality view so the history/delta/certificate branches
@@ -129,26 +151,7 @@ def a17_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = with_split.filter(F.col("d") == F.col("split_d"))
 
     merged = merge_states(_partial_state(history), _partial_state(delta))
-
-    exact = q.groupBy("sensor_type").agg(
-        F.countDistinct("vehicle_id").alias("exact_veh")
-    )
-    est = F.hll_sketch_estimate("veh_sketch")
-    return (
-        merged.join(exact, "sensor_type")
-        .select(
-            "sensor_type",
-            F.col("n").alias("record_count"),
-            fround(
-                F.col("sq").cast("double") / (F.lit(5.0) * F.col("n").cast("double")),
-                _R,
-            ).alias("avg_quality_score"),
-            F.col("min_ts").alias("first_reading"),
-            F.col("max_ts").alias("last_reading"),
-            F.col("exact_veh").alias("unique_vehicles"),
-            _sketch_ok(est, F.col("exact_veh")).alias("sketch_within_3rse"),
-        )
-    )
+    return finalize_rollup(merged, q)
 
 
 A18_ORACLE = (
@@ -226,14 +229,7 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical state rows — so the merged state still equals the full
     recompute the oracle performs. This hash-checks the idempotent-
     overwrite contract itself, not just the merge algebra a17 covers."""
-    import shutil
-    import tempfile
-
-    from ..caching import track
-
-    tmp = tempfile.mkdtemp(prefix="iotx_a17b_")
-    # scratch state released on every exit (matching st8/st10)
-    try:
+    with scratch_dir("iotx_a17b_") as tmp:
         state_path = os.path.join(tmp, "state")
         q = track(
             quality_checked(spark, sf_dir)
@@ -254,32 +250,8 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pid in (0, 1, 2, 1):  # period 1 re-delivered — replay under test
             delta = q.filter(F.col("period") == pid).drop("period")
             merged = maintain_rollup_state(spark, state_path, delta, pid)
-
-        exact = q.groupBy("sensor_type").agg(
-            F.countDistinct("vehicle_id").alias("exact_veh")
-        )
-        est = F.hll_sketch_estimate("veh_sketch")
-        result = (
-            merged.join(exact, "sensor_type")
-            .select(
-                "sensor_type",
-                F.col("n").alias("record_count"),
-                fround(
-                    F.col("sq").cast("double") / (F.lit(5.0) * F.col("n").cast("double")),
-                    _R,
-                ).alias("avg_quality_score"),
-                F.col("min_ts").alias("first_reading"),
-                F.col("max_ts").alias("last_reading"),
-                F.col("exact_veh").alias("unique_vehicles"),
-                _sketch_ok(est, F.col("exact_veh")).alias("sketch_within_3rse"),
-            )
-        )
-        # |sensor_type| rows — bounded; materialize so the scratch state dir
-        # can be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # |sensor_type| rows — bounded
+        return collect_local(finalize_rollup(merged, q))
 
 
 # ---------------------------------------------------------------------------
@@ -349,8 +321,6 @@ FROM qb, cal c
     doc="A21: mergeable fixed-bin histogram state — split ⊕ merge quantiles ≡ one-pass recompute",
 )
 def a21_histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import track
-
     q = track(
         quality_checked(spark, sf_dir)
         .withColumn("d", F.to_date("ts"))
@@ -541,14 +511,7 @@ def a17c_rollup_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes everything from raw rows in one pass, so the result
     only hashes green if compaction is value-transparent AND the
     post-compaction delivery merges cleanly with the compacted partition."""
-    import shutil
-    import tempfile
-
-    from ..caching import track
-
-    tmp = tempfile.mkdtemp(prefix="iotx_a17c_")
-    # scratch state released on every exit (matching st8/st10)
-    try:
+    with scratch_dir("iotx_a17c_") as tmp:
         state_path = os.path.join(tmp, "state")
         q = track(
             quality_checked(spark, sf_dir)
@@ -566,32 +529,8 @@ def a17c_rollup_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = maintain_rollup_state(
             spark, state_path, q.filter(F.col("period") == 3).drop("period"), 3
         )
-
-        exact = q.groupBy("sensor_type").agg(
-            F.countDistinct("vehicle_id").alias("exact_veh")
-        )
-        est = F.hll_sketch_estimate("veh_sketch")
-        result = (
-            merged.join(exact, "sensor_type")
-            .select(
-                "sensor_type",
-                F.col("n").alias("record_count"),
-                fround(
-                    F.col("sq").cast("double") / (F.lit(5.0) * F.col("n").cast("double")),
-                    _R,
-                ).alias("avg_quality_score"),
-                F.col("min_ts").alias("first_reading"),
-                F.col("max_ts").alias("last_reading"),
-                F.col("exact_veh").alias("unique_vehicles"),
-                _sketch_ok(est, F.col("exact_veh")).alias("sketch_within_3rse"),
-            )
-        )
-        # |sensor_type| rows — bounded; materialize so the scratch state dir
-        # can be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # |sensor_type| rows — bounded
+        return collect_local(finalize_rollup(merged, q))
 
 
 # ---------------------------------------------------------------------------
@@ -830,7 +769,6 @@ GROUP BY 1, 2
     ),
 )
 def a23_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import track
     from ..sources.tables import load_table
 
     # the dimension side is consumed by BOTH branches — persist the

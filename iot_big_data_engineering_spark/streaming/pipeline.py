@@ -7,9 +7,9 @@ Rebuild shape (Spark-first):
 
     readStream (file/rate/kafka) → map to sensor schema → apply_quality
       → foreachBatch(epoch):
-          quality rows   → parquet append  (sensor_quality_checked)
-          A1 window agg  → parquet append  (sensor_analytics)
-          anomaly rows   → parquet append  (sensor_anomalies)
+          quality rows   → write_epoch  (sensor_quality_checked)
+          A1 window agg  → write_epoch  (sensor_analytics)
+          anomaly rows   → write_epoch  (sensor_anomalies)
 
 Two window semantics, both provided (SURVEY §7.4.3):
 - ``run_microbatch_pipeline`` reproduces the reference's per-batch windows
@@ -24,6 +24,32 @@ Deliberately NOT copied from the reference (SURVEY §4 anti-patterns):
 no ``count() > 0`` guards before writes (each is an extra job per batch),
 no per-record parser allocation, no schema inference.
 
+Run and sink contract, shared by every query in this module:
+
+- **Run.** Every bounded stream runs through :func:`run_available_now`:
+  the availableNow trigger drains the input present at start, in as many
+  micro-batches as ``maxFilesPerTrigger`` makes, and stops (st10's first
+  phase, which must be killed mid-stream, is the one exception). The
+  helper is the one place a per-batch progress listener attaches.
+  :func:`data_batches` counts the micro-batches that carried rows; the
+  ``st*`` certificates raise (RuntimeError — ``python -O`` strips
+  asserts) when that count cannot support the oracle comparison.
+- **Memory sinks.** :func:`to_memory` runs a stream into a memory sink,
+  binds the result frame, then drops the sink's temp view, so repeated
+  calls pin no rows in the session.
+- **Epoch-keyed overwrite.** foreachBatch is at-least-once: a crash between
+  the sink write and the checkpoint commit replays the epoch. Every
+  foreachBatch sink writes through :func:`write_epoch`, which overwrites
+  exactly the epoch's own ``epoch_id=N`` partition, so a replay replaces
+  its rows instead of duplicating them.
+- **Empty epochs.** An overwrite of an empty frame touches no partition,
+  so a torn write of that epoch would outlive its replay. State sinks that
+  already know a batch is empty write the empty epoch with
+  :func:`clear_epoch` instead.
+- **Scratch.** Inputs, state stores and checkpoints that a query stages
+  live under one :func:`~..caching.scratch_dir`, removed on every exit;
+  bounded results leave through :func:`~..caching.collect_local` first.
+
 Scale notes: at production scale the three sinks become partitioned tables
 (partitionBy(date)); foreachBatch + epoch-keyed overwrite gives exactly-once
 into an idempotent sink; checkpointLocation carries source offsets.
@@ -32,13 +58,132 @@ into an idempotent sink; checkpointLocation carries source offsets.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 import time
+import uuid
+from collections.abc import Iterable
+from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..schema import TESTDATA_SCHEMAS
-from ..sources.sensor_view import apply_quality, map_events, quality_checked
+from ..caching import collect_local, scratch_dir, track
+from ..functions.rounding import fround
+from ..operators.advanced import _ADV14_ORACLE, scd2_history_rows, scd2_inputs
+from ..operators.analytics import A1_ORACLE
+from ..operators.joins import _disc_price as _j_disc_price
+from ..operators.sketches import (
+    _A21_NBINS,
+    _A21_PS,
+    _A22_ORACLE,
+    A17_ORACLE,
+    A21_ORACLE,
+    A23_ORACLE,
+    _partial_state,
+    cms_heavy_hitter_report,
+    cms_merge_consistent,
+    cms_table,
+    finalize_rollup,
+    merge_states,
+)
+from ..operators.textstats import (
+    _DP16_ORACLE,
+    card_assemble,
+    card_counters,
+    card_lang_counts,
+    card_project,
+    card_text_keys,
+)
+from ..registry import register
+from ..sources.sensor_view import (
+    SENSOR_ORACLE_CTE,
+    apply_quality,
+    map_events,
+    quality_checked,
+)
+from ..sources.tables import load_table
+
+# key slices a multi-batch replay splits its input into (write_slices)
+_ST8_N_SPLITS = 3
+
+
+def run_available_now(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with the availableNow trigger and block until the
+    bounded input is drained."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def to_memory(
+    df: DataFrame, mode: str = "append"
+) -> tuple[StreamingQuery, DataFrame]:
+    """Run the streaming ``df`` into a memory sink in output ``mode``.
+    Returns the finished query and the sink's rows; the sink's temp view is
+    dropped once the frame is bound (the frame keeps the rows), and also
+    when the run raises."""
+    spark = df.sparkSession
+    name = f"mem_{uuid.uuid4().hex}"
+    try:
+        q = run_available_now(
+            df.writeStream.outputMode(mode).format("memory").queryName(name)
+        )
+        out = spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+    return q, out
+
+
+def data_batches(q: StreamingQuery) -> int:
+    """Micro-batches of ``q`` that carried input rows. Reads
+    ``recentProgress``, a ring buffer of the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100) batches."""
+    return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+
+
+def write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write one foreachBatch epoch's rows to the parquet sink at ``path``
+    as partition ``epoch_id=N``.
+
+    foreachBatch is at-least-once: a crash between the sink write and the
+    checkpoint commit replays the epoch. Appending the replay would
+    duplicate its rows forever; dynamically overwriting exactly the epoch's
+    own partition replaces them, so the sink is replay-idempotent — with
+    checkpointed offsets, the exactly-once recipe SCALE.md states. Runs one
+    write job and nothing else: no checkpoint, no emptiness check."""
+    (
+        df.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(path)
+    )
+
+
+def clear_epoch(epoch_id: int, *paths: str) -> None:
+    """Write an empty epoch to each ``write_epoch`` sink in ``paths``:
+    delete the epoch's partition (at real scale, the partition-prefix
+    delete an object-store sink issues), since an overwrite with an empty
+    frame would leave a torn earlier write of it in place."""
+    for path in paths:
+        shutil.rmtree(
+            os.path.join(path, f"epoch_id={int(epoch_id)}"), ignore_errors=True
+        )
+
+
+def write_slices(
+    df: DataFrame, key: str, in_dir: str, slices: Iterable[int]
+) -> None:
+    """Append slice ``i`` of ``df`` to ``in_dir`` as one parquet file, for
+    each ``i`` in ``slices``. Slice ``i`` holds the rows with
+    ``pmod(xxhash64(key), _ST8_N_SPLITS) == i``: deterministic, and every
+    slice is non-empty on any non-degenerate corpus (``repartition(N)``'s
+    round-robin makes no such promise on tiny inputs). Streamed at
+    ``maxFilesPerTrigger=1``, each file is one micro-batch."""
+    slice_of = F.pmod(F.xxhash64(key), F.lit(_ST8_N_SPLITS))
+    for i in slices:
+        df.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
+
 
 def _events_raw_schema(
     spark: SparkSession, path: str, glob: str | None
@@ -129,29 +274,14 @@ def run_microbatch_pipeline(
         spark, source_path, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
 
-    def _epoch_write(df: DataFrame, epoch_id: int, path: str) -> None:
-        # foreachBatch is at-least-once: a crash between sink write and
-        # checkpoint commit replays the epoch. Appending a replay would
-        # duplicate its rows forever; dynamically overwriting exactly the
-        # epoch's own partition makes every sink replay-idempotent — the
-        # exactly-once recipe (checkpointed offsets + idempotent
-        # epoch-keyed sinks) SCALE.md states, now actually implemented.
-        (
-            df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(path)
-        )
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
-            _epoch_write(batch_df, epoch_id, quality_path)
-            _epoch_write(
+            write_epoch(batch_df, epoch_id, quality_path)
+            write_epoch(
                 batch_windowed_analytics(batch_df), epoch_id, analytics_path
             )
-            _epoch_write(
+            write_epoch(
                 batch_df.filter(F.col("anomaly_score") > 0),
                 epoch_id,
                 anomalies_path,
@@ -159,13 +289,11 @@ def run_microbatch_pipeline(
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch).option(
+            "checkpointLocation", checkpoint
+        )
     )
-    q.awaitTermination()
     return {
         "quality": quality_path,
         "analytics": analytics_path,
@@ -204,7 +332,6 @@ def windowed_analytics_stream(
 def run_windowed_stream_to_memory(
     spark: SparkSession,
     source_path: str,
-    name: str = "windowed_out",
     glob: str | None = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -213,16 +340,7 @@ def run_windowed_stream_to_memory(
     stream = sensor_stream(
         spark, source_path, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-    q = (
-        windowed_analytics_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return to_memory(windowed_analytics_stream(stream))[1]
 
 
 # ---------------------------------------------------------------------------
@@ -231,9 +349,6 @@ def run_windowed_stream_to_memory(
 # With availableNow over a single parquet file the stream is one micro-batch,
 # so the accumulated output equals batch A1 exactly → shares A1's oracle.
 # ---------------------------------------------------------------------------
-from ..operators.analytics import A1_ORACLE  # noqa: E402
-from ..functions.rounding import fround
-from ..registry import register  # noqa: E402
 
 
 @register(
@@ -244,13 +359,9 @@ from ..registry import register  # noqa: E402
 def st1_streaming_microbatch_analytics(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    out_dir = tempfile.mkdtemp(prefix="iotx_stream_")
-    # the analytics result is windows×types rows — bounded; materialize
-    # it so the scratch sinks (a full quality-checked copy of the corpus
-    # per run) are deleted instead of leaked, exactly like st8/st10
-    try:
+    # the analytics result is windows×types rows — bounded; the scratch
+    # sinks hold a full quality-checked copy of the corpus per run
+    with scratch_dir("iotx_stream_") as out_dir:
         paths = run_microbatch_pipeline(spark, sf_dir, out_dir)
         # Schema-pinned re-read (the a17c compactor pattern,
         # operators/sketches.py): an all-empty corpus writes the sink
@@ -265,7 +376,7 @@ def st1_streaming_microbatch_analytics(
             .schema
         )
         raw = spark.read.schema(sink_schema).parquet(paths["analytics"])
-        # same single-batch assumption st5/st6 pin with
+        # same single-batch assumption st3/st5-st7 pin with
         # _assert_single_data_batch: per-batch windows equal the batch A1
         # oracle only when ALL input lands in one micro-batch (a split
         # source emits two rows per straddled window). Proven here from
@@ -273,17 +384,13 @@ def st1_streaming_microbatch_analytics(
         # epochs (an all-empty corpus never materializes a partition) is
         # vacuously fine — the empty analytics frame IS the A1 result.
         n_epochs = raw.select("epoch_id").distinct().count()
-        if n_epochs > 1:  # RuntimeError, not assert: -O strips asserts
+        if n_epochs > 1:
             raise RuntimeError(
                 f"st1's bounded source split into {n_epochs} data "
                 "micro-batches; per-batch-window oracle parity assumes "
                 "exactly one"
             )
-        result = raw.drop("epoch_id")
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        return collect_local(raw.drop("epoch_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -345,8 +452,6 @@ def session_window_stream(
 #   availableNow the final watermark is max(ts) - watermark_delay → oracle
 #   keeps sessions with session_end <= max(ts) - 10 minutes.
 # ---------------------------------------------------------------------------
-from ..sources.sensor_view import SENSOR_ORACLE_CTE  # noqa: E402
-
 _ST2_ORACLE = (
     SENSOR_ORACLE_CTE
     + """
@@ -385,20 +490,7 @@ WHERE session_end <= (SELECT max(ts) - INTERVAL 10 MINUTE
     doc="§2.7 session windows: streaming gap sessions ≡ SQL sessionization",
 )
 def st2_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st2_out_{uuid.uuid4().hex[:8]}"
-    stream = sensor_stream(spark, sf_dir)
-    q = (
-        session_window_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return to_memory(session_window_stream(sensor_stream(spark, sf_dir)))[1]
 
 
 # ---------------------------------------------------------------------------
@@ -433,9 +525,6 @@ def st3_streaming_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``collect_set(vehicle_id)`` through state to self-certify the HLL error
     bound; that is exact-distinct state, unbounded — the bound is now
     certified by a batch post-check in the registered query instead.)"""
-    import uuid
-
-    name = f"st3_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 minutes")
@@ -452,18 +541,12 @@ def st3_streaming_product(spark: SparkSession, sf_dir: str) -> DataFrame:
             "approx_vehicles",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)  # same assumption as st5/st6: append-mode
-    # window closure only matches the oracle when ALL input lands in one
-    # micro-batch (a split source drops still-open windows silently)
-    return spark.table(name)
+    q, out = to_memory(agg)
+    # append-mode window closure only matches the oracle when ALL input
+    # lands in one micro-batch (a split source drops still-open windows
+    # silently)
+    _assert_single_data_batch(q, "st3")
+    return out
 
 
 @register(
@@ -515,8 +598,6 @@ def st3_streaming_watermarked_windows(
 # dimension joins (j13). The join is stateless, so append mode emits every
 # enriched row with no watermark dependency.
 # ---------------------------------------------------------------------------
-from ..sources.tables import load_table  # noqa: E402
-
 _ST4_ORACLE = (
     SENSOR_ORACLE_CTE
     + """
@@ -535,9 +616,6 @@ LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
     doc="§2.7 stream-static broadcast enrichment (streaming twin of j13)",
 )
 def st4_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st4_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
@@ -552,15 +630,7 @@ def st4_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = enrich_stream(stream, dim, "vehicle_id", "vid").select(
         "ts", "vehicle_id", "sensor_type", "value", "mktsegment", "nation_name"
     )
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return to_memory(enriched)[1]
 
 
 # ---------------------------------------------------------------------------
@@ -583,22 +653,19 @@ SELECT DISTINCT vehicle_id, sensor_type FROM sensor_quality_checked
 )
 
 
-def _assert_single_data_batch(q) -> None:
-    """Pin the single-micro-batch assumption st5/st6's oracle parity rests
-    on: over the driver's one-file bounded stream, availableNow must land
-    ALL input in ONE micro-batch (st5 would re-emit keys past the
+def _assert_single_data_batch(q: StreamingQuery, query: str) -> None:
+    """Pin the single-micro-batch assumption the oracle parity of st3 and
+    st5-st7 rests on: over the driver's one-file bounded stream, availableNow
+    must land ALL input in ONE micro-batch (st5 would re-emit keys past the
     watermark horizon across batches; st6's update-mode sink would hold
     one row per key per update). If the source ever splits (multiple glob
     matches, changed batching), fail loudly here instead of hash-failing
     at the driver with no explanation."""
-    data_batches = [
-        p for p in q.recentProgress if p["numInputRows"] > 0
-    ]
-    if len(data_batches) != 1:  # RuntimeError, not assert: -O strips asserts
+    n = data_batches(q)
+    if n != 1:
         raise RuntimeError(
-            f"bounded stream split into {len(data_batches)} data "
-            "micro-batches; st5/st6 oracle parity assumes exactly one "
-            "(see comment)"
+            f"{query}'s bounded stream split into {n} data micro-batches; "
+            "its oracle parity assumes exactly one"
         )
 
 
@@ -608,23 +675,13 @@ def _assert_single_data_batch(q) -> None:
     doc="§2.7 dropDuplicatesWithinWatermark: bounded-state streaming dedup",
 )
 def st5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st5_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir)
     deduped = dedup_stream(
         stream, keys=("vehicle_id", "sensor_type"), watermark="30 minutes"
     ).select("vehicle_id", "sensor_type")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)
-    return spark.table(name)
+    q, out = to_memory(deduped)
+    _assert_single_data_batch(q, "st5")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -656,23 +713,11 @@ GROUP BY vehicle_id
     doc="§2.7/§2.8 applyInPandasWithState custom stateful operator",
 )
 def st6_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from .stateful import running_vehicle_totals
 
-    name = f"st6_out_{uuid.uuid4().hex[:8]}"
-    stream = sensor_stream(spark, sf_dir)
-    q = (
-        running_vehicle_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)
-    return spark.table(name).select("vehicle_id", "running_count", "last_seen")
+    q, out = to_memory(running_vehicle_totals(sensor_stream(spark, sf_dir)), "update")
+    _assert_single_data_batch(q, "st6")
+    return out.select("vehicle_id", "running_count", "last_seen")
 
 
 # ---------------------------------------------------------------------------
@@ -710,9 +755,6 @@ JOIN sensor_quality_checked b
     doc="§2.7 watermarked stream-stream interval join (bounded state)",
 )
 def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st7_out_{uuid.uuid4().hex[:8]}"
     err = (
         sensor_stream(spark, sf_dir)
         .filter(F.col("sensor_type") == "error")
@@ -742,23 +784,16 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         & (F.col("click_ts") <= F.col("error_ts")),
     ).select("vehicle_id", "error_ts", "error_value", "click_ts", "click_value")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)
-    return spark.table(name)
+    q, out = to_memory(joined)
+    _assert_single_data_batch(q, "st7")
+    return out
 
 
 # ---------------------------------------------------------------------------
 # Registered streaming query #8: INCREMENTAL ROLLUP MAINTENANCE under
 # streaming — the st-side of a17 (operators/sketches.py). Each micro-batch
 # aggregates ONLY its own rows into the mergeable per-group state
-# (count/Σq/Σq² int64, min/max ts, HLL vehicle sketch) and appends those
+# (count/Σq/Σq² int64, min/max ts, HLL vehicle sketch) and writes those
 # state rows — O(|groups|) per batch — to a state store; the final answer
 # merges state rows only. No batch ever rescans earlier input, which is
 # the property that makes a continuously-maintained 100 TB rollup
@@ -766,116 +801,50 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # raw data per run, SensorDataAnalytics.scala:40-44).
 #
 # Unlike st1-st7 (single-file bounded streams pinned to ONE micro-batch),
-# st8 deliberately splits the input into several files — one per
-# DETERMINISTIC key slice (pmod(xxhash64(event_id), N), so every
-# slice is non-empty on any non-degenerate corpus, unlike repartition(N)
-# whose round-robin makes no emptiness promise on tiny inputs) — and
+# st8 deliberately splits the input into several files (write_slices) and
 # streams them maxFilesPerTrigger=1, then RAISES unless >= 2 data batches
-# ran (RuntimeError, not assert: `python -O` strips asserts and a
-# single-batch run would silently certify). So the driver's hash row
+# ran — a single-batch run would silently certify. So the driver's hash row
 # certifies the cross-batch merge path, not a degenerate single-batch
 # run. Oracle = the full recompute (A17's), so any double-count /
 # dropped-group / sketch-union regression across batch boundaries fails
 # the gate.
 # ---------------------------------------------------------------------------
-from ..operators.sketches import (  # noqa: E402
-    A17_ORACLE,
-    _sketch_ok,
-    _partial_state,
-    merge_states,
-)
-from ..sources.tables import load_table  # noqa: E402
-
-_ST8_N_SPLITS = 3
-
-
 @register(
     "st8_streaming_incremental_rollup",
     oracle=A17_ORACLE,
     doc="§2.7/A17: foreachBatch incremental rollup — per-batch delta states merged ≡ full recompute",
 )
 def st8_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st8_")
-    # scratch tree released on EVERY exit, including the <2-batch raise
-    try:
+    with scratch_dir("iotx_st8_") as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
-        # split the bounded input into N single-file key slices → N
-        # micro-batches at maxFilesPerTrigger=1 (ts round-trips through the
-        # rewrite unchanged: the stream reader re-normalizes from the actual
-        # footer type). Slicing on a hash of the raw event_id is deterministic
-        # and spreads any real corpus across all N slices.
+        # ts round-trips through the slice rewrite unchanged: the stream
+        # reader re-normalizes from the actual footer type
         ev = load_table(spark, sf_dir, "events")
-        slice_of = F.pmod(F.xxhash64("event_id"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            ev.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
+        write_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS))
         stream = sensor_stream(
             spark, in_dir, glob="*.parquet", max_files_per_trigger=1
         )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # delta state only — one tiny row group per (batch, sensor_type).
-            # EPOCH-KEYED DYNAMIC OVERWRITE, not append: foreachBatch is
-            # at-least-once (a crash between sink write and checkpoint commit
-            # replays the epoch), and an appended replay would double-count
-            # that batch's state forever. Overwriting exactly the epoch's own
-            # partition makes the sink replay-idempotent — the exactly-once
-            # recipe SCALE.md states for every foreachBatch sink here.
-            (
-                _partial_state(batch_df)
-                .withColumn("epoch_id", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            # delta state only — one tiny row group per (batch, sensor_type)
+            write_epoch(_partial_state(batch_df), epoch_id, state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        q = run_available_now(
+            stream.writeStream.foreachBatch(process_batch).option(
+                "checkpointLocation", os.path.join(tmp, "ckpt")
+            )
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 2:  # RuntimeError, not assert: -O strips asserts
+        n = data_batches(q)
+        if n < 2:
             raise RuntimeError(
                 f"st8 needs >=2 data micro-batches to certify the cross-batch "
-                f"merge; got {len(data_batches)}"
+                f"merge; got {n}"
             )
 
         merged = merge_states(spark.read.parquet(state_dir).drop("epoch_id"))
-        exact = (
-            quality_checked(spark, sf_dir)
-            .groupBy("sensor_type")
-            .agg(F.countDistinct("vehicle_id").alias("exact_veh"))
-        )
-        est = F.hll_sketch_estimate("veh_sketch")
-        result = (
-            merged.join(exact, "sensor_type")
-            .select(
-                "sensor_type",
-                F.col("n").alias("record_count"),
-                fround(
-                    F.col("sq").cast("double")
-                    / (F.lit(5.0) * F.col("n").cast("double")),
-                    6,
-                ).alias("avg_quality_score"),
-                F.col("min_ts").alias("first_reading"),
-                F.col("max_ts").alias("last_reading"),
-                F.col("exact_veh").alias("unique_vehicles"),
-                _sketch_ok(est, F.col("exact_veh")).alias("sketch_within_3rse"),
-            )
-        )
-        # |sensor_type| rows — bounded; materialize so the scratch dirs (input
-        # slices, state partitions, checkpoint) can be deleted instead of
-        # leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # |sensor_type| rows — bounded
+        return collect_local(finalize_rollup(merged, quality_checked(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -939,9 +908,6 @@ WHERE incident_end <= (SELECT max(ts) - INTERVAL {_ST9_WM_MIN} MINUTE
     doc="§2.7/m17: in-flight alert-incident grouping via session windows",
 )
 def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st9_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir).filter(F.col("anomaly_score") > 0)
     agg = (
         stream.withWatermark("ts", f"{_ST9_WM_MIN} minutes")
@@ -963,15 +929,7 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
             "max_anomaly_score",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return to_memory(agg)[1]
 
 
 # ---------------------------------------------------------------------------
@@ -980,8 +938,8 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
 # Exact quantiles are not mergeable, so a21 keeps per-group (bin, count)
 # rows as its state; st10 runs that maintenance as a stream: each
 # micro-batch bins its rows against the FIXED calibration domain and
-# epoch-key-overwrites its own (sensor_type, bin) count delta (the same
-# replay-idempotent sink recipe as st8), and the final quantiles
+# writes its own (sensor_type, bin) count delta as its epoch, and the
+# final quantiles
 # finalize from the merged counts alone. The calibration (bin domain)
 # must be shared by every delta — in production it comes from a
 # historical calibration table; here it is one bounded 2-value aggregate
@@ -1004,8 +962,9 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
 # externally visible artifacts (committed checkpoint prefix + partial
 # uncommitted state) are constructed exactly, so the recovery claim is
 # proven on every run, not only when the kill happens to land mid-batch.
+# Phase 1 is the one run here that does not use the availableNow trigger:
+# it must be stopped while input is still unconsumed.
 # ---------------------------------------------------------------------------
-from ..operators.sketches import _A21_NBINS, _A21_PS, A21_ORACLE  # noqa: E402
 
 
 @register(
@@ -1016,24 +975,15 @@ from ..operators.sketches import _A21_NBINS, _A21_PS, A21_ORACLE  # noqa: E402
 def st10_streaming_histogram_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    from pyspark.sql import Window
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st10_")
-    # every exit — including the restart-proof RuntimeErrors — must
-    # release the scratch tree (a full sliced copy of events)
-    try:
+    with scratch_dir("iotx_st10_") as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         ckpt_dir = os.path.join(tmp, "ckpt")
         ev = load_table(spark, sf_dir, "events")
-        slice_of = F.pmod(F.xxhash64("event_id"), F.lit(_ST8_N_SPLITS))
         # phase 1 gets slices [0, N-1); the last slice arrives only after the
         # kill, so the restarted query ALWAYS has fresh input to prove the
         # offset recovery on
-        for i in range(_ST8_N_SPLITS - 1):
-            ev.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
+        write_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS - 1))
 
         # the shared bin domain: one 2-value aggregate (bounded by
         # construction); every batch must bin against the SAME domain or the
@@ -1067,36 +1017,20 @@ def st10_streaming_histogram_rollup(
         )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # epoch-keyed dynamic overwrite — replay-idempotent (see st8)
             delta = (
                 batch_df.filter(F.col("value").isNotNull())  # see a21:
                 # NULL bins diverge cross-engine in the cum window
                 .withColumn("bin", bin_)
                 .groupBy("sensor_type", "bin")
                 .agg(F.count("*").alias("cnt"))
-                .withColumn("epoch_id", F.lit(epoch_id))
                 .localCheckpoint()  # one computation: counted AND written
             )
             if delta.count() == 0:
-                # dynamic overwrite of an EMPTY frame touches no
-                # partitions, so a crashed (torn) write of this epoch
-                # would silently survive a replay that produced zero
-                # post-filter rows (r7 ADVICE: sparse/NULL-heavy
-                # corpora). "Write the empty epoch" explicitly: the
-                # epoch's true content is nothing, so clear its
-                # partition — at real scale this is the partition-prefix
-                # delete an object-store sink issues for the same case.
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
+                # a replay that produced zero post-filter rows (sparse or
+                # NULL-heavy corpora) must still replace a torn write
+                clear_epoch(epoch_id, state_dir)
                 return
-            (
-                delta.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            write_epoch(delta, epoch_id, state_dir)
 
         # ---- phase 1: run continuously, then KILL the query mid-stream ----
         q1 = (
@@ -1105,14 +1039,11 @@ def st10_streaming_histogram_rollup(
             .start()
         )
         deadline = time.monotonic() + 120.0
-        while (
-            sum(1 for p in q1.recentProgress if p["numInputRows"] > 0) < 1
-            and time.monotonic() < deadline
-        ):
+        while data_batches(q1) < 1 and time.monotonic() < deadline:
             time.sleep(0.2)
-        n1 = sum(1 for p in q1.recentProgress if p["numInputRows"] > 0)
+        n1 = data_batches(q1)
         q1.stop()  # the kill: the last slice has not even been written yet
-        if n1 < 1:  # RuntimeError, not assert: -O strips asserts
+        if n1 < 1:
             raise RuntimeError("st10 phase 1 processed no data batch before kill")
 
         # ---- simulate the crash artifact: a torn, uncommitted state epoch ----
@@ -1137,17 +1068,13 @@ def st10_streaming_histogram_rollup(
         )
 
         # ---- phase 2: deliver the last slice, restart from the checkpoint ----
-        ev.filter(slice_of == _ST8_N_SPLITS - 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        q2 = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
+        write_slices(ev, "event_id", in_dir, [_ST8_N_SPLITS - 1])
+        q2 = run_available_now(
+            stream.writeStream.foreachBatch(process_batch).option(
+                "checkpointLocation", ckpt_dir
+            )
         )
-        q2.awaitTermination()
-        n2 = sum(1 for p in q2.recentProgress if p["numInputRows"] > 0)
+        n2 = data_batches(q2)
         if n2 < 1 or n1 + n2 < 2:
             raise RuntimeError(
                 f"st10 needs data batches on BOTH sides of the restart boundary "
@@ -1203,12 +1130,7 @@ def st10_streaming_histogram_rollup(
                 for name, _ in _A21_PS
             ],
         )
-        # |sensor_type| rows — bounded; materialize so the scratch dirs can
-        # be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(result)  # |sensor_type| rows — bounded
 
 
 # ---------------------------------------------------------------------------
@@ -1216,9 +1138,7 @@ def st10_streaming_histogram_rollup(
 # closing the mergeable-state triangle: exact aggregates st8, quantile
 # histograms st10, frequency sketches st11). Each micro-batch reduces to
 # its own bounded CMS delta — ≤ depth·width (depth, bucket, cnt) rows no
-# matter the batch size — written with the epoch-keyed dynamic-overwrite
-# recipe every foreachBatch sink here uses (at-least-once replay
-# re-OVERWRITES the epoch's own partition: idempotent). The serving-side
+# matter the batch size — written as its epoch. The serving-side
 # sketch is the counter-wise SUM across epochs; CMS is linear, so
 # merged-from-deltas must equal the one-pass sketch EXACTLY — that
 # equality is the hashed merge_consistent certificate, and the top-k
@@ -1232,11 +1152,6 @@ def st10_streaming_histogram_rollup(
 # did key X appear this month" without a per-key state store: per-epoch
 # sketch parquet, summed at query time or compacted like a17c.
 # ---------------------------------------------------------------------------
-from ..operators.sketches import _A22_ORACLE  # noqa: E402  (no cycle:
-# sketches never imports streaming; the driver window rotation happens
-# after all registration imports, so order is unaffected)
-
-
 @register(
     "st11_streaming_cms_maintenance",
     # a22's oracle VERBATIM: it rebuilds the sketch in SQL from raw
@@ -1252,16 +1167,7 @@ from ..operators.sketches import _A22_ORACLE  # noqa: E402  (no cycle:
 def st11_streaming_cms_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    from ..operators.sketches import (
-        cms_heavy_hitter_report,
-        cms_merge_consistent,
-        cms_table,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st11_")
-    try:
+    with scratch_dir("iotx_st11_") as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         ev = load_table(spark, sf_dir, "events")
@@ -1270,18 +1176,13 @@ def st11_streaming_cms_maintenance(
             # state epoch would ever be written, and the merged read
             # below would raise PATH_NOT_FOUND — while the oracle (and
             # a22) return zero rows. Return the stable-schema empty
-            # report instead (r8 code-review finding; same hardening
-            # class as st10's sparse-batch fix).
+            # report instead.
             return spark.createDataFrame(
                 [],
                 "user_id long, true_count long, cms_estimate long, "
                 "overestimate long, merge_consistent boolean",
             )
-        slice_of = F.pmod(F.xxhash64("event_id"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            ev.filter(slice_of == i).coalesce(1).write.mode("append").parquet(
-                in_dir
-            )
+        write_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS))
         stream = events_file_stream(
             spark, in_dir, glob="*.parquet", max_files_per_trigger=1
         )
@@ -1289,46 +1190,32 @@ def st11_streaming_cms_maintenance(
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
             delta = (
                 cms_table(batch_df.filter(F.col("user_id").isNotNull()))
-                .withColumn("epoch_id", F.lit(epoch_id))
                 .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (st10's fix — isEmpty would otherwise run
-                # the batch aggregation once and the write a second time)
+                # AND written (isEmpty would otherwise run the batch
+                # aggregation once and the write a second time)
             )
             if delta.isEmpty():
-                # "write the empty epoch" explicitly — same sparse-batch
-                # hardening as st10: an empty dynamic overwrite touches
-                # no partitions, so clear the epoch's dir instead
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
+                clear_epoch(epoch_id, state_dir)
                 return
-            (
-                delta.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            write_epoch(delta, epoch_id, state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        q = run_available_now(
+            stream.writeStream.foreachBatch(process_batch).option(
+                "checkpointLocation", os.path.join(tmp, "ckpt")
+            )
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         # >=2 data batches certify the cross-epoch sketch merge across
         # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
         # where every row lands in one xxhash64 slice) still certifies
         # the degenerate case — merge of one delta must equal one-pass —
-        # so fall back instead of raising (r8 advice). 0 is unreachable
-        # here (the non-empty guard above ensures at least one slice has
-        # rows), so it stays a loud invariant failure.
-        if len(data_batches) < 1:  # RuntimeError, not assert (-O strips)
+        # so fall back instead of raising. 0 is unreachable here (the
+        # non-empty guard above ensures at least one slice has rows), so
+        # it stays a loud invariant failure.
+        n = data_batches(q)
+        if n < 1:
             raise RuntimeError(
                 f"st11 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {len(data_batches)}"
+                f"arrived; got {n}"
             )
 
         merged = (
@@ -1338,14 +1225,8 @@ def st11_streaming_cms_maintenance(
         )
         evb = ev.filter(F.col("user_id").isNotNull())
         consistent = cms_merge_consistent(cms_table(evb), merged)
-        result = cms_heavy_hitter_report(evb, merged, consistent)
-        # ≤ _CMS_TOPK rows — bounded; materialize so the scratch dirs can
-        # be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
+        # ≤ _CMS_TOPK rows — bounded
+        return collect_local(cms_heavy_hitter_report(evb, merged, consistent))
 
 
 # ---------------------------------------------------------------------------
@@ -1355,9 +1236,7 @@ def st11_streaming_cms_maintenance(
 # each batch reconciles against the STATIC dimension (the st4
 # stream-static shape: per-key decisions need no cross-batch state
 # because a full snapshot carries each key exactly once) and writes its
-# history fragment with the epoch-keyed dynamic-overwrite recipe every
-# foreachBatch sink here uses — at-least-once replay re-overwrites the
-# epoch's own partition, so the fragment store is replay-idempotent.
+# history fragment as its epoch.
 # Full-snapshot retire semantics are inherently end-of-snapshot facts
 # ("key X never arrived"), so the retired pass runs once at snapshot
 # close: dim ANTI-JOIN the keys seen across all epochs. The assembled
@@ -1373,14 +1252,6 @@ def st11_streaming_cms_maintenance(
 # dumps) without holding the full snapshot in memory — and the nightly
 # compaction of epoch fragments is a17c's contract.
 # ---------------------------------------------------------------------------
-from ..operators.advanced import (  # noqa: E402  (no cycle: advanced
-    # never imports streaming; registration order is unaffected because
-    # the registry rotation happens after all imports)
-    _ADV14_ORACLE,
-    scd2_history_rows,
-    scd2_inputs,
-)
-
 _ST12_SCHEMA = (
     "c_custkey long, acctbal double, valid_from timestamp, "
     "valid_to timestamp, is_current boolean, scd_action string"
@@ -1401,12 +1272,6 @@ _ST12_SCHEMA = (
 def st12_streaming_scd2_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    cols = [
-        "c_custkey", "acctbal", "valid_from", "valid_to", "is_current",
-        "scd_action",
-    ]
     dim, snap = scd2_inputs(spark, sf_dir)
     if snap.isEmpty():
         if dim.isEmpty():  # empty corpus: stable-schema empty history
@@ -1420,107 +1285,81 @@ def st12_streaming_scd2_maintenance(
             m.select("c_custkey", "in_dim", "in_snap", "bal_old", "bal_new")
         )
 
-    tmp = tempfile.mkdtemp(prefix="iotx_st12_")
+    dim = dim.persist()  # consumed once per micro-batch plus the retired
+    # pass — persist so the customer parquet is scanned once, not N+1 times
     try:
-        in_dir = os.path.join(tmp, "in")
-        state_dir = os.path.join(tmp, "state")
-        # the dim is consumed once per micro-batch plus the retired pass —
-        # persist so the customer parquet is scanned once, not N+1 times
-        dim = dim.persist()
-        slice_of = F.pmod(F.xxhash64("c_custkey"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            (
-                snap.filter(slice_of == i)
-                .select("c_custkey", "bal_new")
-                .coalesce(1)
-                .write.mode("append")
+        with scratch_dir("iotx_st12_") as tmp:
+            in_dir = os.path.join(tmp, "in")
+            state_dir = os.path.join(tmp, "state")
+            write_slices(
+                snap.select("c_custkey", "bal_new"),
+                "c_custkey",
+                in_dir,
+                range(_ST8_N_SPLITS),
+            )
+            stream = (
+                spark.readStream.schema("c_custkey long, bal_new double")
+                .option("maxFilesPerTrigger", 1)
                 .parquet(in_dir)
             )
-        stream = (
-            spark.readStream.schema("c_custkey long, bal_new double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
 
-        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            mb = (
-                batch_df.withColumn("in_snap", F.lit(True))
-                .join(dim, "c_custkey", "left")
-                .select(
-                    "c_custkey",
-                    F.coalesce("in_dim", F.lit(False)).alias("in_dim"),
-                    "in_snap",
-                    "bal_old",
-                    "bal_new",
+            def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+                mb = (
+                    batch_df.withColumn("in_snap", F.lit(True))
+                    .join(dim, "c_custkey", "left")
+                    .select(
+                        "c_custkey",
+                        F.coalesce("in_dim", F.lit(False)).alias("in_dim"),
+                        "in_snap",
+                        "bal_old",
+                        "bal_new",
+                    )
+                )
+                # one computation: emptiness-checked AND written
+                frag = scd2_history_rows(mb).localCheckpoint()
+                if frag.isEmpty():
+                    clear_epoch(epoch_id, state_dir)
+                    return
+                write_epoch(frag, epoch_id, state_dir)
+
+            q = run_available_now(
+                stream.writeStream.foreachBatch(process_batch).option(
+                    "checkpointLocation", os.path.join(tmp, "ckpt")
                 )
             )
-            frag = (
-                scd2_history_rows(mb)
-                .withColumn("epoch_id", F.lit(int(epoch_id)))
-                .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (st10's fix)
-            )
-            if frag.isEmpty():
-                # write-the-empty-epoch hardening (st10/st11): an empty
-                # dynamic overwrite touches no partitions, so clear the
-                # epoch's dir instead — replay of an emptied epoch stays
-                # idempotent
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
+            # >=2 data batches certify the cross-epoch history assembly;
+            # exactly 1 (a tiny or hash-skewed corpus) certifies the
+            # degenerate one-delta case, as in st11; 0 on a non-empty
+            # snapshot is a loud invariant failure
+            n = data_batches(q)
+            if n < 1:
+                raise RuntimeError(
+                    f"st12 saw a non-empty input yet no data micro-batch "
+                    f"arrived; got {n}"
                 )
-                return
-            (
-                frag.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        # >=2 data batches certify the cross-epoch history assembly across
-        # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
-        # where every row lands in one xxhash64 slice) still certifies
-        # the degenerate case — merge of one delta must equal one-pass —
-        # so fall back instead of raising (r8 advice). 0 is unreachable
-        # here (the non-empty guard above ensures at least one slice has
-        # rows), so it stays a loud invariant failure.
-        if len(data_batches) < 1:  # RuntimeError, not assert (-O strips)
-            raise RuntimeError(
-                f"st12 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {len(data_batches)}"
+            frags = spark.read.parquet(state_dir).select(
+                "c_custkey", "acctbal", "valid_from", "valid_to", "is_current",
+                "scd_action",
             )
-
-        frags = spark.read.parquet(state_dir).select(*cols)
-        # full-snapshot retire semantics: keys the stream NEVER delivered.
-        # Fragment keys only — the anti-join probe is |snapshot keys|, not
-        # history rows
-        seen = frags.select("c_custkey").distinct()
-        retired_m = (
-            dim.join(seen, "c_custkey", "left_anti")
-            .withColumn("in_snap", F.lit(False))
-            .withColumn("bal_new", F.lit(None).cast("double"))
-        )
-        retired = scd2_history_rows(
-            retired_m.select(
-                "c_custkey", "in_dim", "in_snap", "bal_old", "bal_new"
+            # full-snapshot retire semantics: keys the stream NEVER
+            # delivered. Fragment keys only — the anti-join probe is
+            # |snapshot keys|, not history rows
+            seen = frags.select("c_custkey").distinct()
+            retired_m = (
+                dim.join(seen, "c_custkey", "left_anti")
+                .withColumn("in_snap", F.lit(False))
+                .withColumn("bal_new", F.lit(None).cast("double"))
             )
-        )
-        result = frags.unionByName(retired)
-        # ~1.1x |customers| rows at gate SFs — materialize so the scratch
-        # dirs can be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
+            retired = scd2_history_rows(
+                retired_m.select(
+                    "c_custkey", "in_dim", "in_snap", "bal_old", "bal_new"
+                )
+            )
+            # ~1.1x |customers| rows at gate SFs
+            return collect_local(frags.unionByName(retired))
     finally:
         dim.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1531,10 +1370,9 @@ def st12_streaming_scd2_maintenance(
 # in micro-batches; each batch joins the STATIC dimension (orders —
 # the st4 stream-static shape) and reduces to its own partial state:
 # O(|groups-in-batch|) (ship_month, priority, n, DECIMAL rev) rows
-# written with the epoch-keyed dynamic-overwrite replay-idempotence
-# recipe. The serving view is the groupBy-sum across epochs — exact,
-# because the revenue partials are decimal and addition is
-# order-independent. Registers with a23's oracle VERBATIM (the full
+# written as its epoch. The serving view is the groupBy-sum across
+# epochs — exact, because the revenue partials are decimal and addition
+# is order-independent. Registers with a23's oracle VERBATIM (the full
 # join recompute), so the external gate value-checks the streamed
 # maintenance end-to-end.
 #
@@ -1543,11 +1381,6 @@ def st12_streaming_scd2_maintenance(
 # this is how a gold table stays fresh under continuous fact ingest,
 # with a17c-style compaction bounding the epoch count.
 # ---------------------------------------------------------------------------
-from ..operators.sketches import A23_ORACLE  # noqa: E402  (no cycle:
-# sketches never imports streaming)
-from ..operators.joins import _disc_price as _j_disc_price  # noqa: E402
-
-
 @register(
     "st13_streaming_join_view",
     oracle=A23_ORACLE,
@@ -1557,13 +1390,7 @@ from ..operators.joins import _disc_price as _j_disc_price  # noqa: E402
     ),
 )
 def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from ..caching import track
-    from ..functions.rounding import fround
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st13_")
-    try:
+    with scratch_dir("iotx_st13_") as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         o = track(
@@ -1580,11 +1407,7 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ship_month timestamp, o_orderpriority string, "
                 "n_items bigint, revenue double",
             )
-        slice_of = F.pmod(F.xxhash64("l_orderkey"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            l.filter(slice_of == i).coalesce(1).write.mode("append").parquet(
-                in_dir
-            )
+        write_slices(l, "l_orderkey", in_dir, range(_ST8_N_SPLITS))
         stream = (
             spark.readStream.schema(
                 "l_orderkey long, l_shipdate timestamp, "
@@ -1605,43 +1428,27 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count("*").alias("n"),
                     F.sum(_j_disc_price()).alias("rev"),  # DECIMAL partial
                 )
-                .withColumn("epoch_id", F.lit(int(epoch_id)))
                 .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (st10's fix)
+                # AND written
             )
             if state.isEmpty():
-                # write-the-empty-epoch hardening (st10/st11/st12)
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
+                clear_epoch(epoch_id, state_dir)
                 return
-            (
-                state.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            write_epoch(state, epoch_id, state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        q = run_available_now(
+            stream.writeStream.foreachBatch(process_batch).option(
+                "checkpointLocation", os.path.join(tmp, "ckpt")
+            )
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        # >=2 data batches certify the cross-epoch state merge across
-        # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
-        # where every row lands in one xxhash64 slice) still certifies
-        # the degenerate case — merge of one delta must equal one-pass —
-        # so fall back instead of raising (r8 advice). 0 is unreachable
-        # here (the non-empty guard above ensures at least one slice has
-        # rows), so it stays a loud invariant failure.
-        if len(data_batches) < 1:  # RuntimeError, not assert (-O strips)
+        # >=2 data batches certify the cross-epoch state merge; exactly 1
+        # certifies the degenerate one-delta case, as in st11; 0 on a
+        # non-empty input is a loud invariant failure
+        n = data_batches(q)
+        if n < 1:
             raise RuntimeError(
                 f"st13 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {len(data_batches)}"
+                f"arrived; got {n}"
             )
 
         merged = (
@@ -1658,12 +1465,7 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_items",
             fround(F.col("rev").cast("double"), 2).alias("revenue"),
         )
-        # |months|x|priorities| rows — bounded; materialize so the
-        # scratch dirs can be deleted instead of leaking one mkdtemp
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(result)  # |months|x|priorities| rows — bounded
 
 
 # ---------------------------------------------------------------------------
@@ -1682,19 +1484,9 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sized per epoch; the text-key fragment is the irreducible state of an
 # EXACT distinct count (|distinct texts| keys — production would keep
 # it as a bucketed table; an approximate card would swap in a17's HLL
-# sketch state and shrink it to |sources|×sketch). Epoch-keyed dynamic
-# overwrite keeps every fragment write replay-idempotent, and a17c's
-# compaction contract bounds the epoch count.
+# sketch state and shrink it to |sources|×sketch). a17c's compaction
+# contract bounds the epoch count.
 # ---------------------------------------------------------------------------
-from ..operators.textstats import (  # noqa: E402  (no cycle: textstats
-    # never imports streaming)
-    _DP16_ORACLE,
-    card_assemble,
-    card_project,
-    card_counters,
-    card_lang_counts,
-    card_text_keys,
-)
 
 _ST14_EMPTY_SCHEMA = (
     "source string, doc_count bigint, token_sum bigint, "
@@ -1716,10 +1508,7 @@ _ST14_EMPTY_SCHEMA = (
 def st14_streaming_dataset_card(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st14_")
-    try:
+    with scratch_dir("iotx_st14_") as tmp:
         in_dir = os.path.join(tmp, "in")
         cnt_dir = os.path.join(tmp, "state_counters")
         txt_dir = os.path.join(tmp, "state_textkeys")
@@ -1729,11 +1518,7 @@ def st14_streaming_dataset_card(
         )
         if docs.isEmpty():
             return spark.createDataFrame([], _ST14_EMPTY_SCHEMA)
-        slice_of = F.pmod(F.xxhash64("doc_id"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            docs.filter(slice_of == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(in_dir)
+        write_slices(docs, "doc_id", in_dir, range(_ST8_N_SPLITS))
         stream = (
             spark.readStream.schema(
                 "source string, lang string, text string, doc_id long"
@@ -1742,63 +1527,46 @@ def st14_streaming_dataset_card(
             .parquet(in_dir)
         )
 
-        # counted inside the batch callback, NOT via q.recentProgress:
-        # that is a ring buffer capped by numRecentProgressUpdates
-        # (default 100) — fine at 3 splits, silently miscounts if the
-        # split count is ever raised past the cap (r9 ADVICE)
-        data_batches = 0
+        # counts non-empty PROJECTED batches, which data_batches (input
+        # rows) does not; counting in the callback also avoids the
+        # recentProgress ring buffer's cap if the split count ever grows
+        n_batches = 0
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            nonlocal data_batches
+            nonlocal n_batches
             d = card_project(batch_df).localCheckpoint()  # one
             # computation feeding the emptiness check + three fragments
             if d.isEmpty():
-                # write-the-empty-epoch hardening (st10-st13)
-                for sd in (cnt_dir, txt_dir, lng_dir):
-                    shutil.rmtree(
-                        os.path.join(sd, f"epoch_id={int(epoch_id)}"),
-                        ignore_errors=True,
-                    )
+                clear_epoch(epoch_id, cnt_dir, txt_dir, lng_dir)
                 return
-            data_batches += 1
-            for sd, frag in (
-                (cnt_dir, card_counters(d)),
-                (txt_dir, card_text_keys(d)),
-                (lng_dir, card_lang_counts(d)),
-            ):
-                (
-                    frag.withColumn("epoch_id", F.lit(int(epoch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(sd)
-                )
+            n_batches += 1
+            write_epoch(card_counters(d), epoch_id, cnt_dir)
+            write_epoch(card_text_keys(d), epoch_id, txt_dir)
+            write_epoch(card_lang_counts(d), epoch_id, lng_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        run_available_now(
+            stream.writeStream.foreachBatch(process_batch).option(
+                "checkpointLocation", os.path.join(tmp, "ckpt")
+            )
         )
-        q.awaitTermination()
         # ≥2 data batches certify the cross-epoch merge; exactly 1 still
-        # certifies the degenerate one-delta case (st11-st13's fallback,
-        # r8 advice); 0 on a non-empty input is a loud invariant failure
-        if data_batches < 1:  # RuntimeError, not assert (-O strips)
+        # certifies the degenerate one-delta case (as in st11-st13); 0 on
+        # a non-empty input is a loud invariant failure
+        if n_batches < 1:
             raise RuntimeError(
                 f"st14 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {data_batches}"
+                f"arrived; got {n_batches}"
             )
 
         # txt_dir needs special handling the other two state dirs don't:
         # a batch whose rows ALL carry NULL text writes an EMPTY text-key
         # fragment (zero part files), and an all-NULL corpus leaves the
         # dir absent or data-less — schema inference would raise
-        # UNABLE_TO_INFER_SCHEMA where dp16 returns an empty card (r9
-        # self-review). Explicit schema + existence guard restore the
-        # batch twin's semantics; cnt/lng fragments are non-empty
-        # whenever a batch has rows, so only counters' guard matters for
-        # the pathological zero-fragment case.
+        # UNABLE_TO_INFER_SCHEMA where dp16 returns an empty card.
+        # Explicit schema + existence guard restore the batch twin's
+        # semantics; cnt/lng fragments are non-empty whenever a batch has
+        # rows, so only counters' guard matters for the pathological
+        # zero-fragment case.
         if os.path.isdir(txt_dir):
             text_keys = (
                 spark.read.schema("source string, text string, epoch_id int")
@@ -1812,12 +1580,7 @@ def st14_streaming_dataset_card(
             text_keys,
             spark.read.parquet(lng_dir).drop("epoch_id"),
         )
-        # |sources| rows — bounded; materialize so the scratch dirs can
-        # be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(result)  # |sources| rows — bounded
 
 
 # ---------------------------------------------------------------------------
@@ -1886,28 +1649,23 @@ FROM s GROUP BY user_id, session_id
 def st15_stateful_session_eviction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import uuid
-    from datetime import timedelta
-
     from .sessions import GAP_MIN, sessionize_with_eviction
 
-    if GAP_MIN != _ST15_GAP_MIN:  # RuntimeError, not assert: -O strips
+    if GAP_MIN != _ST15_GAP_MIN:
         raise RuntimeError("st15 oracle gap diverged from sessions.GAP_MIN")
-    tmp = tempfile.mkdtemp(prefix="iotx_st15_")
-    try:
+    with scratch_dir("iotx_st15_") as tmp:
         in_dir = os.path.join(tmp, "in")
         os.makedirs(in_dir)
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
         b = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
-        if b.lo is None:  # RuntimeError, not assert: -O strips asserts
+        if b.lo is None:
             raise RuntimeError(
                 "st15 certifies cross-batch state carry and eviction; an "
                 "empty events table cannot exercise either path"
             )
-        if b.lo == b.hi:  # ADVICE r12: lo == hi makes slice 0 (ts < mid)
-            # empty, and the >=4-data-micro-batches check below would
-            # blame batching; name the degenerate corpus instead
+        if b.lo == b.hi:  # lo == hi makes slice 0 (ts < mid) empty, and
+            # the >=4-data-micro-batches check below would blame
+            # batching; name the degenerate corpus instead
             raise RuntimeError(
                 "st15 needs >=2 distinct event times to split a two-batch "
                 "replay; the events table has a single timestamp"
@@ -1940,25 +1698,14 @@ def st15_stateful_session_eviction(
             .parquet(in_dir)
             .withWatermark("ts", "1 second")
         )
-        name = f"st15_out_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessionize_with_eviction(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 4:
+        q, out = to_memory(sessionize_with_eviction(stream))
+        n = data_batches(q)
+        if n < 4:
             raise RuntimeError(
                 f"st15 needs >= 4 data micro-batches (2 slices + 2 "
                 f"sentinels) to certify cross-batch state carry and "
-                f"watermark-driven eviction; got {len(data_batches)}"
+                f"watermark-driven eviction; got {n}"
             )
-        out = spark.table(name)
         real = F.col("user_id") >= 0
         n_users = ev.select("user_id").distinct().count()
         n_evicted = out.filter(real & F.col("via_timeout")).count()
@@ -1973,12 +1720,10 @@ def st15_stateful_session_eviction(
                 "st15 gap certificate: no session closed in-batch — the "
                 "gap-split path never ran"
             )
-        # the memory sink lives in the session, so the returned frame
-        # stays valid after the scratch tree (input slices, checkpoint)
-        # is deleted; via_timeout is the certificate column, not part of
-        # the compared sessionization surface
+        # the memory sink's rows live in the session, so the returned
+        # frame needs none of the scratch files; via_timeout is the
+        # certificate column, not part of the compared sessionization
+        # surface
         return out.filter(real).select(
             "user_id", "session_id", "session_start", "session_end", "n_events"
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -100,7 +100,6 @@ def test_watermarked_windows_match_batch_counts(spark, split_events_dir):
     got = run_windowed_stream_to_memory(
         spark,
         split_events_dir,
-        name="wm_out",
         glob="part-*.parquet",
         max_files_per_trigger=1,
     ).select("window_start", "window_end", "sensor_type", "record_count")
@@ -330,47 +329,29 @@ def test_st7_is_a_true_stream_stream_join(spark):
     assert "EventTimeWatermark" in plan, plan
 
 
-def test_st8_state_sink_is_replay_idempotent(spark):
+def test_st8_state_sink_is_replay_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: re-delivering an epoch must leave
     the state store unchanged (epoch-keyed dynamic overwrite), where an
     append sink would double-count the replayed delta."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from iot_big_data_engineering_spark.operators.sketches import (
         _partial_state,
     )
-    from iot_big_data_engineering_spark.sources.sensor_view import (
-        quality_checked,
-    )
+    from iot_big_data_engineering_spark.streaming.pipeline import write_epoch
 
-    from .conftest import SF_SMOKE
+    state_dir = str(tmp_path / "state")
+    state = _partial_state(quality_checked(spark, SF_SMOKE).limit(500))
 
-    state_dir = tempfile.mkdtemp(prefix="iotx_st8_replay_") + "/state"
-    batch = quality_checked(spark, SF_SMOKE).limit(500)
-
-    def write_epoch(df, epoch_id):
-        (
-            _partial_state(df)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(state_dir)
-        )
-
-    write_epoch(batch, 0)
+    write_epoch(state, 0, state_dir)
     once = sorted(
         (r.sensor_type, r.n) for r in spark.read.parquet(state_dir).collect()
     )
-    write_epoch(batch, 0)  # replayed epoch
+    write_epoch(state, 0, state_dir)  # replayed epoch
     twice = sorted(
         (r.sensor_type, r.n) for r in spark.read.parquet(state_dir).collect()
     )
     assert once == twice
     # a genuinely NEW epoch still lands alongside
-    write_epoch(batch, 1)
+    write_epoch(state, 1, state_dir)
     n_epochs = (
         spark.read.parquet(state_dir).select("epoch_id").distinct().count()
     )
@@ -638,3 +619,113 @@ def test_st14_empty_corpus_stable_schema(spark, tmp_path):
     df = st14_streaming_dataset_card(spark, str(tmp_path))
     assert df.collect() == []
     assert "top_lang" in df.columns and "exact_dup_ppm" in df.columns
+
+
+def test_memory_sinks_leave_no_temp_views(spark):
+    """Each memory-sink run used to leave its query-named temp view behind,
+    pinning the sink's rows in the driver for the life of the session. The
+    returned frame must stay readable after the view is dropped, and a
+    repeated call must return the same rows."""
+    from iot_big_data_engineering_spark.streaming.pipeline import (
+        st2_streaming_session_windows,
+        st5_streaming_dedup,
+        st15_stateful_session_eviction,
+    )
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    for query in (
+        st2_streaming_session_windows,
+        st5_streaming_dedup,
+        st15_stateful_session_eviction,
+    ):
+        first = sorted(map(tuple, query(spark, SF_SMOKE).collect()))
+        second = sorted(map(tuple, query(spark, SF_SMOKE).collect()))
+        assert first, query.__name__
+        assert first == second, query.__name__
+    assert temp_views() == before
+
+
+def test_scratch_trees_removed_on_every_exit(spark, tmp_path, monkeypatch):
+    """Staged inputs, state stores and checkpoints live under one scratch
+    tree per call, gone after a successful run (st8), after a certificate
+    raise (st15 on a one-timestamp corpus) and in an operator outside
+    streaming (a17b)."""
+    import datetime as dt
+    import tempfile
+
+    from iot_big_data_engineering_spark.operators.sketches import (
+        a17b_rollup_backfill,
+    )
+    from iot_big_data_engineering_spark.streaming.pipeline import (
+        st8_streaming_incremental_rollup,
+        st15_stateful_session_eviction,
+    )
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    assert st8_streaming_incremental_rollup(spark, SF_SMOKE).count() > 0
+    assert list(scratch.iterdir()) == []
+
+    one_ts = tmp_path / "one_ts_sf"
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    spark.createDataFrame(
+        [(i, t, i % 3, "click", 1.0, "{}") for i in range(9)],
+        "event_id long, ts timestamp, user_id long, "
+        "event_type string, value double, props string",
+    ).coalesce(1).write.parquet(str(one_ts / "events.parquet"))
+    with pytest.raises(RuntimeError, match="single timestamp"):
+        st15_stateful_session_eviction(spark, str(one_ts))
+    assert list(scratch.iterdir()) == []
+
+    assert a17b_rollup_backfill(spark, SF_SMOKE).count() > 0
+    assert list(scratch.iterdir()) == []
+
+
+def test_streaming_plumbing_lives_only_in_its_helpers():
+    """The availableNow run, the scratch tree, the memory sink and the
+    epoch-keyed overwrite each have one helper; a copy of any of them
+    anywhere else in the package fails here."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import iot_big_data_engineering_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    homes = {
+        r"trigger\(\s*availableNow\s*=\s*True": (
+            "streaming/pipeline.py",
+            "run_available_now",
+        ),
+        r"\bmkdtemp\(": ("caching.py", "scratch_dir"),
+        r"""format\(\s*["']memory["']""": ("streaming/pipeline.py", "to_memory"),
+    }
+    found = {pattern: [] for pattern in homes}
+    overwrite_owners = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        funcs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+
+        def owner(lineno):
+            inside = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
+            return max(inside, key=lambda f: f.lineno).name if inside else None
+
+        for lineno, line in enumerate(src.splitlines(), 1):
+            for pattern in homes:
+                if re.search(pattern, line):
+                    found[pattern].append((rel, owner(lineno)))
+            if rel == "streaming/pipeline.py" and "partitionOverwriteMode" in line:
+                overwrite_owners.append(owner(lineno))
+    for pattern, home in homes.items():
+        assert found[pattern] == [home], (pattern, found[pattern])
+    assert overwrite_owners == ["write_epoch"], overwrite_owners
