@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash).
 
 All real logic lives in ``iot_big_data_engineering_spark``; this module is
 a thin adapter over its query registry.
@@ -35,5 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL for every SQL-expressible query in ``queries()``."""
+    """DuckDB oracle SQL for every query in ``queries()``."""
     return registry.oracle_sql()

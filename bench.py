@@ -57,8 +57,8 @@ HEADLINE = [
     # exact-Jaccard join, grouping sets
     "adv11_range_join",
     "mm5_payload_dedup",
-    # d8_jaccard_join_prefix was registry-retired r16 (redundant twin);
-    # d8b below carries the identical plan shape in the pinned record
+    # d8_jaccard_join_prefix is not registered (redundant twin); d8b
+    # below carries the identical plan shape
     "g3_groupingsets_order_stats",
     "j11b_supplier_value_share",
     "j12b_priority_by_returnflag",
@@ -177,12 +177,12 @@ HEADLINE = [
     # round 14 addition: one distributed BPE merge step (vocab-scale
     # pair aggregation)
     "t19_bpe_merge_step",
-    # round 16 additions: the retirement-freed-seat registrations — the
-    # map-only PII rewrite and the cross-source duplicate matrix
+    # round 16 additions: the map-only PII rewrite and the cross-source
+    # duplicate matrix
     "dp18_pii_redaction",
     "u5_source_overlap_matrix",
-    # round 17 additions: the retirement-freed-seat registrations — the
-    # per-type PSI drift audit and the A-ES weighted reservoir sample
+    # round 17 additions: the per-type PSI drift audit and the A-ES
+    # weighted reservoir sample
     "dq9_psi_drift",
     "dp19_weighted_reservoir",
     # s9 (index persist/reload) is registered + oracled but, like the
@@ -200,11 +200,11 @@ def _steal_canary() -> float:
     input): wall seconds for identical work, so co-tenant CPU steal —
     INVISIBLE in loadavg, which only counts this host's runnable
     threads — shows up as proportional inflation against the quiet
-    reference. r11's pin adjudication needed exactly this: three runs
-    in 'idle' (loadavg < 0.3) windows measured matched-query totals
-    18-33% apart, and only solo re-measurement distinguished steal
-    from regression. Recorded at start AND end of every bench run so
-    the pinned record carries machine-state evidence on both edges."""
+    reference. Three runs in 'idle' (loadavg < 0.3) windows once
+    measured matched-query totals 18-33% apart, and only solo
+    re-measurement distinguished steal from regression. Recorded at
+    start AND end of every bench run so the detail record carries
+    machine-state evidence on both edges."""
     import numpy as np
 
     a = np.full((2000, 2000), 0.5)
@@ -310,14 +310,13 @@ def main() -> None:
     }
     detail = dict(out)
     detail["queries"] = times  # full map — detail file only
-    # EVERY timed sample per query, not just the min: a contaminated pin
-    # (r6's dp2 at 2.90 s when three idle runs measured 1.65-1.97 s) is
-    # self-evident machine-readably when the full spread is recorded
-    # (VERDICT r6 demand #4)
+    # EVERY timed sample per query, not just the min: a contaminated
+    # minimum (dp2 once read 2.90 s when three idle runs measured
+    # 1.65-1.97 s) is self-evident when the full spread is recorded
     detail["samples"] = all_samples
     # machine context: sustained background load inflates wall times ~1.5x
     # (observed 45 s vs 67 s totals for identical code) — record it so
-    # cross-round deltas are interpretable. The START sample is the
+    # cross-run comparisons are interpretable. The START sample is the
     # meaningful one (by the end, the 1-min average mostly measures the
     # bench's own 32 threads).
     if load_at_start is not None:
@@ -328,174 +327,13 @@ def main() -> None:
         pass
     detail["canary_s_at_start"] = canary_at_start
     detail["canary_s_at_end"] = _steal_canary()
-    this_round = _current_round()
-    detail["round"] = this_round
-    prev_round, prev = _latest_prev_bench(this_round)
-    if prev is not None and prev.get("sf") == sf:
-        pq = prev.get("queries", {})
-        detail["prev_round"] = prev_round
-        detail["delta_vs_prev"] = {
-            n: round(t - pq[n], 3) for n, t in times.items() if n in pq
-        }
-        if isinstance(prev.get("value"), (int, float)):
-            detail["delta_total_vs_prev"] = round(total - prev["value"], 3)
     here = os.path.dirname(os.path.abspath(__file__))
-    # BENCH_DETAIL.json is a SCRATCH pointer (latest run, any load);
-    # BENCH_DETAIL_r{N}.json is the immutable per-round record — written
-    # once per round (first run wins: the builder commits an idle run, and
-    # a later loaded driver rerun must not clobber it — VERDICT r5 #1).
+    # BENCH_DETAIL.json is a gitignored scratch file: the latest run's
+    # full record, overwritten by every run
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1)
-    # pin only runs at the contract SF (default sf0.1) — a local sf0.001
-    # iteration loop must not claim the round's immutable slot
-    if this_round is not None and sf_dir == "/root/testdata/sf0.1":
-        _maybe_pin(here, this_round, detail)
     print(json.dumps(out, separators=(",", ":")))
     spark.stop()
-
-
-def _maybe_pin(here: str, this_round: int, detail: dict) -> None:
-    """Write the round's immutable BENCH_DETAIL_r{N}.json, guarding two
-    failure modes the mutable scratch file doesn't have:
-
-    - Premature pin (ADVICE r6): the driver writes BENCH_r{N}.json
-      mid-round, BEFORE the round's correctness/verdict land, so a bench
-      rerun in that window infers round N+1 and would claim N+1's slot
-      with a run from the wrong (often judge-loaded) machine state.
-      Unless $SPARK_GRAFT_ROUND pins the round explicitly, refuse when
-      round N (the inference base) isn't fully closed — its
-      CORRECTNESS_r{N}.json not yet on disk.
-    - Contaminated pin (VERDICT r6 demand #4): first-run-wins once froze
-      a noisy sample (r6 dp2 at 2.90 s vs 1.54-1.97 s everywhere else).
-      Allow exactly ONE re-pin per round, only when the new run
-      contradicts the committed record by >1.5x AND >0.5 s on some query
-      — i.e. when the pin is machine-readably implausible, not merely
-      jittery. The replaced record's samples are preserved under
-      "repinned_over" so the history stays auditable.
-    """
-    if not os.environ.get("SPARK_GRAFT_ROUND", "").isdigit() and this_round > 1:
-        # "closed" means git-TRACKED, not merely on disk: the driver
-        # drops CORRECTNESS_r{N}.json untracked at judge time — exactly
-        # the judge-loaded window this guard exists to refuse — and it
-        # only becomes tracked at the round-boundary commit (the same
-        # rule correctness_diff.load_rounds applies, reused here)
-        import correctness_diff as cd
-
-        tracked = cd._tracked_correctness_files(here)
-        base = f"CORRECTNESS_r{this_round - 1:02d}.json"
-        closed = (
-            base in tracked
-            if tracked is not None
-            else os.path.exists(os.path.join(here, base))
-        )
-        if not closed:
-            return
-    pinned_path = os.path.join(here, f"BENCH_DETAIL_r{this_round:02d}.json")
-    if not os.path.exists(pinned_path):
-        with open(pinned_path, "w") as f:
-            json.dump(detail, f, indent=1)
-        return
-    try:
-        with open(pinned_path) as f:
-            pinned = json.load(f)
-    except (OSError, ValueError):
-        return
-    if pinned.get("repinned"):  # one re-pin per round, ever
-        return
-    old_q = pinned.get("queries", {})
-    new_q = detail.get("queries", {})
-    contradicted = [
-        n
-        for n, t_old in old_q.items()
-        if n in new_q and t_old > 1.5 * new_q[n] and t_old - new_q[n] > 0.5
-    ]
-    if not contradicted:
-        return
-    repin = dict(detail)
-    repin["repinned"] = True
-    repin["repin_contradicted"] = sorted(contradicted)
-    # per-query MINIMA across old and new records (ADVICE r7): a
-    # wholesale swap would silently freeze WORSE times for every query
-    # the (possibly load-contaminated) new run happened to measure
-    # slower, with repinned=True then blocking any correction. The min
-    # is the right merge for a lower-bound-seeking wall-time record;
-    # both raw runs stay auditable (samples + repinned_over).
-    repin["queries"] = {
-        n: min(t for t in (old_q.get(n), new_q.get(n)) if t is not None)
-        for n in set(old_q) | set(new_q)
-    }
-    repin["value"] = round(sum(repin["queries"].values()), 3)
-    # the min-merge composes per-query minima from TWO different runs, so
-    # the headline total was never measured in any single run — mark it
-    # and keep both raw totals so the record stays auditable (ADVICE r8:
-    # "value" and "samples" must not silently describe different
-    # measurements)
-    repin["value_synthetic"] = True
-    repin["run_totals"] = {
-        "pinned": pinned.get("value"),
-        "rerun": detail.get("value"),
-    }
-    repin["repinned_over"] = {
-        "queries": old_q,
-        "samples": pinned.get("samples"),
-        "loadavg_at_start": pinned.get("loadavg_at_start"),
-    }
-    with open(pinned_path, "w") as f:
-        json.dump(repin, f, indent=1)
-
-
-def _current_round() -> int | None:
-    """This bench run's round number: newest committed BENCH_r*.json + 1
-    (the driver writes BENCH_r{N}.json only AFTER the round's bench runs),
-    overridable via $SPARK_GRAFT_ROUND. None if neither source exists."""
-    import glob
-    import re
-
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env and env.isdigit():
-        return int(env)
-    here = os.path.dirname(os.path.abspath(__file__))
-    best_n = None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m and (best_n is None or int(m.group(1)) > best_n):
-            best_n = int(m.group(1))
-    return None if best_n is None else best_n + 1
-
-
-def _latest_prev_bench(this_round: int | None):
-    """Previous round's full per-query map → (round_n, data) or (None,
-    None). The immutable BENCH_DETAIL_r{N-1}.json is the primary source,
-    and the round label comes from the file's own "round" field (ADVICE
-    r5: labeling from BENCH_r file names while sourcing the map from the
-    mutable BENCH_DETAIL.json could attribute a delta to the wrong run).
-    Falls back to the newest parseable BENCH_r*.json."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    if this_round is not None and this_round >= 2:
-        try:
-            path = os.path.join(
-                here, f"BENCH_DETAIL_r{this_round - 1:02d}.json"
-            )
-            with open(path) as f:
-                detail = json.load(f)
-            if isinstance(detail.get("queries"), dict) and detail["queries"]:
-                return detail.get("round", this_round - 1), detail
-        except (OSError, ValueError):
-            pass
-    if this_round is None or this_round < 2:
-        return None, None
-    best_n = this_round - 1
-    try:
-        with open(os.path.join(here, f"BENCH_r{best_n:02d}.json")) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return best_n, None
-    # the driver wraps our JSON line under "parsed"
-    if "queries" not in data and isinstance(data.get("parsed"), dict):
-        data = data["parsed"]
-    if not isinstance(data.get("queries"), dict):
-        return best_n, None
-    return best_n, data
 
 
 if __name__ == "__main__":

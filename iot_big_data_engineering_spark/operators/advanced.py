@@ -329,13 +329,12 @@ def adv6_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# adv6b was RETIRED from the registry r16 per the r14 saturation ruling
-# (registry._RETIRED): it is the approx/sketch twin of adv6 above, whose
-# exact form stays gated. The capability remains as this library
-# function — the sketch-within-rank-band contract (every flag TRUE:
-# approx_percentile's rank error 1/accuracy = 1e-4 must keep the
-# estimate inside the exact [p−0.01, p+0.01] quantile band) is pinned by
-# tests/test_approx_quality.py.
+# adv6b is not registered (registry._RETIRED): it is the approx/sketch
+# twin of adv6 above, whose exact form stays registered. The capability
+# remains as this library function — the sketch-within-rank-band
+# contract (every flag TRUE: approx_percentile's rank error
+# 1/accuracy = 1e-4 must keep the estimate inside the exact
+# [p−0.01, p+0.01] quantile band) is pinned by tests/test_approx_quality.py.
 def adv6b_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
 
@@ -2081,12 +2080,9 @@ def embedding_audit(e: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DQ9 — POPULATION STABILITY INDEX drift (shipped library-tested r15
-# with its oracle constant ready per the r14 saturation ruling, the
-# dp18/u5 discipline; REGISTERED r17 into the seat freed by the
-# a7_summary_report_approx retirement — the recorded plan): dq6
-# audits per-COLUMN drift (null ppm, cardinality) between two snapshot
-# halves; this op audits per-DISTRIBUTION drift of a numeric measure —
+# DQ9 — POPULATION STABILITY INDEX drift: dq6 audits per-COLUMN drift
+# (null ppm, cardinality) between two snapshot halves; this op audits
+# per-DISTRIBUTION drift of a numeric measure —
 # the classic model-monitoring PSI over equi-depth decile bins, the
 # standard "did the data shift under my model/filter?" preflight a
 # training-data pipeline runs between corpus snapshots.
@@ -2315,11 +2311,9 @@ def psi_drift(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DQ10 — CATEGORICAL COMPOSITION DRIFT, Jensen–Shannon (library; r18
-# seat candidate — r17's two seats are already committed to dq9/dp19,
-# so this ships tested with its oracle constant ready, the established
-# discipline): the drift dimension the dq family still lacked. dq6
-# audits per-COLUMN deltas (null ppm, cardinality), dq9 audits
+# DQ10 — CATEGORICAL COMPOSITION DRIFT, Jensen–Shannon: the drift
+# dimension the dq family still lacked. dq6 audits per-COLUMN deltas (null
+# ppm, cardinality), dq9 audits
 # WITHIN-type value distributions (PSI over decile bins); this op
 # audits the ACROSS-type composition — did the MIX of event types shift
 # between the two snapshot halves? The model-monitoring complement:
@@ -2329,8 +2323,8 @@ def psi_drift(events: DataFrame) -> DataFrame:
 # Semantics: rows split into two deterministic halves by the shared
 # overflow-exact Knuth-mod-2 stream on event_id (the dq6/dq9 TECHNIQUE,
 # applied per-audit; halves are not shared across audits). NULL
-# event_type is excluded up front (the dq9/ADVICE-r15 lesson, baked in
-# from day one — NULLS FIRST/LAST placement would diverge); rows count
+# event_type is excluded up front (the dq9 lesson — NULLS FIRST/LAST
+# placement would diverge); rows count
 # regardless of value (composition is about row mix, not values). Per
 # type: Laplace-smoothed proportions p = (cnt+1)/(n+T) with T = the
 # distinct-type count (so both sides' smoothed proportions each sum to
@@ -2349,8 +2343,8 @@ def psi_drift(events: DataFrame) -> DataFrame:
 # frame is persist()ed (the s9 track() pattern) because it feeds three
 # downstream subtrees (the 1-row totals, the js_total fold, and the
 # output select): without the pin the one-scan claim would rest on
-# Spark's exchange reuse deduping identical aggregate subplans (ADVICE
-# r16 #2). Everything after runs on |types|-row frames — the two
+# Spark's exchange reuse deduping identical aggregate subplans.
+# Everything after runs on |types|-row frames — the two
 # scalar attaches (totals, js_total) are broadcast crossJoins, the
 # established 1-row pattern; the fold state is |types|-bounded. No
 # window, no corpus-scale shuffle beyond the count partials, no driver
@@ -2413,6 +2407,15 @@ ORDER BY tm.event_type
 """
 
 
+@register(
+    "dq10_composition_drift",
+    oracle=_DQ10_ORACLE,
+    doc=(
+        "DQ10: Jensen-Shannon drift of the event-type mix between "
+        "deterministic Knuth halves; Laplace-smoothed, type-ordered fold, "
+        "per-type and total verdicts"
+    ),
+)
 def dq10_composition_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return composition_drift(load_table(spark, sf_dir, "events"))
 
@@ -2441,7 +2444,7 @@ def composition_drift(events: DataFrame) -> DataFrame:
     )
     # |types| rows; pinned so the corpus-scale count aggregate runs ONCE
     # for its three consumers (tot, the js_total fold, the output) —
-    # see header (ADVICE r16 #2)
+    # see header
     cnts = track(cnts.persist())
     tot = cnts.agg(
         F.sum("cnt_a").cast("bigint").alias("n_a"),
@@ -2512,10 +2515,7 @@ def composition_drift(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DQ11 — CUSUM CHANGEPOINT LOCALIZATION (library; r19 seat candidate —
-# the registry is saturated and the r18 seats are already committed to
-# t20/dq10 (_PLANNED_R18_*), so this ships tested with its oracle
-# constant ready, the established discipline): the drift dimension
+# DQ11 — CUSUM CHANGEPOINT LOCALIZATION: the drift dimension
 # dq6/dq9/dq10 still lack is TIME. dq9 detects THAT a value
 # distribution shifted between halves and dq10 THAT the type mix
 # shifted; neither says WHEN. dq11 runs the classic offline CUSUM
@@ -2617,6 +2617,15 @@ ORDER BY event_type
 """
 
 
+@register(
+    "dq11_cusum_changepoint",
+    oracle=_DQ11_ORACLE,
+    doc=(
+        "DQ11: per-event-type offline CUSUM changepoint over exact daily "
+        "means; day-ordered prefix folds, argmax |S_k| with earliest-k "
+        "tiebreak, relative-shift verdict"
+    ),
+)
 def dq11_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cusum_changepoint(load_table(spark, sf_dir, "events"))
 
@@ -2703,12 +2712,9 @@ def cusum_changepoint(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DQ12 — BENFORD FIRST-DIGIT AUDIT (library; r20 pipeline candidate —
-# the registry is saturated and the r18/r19 seats are spoken for
-# (_PLANNED_R18_*, d13/dq11), so this ships tested with its oracle
-# constant ready, the established discipline): the data-entry/fraud
-# smell test the dq family still lacked. Naturally occurring monetary
-# amounts follow Benford's law (P(first digit = d) = log10(1 + 1/d));
+# DQ12 — BENFORD FIRST-DIGIT AUDIT: the data-entry/fraud smell test the dq
+# family still lacked. Naturally occurring monetary amounts follow
+# Benford's law (P(first digit = d) = log10(1 + 1/d));
 # fabricated, truncated, or unit-mangled feeds do not — auditors
 # (Nigrini's MAD test) use exactly this as a first-pass integrity
 # screen. dq12 audits o_totalprice: per first significant digit, the
@@ -2734,8 +2740,9 @@ def cusum_changepoint(events: DataFrame) -> DataFrame:
 # guard filters the dense digit scaffold away).
 #
 # 100 TB: ONE map-side-combined count aggregate onto ≤ 9 groups —
-# nothing else touches the corpus, and the aggregate has exactly one
-# consumer (no pin needed). The dense 9-digit scaffold carries the
+# nothing else touches the corpus. The aggregate is not pinned, and the
+# output rows and the stats fold both read it, so the physical plan
+# runs it (and its scan) twice. The dense 9-digit scaffold carries the
 # total as a constant-domain window over its 9 rows (integer sum —
 # order-free, the audit's constant-domain bounded class), the single
 # 1-row stats attach broadcasts, and the 9-term folds are
@@ -2814,6 +2821,15 @@ ORDER BY t.digit
 """
 
 
+@register(
+    "dq12_benford_audit",
+    oracle=_DQ12_ORACLE,
+    doc=(
+        "DQ12: Benford first-digit audit of o_totalprice; exact-cents "
+        "digit extraction, digit-ordered MAD/TVD/chi-square folds, "
+        "Nigrini MAD conformity verdict"
+    ),
+)
 def dq12_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return benford_audit(
         load_table(spark, sf_dir, "orders"), "o_totalprice"
@@ -2841,13 +2857,17 @@ def benford_audit(df: DataFrame, col: str) -> DataFrame:
         .groupBy("digit")
         .agg(F.count("*").cast("bigint").alias("n_obs"))
     )
-    exp_p = spark.createDataFrame(
-        [(d, p) for d, p in _DQ12_EXP.items()], "digit int, p_exp double"
+    # the 9-row scaffold is an inline VALUES table (a local relation, so
+    # the window audit sees the bound below the total's window); the D
+    # literals parse to the same doubles as the oracle's constants
+    exp_p = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"({d}, {p!r}D)" for d, p in _DQ12_EXP.items())
+        + " AS e(digit, p_exp)"
     )
     # the total rides a constant-domain window over the 9-row scaffold
-    # (integer sum — order-free), so the corpus-scale count aggregate
-    # has exactly ONE consumer and needs no pin; n > 0 guards the empty
-    # input (the scaffold filters itself away)
+    # (integer sum — order-free); n > 0 guards the empty input (the
+    # scaffold filters itself away)
     dense = (
         exp_p.join(obs, "digit", "left")
         .select(

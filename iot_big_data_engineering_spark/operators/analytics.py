@@ -587,11 +587,11 @@ def a1_windowed_analytics_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# a4_vehicle_analytics_approx and a7_summary_report_approx were RETIRED
-# r17 (registry._RETIRED): HLL/sketch twins of the still-gated exact
-# queries a4_vehicle_analytics / a7_summary_report, wrapper-only — the
-# approx-distinct-within-band capability (_RSD + _hll_ok) stays
-# registered and gated via a1_windowed_analytics_approx /
+# a4_vehicle_analytics_approx and a7_summary_report_approx are not
+# registered (registry._RETIRED): HLL/sketch twins of the registered
+# exact queries a4_vehicle_analytics / a7_summary_report, wrapper-only —
+# the approx-distinct-within-band capability (_RSD + _hll_ok) stays
+# registered via a1_windowed_analytics_approx /
 # a2_daily_analytics_approx, the identical pattern over the same view.
 
 

@@ -161,7 +161,7 @@ def d3_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# D4 — MinHash + LSH banding (the 100 TB dedup path; rows-only check)
+# D4 — MinHash + LSH banding (the 100 TB dedup path)
 # ---------------------------------------------------------------------------
 N_PERM = 32
 N_BANDS = 8  # 4 rows per band → s-curve threshold ≈ (1/8)^(1/4) ≈ 0.6
@@ -504,7 +504,7 @@ def d10_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# D5 — SimHash (64-bit) + Hamming-distance near-dup (rows-only check)
+# D5 — SimHash (64-bit) + Hamming-distance near-dup
 # ---------------------------------------------------------------------------
 def simhash_col() -> F.Column:
     """64-bit SimHash over distinct-token xxhash64 values, via built-in
@@ -1138,10 +1138,10 @@ ORDER BY doc_a, doc_b
 """
 
 
-# d8_jaccard_join_prefix (the unordered-prefix variant) was RETIRED r16
-# per the r14 saturation ruling (registry._RETIRED): it shared _D8_ORACLE
-# literally with d8b below and was bit-identical by construction, so the
-# df-ordered variant subsumes it. The order_by_df=False code path stays
+# d8_jaccard_join_prefix (the unordered-prefix variant) is not
+# registered (registry._RETIRED): it shared _D8_ORACLE literally with
+# d8b below and was bit-identical by construction, so the df-ordered
+# variant subsumes it. The order_by_df=False code path stays
 # brute-force-tested in tests/test_dedup.py.
 @register(
     "d8b_jaccard_join_df_prefix",
@@ -1161,12 +1161,9 @@ def d8b_jaccard_join_df_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# D13 — exact CONTAINMENT near-dup join (library; r19 seat candidate —
-# the registry is saturated and the r18 seats are already committed to
-# t20/dq10 (_PLANNED_R18_*), so this ships tested with its oracle
-# constant ready, the dp18/u5/dq9/dp19/t20/dq10 discipline): the
-# asymmetry axis the dedup family still lacked. d3/d8b measure
-# SYMMETRIC Jaccard |∩|/|∪| — a 40-shingle document quoted whole
+# D13 — exact CONTAINMENT near-dup join: the asymmetry axis the dedup
+# family still lacked. d3/d8b measure SYMMETRIC Jaccard |∩|/|∪| — a
+# 40-shingle document quoted whole
 # inside a 4,000-shingle page scores J ≈ 0.01 and sails past every
 # Jaccard threshold, yet for training-data hygiene the small doc IS a
 # duplicate (its content is fully contained in the big one: boilerplate
@@ -1231,6 +1228,14 @@ ORDER BY doc_a, doc_b
 """
 
 
+@register(
+    "d13_containment_neardup",
+    oracle=_D13_ORACLE,
+    doc=(
+        "D13: prefix-filtered exact containment>=0.8 join over word-trigram "
+        "shingle sets (max directional |A∩B|/min(|A|,|B|))"
+    ),
+)
 def d13_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = containment_pairs(_docs_par(spark, sf_dir), _D13_TAU)
     return pairs.select(

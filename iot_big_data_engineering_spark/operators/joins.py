@@ -2596,13 +2596,11 @@ def markov_transitions(e: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# U5 — CROSS-SOURCE EXACT-DUPLICATE OVERLAP MATRIX (shipped library-
-# tested r13 with its oracle constant ready; REGISTERED r16 into the
-# second retirement-freed window seat per the r14 saturation ruling):
-# the provenance question every
-# multi-source training mix has to answer before weighting sources — how
-# many exact-duplicate documents does each PAIR of sources share, and how
-# much does each source duplicate within itself. d1 measures the corpus's
+# U5 — CROSS-SOURCE EXACT-DUPLICATE OVERLAP MATRIX: the provenance
+# question every multi-source training mix has to answer before
+# weighting sources — how many exact-duplicate documents does each PAIR
+# of sources share, and how much does each source duplicate within
+# itself. d1 measures the corpus's
 # overall duplication; u5 attributes it to the source matrix. The matrix
 # is TOTAL — every (a <= b) cell is emitted, zero cells included — so the
 # compared surface pins the source enumeration even on a duplicate-free

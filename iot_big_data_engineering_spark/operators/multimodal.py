@@ -63,9 +63,6 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-# NOTE: mm5 is defined (and therefore registered) before mm1-mm4: its
-# oracle changed in round 3, and registration order decides the driver's
-# 50-query correctness window (registry._ensure_loaded).
 # ---------------------------------------------------------------------------
 # MM5 — payload dedup by header-block checksum: group assets whose first
 # 64 payload bytes hash identically — the standard cheap first pass of a
@@ -229,10 +226,10 @@ def fake_decode_stats(df: DataFrame) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            # nullable byte stats (landed r16 with mm3's rotation seat):
-            # a NULL source text arrives as a None payload, and .map(len)
-            # on None kills the Python worker — a corrupt/absent payload
-            # must yield NULL dims, not fail the partition (the same
+            # nullable byte stats: a NULL source text arrives as a None
+            # payload, and .map(len) on None kills the Python worker — a
+            # corrupt/absent payload must yield NULL dims, not fail the
+            # partition (the same
             # contract as decode_media's undecodable branch). Nullable
             # Int32, not int32: the None rows must survive the cast.
             n_bytes = pdf["payload"].map(

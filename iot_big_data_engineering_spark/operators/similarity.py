@@ -1412,8 +1412,7 @@ def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serving side must come up (empty) regardless. The centroid pin
         # is the literal write schema; the assignments pin is captured
         # from the pre-write frame so it tracks the source's actual
-        # physical types (r13 empty-corpus audit finding, landed r16
-        # with this query's rotation seat).
+        # physical types (an empty-corpus audit finding).
         cent_rows = (
             spark.read.schema("cell long, centroid array<double>")
             .parquet(cent_path)
@@ -2521,11 +2520,10 @@ def s16_hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# S15 — MMR DIVERSIFIED RERANK (built + oracled r12, registered round 13
-# for the r14 window's second free seat):
-# Maximal Marginal Relevance over the bounded candidate list the
-# retrieval stack already serves — score(d) = λ·rel(d) −
-# (1−λ)·max_{s∈selected} sim(d, s), greedily for k picks. The rerank
+# S15 — MMR DIVERSIFIED RERANK: Maximal Marginal Relevance over the
+# bounded candidate list the retrieval stack already serves —
+# score(d) = λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s), greedily for
+# k picks. The rerank
 # every retrieval stack applies when near-duplicate hits crowd out
 # coverage (Carbonell & Goldstein 1998).
 #

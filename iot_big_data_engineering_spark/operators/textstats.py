@@ -125,10 +125,10 @@ def t3_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # T4 — document fingerprint (rolling polynomial hash). The oracle wraps
-# the shared sql_fingerprint helper in a NULL-text CASE (landed r16 with
-# t4's rotation seat): Spark's sequence(1, length(NULL)) NULL-propagates
-# the whole char fold, while DuckDB's range(1, NULL) is the EMPTY list
-# and folds to the seed 0 — the CASE pins both engines to NULL. Scoped
+# the shared sql_fingerprint helper in a NULL-text CASE: Spark's
+# sequence(1, length(NULL)) NULL-propagates the whole char fold, while
+# DuckDB's range(1, NULL) is the EMPTY list and folds to the seed 0 —
+# the CASE pins both engines to NULL. Scoped
 # HERE, not in the helper: dp17 applies sql_fingerprint to tokens that
 # are never NULL, and its registered oracle text stays byte-identical.
 # ---------------------------------------------------------------------------
@@ -3697,11 +3697,9 @@ def dsir_importance(
 
 
 # ---------------------------------------------------------------------------
-# DP18 — PII REDACTION (shipped library-tested r13 with its oracle
-# constant ready — the s15/s16 discipline; REGISTERED r16 into the first
-# retirement-freed window seat per the r14 saturation ruling):
-# t9 SCANS for PII, this op REWRITES it — the transform half every
-# training-data pipeline pairs with the audit half. Four sequential
+# DP18 — PII REDACTION: t9 SCANS for PII, this op REWRITES it — the
+# transform half every training-data pipeline pairs with the audit half.
+# Four sequential
 # regexp_replace stages (email → url → phone → long-id, each over the
 # previous stage's text) with STAGE-CONSISTENT counts: each class is
 # counted in the text as-of-its-stage, so a phone inside an already
@@ -3785,9 +3783,7 @@ def dp18_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# T19 — ONE BPE MERGE STEP (registered r14 into the r15 window's single
-# free seat — VERDICT r13 Next #3; built+oracled r13 under the same
-# shipping discipline as dp18): the distributed heart of BPE tokenizer
+# T19 — ONE BPE MERGE STEP: the distributed heart of BPE tokenizer
 # TRAINING — count adjacent character pairs across the corpus and rank
 # the merge candidates. The classic scale move is the word-frequency
 # pre-aggregation: pairs are counted over the DISTINCT alnum vocabulary
@@ -3875,12 +3871,9 @@ def t19_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DP19 — WEIGHTED RESERVOIR SAMPLE, A-ES / Efraimidis–Spirakis (shipped
-# library-tested r15 with its oracle constant ready per the r14
-# saturation ruling, the dp18/u5 discipline; REGISTERED r17 into the
-# seat freed by the a4_vehicle_analytics_approx retirement — the
-# recorded plan): dp12 keeps documents by per-row Bernoulli
-# RATE (each doc independently, expected size only); this op draws an
+# DP19 — WEIGHTED RESERVOIR SAMPLE, A-ES / Efraimidis–Spirakis: dp12 keeps
+# documents by per-row Bernoulli RATE (each doc independently, expected
+# size only); this op draws an
 # EXACT-size weighted sample WITHOUT replacement — k docs per source,
 # inclusion probability proportional to token weight — the standard
 # one-pass distributed primitive for "give me exactly k docs per
@@ -4013,10 +4006,7 @@ def weighted_reservoir(
 
 
 # ---------------------------------------------------------------------------
-# T20 — TOKEN ENTROPY PROFILE (library; r18 seat candidate — the
-# registry is saturated and r17's two seats are already committed to
-# dq9/dp19, so this ships tested with its oracle constant ready, the
-# dp18/u5/dq9/dp19 discipline): per-document Shannon entropy of the
+# T20 — TOKEN ENTROPY PROFILE: per-document Shannon entropy of the
 # unigram distribution plus its two companion concentration signals —
 # normalized entropy (H / ln(distinct)) and top-token share. The
 # Gopher-class quality rules t10 does NOT cover: t10 measures bigram
@@ -4080,17 +4070,22 @@ ORDER BY doc_id
 """
 
 
+@register(
+    "t20_token_entropy_profile",
+    oracle=_T20_ORACLE,
+    doc=(
+        "T20: per-document Shannon entropy of the unigram distribution, "
+        "normalized entropy and top-token share; token-ordered fold"
+    ),
+)
 def t20_token_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_entropy_profile(_docs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# DP20 — TOKEN-MASS QUANTILES (library; r20 pipeline candidate — the
-# registry is saturated and the r18/r19 seats are spoken for
-# (_PLANNED_R18_*, d13/dq11), so this ships tested with its oracle
-# constant ready, the established discipline): sequence-length
-# planning's first question. Doc-count quantiles of length answer
-# "how long is the typical DOCUMENT"; what packing, chunking and
+# DP20 — TOKEN-MASS QUANTILES: sequence-length planning's first question.
+# Doc-count quantiles of length answer "how long is the typical DOCUMENT";
+# what packing, chunking and
 # context-window decisions actually need is "in how long a document
 # does the typical TOKEN live" — the token-MASS-weighted quantiles of
 # document length. A corpus can be 90% short docs by count while 90%
@@ -4159,6 +4154,14 @@ ORDER BY source, decile
 """
 
 
+@register(
+    "dp20_token_mass_quantiles",
+    oracle=_DP20_ORACLE,
+    doc=(
+        "DP20: per-source token-mass-weighted deciles of document length; "
+        "integer cumulative mass, exact BIGINT decile predicate"
+    ),
+)
 def dp20_token_mass_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_mass_quantiles(_docs(spark, sf_dir))
 

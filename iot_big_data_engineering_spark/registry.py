@@ -1,8 +1,8 @@
 """Central query registry backing ``__spark_entry__.py``.
 
 Every named capability of the engine registers here as a pair:
-a Spark callable ``(spark, sf_dir) -> DataFrame`` and (when expressible)
-an equivalent DuckDB ANSI-SQL oracle string. The driver's correctness gate
+a Spark callable ``(spark, sf_dir) -> DataFrame`` and an equivalent
+DuckDB ANSI-SQL oracle string. The driver's correctness gate
 runs both sides at sf=0.01 and hash-compares.
 
 Conventions (driver contract):
@@ -28,7 +28,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL; None → driver does rows-only check
+    oracle: str  # DuckDB SQL
     doc: str = ""
 
 
@@ -98,21 +98,21 @@ _AVG_QUALITY_SQL = "avg(quality_score)"
 _AVG_QUALITY_INT_SQL = "(CAST(sum(q_int) AS DOUBLE) / (5.0 * count(*)))"
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
-    """Decorator: register a query callable under ``name``.
+def register(name: str, oracle: str, doc: str = ""):
+    """Decorator: register a query callable under ``name`` with its
+    DuckDB ``oracle`` SQL.
 
     The registered form releases caches tracked by PREVIOUS queries on
     entry (caching.release_caches): harnesses that run many queries in one
-    session — the driver runs all ~110 — would otherwise accumulate every
-    persist()ed intermediate (d4 signatures, ivf corpus) in executor
-    storage memory with no release point. Releasing at next-query entry is
-    safe because each harness materializes a query before building the
-    next; a caller that interleaves construction merely loses the cache
-    (recompute), never correctness. Direct imports of the undecorated
-    functions (the test modules) are unaffected.
+    session (the parity sweep runs all of them) would otherwise
+    accumulate every persist()ed intermediate (d4 signatures, ivf corpus)
+    in executor storage memory with no release point. Releasing at
+    next-query entry is safe because each harness materializes a query
+    before building the next; a caller that interleaves construction
+    merely loses the cache (recompute), never correctness. Direct imports
+    of the undecorated functions (the test modules) are unaffected.
     """
-    if oracle is not None:
-        oracle = _rewrite_rounds(oracle.replace(_AVG_QUALITY_SQL, _AVG_QUALITY_INT_SQL))
+    oracle = _rewrite_rounds(oracle.replace(_AVG_QUALITY_SQL, _AVG_QUALITY_INT_SQL))
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
@@ -141,266 +141,51 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {q.name: q.oracle for q in all_queries().values() if q.oracle is not None}
+    return {q.name: q.oracle for q in all_queries().values()}
 
 
 _LOADED = False
 
-# RETIRED queries (r14 saturation ruling; plans recorded one round
-# ahead as testable structures, then EXECUTED with the next rotation —
-# r16: d8/adv6b, r17: a7/a4-approx. The executed-state tests in
-# tests/test_registry_window.py assert every name here is gone from the
-# registry while its exact sibling stays registered, with ≤ 2
-# retirements per round). A retirement deletes the @register only; the
-# twin keeps the externally-verified semantics, and any library core
-# the retiree exercised stays directly tested. The freed r16 seats went
-# to dp18_pii_redaction / u5_source_overlap_matrix, the freed r17 seats
-# to dq9_psi_drift / dp19_weighted_reservoir (first driver rows each).
+# RETIRED queries: redundant twins whose @register was deleted. Each
+# retiree's exact twin stays registered and keeps the semantics, and any
+# library core the retiree exercised stays directly tested
+# (tests/test_registry_window.py asserts all three).
 _RETIRED = {
     "d8_jaccard_join_prefix": (
-        "retired r16: redundant precision twin — shared _D8_ORACLE "
-        "literally with d8b_jaccard_join_df_prefix (gated r15), "
-        "bit-identical output by construction; the df-ordered variant "
-        "subsumes it, and the shared core prefix_jaccard_pairs("
-        "order_by_df=False) stays brute-force-tested in test_dedup.py"
+        "redundant precision twin: shared _D8_ORACLE literally with "
+        "d8b_jaccard_join_df_prefix, bit-identical output by "
+        "construction; the df-ordered variant subsumes it, and the "
+        "shared core prefix_jaccard_pairs(order_by_df=False) stays "
+        "brute-force-tested in test_dedup.py"
     ),
     "adv6b_approx_percentiles": (
-        "retired r16: approx/sketch twin of adv6_percentiles (gated "
-        "r14) — the numerical-variant class the r14 saturation ruling "
-        "names; the sketch-within-rank-band capability stays as an "
-        "unregistered library function with its band test"
+        "approx/sketch twin of adv6_percentiles; the "
+        "sketch-within-rank-band capability stays as an unregistered "
+        "library function with its band test"
     ),
     "a7_summary_report_approx": (
-        "retired r17: HLL/sketch twin of a7_summary_report (same r13 "
-        "cohort, stays gated) — the numerical-variant class the r14 "
-        "ruling names; wrapper-only (no unique core), and the "
-        "approx-distinct-within-band capability (_RSD + _hll_ok) stays "
-        "registered and gated via a1/a2_daily_analytics_approx"
+        "HLL/sketch twin of a7_summary_report, wrapper-only (no unique "
+        "core); the approx-distinct-within-band capability (_RSD + "
+        "_hll_ok) stays registered via a1/a2_daily_analytics_approx"
     ),
     "a4_vehicle_analytics_approx": (
-        "retired r17: HLL/sketch twin of a4_vehicle_analytics (same "
-        "r13 cohort, stays gated) — same class, wrapper-only; the "
-        "_hll_ok band pattern stays gated via a1/a2_approx"
+        "HLL/sketch twin of a4_vehicle_analytics, wrapper-only; the "
+        "_hll_ok band pattern stays registered via a1/a2_approx"
     ),
 }
-# Sibling map for the retirement-discipline test: each retiree's exact
-# twin must remain registered.
+# Each retiree's exact twin, which must remain registered.
 _RETIRED_TWINS = {
     "d8_jaccard_join_prefix": "d8b_jaccard_join_df_prefix",
     "adv6b_approx_percentiles": "adv6_percentiles",
     "a7_summary_report_approx": "a7_summary_report",
     "a4_vehicle_analytics_approx": "a4_vehicle_analytics",
 }
-# Per-round retirement counts for the ≤2/round cap assertion; parsed
-# from the note prefixes by the executed-state test.
-_RETIRED_ROUNDS = {
-    "d8_jaccard_join_prefix": 16,
-    "adv6b_approx_percentiles": 16,
-    "a7_summary_report_approx": 17,
-    "a4_vehicle_analytics_approx": 17,
-}
-
-# SATURATION PLAN for r18 (r16 verdict Next #3: the seat decision is
-# recorded in the r17 closure as mechanically-testable structures — the
-# same discipline that staged the executed r16 and r17 plans;
-# tests/test_registry_window.py::test_r18_retirement_plan_arithmetic).
-# Both retirees are HLL/sketch twins INSIDE the r14 rotation cohort
-# (the ONLY vintage that frees r18 seats) whose exact siblings
-# (a1_windowed_analytics, a2_daily_analytics) sit outside the registry
-# window rotation conflict — both stay registered; the r16 judge
-# pre-endorsed exactly this pair, contingent on r17 executing cleanly.
-# The freed seats go to the two mirror-green library ops shipped r16
-# with ready oracles, dry-run certificates, plan-shape tests and
-# partition-invariance pins: t20_token_entropy_profile and
-# dq10_composition_drift. r18 window = 48 r14-vintage + t20 + dq10 —
-# an exact tiling. NOTE: a1/a2_approx are the LAST gated users of the
-# _RSD/_hll_ok band pattern; their retirement must land with a direct
-# library test for _hll_ok (the adv6b band-test precedent) in the same
-# commit.
-_PLANNED_R18_RETIREMENTS = {
-    "a1_windowed_analytics_approx": (
-        "HLL/sketch twin of a1_windowed_analytics (exact sibling stays "
-        "gated) — the numerical-variant class the r14 ruling names; "
-        "r16 judge pre-endorsed"
-    ),
-    "a2_daily_analytics_approx": (
-        "HLL/sketch twin of a2_daily_analytics (exact sibling stays "
-        "gated) — same class; r16 judge pre-endorsed"
-    ),
-}
-_PLANNED_R18_ADDITIONS = [
-    "t20_token_entropy_profile",  # per-doc Shannon/normalized entropy + top share
-    "dq10_composition_drift",     # JS divergence of event-type mix across halves
-]
-
-# The driver's correctness gate checks the FIRST 50 registered queries per
-# round; this list pins the round-17 window, exactly as pre-declared in
-# the r16 closure and VERDICT r16 Next #1. The slots:
-# - 2 seats freed by the executed r17 retirements (see _RETIRED above),
-#   taken by dq9_psi_drift and dp19_weighted_reservoir — their FIRST
-#   driver rows (both shipped library-tested with ready oracles r15,
-#   dry-run-certified at both gate SFs r15 AND re-certified through the
-#   registered-form rewrite r16, pinned to lead);
-# - the 48 surviving members of the r13-vintage rotation cohort (every
-#   deferred query whose newest driver evidence is CORRECTNESS_r13),
-#   alphabetical. None carries a queued edge-case fix — the queue has
-#   been empty since r16 (the s9/t4/mm3 fixes landed with their seats).
-# 2 + 48 = 50, an exact tiling; nobody's re-certification stretches
-# past 4 rounds.
-#
-# REGISTRATION BUDGET (VERDICT r8 demand #3, r9 demand #2): new
-# @register per round must not exceed the NEXT window's free slots after
-# the carried backlog and the oldest-vintage rotation. Entering r18 the
-# oldest vintage is r14 with 50 queries and the never-gated backlog is 0
-# — 0 free slots — so round 17 registers exactly the TWO queries the
-# executed retirements freed seats for (dq9/dp19, both in this window —
-# backlog stays zero). The r18 seating of the ready library ops
-# t20_token_entropy_profile / dq10_composition_drift rides its own
-# ≤2-twin retirement from the r14 cohort — recorded above as
-# _PLANNED_R18_RETIREMENTS/_ADDITIONS (r16 judge pre-endorsed), same
-# discipline.
-#
-# Everything else (_WINDOW_DEFERRED) holds a green driver row earned on
-# current data in its current form (r14/r15/r16);
-# test_registry_window.py asserts the two lists exactly tile the
-# registry so a new query can never silently miss the rotation.
-_WINDOW_FIRST = [
-    # --- the 2 retirement-freed seats: first driver rows ---
-    "dq9_psi_drift",
-    "dp19_weighted_reservoir",
-    # --- the 48 surviving r13-vintage rotation cohort (alphabetical) ---
-    "a15_daily_sensor_summary", "a16_vehicle_daily_summary",
-    "a17c_rollup_compaction", "a1_windowed_analytics",
-    "a21_histogram_quantile_rollup", "a22_cms_heavy_hitters",
-    "a23_incremental_join_view", "a2_daily_analytics",
-    "a3_sensor_type_measurements", "a4_vehicle_analytics",
-    "a5_quality_histogram", "a6_anomaly_analytics", "a7_summary_report",
-    "a8_sensor_type_report", "a9_vehicle_topk", "adv11_range_join",
-    "adv14_scd2_snapshot_merge", "adv2_asof_join", "d10_dedup_delta",
-    "d11_neardup_keep_best", "dp11_split_decontamination",
-    "dp12_quality_weighted_sample", "dp13_reproducible_shuffle",
-    "dp14_temperature_mix", "dp1_corpus_clean", "dp8_document_chunking",
-    "dq4_semijoin_prefilter", "dq5_table_profile",
-    "g3_groupingsets_order_stats", "j10_order_rollup", "m11_liveness",
-    "m12_latency", "m13_throughput", "o1_filtered_scan_paginated",
-    "o1b_filtered_scan_keyset", "o4_anomaly_listing", "p7_vehicle_scan",
-    "p8_date_bucket", "s10_knn_pq", "s11_knn_tombstone_delete",
-    "s14_hybrid_rrf", "st11_streaming_cms_maintenance",
-    "st12_streaming_scd2_maintenance", "st13_streaming_join_view",
-    "st15_stateful_session_eviction", "t14_zipf_profile",
-    "t15_vocab_coverage", "t8_bpe_token_stats",
-]
-
-
-# Queries NOT in this round's 50-slot window — every one already carries
-# a green driver row earned on post-regeneration data in its current
-# form (r14, r15 or r16 — see CORRECTNESS_r1{4,5,6}.json) and is
-# value-checked against its DuckDB oracle on current data by the local
-# mirror (tests/test_oracle_parity.py) every round. After r17 the oldest
-# evidence here is r14 (50 queries) — the r18 rotation cohort.
-# Membership is asserted exhaustive + disjoint by
-# tests/test_registry_window.py.
-#
-# QUEUED-FIX LEDGER (all landed; kept as the sequencing record — the
-# t8 discipline: a gated query's code/oracle changes only with its own
-# window seat):
-# - dq7_expectation_audit: LANDED r14 with its seat (oracle-side
-#   coalesce for the four rowchk fail counters).
-# - st1_streaming_microbatch_analytics: LANDED r15 with its seat
-#   (schema-pinned sink re-read from the pre-start streaming plan;
-#   empty corpus returns the empty analytics frame).
-# - s9_knn_index_reload: LANDED r16 with its seat (schema-pinned BOTH
-#   persisted-index reloads — centroids "cell long, centroid
-#   array<double>", assignments via the pre-write indexed.schema — the
-#   a17c/st1 pattern for zero-data-file reloads).
-# - t4_fingerprints: LANDED r16 with its seat (oracle-side CASE WHEN
-#   text IS NULL THEN NULL — Spark sequence(1, NULL) NULL-propagates
-#   the char fold while DuckDB range(1, NULL) folds to seed 0; scoped
-#   to t4 so dp17's use of the shared sql_fingerprint helper over
-#   never-NULL tokens keeps its oracle text byte-identical).
-# - mm3_frame_sample: LANDED r16 with its seat (nullable-Int32 byte
-#   stats in fake_decode_stats — len(p) if p is not None else None;
-#   n_frames stays doc_id-derived and non-null).
-#
-# NBSP DOMAIN RESTRICTION TRIGGER (VERDICT r13 Next #8): tokens() /
-# sql_tokens() agree on ASCII-whitespace-boundary text only (Spark trim
-# strips ASCII whitespace; DuckDB trim also strips U+00A0 — pinned by
-# test_unicode_corpus_audit.py). IF a future gate corpus ever carries
-# NBSP-boundary documents, the fix is a symmetric regexp boundary trim
-# in BOTH engines' token helpers — that touches ~60 oracles at once and
-# is a planned multi-round migration scheduled through rotation seats,
-# NOT a single-round seat-budget violation.
-_WINDOW_DEFERRED = [
-    "a17_incremental_rollup", "a17b_rollup_backfill", "a18_sketch_cube",
-    "a19_resample_ffill", "a1_windowed_analytics_approx",
-    "a20_seasonality_profile", "a2_daily_analytics_approx",
-    "a2_monthly_analytics", "a2_weekly_analytics",
-    "adv10_unpivot_daily_metrics", "adv12_robust_outliers",
-    "adv13_salted_join", "adv15_pagerank", "adv15b_pagerank_scale9",
-    "adv1_sessionize", "adv3_pivot_daily_counts", "adv4_salted_agg",
-    "adv5_value_histogram", "adv6_percentiles", "adv8_hash_sample_stats",
-    "adv9_latest_per_key", "d12_duplicate_span_ratio",
-    "d1_exact_dedup_stats", "d2_exact_dedup_keep_first",
-    "d3_jaccard_pairs", "d4_minhash_lsh_dedup", "d5_simhash_neardup",
-    "d6_embedding_neardup", "d7_dedup_clusters", "d7_dedup_clusters_full",
-    "d8b_jaccard_join_df_prefix", "d9_semantic_dedup",
-    "dc1_benchmark_contamination", "dp10_boilerplate_removal",
-    "dp15_bigram_lm_screen", "dp16_dataset_card", "dp17_dsir_importance",
-    "dp18_pii_redaction", "dp2_corpus_clean_neardup", "dp3_training_mix",
-    "dp4_cleaning_audit", "dp5_sequence_packing", "dp7_training_shards",
-    "dp9_leakage_safe_split", "dq1_key_skew_audit",
-    "dq2_join_size_preflight", "dq3_referential_audit",
-    "dq6_snapshot_drift", "dq7_expectation_audit", "dq8_embedding_audit",
-    "g1_rollup_order_stats", "g2_cube_event_stats",
-    "j10b_returned_revenue_topk", "j11_brand_revenue",
-    "j11b_supplier_value_share", "j12_customer_order_presence",
-    "j12b_priority_by_returnflag", "j13_events_enriched",
-    "j13b_order_count_distribution", "j14_promo_revenue",
-    "j15_top_supplier", "j16_supplier_part_counts",
-    "j17_small_quantity_revenue", "j18_large_orders",
-    "j19_bracket_revenue", "j1_pricing_summary",
-    "j20_excess_stock_suppliers", "j21_lone_late_supplier",
-    "j22_dormant_customers", "j23_frequent_pairs",
-    "j23b_frequent_pairs_log", "j2_min_price_per_brand",
-    "j3_shipping_priority", "j4_priority_late_ship",
-    "j5_region_supplier_volume", "j6_forecast_revenue",
-    "j7_nation_volume_shipping", "j8_market_share", "j9_profit_by_nation",
-    "m10_hourly_quality", "m14_anomaly_rate", "m15_alerts",
-    "m16_burn_rate", "m17_alert_incidents", "m18_metrics_export",
-    "mm1_media_manifest", "mm2_media_type_stats", "mm3_frame_sample",
-    "mm4_payload_features", "mm5_payload_dedup", "mm6_shard_plan",
-    "mm7_stratified_sample", "mm8_phash_neardup", "p10_json_extract",
-    "s12_mips_topk", "s13_range_search", "s13b_range_search_ivf",
-    "s15_mmr_rerank", "s16_hybrid_rrf_ivf", "s1_knn_bruteforce",
-    "s2_knn_ivf", "s3_knn_lsh", "s4_label_centroids",
-    "s5_scalar_quantization", "s6_knn_ivf_sq8", "s7_knn_filtered",
-    "s8_knn_ivf_delta_add", "s9_knn_index_reload",
-    "st10_streaming_histogram_rollup", "st14_streaming_dataset_card",
-    "st1_streaming_microbatch_analytics", "st2_streaming_session_windows",
-    "st3_streaming_watermarked_windows", "st4_stream_static_join",
-    "st5_streaming_dedup", "st6_stateful_running_totals",
-    "st7_stream_stream_join", "st8_streaming_incremental_rollup",
-    "st9_streaming_alert_incidents", "t10_repetition_profile",
-    "t11_inverted_index", "t12_rarity_score", "t13_vocab_growth",
-    "t16_script_mix", "t17_collocations_pmi", "t17b_collocations_pmi_log",
-    "t18_bm25_topk", "t19_bpe_merge_step", "t1_token_stats",
-    "t2_doc_quality", "t3_langid_confusion", "t4_fingerprints",
-    "t5_top_terms", "t6_tfidf_top_terms", "t7_documents_profile",
-    "t9_pii_scan", "u1_active_keys_union", "u2_key_overlap",
-    "u3_key_overlap_multiset", "u4_snapshot_diff",
-    "u5_source_overlap_matrix", "w1_top_orders_per_customer",
-    "w2_user_running_value", "w3_event_gaps", "w4_value_deciles",
-    "w5_trailing_hour_aggs", "w6_cohort_retention",
-    "w6b_cohort_retention_approx", "w7_event_funnel",
-    "w8_markov_transitions",
-]
 
 
 def _ensure_loaded() -> None:
-    """Import every operator module for its registration side effects,
-    then rotate ``_WINDOW_FIRST`` to the front of the registry (see the
-    list's comment for the round-3 rationale)."""
-    global _LOADED, _REGISTRY
+    """Import every operator module for its registration side effects;
+    the registry keeps registration (import) order."""
+    global _LOADED
     if _LOADED:
         return
     from .operators import analytics, joins  # noqa: F401
@@ -416,10 +201,4 @@ def _ensure_loaded() -> None:
         monitoring,
     )
 
-    missing = [n for n in _WINDOW_FIRST if n not in _REGISTRY]
-    if missing:  # RuntimeError, not assert: -O strips asserts
-        raise RuntimeError(f"_WINDOW_FIRST names not registered: {missing}")
-    front = set(_WINDOW_FIRST)
-    order = _WINDOW_FIRST + [n for n in _REGISTRY if n not in front]
-    _REGISTRY = {n: _REGISTRY[n] for n in order}
     _LOADED = True

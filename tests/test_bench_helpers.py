@@ -1,141 +1,6 @@
-"""bench.py artifact plumbing: round inference and the delta baseline
-must follow the immutable per-round detail files (VERDICT r5 'What's
-wrong' #1 / ADVICE r5), never a mutable scratch file from an unknown
-run."""
+"""bench.py helpers: the steal canary the detail record carries."""
 
 from __future__ import annotations
-
-import json
-import os
-
-import bench
-
-
-def test_current_round_is_newest_bench_file_plus_one(tmp_path, monkeypatch):
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda _: str(tmp_path / "bench.py")
-    )
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    assert bench._current_round() is None  # no files, no env
-    (tmp_path / "BENCH_r03.json").write_text("{}")
-    (tmp_path / "BENCH_r05.json").write_text("{}")
-    assert bench._current_round() == 6
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "9")
-    assert bench._current_round() == 9
-
-
-def test_prev_bench_prefers_immutable_detail_and_its_own_round_label(
-    tmp_path, monkeypatch
-):
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda _: str(tmp_path / "bench.py")
-    )
-    detail = {
-        "round": 5,
-        "sf": 0.1,
-        "value": 60.0,
-        "queries": {"q1": 1.5},
-    }
-    (tmp_path / "BENCH_DETAIL_r05.json").write_text(json.dumps(detail))
-    # a scratch BENCH_DETAIL.json from some other run must NOT win
-    (tmp_path / "BENCH_DETAIL.json").write_text(
-        json.dumps({"round": 99, "queries": {"q1": 9.9}})
-    )
-    n, data = bench._latest_prev_bench(6)
-    assert n == 5
-    assert data["queries"] == {"q1": 1.5}
-
-
-def test_prev_bench_falls_back_to_driver_wrapped_bench_file(
-    tmp_path, monkeypatch
-):
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda _: str(tmp_path / "bench.py")
-    )
-    wrapped = {"parsed": {"sf": 0.1, "value": 50.0, "queries": {"q2": 2.0}}}
-    (tmp_path / "BENCH_r05.json").write_text(json.dumps(wrapped))
-    n, data = bench._latest_prev_bench(6)
-    assert n == 5
-    assert data["queries"] == {"q2": 2.0}
-    # round 1 (or unknown) has no previous round
-    assert bench._latest_prev_bench(1) == (None, None)
-    assert bench._latest_prev_bench(None) == (None, None)
-
-
-def _detail(queries, **extra):
-    d = {
-        "round": 7,
-        "sf": 0.1,
-        "value": sum(queries.values()),
-        "queries": queries,
-        "samples": {n: [t, t + 0.1] for n, t in queries.items()},
-    }
-    d.update(extra)
-    return d
-
-
-def test_maybe_pin_refuses_premature_round(tmp_path, monkeypatch):
-    # driver wrote BENCH_r07 mid-round -> a rerun infers round 8, but
-    # round 7 isn't closed (no CORRECTNESS_r07) -> no premature pin
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    bench._maybe_pin(str(tmp_path), 8, _detail({"q1": 1.0}))
-    assert not (tmp_path / "BENCH_DETAIL_r08.json").exists()
-    # once round 7 closes, round 8's pin is legitimate
-    (tmp_path / "CORRECTNESS_r07.json").write_text("{}")
-    bench._maybe_pin(str(tmp_path), 8, _detail({"q1": 1.0}))
-    assert (tmp_path / "BENCH_DETAIL_r08.json").exists()
-    # explicit env override bypasses the closure check
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "9")
-    bench._maybe_pin(str(tmp_path), 9, _detail({"q1": 1.0}))
-    assert (tmp_path / "BENCH_DETAIL_r09.json").exists()
-
-
-def test_maybe_pin_first_run_wins_unless_contradicted(tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    (tmp_path / "CORRECTNESS_r06.json").write_text("{}")
-    first = _detail({"dp2": 2.9, "q2": 1.0})
-    bench._maybe_pin(str(tmp_path), 7, first)
-    # a merely-jittery rerun (within 1.5x or under 0.5 s) does not re-pin
-    bench._maybe_pin(str(tmp_path), 7, _detail({"dp2": 2.2, "q2": 0.7}))
-    pinned = json.loads((tmp_path / "BENCH_DETAIL_r07.json").read_text())
-    assert pinned["queries"] == {"dp2": 2.9, "q2": 1.0}
-    assert "repinned" not in pinned
-    # a >1.5x AND >0.5 s contradiction re-pins, preserving the old record.
-    # The merged record keeps per-query MINIMA (ADVICE r7): q2, which the
-    # contradicting run happened to measure SLOWER, must not be frozen
-    # worse just because dp2 was implausible.
-    bench._maybe_pin(str(tmp_path), 7, _detail({"dp2": 1.5, "q2": 1.8}))
-    pinned = json.loads((tmp_path / "BENCH_DETAIL_r07.json").read_text())
-    assert pinned["queries"] == {"dp2": 1.5, "q2": 1.0}
-    assert pinned["value"] == 2.5
-    assert pinned["repinned"] is True
-    assert pinned["repin_contradicted"] == ["dp2"]
-    assert pinned["repinned_over"]["queries"]["dp2"] == 2.9
-    # ...and only once per round: a second contradiction is refused
-    bench._maybe_pin(str(tmp_path), 7, _detail({"dp2": 0.5, "q2": 1.0}))
-    pinned = json.loads((tmp_path / "BENCH_DETAIL_r07.json").read_text())
-    assert pinned["queries"]["dp2"] == 1.5
-
-
-def test_maybe_pin_requires_git_tracked_closure(tmp_path, monkeypatch):
-    """In a git repo, an UNTRACKED correctness drop (the driver's
-    judge-time state) must not count as round closure — only the
-    round-boundary commit does."""
-    import subprocess
-
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    subprocess.run(
-        ["git", "init", "-q"], cwd=tmp_path, check=True, capture_output=True
-    )
-    (tmp_path / "CORRECTNESS_r07.json").write_text("{}")  # untracked
-    bench._maybe_pin(str(tmp_path), 8, _detail({"q1": 1.0}))
-    assert not (tmp_path / "BENCH_DETAIL_r08.json").exists()
-    subprocess.run(
-        ["git", "add", "CORRECTNESS_r07.json"],
-        cwd=tmp_path, check=True, capture_output=True,
-    )
-    bench._maybe_pin(str(tmp_path), 8, _detail({"q1": 1.0}))
-    assert (tmp_path / "BENCH_DETAIL_r08.json").exists()
 
 
 def test_steal_canary_positive_and_repeatable():

@@ -272,8 +272,7 @@ def test_prefix_join_equals_brute_force(spark):
 
 
 # ---------------------------------------------------------------------------
-# d13 containment near-dup (round-17 library op; r19 seat candidate —
-# oracle ready): the prefix-filtered containment join must return
+# d13 containment near-dup: the prefix-filtered containment join must return
 # EXACTLY the brute-force max-containment >= tau pairs (the filter is
 # an optimization, never a semantics change — the d8 discipline,
 # asymmetric form).

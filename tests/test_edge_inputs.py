@@ -961,13 +961,12 @@ def test_dp17_d12_plan_shapes(spark):
 
 
 def test_t20_dq10_plan_shapes(spark):
-    """Seat-candidate plan pins (VERDICT r16 Next #4, the dp17/d12
-    pattern): t20 must plan as a pruned documents scan feeding
-    partial/final hash aggregates with zero joins and zero windows;
+    """Plan pins (the dp17/d12 pattern): t20 must plan as a pruned
+    documents scan feeding partial/final hash aggregates with zero joins
+    and zero windows;
     dq10 as ONE persisted count aggregate whose scalar attaches are
     broadcast-only — no sort-merge / shuffled-hash / cartesian join may
-    ever appear. The registry-wide audits inherit these pinned shapes
-    when the two ops take their planned r18 seats."""
+    ever appear."""
     from iot_big_data_engineering_spark.operators.advanced import (
         dq10_composition_drift,
     )
@@ -1001,9 +1000,9 @@ def test_t20_dq10_plan_shapes(spark):
 
 
 def test_d13_dq11_plan_shapes(spark):
-    """Seat-candidate plan pins for the r19 candidates (the t20/dq10
-    pattern above): d13's candidate generation must stay an equi-join
-    on shingle hashes over the pinned signature table — no cartesian,
+    """Plan pins (the t20/dq10 pattern above): d13's candidate
+    generation must stay an equi-join on shingle hashes over the pinned
+    signature table — no cartesian,
     no broadcast nested loop; dq11 must plan with ZERO joins (one
     corpus-scale daily aggregate, then |days|-bounded array math and a
     per-type bounded window) and a pruned events scan."""
@@ -1035,12 +1034,12 @@ def test_d13_dq11_plan_shapes(spark):
 
 
 def test_dp20_dq12_plan_shapes(spark):
-    """Seat-candidate plan pins for the r20 pipeline candidates: dp20's
-    corpus work must be ONE pruned-scan count aggregate with the
-    bounded-row CDF frame pinned (its theta-join and scaffold join run
-    on that cache, never a cartesian); dq12's corpus work is one count
-    aggregate onto ≤ 9 pinned rows with broadcast-only attaches — no
-    sort-merge join or cartesian may ever appear in either."""
+    """Plan pins: dp20's corpus work must be ONE pruned-scan count
+    aggregate with the bounded-row CDF frame pinned (its theta-join and
+    scaffold join run on that cache, never a cartesian); dq12's corpus
+    work is one count aggregate onto ≤ 9 pinned rows with
+    broadcast-only attaches — no sort-merge join or cartesian may ever
+    appear in either."""
     from iot_big_data_engineering_spark.operators.advanced import (
         dq12_benford_audit,
     )
@@ -1578,7 +1577,7 @@ def test_dq3_empty_tables_stable(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# dq9 PSI drift (round-15 library op; r17 seat candidate — oracle ready)
+# dq9 PSI drift
 # ---------------------------------------------------------------------------
 def _knuth_side(key: int) -> int:
     return (key * 2654435761) % (2**32) % 2
@@ -1724,8 +1723,7 @@ def test_dq9_matches_oracle_on_gate_data(spark):
 
 
 # ---------------------------------------------------------------------------
-# dq10 categorical composition drift (round-16 library op; r18 seat
-# candidate — oracle ready)
+# dq10 categorical composition drift
 # ---------------------------------------------------------------------------
 def test_dq10_shifted_mix_trips_and_balanced_stays(spark):
     """Two constructions over the same deterministic id stream: a
@@ -1870,8 +1868,7 @@ def test_dq10_js_invariants_on_gate_data(spark):
 
 
 # ---------------------------------------------------------------------------
-# dq11 CUSUM changepoint localization (round-17 library op; r19 seat
-# candidate — oracle ready)
+# dq11 CUSUM changepoint localization
 # ---------------------------------------------------------------------------
 def test_dq11_planted_level_shift_localized(spark):
     """A clean level shift (daily mean 10 for days 1-10, 50 for days
@@ -2012,8 +2009,7 @@ def test_dq11_cusum_invariants_on_gate_data(spark):
 
 
 # ---------------------------------------------------------------------------
-# dq12 Benford first-digit audit (round-17 library op; r20 pipeline
-# candidate — oracle ready)
+# dq12 Benford first-digit audit
 # ---------------------------------------------------------------------------
 def test_dq12_conforming_vs_uniform_digits(spark):
     """A 10,000-row frame whose digit census is the rounded Benford

@@ -59,10 +59,14 @@ _CURATED = [
     "w7_event_funnel",            # first() over ordered window
     "mm6_shard_plan",             # two-phase prefix sum over byte offsets
     "g1_rollup_order_stats",      # rollup grouping-set floats
-    # r17 registrations keep their library-era always-on pins (bin-
-    # ordered PSI fold; salted two-stage A-ES rank):
-    "dq9_psi_drift",
-    "dp19_weighted_reservoir",
+    "dq9_psi_drift",              # bin-ordered PSI fold
+    "dp19_weighted_reservoir",    # salted two-stage A-ES rank
+    "dq10_composition_drift",     # type-ordered JS fold
+    "dq11_cusum_changepoint",     # day-ordered prefix folds + argmax
+    "dq12_benford_audit",         # digit-ordered folds, global window
+    "d13_containment_neardup",    # prefix-filter join over shingle sets
+    "dp20_token_mass_quantiles",  # cumulative-mass window per source
+    "t20_token_entropy_profile",  # token-ordered per-doc fold
 ]
 
 
@@ -118,36 +122,6 @@ _NAMES = (
 @pytest.mark.parametrize("name", _NAMES)
 def test_partition_invariance(spark, name):
     _assert_invariant(spark, _ALL[name])
-
-
-# Seat-bound LIBRARY ops (r18 plan: t20/dq10; r19 candidates:
-# d13/dq11) are not in the registry yet, so the registry-wide sweep
-# cannot reach them — but every one carries an ordered float fold or a
-# layout-sensitive join (the exact construct classes this audit exists
-# for), and each will face the full sweep the round it is seated. Pin
-# layout-invariance NOW, before the seat, so a fold that floats with
-# the scan layout is found while the op is still library-form.
-# Always-on (the curated tier), sf0.001. dq9/dp19 left this list with
-# their r17 registration (the registry-wide sweep owns them now).
-def _library_seat_candidates():
-    from iot_big_data_engineering_spark.operators import advanced, dedup, textstats
-
-    return {
-        "dq10_composition_drift": advanced.dq10_composition_drift,
-        "dq11_cusum_changepoint": advanced.dq11_cusum_changepoint,
-        "dq12_benford_audit": advanced.dq12_benford_audit,
-        "d13_containment_neardup": dedup.d13_containment_neardup,
-        "dp20_token_mass_quantiles": textstats.dp20_token_mass_quantiles,
-        "t20_token_entropy_profile": textstats.t20_token_entropy_profile,
-    }
-
-
-@pytest.mark.parametrize("name", sorted(_library_seat_candidates()))
-def test_library_seat_candidate_partition_invariance(spark, name):
-    from types import SimpleNamespace
-
-    fn = _library_seat_candidates()[name]
-    _assert_invariant(spark, SimpleNamespace(name=name, fn=fn))
 
 
 # ---------------------------------------------------------------------------

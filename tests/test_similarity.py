@@ -1261,9 +1261,8 @@ def test_hybrid_rrf_ivf_library_form(spark):
 
 
 def test_s15_mmr_matches_generated_oracle(spark):
-    """s15 is library-only until a window seat frees (r14 earliest); this
-    test runs the registration-shaped compare the mirror would run —
-    Spark vs the generated unrolled-CTE DuckDB oracle, value-exact."""
+    """Spark vs the generated unrolled-CTE DuckDB oracle, value-exact,
+    through the library function and the un-rewritten oracle."""
     from iot_big_data_engineering_spark.operators.similarity import (
         _S15_ORACLE,
         s15_mmr_rerank,

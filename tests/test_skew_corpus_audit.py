@@ -159,8 +159,7 @@ _CURATED = [
 _NAMES = [
     n
     for n, q in _ALL.items()
-    if q.oracle is not None
-    and ("documents" in q.oracle or "embeddings" in q.oracle)
+    if ("documents" in q.oracle or "embeddings" in q.oracle)
     and (
         (_FULL and (n.startswith("d") or n == "mm5_payload_dedup"))
         or n in _CURATED

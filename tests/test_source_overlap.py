@@ -1,5 +1,4 @@
-"""u5_source_overlap_matrix (round-13 library op; registration candidate
-when a window seat frees): cross-source exact-duplicate provenance
+"""u5_source_overlap_matrix: cross-source exact-duplicate provenance
 matrix. Gate data is duplicate-free, so the registered-shape compared
 surface would be the all-zero total matrix — these tests carry the
 non-zero semantics on a hand corpus and pin cross-engine equality."""

@@ -1856,8 +1856,7 @@ def test_dp18_matches_oracle_on_gate_data(spark):
 
 
 # ---------------------------------------------------------------------------
-# dp19 weighted reservoir (round-15 library op; r17 seat candidate —
-# oracle ready)
+# dp19 weighted reservoir
 # ---------------------------------------------------------------------------
 def test_dp19_salt_invariance_pins_two_stage_exactness(spark):
     """The header's load-bearing claim: the salted two-stage top-k is an
@@ -2019,8 +2018,7 @@ def test_dp19_matches_oracle_on_gate_data(spark):
 
 
 # ---------------------------------------------------------------------------
-# t20 token entropy profile (round-16 library op; r18 seat candidate —
-# oracle ready)
+# t20 token entropy profile
 # ---------------------------------------------------------------------------
 def test_t20_closed_form_entropies(spark, tmp_path):
     """Hand corpus with analytically known entropies, computed through
@@ -2117,8 +2115,7 @@ def test_t20_matches_oracle_on_gate_data(spark):
 
 
 # ---------------------------------------------------------------------------
-# dp20 token-mass quantiles (round-17 library op; r20 pipeline
-# candidate — oracle ready)
+# dp20 token-mass quantiles
 # ---------------------------------------------------------------------------
 def test_dp20_closed_form_deciles(spark, tmp_path):
     """Hand corpus with a closed-form mass CDF: ten 1-token docs plus

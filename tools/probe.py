@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Round-18 optimization probe: per-query wall time, Spark job count and
+"""Optimization probe: per-query wall time, Spark job count and
 formatted plan capture for the bench headline set (or a named subset).
 
 Usage:
-    python tools/probe_r18.py [query ...]        # default: full HEADLINE
-    PROBE_REPS=3 PROBE_PLANS=plans/r18 PROBE_SUFFIX=_before \
-        python tools/probe_r18.py adv15_pagerank
+    python tools/probe.py [query ...]        # default: full HEADLINE
+    PROBE_REPS=3 PROBE_PLANS=plans PROBE_SUFFIX=_before \
+        python tools/probe.py adv15_pagerank
 
 Writes one JSON line per query to stdout:
     {"q": name, "best": s, "samples": [...], "jobs": n}
@@ -13,12 +13,11 @@ and (when PROBE_PLANS is set) the .explain("formatted") text to
 $PROBE_PLANS/<q>$PROBE_SUFFIX.txt.
 
 Timing methodology matches bench.py (count() on the returned frame,
-clearCache() between reps) so numbers are comparable with the pinned
-records. Job counting (r17 ADVICE): deltas of the DAGScheduler's
-monotonic nextJobId counter, not len(getJobIdsForGroup(None)) — the
-latter under-counts once the UI evicts old jobs (spark.ui.retainedJobs,
-default 1000; a full 126-query probe crosses it) and misses jobs run
-inside a job group."""
+clearCache() between reps) so numbers are comparable with bench.py's.
+Job counting: deltas of the DAGScheduler's monotonic nextJobId counter,
+not len(getJobIdsForGroup(None)) — the latter under-counts once the UI
+evicts old jobs (spark.ui.retainedJobs, default 1000; a full 126-query
+probe crosses it) and misses jobs run inside a job group."""
 
 from __future__ import annotations
 
@@ -36,7 +35,7 @@ from iot_big_data_engineering_spark.session import get_spark  # noqa: E402
 
 def _next_job_id(spark) -> int:
     """Monotonic count of all jobs ever submitted to this context —
-    survives UI eviction and job groups (r17 ADVICE #3)."""
+    survives UI eviction and job groups."""
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
@@ -47,7 +46,7 @@ def main() -> None:
     suffix = os.environ.get("PROBE_SUFFIX", "_before")
     names = sys.argv[1:] or HEADLINE
 
-    spark = get_spark(app_name="probe_r18")
+    spark = get_spark(app_name="probe")
     qs = queries()
     # warm JVM + python workers exactly like bench.py
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
