@@ -12,8 +12,10 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from iot_big_data_engineering_spark.functions.rounding import fround
 from iot_big_data_engineering_spark.sources.sensor_view import quality_checked
 from iot_big_data_engineering_spark.streaming.pipeline import (
+    batch_windowed_analytics,
     run_microbatch_pipeline,
     run_windowed_stream_to_memory,
     sensor_stream,
@@ -284,6 +286,164 @@ def test_checkpoint_makes_restart_idempotent(spark, tmp_path):
     n2 = spark.read.parquet(paths2["quality"]).count()
     assert n1 > 0
     assert n2 == n1, (n1, n2)
+
+
+def _sink_rows(spark, path):
+    return sorted(
+        map(tuple, spark.read.parquet(path).drop("epoch_id").collect()),
+        key=repr,
+    )
+
+
+def test_sink_writes_fan_out_with_the_stream_properties(
+    spark, tmp_path, monkeypatch
+):
+    """The three sink writes of an epoch run on pool threads, each with
+    the stream thread's local properties: a property the caller set
+    before the run, and the stream's job group, which
+    ``StreamingQuery.stop()`` cancels by. A thread without them would run
+    its write outside the query's cancellation and attribution."""
+    import threading
+
+    from iot_big_data_engineering_spark.streaming import pipeline
+
+    calls = []
+    write_epoch = pipeline.write_epoch
+
+    def spy(df, epoch_id, path):
+        sc = df.sparkSession.sparkContext
+        calls.append(
+            (
+                os.path.basename(path),
+                threading.get_ident(),
+                sc.getLocalProperty("test.fanout"),
+                sc.getLocalProperty("spark.jobGroup.id"),
+            )
+        )
+        write_epoch(df, epoch_id, path)
+
+    monkeypatch.setattr(pipeline, "write_epoch", spy)
+    sc = spark.sparkContext
+    sc.setLocalProperty("test.fanout", "caller")
+    try:
+        run_microbatch_pipeline(spark, SF_SMOKE, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("test.fanout", None)
+    assert sorted(c[0] for c in calls) == [
+        "sensor_analytics",
+        "sensor_anomalies",
+        "sensor_quality_checked",
+    ], calls
+    assert {c[2] for c in calls} == {"caller"}, calls
+    groups = {c[3] for c in calls}
+    assert len(groups) == 1 and None not in groups, calls
+    assert len({c[1] for c in calls}) >= 2, calls
+
+
+def test_failed_sink_write_fails_the_epoch_and_replay_repairs_it(
+    spark, tmp_path, monkeypatch
+):
+    """One failed write fails the epoch while its sibling writes land.
+    The rerun on the same checkpoint replays the epoch, and each write
+    overwrites its own partition, so every sink holds each row once."""
+    from iot_big_data_engineering_spark.streaming import pipeline
+
+    write_epoch = pipeline.write_epoch
+    failed = []
+
+    def flaky(df, epoch_id, path):
+        if path.endswith("sensor_analytics") and not failed:
+            failed.append(epoch_id)
+            raise RuntimeError("injected analytics write failure")
+        write_epoch(df, epoch_id, path)
+
+    monkeypatch.setattr(pipeline, "write_epoch", flaky)
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="injected analytics write failure"):
+        run_microbatch_pipeline(spark, SF_SMOKE, out)
+    assert failed == [0]
+    paths = run_microbatch_pipeline(spark, SF_SMOKE, out)
+
+    want = quality_checked(spark, SF_SMOKE)
+    assert _sink_rows(spark, paths["quality"]) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+    assert _sink_rows(spark, paths["anomalies"]) == sorted(
+        map(tuple, want.filter(F.col("anomaly_score") > 0).collect()), key=repr
+    )
+    assert _sink_rows(spark, paths["analytics"]) == sorted(
+        map(tuple, batch_windowed_analytics(want).collect()), key=repr
+    )
+
+
+def test_batch_windowed_analytics_distinct_counts_are_exact(spark):
+    """The one-shuffle distinct counts equal the ``countDistinct`` form
+    in rows, column order and types: NULL ids are skipped (an all-NULL
+    group counts 0), duplicates count once, a one-row group counts 1 and
+    an empty frame gives no rows."""
+    import datetime as dt
+
+    def count_distinct_form(df):
+        return (
+            df.groupBy(F.window("ts", "1 minute").alias("w"), "sensor_type")
+            .agg(
+                F.count("*").alias("record_count"),
+                F.countDistinct("vehicle_id").alias("unique_vehicles"),
+                F.countDistinct("sensor_id").alias("unique_sensors"),
+                fround(
+                    F.sum("q_int").cast("double")
+                    / (F.lit(5.0) * F.count(F.lit(1))),
+                    6,
+                ).alias("avg_quality_score"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "sensor_type",
+                "record_count",
+                "unique_vehicles",
+                "unique_sensors",
+                "avg_quality_score",
+            )
+        )
+
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    s = dt.timedelta(seconds=1)
+    rows = [
+        # duplicate ids and a NULL of each kind in one group
+        (t, "gps", "VH_1", "gps_1", 5),
+        (t + s, "gps", "VH_1", "gps_1", 4),
+        (t + 2 * s, "gps", None, "gps_2", 3),
+        (t + 3 * s, "gps", "VH_2", None, 3),
+        # every id NULL
+        (t, "error", None, None, 2),
+        (t + s, "error", None, None, 2),
+        # one row, in the next window
+        (t + 60 * s, "gps", "VH_3", "gps_3", 5),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "ts timestamp, sensor_type string, vehicle_id string, "
+        "sensor_id string, q_int int",
+    )
+    for frame in (df, df.limit(0)):
+        got, want = batch_windowed_analytics(frame), count_distinct_form(frame)
+        assert got.dtypes == want.dtypes
+        assert dict(got.dtypes)["unique_vehicles"] == "bigint"
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+    counts = {
+        (r.window_start, r.sensor_type): (r.unique_vehicles, r.unique_sensors)
+        for r in batch_windowed_analytics(df).collect()
+    }
+    assert counts == {
+        (t, "gps"): (2, 2),
+        (t, "error"): (0, 0),
+        (t + 60 * s, "gps"): (1, 1),
+    }
+    plan = batch_windowed_analytics(df)._jdf.queryExecution().executedPlan()
+    assert "Expand" not in plan.toString()
 
 
 def test_st7_is_a_true_stream_stream_join(spark):
@@ -689,7 +849,10 @@ def test_scratch_trees_removed_on_every_exit(spark, tmp_path, monkeypatch):
 def test_streaming_plumbing_lives_only_in_its_helpers():
     """The availableNow run, the scratch tree, the memory sink and the
     epoch-keyed overwrite each have one helper; a copy of any of them
-    anywhere else in the package fails here."""
+    anywhere else in the package fails here. Threads live only in
+    ``run_microbatch_pipeline``'s sink fan-out, and every task it submits
+    goes through ``inheritable_thread_target``: a pool thread without the
+    stream's local properties runs outside its job group."""
     import ast
     import re
     from pathlib import Path
@@ -707,6 +870,7 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
     }
     found = {pattern: [] for pattern in homes}
     overwrite_owners = []
+    thread_owners = []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         src = path.read_text()
@@ -716,9 +880,13 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
         ]
 
-        def owner(lineno):
+        def enclosing(lineno):
             inside = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
-            return max(inside, key=lambda f: f.lineno).name if inside else None
+            return sorted(inside, key=lambda f: f.lineno)
+
+        def owner(lineno):
+            inside = enclosing(lineno)
+            return inside[-1].name if inside else None
 
         for lineno, line in enumerate(src.splitlines(), 1):
             for pattern in homes:
@@ -726,6 +894,28 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
                     found[pattern].append((rel, owner(lineno)))
             if rel == "streaming/pipeline.py" and "partitionOverwriteMode" in line:
                 overwrite_owners.append(owner(lineno))
+            if re.search(r"\b(?:ThreadPoolExecutor|Thread)\(", line):
+                chain = enclosing(lineno)
+                thread_owners.append((rel, [f.name for f in chain]))
+                submits = [
+                    n
+                    for n in ast.walk(chain[-1])
+                    if isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "submit"
+                ] if chain else []
+                assert submits, (rel, lineno, "threads must submit tasks")
+                for call in submits:
+                    target = call.args[0] if call.args else None
+                    assert (
+                        isinstance(target, ast.Call)
+                        and isinstance(target.func, ast.Call)
+                        and isinstance(target.func.func, ast.Name)
+                        and target.func.func.id == "inheritable_thread_target"
+                    ), (rel, call.lineno, "submit without inheritable_thread_target")
     for pattern, home in homes.items():
         assert found[pattern] == [home], (pattern, found[pattern])
     assert overwrite_owners == ["write_epoch"], overwrite_owners
+    assert thread_owners == [
+        ("streaming/pipeline.py", ["run_microbatch_pipeline", "process_batch"])
+    ], thread_owners
