@@ -2342,8 +2342,7 @@ def _frequent_pair_counts(
     # Apriori prune BEFORE the self-join: only frequent items enter the
     # per-basket quadratic step. freq is |parts|-scale — no broadcast
     # hint (t6's vocabulary rationale); both sides hash on pkey.
-    # Persisted: fi feeds BOTH sides of the self-join (r9 self-review).
-    fi = track(items.join(freq, "pkey").select("okey", "pkey", "c").persist())
+    fi = items.join(freq, "pkey").select("okey", "pkey", "c")
     n = items.agg(F.countDistinct("okey").cast("bigint").alias("n"))
     if scale_shape:
         # basket-array expansion: pkey is unique within an okey (items is
@@ -2366,6 +2365,9 @@ def _frequent_pair_counts(
             ).alias("p")
         ).select("p.p1", "p.ca", "p.p2", "p.cb")
     else:
+        # persisted only here: fi feeds BOTH sides of the self-join, while
+        # the basket form above is its single consumer
+        fi = track(fi.persist())
         a = fi.select(
             F.col("okey"),
             F.col("pkey").alias("p1"),

@@ -2396,6 +2396,18 @@ _S16_NLIST = 16
 _S16_NPROBE = 4
 
 
+def _desc_nulls_last_key(val: float | None, doc_id: int) -> tuple:
+    """Python sort key for Spark's ``val DESC NULLS LAST, doc_id ASC``:
+    NaN above every double (Spark orders NaN greater than +Inf and equal
+    to itself), NULL after everything. A bare ``-val`` key leaves NaN
+    unordered, which breaks the sort's total order."""
+    if val is None:
+        return (2, 0.0, doc_id)
+    if val != val:  # NaN
+        return (0, 0.0, doc_id)
+    return (1, -val, doc_id)
+
+
 def _s14_sem_channel_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sem_rank): the exact top-C through the cell-pruned access
     path — row-identical to _s14_sem_channel_exact by the bound above."""
@@ -2470,14 +2482,11 @@ def _s14_sem_channel_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DESC with NULLs last, doc_id ASC — the same total order _topc states
     cand1 = sorted(
         (r for r in merged_rows if r.t == 0),
-        key=lambda r: (
-            r.val is None,
-            -(r.val if r.val is not None else 0.0),
-            r.k,
-        ),
+        key=lambda r: _desc_nulls_last_key(r.val, r.k),
     )
-    if len(cand1) == _S14_C and cand1[-1].val is not None:
-        tau = cand1[-1].val - _S13B_TAU_MARGIN
+    last = cand1[-1].val if len(cand1) == _S14_C else None
+    if last is not None and last == last:  # neither NULL nor NaN
+        tau = last - _S13B_TAU_MARGIN
     else:
         tau = -2.0  # keep every cell — exact by trivial inclusion
     min_ccos = np.ones(cent.shape[0])  # absent cell → radius 0

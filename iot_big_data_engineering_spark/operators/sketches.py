@@ -42,6 +42,7 @@ from ..functions import hashing as _hashing
 from ..functions.rounding import fround
 from ..registry import register
 from ..sources.sensor_view import SENSOR_ORACLE_CTE, quality_checked
+from ..sources.table_sinks import write_epoch
 
 _R = 6
 
@@ -225,7 +226,7 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold THREE disjoint period deltas into the parquet-backed state table
     via maintain_rollup_state, then RE-DELIVER period 1 (at-least-once
     replay / backfill re-run) before finalizing. The replay must be a
-    no-op — its dynamic overwrite replaces exactly its own partition with
+    no-op — its epoch overwrite replaces exactly its own directory with
     identical state rows — so the merged state still equals the full
     recompute the oracle performs. This hash-checks the idempotent-
     overwrite contract itself, not just the merge algebra a17 covers."""
@@ -238,9 +239,9 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # stand-in for "one delivery per ingest day". A period CAN
                 # be empty (sparse/short corpora: a single-day corpus fills
                 # one residue; days {d, d+3, ...} fill one); empty
-                # deliveries are handled — maintain_rollup_state reads the
-                # state back with an explicit schema, and merge_states over
-                # zero rows yields zero groups
+                # deliveries are handled — an empty epoch is a schema-only
+                # part file, and merge_states over zero rows yields zero
+                # groups
                 "period",
                 F.pmod(F.datediff(F.to_date("ts"), F.lit("1970-01-01")), F.lit(3)),
             )
@@ -400,92 +401,71 @@ def maintain_rollup_state(
     spark: SparkSession,
     state_path: str,
     delta: DataFrame,
-    period_id: int,
+    epoch_id: int,
 ) -> DataFrame:
     """The production maintenance step a17 demonstrates: fold ONE new
     period's delta into a parquet-backed state table and return the
     updated merged state.
 
-    Layout: state_path holds one partition per period (period_id=N) of
-    per-group partial states — the merge is re-derived from the partials
-    at read time (O(periods × groups) rows, metadata-sized), so the
-    write is a pure epoch-keyed dynamic overwrite: replaying a period
-    (at-least-once delivery, backfill re-run) overwrites exactly its own
-    partition and the merged result is unchanged — the same
+    Layout: a period is an epoch of the state table, and state_path holds
+    one ``epoch_id=N`` directory of per-group partial states per period,
+    written by :func:`~..sources.table_sinks.write_epoch`. The merge is
+    re-derived from the partials at read time (O(periods × groups) rows,
+    metadata-sized), so replaying a period (at-least-once delivery,
+    backfill re-run), even an empty one, replaces exactly its own
+    directory and the merged result is unchanged — the same
     replay-idempotence contract as the streaming sinks (st1/st8). A
-    compaction job may periodically merge old partitions into one; the
+    compaction job may periodically merge old epochs into one; the
     algebra is associative (tested), so compaction never changes the
     merged value."""
-    state = _partial_state(delta).withColumn("period_id", F.lit(period_id))
-    (
-        state.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("period_id")
-        .parquet(state_path)
-    )
-    # read back with the state's OWN schema: an empty delta (a period
-    # with no rows — empty corpus, sparse day coverage) writes a state
-    # dir with no data files, and schema inference would throw
-    # "Unable to infer schema for Parquet" on the very first delivery
+    state = _partial_state(delta)
+    write_epoch(state, epoch_id, state_path)
+    # read back with the state's OWN schema: no schema-inference job
     return merge_states(
-        spark.read.schema(state.schema).parquet(state_path).drop("period_id")
+        spark.read.schema(state.schema).parquet(state_path).drop("epoch_id")
     )
 
 
 def compact_rollup_state(
-    spark: SparkSession, state_path: str, compacted_period_id: int = -1
+    spark: SparkSession, state_path: str, compacted_epoch_id: int = -1
 ) -> None:
-    """Compact a maintain_rollup_state table: merge every existing period
-    partition into ONE (period_id=compacted_period_id, negative by
-    convention so it can never collide with a future delivery) and swap
-    it in via write-new, rename-aside, rename-in, delete-old. A reader
-    can never observe a HALF-WRITTEN state (the compacted copy is built
-    entirely off to the side), and a crash at any step loses no data:
-    before the second rename both the old (possibly renamed aside) and
-    compacted copies exist on disk. The swap itself is two renames, so
-    a reader racing exactly between them can see a missing directory —
-    single-writer maintenance windows are assumed, as with any
-    filesystem-level compactor; table formats with a transactional
-    commit log (Iceberg/Delta) are the 100 TB answer when readers must
-    overlap compaction (ADVICE r6).
+    """Compact a maintain_rollup_state table: merge every existing epoch
+    into ONE (epoch_id=compacted_epoch_id, negative by convention so it
+    can never collide with a future delivery) and swap it in via
+    write-new, rename-aside, rename-in, delete-old. A reader can never
+    observe a HALF-WRITTEN state (the compacted copy is built entirely off
+    to the side), and a crash at any step loses no data: before the second
+    rename both the old (possibly renamed aside) and compacted copies
+    exist on disk. The swap itself is two renames, so a reader racing
+    exactly between them can see a missing directory — single-writer
+    maintenance windows are assumed, as with any filesystem-level
+    compactor; table formats with a transactional commit log
+    (Iceberg/Delta) are the 100 TB answer when readers must overlap
+    compaction.
 
-    At 100 TB the state table grows one |groups|-sized partition per
-    period; after years that read-side merge is O(periods × groups) rows.
+    At 100 TB the state table grows one |groups|-sized epoch per period;
+    after years that read-side merge is O(periods × groups) rows.
     Compaction bounds it at O(groups) again. merge_states is associative
     and commutative in every column (sums add, min/max combine, HLL
     union), so (p0 ⊕ p1 ⊕ p2) ⊕ p3 ≡ p0 ⊕ p1 ⊕ p2 ⊕ p3 — a17c
-    hash-checks exactly that through the driver gate."""
+    hash-checks exactly that through the driver gate. An all-empty state
+    (every delivery so far was empty) holds schema-only part files, so it
+    compacts like any other."""
     import shutil
 
-    # all-empty state (every delivery so far was an empty delta — empty
-    # corpus, no coverage yet): the partition dirs hold no data files, so
-    # schema inference on the read below would throw UNABLE_TO_INFER_SCHEMA
-    # (maintain_rollup_state schema-pins its own read for the same reason,
-    # but the compactor has no delta to take a schema from). Nothing to
-    # compact is a no-op by definition — the merged value is vacuously
-    # unchanged, which is the whole compaction contract.
-    has_files = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(state_path)
-        for f in files
-    )
-    if not has_files:
-        return
-
     tmp_path = state_path + "_compacting"
-    (
-        merge_states(spark.read.parquet(state_path).drop("period_id"))
-        .withColumn("period_id", F.lit(compacted_period_id))
-        .write.mode("overwrite")
-        .partitionBy("period_id")
-        .parquet(tmp_path)
+    shutil.rmtree(tmp_path, ignore_errors=True)  # debris from a prior crash
+    write_epoch(
+        merge_states(spark.read.parquet(state_path).drop("epoch_id")),
+        compacted_epoch_id,
+        tmp_path,
     )
     # rename the live state ASIDE before renaming the compacted copy in:
     # the previous rmtree-then-rename order had a crash window where the
     # live state was already deleted and the compacted copy still
-    # stranded at *_compacting — i.e. data loss requiring manual repair
-    # (ADVICE r6). With rename-aside, every crash point leaves at least
-    # one complete copy under a well-known name.
+    # stranded at *_compacting — i.e. data loss requiring manual repair.
+    # With rename-aside, every crash point leaves at least one complete
+    # copy under a well-known name.
     old_path = state_path + "_old"
     shutil.rmtree(old_path, ignore_errors=True)  # debris from a prior crash
     os.rename(state_path, old_path)

@@ -59,7 +59,6 @@ def write_partitioned(
     path: str,
     ts_col: str = "ts",
     mode: str = "append",
-    dynamic_overwrite: bool = True,
     granularity: str = "daily",
 ) -> None:
     """Write Hive-layout partitioned parquet at the chosen granularity
@@ -68,17 +67,16 @@ def write_partitioned(
     ``mode='overwrite'`` + dynamic partition overwrite, re-running a period
     replaces only that period's partitions — the idempotent batch sink
     (reference overwrote hand-built dated paths)."""
-    writer = (
+    (
         with_date_partitions(df, ts_col, granularity)
         .write.mode(mode)
         .partitionBy(*GRANULARITY_PARTS[granularity])
-    )
-    if dynamic_overwrite:
         # per-write option, NOT a session-conf mutation: a library call
         # must not silently flip overwrite semantics for every later
         # write in the session
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(path)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
 
 def read_partitioned(

@@ -3,6 +3,8 @@
 Reference anchors:
 - S6 streaming append sinks (SensorDataProcessor.scala:191-214):
   ``saveAsTable`` mode append with explicit path, three tables per batch.
+  The streaming rebuild writes each micro-batch through :func:`write_epoch`
+  instead, so that a replayed batch replaces its rows.
 - S7 batch overwrite sinks (SensorDataAnalytics.scala:215-256): five
   analytics tables overwritten under dated paths — here one managed table
   each with dynamic partition overwrite on the date column (idempotent
@@ -21,7 +23,28 @@ targets the shared metastore.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Overwrite the directory ``path/epoch_id=N`` with ``df``'s rows, so
+    readers of ``path`` see ``epoch_id`` as an int partition column.
+
+    An epoch is written at least once: foreachBatch replays an epoch whose
+    checkpoint commit a crash cut off, and a backfill re-delivers a period.
+    Appending the replay would duplicate its rows; overwriting the epoch's
+    own directory replaces them, so the sink is replay-idempotent (with
+    checkpointed offsets, the exactly-once recipe SCALE.md states). An
+    empty frame overwrites too: it leaves one schema-only part file, so a
+    torn earlier write of the epoch never survives its replay. Runs one
+    write job and nothing else: no checkpoint, no emptiness check."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(path, f"epoch_id={int(epoch_id)}")
+    )
 
 
 def append_table(df: DataFrame, table: str, path: str | None = None) -> None:
@@ -37,17 +60,25 @@ def overwrite_dated_table(
 ) -> None:
     """S7: idempotent daily overwrite — partition the managed table by the
     date column and dynamically overwrite only the dates present in ``df``
-    (the reference rewrote hand-built ``.../date=<d>`` paths)."""
+    (the reference rewrote hand-built ``.../date=<d>`` paths). The session's
+    overwrite mode is set for this call only and restored afterwards."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if not spark.catalog.tableExists(table):
-        df.write.partitionBy(date_col).saveAsTable(table)
-    else:
-        # insertInto is positional; align to the table's column order
-        # (partition columns are stored last in a partitioned table)
-        df.select(*spark.table(table).columns).write.insertInto(
-            table, overwrite=True
-        )
+    previous = spark.conf.get(_OVERWRITE_MODE, None)
+    spark.conf.set(_OVERWRITE_MODE, "dynamic")
+    try:
+        if not spark.catalog.tableExists(table):
+            df.write.partitionBy(date_col).saveAsTable(table)
+        else:
+            # insertInto is positional; align to the table's column order
+            # (partition columns are stored last in a partitioned table)
+            df.select(*spark.table(table).columns).write.insertInto(
+                table, overwrite=True
+            )
+    finally:
+        if previous is None:
+            spark.conf.unset(_OVERWRITE_MODE)
+        else:
+            spark.conf.set(_OVERWRITE_MODE, previous)
 
 
 def overwrite_table(df: DataFrame, table: str) -> None:

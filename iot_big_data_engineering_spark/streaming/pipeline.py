@@ -37,23 +37,21 @@ Run and sink contract, shared by every query in this module:
 - **Memory sinks.** :func:`to_memory` runs a stream into a memory sink,
   binds the result frame, then drops the sink's temp view, so repeated
   calls pin no rows in the session.
-- **Epoch-keyed overwrite.** foreachBatch is at-least-once: a crash between
+- **One epoch writer.** foreachBatch is at-least-once: a crash between
   the sink write and the checkpoint commit replays the epoch. Every
-  foreachBatch sink writes through :func:`write_epoch`, which overwrites
-  exactly the epoch's own ``epoch_id=N`` partition, so a replay replaces
-  its rows instead of duplicating them.
+  foreachBatch sink writes each epoch, empty or not, with one call to
+  :func:`~..sources.table_sinks.write_epoch`, a plain overwrite of the
+  directory ``epoch_id=N``. A replay, including an empty one, replaces
+  that directory, so it can neither duplicate rows nor leave a torn
+  earlier write behind, and no callback needs an emptiness check.
 - **Sink fan-out.** :func:`run_microbatch_pipeline` persists each epoch
   once and runs its three ``write_epoch`` calls concurrently over that
   shared persist, one pool thread each, every task wrapped in
   ``inheritable_thread_target`` so it keeps the stream's job group and
   local properties. The epoch fails if any write fails, after all three
   have finished. Replay idempotence still holds: each write overwrites
-  only its own sink's ``epoch_id=N`` partition, so the replay of a
+  only its own sink's ``epoch_id=N`` directory, so the replay of a
   partly written epoch replaces what landed.
-- **Empty epochs.** An overwrite of an empty frame touches no partition,
-  so a torn write of that epoch would outlive its replay. State sinks that
-  already know a batch is empty write the empty epoch with
-  :func:`clear_epoch` instead.
 - **Scratch.** Inputs, state stores and checkpoints that a query stages
   live under one :func:`~..caching.scratch_dir`, removed on every exit;
   bounded results leave through :func:`~..caching.collect_local` first.
@@ -111,6 +109,7 @@ from ..sources.sensor_view import (
     map_events,
     quality_checked,
 )
+from ..sources.table_sinks import write_epoch
 from ..sources.tables import load_table
 
 # key slices a multi-batch replay splits its input into (write_slices)
@@ -149,36 +148,6 @@ def data_batches(q: StreamingQuery) -> int:
     ``recentProgress``, a ring buffer of the last
     ``spark.sql.streaming.numRecentProgressUpdates`` (default 100) batches."""
     return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-
-
-def write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
-    """Write one foreachBatch epoch's rows to the parquet sink at ``path``
-    as partition ``epoch_id=N``.
-
-    foreachBatch is at-least-once: a crash between the sink write and the
-    checkpoint commit replays the epoch. Appending the replay would
-    duplicate its rows forever; dynamically overwriting exactly the epoch's
-    own partition replaces them, so the sink is replay-idempotent — with
-    checkpointed offsets, the exactly-once recipe SCALE.md states. Runs one
-    write job and nothing else: no checkpoint, no emptiness check."""
-    (
-        df.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(path)
-    )
-
-
-def clear_epoch(epoch_id: int, *paths: str) -> None:
-    """Write an empty epoch to each ``write_epoch`` sink in ``paths``:
-    delete the epoch's partition (at real scale, the partition-prefix
-    delete an object-store sink issues), since an overwrite with an empty
-    frame would leave a torn earlier write of it in place."""
-    for path in paths:
-        shutil.rmtree(
-            os.path.join(path, f"epoch_id={int(epoch_id)}"), ignore_errors=True
-        )
 
 
 def write_slices(
@@ -391,13 +360,12 @@ def st1_streaming_microbatch_analytics(
     # sinks hold a full quality-checked copy of the corpus per run
     with scratch_dir("iotx_stream_") as out_dir:
         paths = run_microbatch_pipeline(spark, sf_dir, out_dir)
-        # Schema-pinned re-read (the a17c compactor pattern,
-        # operators/sketches.py): an all-empty corpus writes the sink
-        # dirs with zero data files, and an inferred read would throw
-        # UNABLE_TO_INFER_SCHEMA. The pin is captured from the SAME
-        # logical plan the foreachBatch writer runs (batch analytics +
-        # epoch_id lit), so it tracks the source's actual ts physical
-        # type instead of hardcoding one (the r3 nanos/micros lesson).
+        # Schema-pinned re-read: no inference job, and a sink that holds
+        # only schema-only epochs reads the same way. The pin is captured
+        # from the SAME logical plan the foreachBatch writer runs, plus the
+        # int epoch_id partition column, so it tracks the source's actual
+        # ts physical type instead of hardcoding one (the r3 nanos/micros
+        # lesson).
         sink_schema = (
             batch_windowed_analytics(sensor_stream(spark, sf_dir))
             .withColumn("epoch_id", F.lit(0))
@@ -409,7 +377,7 @@ def st1_streaming_microbatch_analytics(
         # oracle only when ALL input lands in one micro-batch (a split
         # source emits two rows per straddled window). Proven here from
         # the sink itself: one data batch ⇔ one epoch partition. ZERO
-        # epochs (an all-empty corpus never materializes a partition) is
+        # epochs (an all-empty corpus writes no rows into any epoch) is
         # vacuously fine — the empty analytics frame IS the A1 result.
         n_epochs = raw.select("epoch_id").distinct().count()
         if n_epochs > 1:
@@ -1051,13 +1019,7 @@ def st10_streaming_histogram_rollup(
                 .withColumn("bin", bin_)
                 .groupBy("sensor_type", "bin")
                 .agg(F.count("*").alias("cnt"))
-                .localCheckpoint()  # one computation: counted AND written
             )
-            if delta.count() == 0:
-                # a replay that produced zero post-filter rows (sparse or
-                # NULL-heavy corpora) must still replace a torn write
-                clear_epoch(epoch_id, state_dir)
-                return
             write_epoch(delta, epoch_id, state_dir)
 
         # ---- phase 1: run continuously, then KILL the query mid-stream ----
@@ -1108,8 +1070,8 @@ def st10_streaming_histogram_rollup(
                 f"st10 needs data batches on BOTH sides of the restart boundary "
                 f"to certify recovery; got {n1} before / {n2} after"
             )
-        # the restarted batch must have replaced the torn partition wholesale —
-        # a surviving sentinel means dynamic overwrite failed (the hash gate
+        # the restarted batch must have replaced the torn epoch wholesale —
+        # a surviving sentinel means the epoch overwrite failed (the hash gate
         # would also fail, via the extra sensor_type group; this check names
         # the cause)
         torn_left = (
@@ -1119,8 +1081,8 @@ def st10_streaming_histogram_rollup(
         )
         if torn_left:
             raise RuntimeError(
-                f"torn epoch {torn_epoch} survived the restart: dynamic "
-                f"partition overwrite did not replace the crashed state write"
+                f"torn epoch {torn_epoch} survived the restart: the epoch "
+                f"overwrite did not replace the crashed state write"
             )
 
         merged = (
@@ -1216,15 +1178,7 @@ def st11_streaming_cms_maintenance(
         )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            delta = (
-                cms_table(batch_df.filter(F.col("user_id").isNotNull()))
-                .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (isEmpty would otherwise run the batch
-                # aggregation once and the write a second time)
-            )
-            if delta.isEmpty():
-                clear_epoch(epoch_id, state_dir)
-                return
+            delta = cms_table(batch_df.filter(F.col("user_id").isNotNull()))
             write_epoch(delta, epoch_id, state_dir)
 
         q = run_available_now(
@@ -1343,12 +1297,7 @@ def st12_streaming_scd2_maintenance(
                         "bal_new",
                     )
                 )
-                # one computation: emptiness-checked AND written
-                frag = scd2_history_rows(mb).localCheckpoint()
-                if frag.isEmpty():
-                    clear_epoch(epoch_id, state_dir)
-                    return
-                write_epoch(frag, epoch_id, state_dir)
+                write_epoch(scd2_history_rows(mb), epoch_id, state_dir)
 
             q = run_available_now(
                 stream.writeStream.foreachBatch(process_batch).option(
@@ -1456,12 +1405,7 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count("*").alias("n"),
                     F.sum(_j_disc_price()).alias("rev"),  # DECIMAL partial
                 )
-                .localCheckpoint()  # one computation: emptiness-checked
-                # AND written
             )
-            if state.isEmpty():
-                clear_epoch(epoch_id, state_dir)
-                return
             write_epoch(state, epoch_id, state_dir)
 
         q = run_available_now(
@@ -1563,11 +1507,9 @@ def st14_streaming_dataset_card(
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
             nonlocal n_batches
             d = card_project(batch_df).localCheckpoint()  # one
-            # computation feeding the emptiness check + three fragments
-            if d.isEmpty():
-                clear_epoch(epoch_id, cnt_dir, txt_dir, lng_dir)
-                return
-            n_batches += 1
+            # computation feeding the batch counter + three fragments
+            if not d.isEmpty():
+                n_batches += 1
             write_epoch(card_counters(d), epoch_id, cnt_dir)
             write_epoch(card_text_keys(d), epoch_id, txt_dir)
             write_epoch(card_lang_counts(d), epoch_id, lng_dir)
@@ -1586,27 +1528,14 @@ def st14_streaming_dataset_card(
                 f"arrived; got {n_batches}"
             )
 
-        # txt_dir needs special handling the other two state dirs don't:
-        # a batch whose rows ALL carry NULL text writes an EMPTY text-key
-        # fragment (zero part files), and an all-NULL corpus leaves the
-        # dir absent or data-less — schema inference would raise
-        # UNABLE_TO_INFER_SCHEMA where dp16 returns an empty card.
-        # Explicit schema + existence guard restore the batch twin's
-        # semantics; cnt/lng fragments are non-empty whenever a batch has
-        # rows, so only counters' guard matters for the pathological
-        # zero-fragment case.
-        if os.path.isdir(txt_dir):
-            text_keys = (
-                spark.read.schema("source string, text string, epoch_id int")
-                .parquet(txt_dir)
-                .drop("epoch_id")
-            )
-        else:
-            text_keys = spark.createDataFrame([], "source string, text string")
+        # every batch wrote all three fragments, an empty one as a
+        # schema-only part file, so each state dir reads with its schema
+        # even when every text in the corpus is NULL
         result = card_assemble(
-            spark.read.parquet(cnt_dir).drop("epoch_id"),
-            text_keys,
-            spark.read.parquet(lng_dir).drop("epoch_id"),
+            *(
+                spark.read.parquet(d).drop("epoch_id")
+                for d in (cnt_dir, txt_dir, lng_dir)
+            )
         )
         return collect_local(result)  # |sources| rows — bounded
 

@@ -407,7 +407,7 @@ def test_compact_rollup_state_single_partition_is_noop_value(spark, tmp_path):
 
     q = quality_checked(spark, SF_SMOKE).limit(200)
     path = str(tmp_path / "state")
-    merged = sk.maintain_rollup_state(spark, path, q, period_id=0)
+    merged = sk.maintain_rollup_state(spark, path, q, epoch_id=0)
     before = sorted(
         merged.select(
             "sensor_type", "n", "sq", FF.col("min_ts").cast("string")
@@ -415,7 +415,7 @@ def test_compact_rollup_state_single_partition_is_noop_value(spark, tmp_path):
     )
     sk.compact_rollup_state(spark, path)
     after = sorted(
-        sk.merge_states(spark.read.parquet(path).drop("period_id"))
+        sk.merge_states(spark.read.parquet(path).drop("epoch_id"))
         .select("sensor_type", "n", "sq", FF.col("min_ts").cast("string"))
         .collect()
     )

@@ -64,6 +64,38 @@ def test_j23_basket_shape_hand_baskets(spark):
     assert a  # non-vacuous: at least one surviving pair
 
 
+def test_j23_basket_shape_caches_only_items(spark):
+    """The basket form is the frequent-item frame's only consumer, so it
+    caches just the distinct (okey, pkey) items; the self-join form,
+    whose two sides both read the frequent items, caches them too."""
+    import re
+
+    from iot_big_data_engineering_spark.operators.joins import (
+        _frequent_pair_counts,
+    )
+    from iot_big_data_engineering_spark.plans.checks import plan_str
+    from iot_big_data_engineering_spark.sources.tables import load_table
+
+    def cached(scale_shape):
+        # a cache left by another test would substitute into this plan
+        spark.catalog.clearCache()
+        df = _frequent_pair_counts(
+            load_table(spark, SF_SMOKE, "lineitem"), 2, 2, scale_shape
+        )
+        scans = re.findall(
+            r"InMemoryTableScan \[([^\]]*)\]", plan_str(df, mode="simple")
+        )
+        # the columns any cache scan reads; only a scan of the cached
+        # frequent items reads more than okey and pkey
+        return {re.sub(r"#\d+L?", "", c).strip() for s in scans for c in s.split(",")}
+
+    try:
+        assert cached(True) == {"okey", "pkey"}
+        assert cached(False) > {"okey", "pkey"}
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_gate_reads_input_size_only(tmp_path):
     """table_bytes is a pure stat of the input file(s) — missing file →
     None (callers then assume the scale form)."""

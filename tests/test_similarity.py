@@ -1376,3 +1376,31 @@ def test_s16_missing_query_embedding_degrades_like_s14(spark, tmp_path):
     assert a == b
     assert a, "lexical-only degradation should still return fused rows"
     assert all(r[2] is None for r in a)  # no semantic ranks anywhere
+
+
+def test_s16_driver_sort_key_follows_spark_order(spark):
+    """s16 re-sorts its phase-1 candidates on the driver. The key must
+    give Spark's ``cosine DESC NULLS LAST, doc_id ASC`` order, NaN first
+    (Spark orders NaN above +Inf), so the C-th candidate that sets τ is
+    the one Spark would pick."""
+    from iot_big_data_engineering_spark.operators.similarity import (
+        _desc_nulls_last_key,
+    )
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, 0.5), (2, None), (3, nan), (4, inf), (5, -inf), (6, 0.5),
+        (7, nan), (8, -0.0), (9, 0.0), (10, None), (11, -1.0), (12, 0.75),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, cosine double")
+    want = [
+        r.doc_id
+        for r in df.orderBy(
+            F.col("cosine").desc_nulls_last(), F.col("doc_id").asc()
+        ).collect()
+    ]
+    got = [
+        d for d, _ in sorted(rows, key=lambda r: _desc_nulls_last_key(r[1], r[0]))
+    ]
+    assert got == want
+    assert want[:3] == [3, 7, 4]  # non-vacuous: NaN ahead of +Inf

@@ -93,11 +93,11 @@ def test_maintain_rollup_state_accumulates_and_is_replay_idempotent(
     ]
     path = str(tmp_path / "state")
     for i, p in enumerate(parts):
-        merged = sk.maintain_rollup_state(spark, path, p, period_id=i)
+        merged = sk.maintain_rollup_state(spark, path, p, epoch_id=i)
     direct = _finalized(sk._partial_state(q))
     assert _finalized(merged) == direct
     # replay period 1: state must be unchanged
-    replayed = sk.maintain_rollup_state(spark, path, parts[1], period_id=1)
+    replayed = sk.maintain_rollup_state(spark, path, parts[1], epoch_id=1)
     assert _finalized(replayed) == direct
 
 
@@ -117,17 +117,17 @@ def test_compact_rollup_state_is_value_transparent(spark, tmp_path):
     ]
     path = str(tmp_path / "state")
     for i, p in enumerate(parts[:2]):
-        merged = sk.maintain_rollup_state(spark, path, p, period_id=i)
+        merged = sk.maintain_rollup_state(spark, path, p, epoch_id=i)
     before = _finalized(merged)
     sk.compact_rollup_state(spark, path)
     assert _finalized(
-        sk.merge_states(spark.read.parquet(path).drop("period_id"))
+        sk.merge_states(spark.read.parquet(path).drop("epoch_id"))
     ) == before
     # exactly one (negative) period partition remains
-    pdirs = [d for d in os.listdir(path) if d.startswith("period_id=")]
-    assert pdirs == ["period_id=-1"], pdirs
+    pdirs = [d for d in os.listdir(path) if d.startswith("epoch_id=")]
+    assert pdirs == ["epoch_id=-1"], pdirs
     # post-compaction delivery still merges to the full recompute
-    merged = sk.maintain_rollup_state(spark, path, parts[2], period_id=2)
+    merged = sk.maintain_rollup_state(spark, path, parts[2], epoch_id=2)
     assert _finalized(merged) == _finalized(sk._partial_state(q))
 
 

@@ -491,8 +491,8 @@ def test_st7_is_a_true_stream_stream_join(spark):
 
 def test_st8_state_sink_is_replay_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: re-delivering an epoch must leave
-    the state store unchanged (epoch-keyed dynamic overwrite), where an
-    append sink would double-count the replayed delta."""
+    the state store unchanged (epoch-keyed overwrite), where an append
+    sink would double-count the replayed delta."""
     from iot_big_data_engineering_spark.operators.sketches import (
         _partial_state,
     )
@@ -518,13 +518,32 @@ def test_st8_state_sink_is_replay_idempotent(spark, tmp_path):
     assert n_epochs == 2
 
 
+def test_empty_replay_replaces_a_written_epoch(spark, tmp_path):
+    """An epoch replayed with no rows must read back empty: a torn
+    earlier write of it may not survive. The epoch keeps its ``int``
+    partition column, and the other epochs are untouched."""
+    from iot_big_data_engineering_spark.streaming.pipeline import write_epoch
+
+    state_dir = str(tmp_path / "state")
+    rows = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long")
+    write_epoch(rows, 0, state_dir)
+    write_epoch(rows, 1, state_dir)
+    write_epoch(rows.filter(F.lit(False)), 1, state_dir)  # empty replay
+    back = spark.read.parquet(state_dir)
+    assert dict(back.dtypes)["epoch_id"] == "int"
+    assert sorted(map(tuple, back.collect())) == [("a", 1, 0), ("b", 2, 0)]
+    # an empty frame with several (empty) partitions also replaces epoch 0
+    write_epoch(rows.filter(F.col("n") < 0).repartition(4), 0, state_dir)
+    assert spark.read.parquet(state_dir).count() == 0
+
+
 def test_st10_sparse_restart_batches_tolerated(spark, tmp_path):
-    """A corpus whose post-kill slices carry only NULL values used to
-    raise 'torn epoch survived': the restarted batch had zero
-    post-filter rows, dynamic overwrite touched no partitions, and the
-    crash sentinel outlived a recovery that actually worked (r7
-    ADVICE). The empty epoch is now written explicitly (partition
-    cleared), so the strict sentinel check passes."""
+    """A corpus whose post-kill slices carry only NULL values makes the
+    restarted batch produce zero post-filter rows. Under a dynamic
+    partition overwrite that empty write touched no partition, so the
+    crash sentinel outlived a recovery that actually worked ('torn epoch
+    survived'). ``write_epoch`` overwrites the epoch's directory even
+    with an empty frame, so the strict sentinel check passes."""
     from pyspark.sql import functions as F
 
     from iot_big_data_engineering_spark.sources.tables import load_table
@@ -849,10 +868,12 @@ def test_scratch_trees_removed_on_every_exit(spark, tmp_path, monkeypatch):
 def test_streaming_plumbing_lives_only_in_its_helpers():
     """The availableNow run, the scratch tree, the memory sink and the
     epoch-keyed overwrite each have one helper; a copy of any of them
-    anywhere else in the package fails here. Threads live only in
-    ``run_microbatch_pipeline``'s sink fan-out, and every task it submits
-    goes through ``inheritable_thread_target``: a pool thread without the
-    stream's local properties runs outside its job group."""
+    anywhere else in the package fails here. Only ``write_epoch`` forms
+    an ``epoch_id=`` directory, and the streaming and sketch modules
+    neither set an overwrite mode nor clear epochs by hand. Threads live
+    only in ``run_microbatch_pipeline``'s sink fan-out, and every task it
+    submits goes through ``inheritable_thread_target``: a pool thread
+    without the stream's local properties runs outside its job group."""
     import ast
     import re
     from pathlib import Path
@@ -869,7 +890,8 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
         r"""format\(\s*["']memory["']""": ("streaming/pipeline.py", "to_memory"),
     }
     found = {pattern: [] for pattern in homes}
-    overwrite_owners = []
+    epoch_dir_owners = []
+    write_epoch_defs = []
     thread_owners = []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
@@ -892,8 +914,14 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
             for pattern in homes:
                 if re.search(pattern, line):
                     found[pattern].append((rel, owner(lineno)))
-            if rel == "streaming/pipeline.py" and "partitionOverwriteMode" in line:
-                overwrite_owners.append(owner(lineno))
+            if re.search(r"""["']epoch_id=""", line):
+                epoch_dir_owners.append((rel, owner(lineno)))
+            if re.search(r"\bdef write_epoch\(", line):
+                write_epoch_defs.append(rel)
+            if rel in ("streaming/pipeline.py", "operators/sketches.py"):
+                assert not re.search(
+                    r"partitionOverwriteMode|clear_epoch", line
+                ), (rel, lineno, line)
             if re.search(r"\b(?:ThreadPoolExecutor|Thread)\(", line):
                 chain = enclosing(lineno)
                 thread_owners.append((rel, [f.name for f in chain]))
@@ -915,7 +943,10 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
                     ), (rel, call.lineno, "submit without inheritable_thread_target")
     for pattern, home in homes.items():
         assert found[pattern] == [home], (pattern, found[pattern])
-    assert overwrite_owners == ["write_epoch"], overwrite_owners
+    assert epoch_dir_owners == [
+        ("sources/table_sinks.py", "write_epoch")
+    ], epoch_dir_owners
+    assert write_epoch_defs == ["sources/table_sinks.py"], write_epoch_defs
     assert thread_owners == [
         ("streaming/pipeline.py", ["run_microbatch_pipeline", "process_batch"])
     ], thread_owners

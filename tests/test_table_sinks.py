@@ -48,6 +48,29 @@ def test_overwrite_dated_is_idempotent_per_date(spark):
     assert spark.table("t_daily").count() == n
 
 
+def test_overwrite_dated_restores_the_session_overwrite_mode(spark):
+    """The dated sink sets dynamic overwrite for its own write only: a
+    later write elsewhere in the session keeps the caller's mode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key, None)
+    _drop_with_location(spark, "t_daily_mode")
+    daily = a2_daily_analytics(spark, SF_SMOKE)
+    try:
+        spark.conf.set(key, "static")
+        overwrite_dated_table(daily, "t_daily_mode")
+        overwrite_dated_table(daily, "t_daily_mode")  # the insertInto path
+        assert spark.conf.get(key) == "static"
+        spark.conf.unset(key)
+        overwrite_dated_table(daily, "t_daily_mode")
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+        _drop_with_location(spark, "t_daily_mode")
+
+
 def test_overwrite_table(spark):
     _drop_with_location(spark, "t_report")
     df = quality_checked(spark, SF_SMOKE).groupBy("sensor_type").count()
