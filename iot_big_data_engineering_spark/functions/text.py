@@ -95,13 +95,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(ngrams_from_tokens(toks, n))
 
 
-def shingles_expr(col: str = "text", n: int = 3) -> Column:
-    """Distinct word n-gram shingles straight from a text column (tokenizer
-    runs n times — prefer a two-step withColumn('toks', ...) +
-    shingles_from_tokens in hot paths)."""
-    return shingles_from_tokens(tokens(col), n)
-
-
 # ---------------------------------------------------------------------------
 # DuckDB twins (SQL fragments) — interpolated into oracle queries.
 # ---------------------------------------------------------------------------

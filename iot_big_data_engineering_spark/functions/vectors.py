@@ -66,13 +66,3 @@ def sql_cosine(a: str, b: str) -> str:
     """DuckDB twin of :func:`cosine` — identical nullif guard so a
     zero-norm vector scores NULL (not NaN/Inf) on both engines."""
     return f"({sql_dot(a, b)} / nullif({sql_norm(a)} * {sql_norm(b)}, 0.0))"
-
-
-def dot_unrolled(a: str, b: str, dim: int) -> Column:
-    """Dot product as a flat `a[0]*b[0] + a[1]*b[1] + ...` expression —
-    whole-stage-codegen'd scalar arithmetic, ~100× the throughput of the
-    interpreted higher-order fold. Left-to-right addition order matches
-    the fold exactly (bit-identical result). Use when the dimension is
-    known (e.g. a hot assignment loop); `dot` stays the generic form."""
-    terms = " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
-    return F.expr(terms)

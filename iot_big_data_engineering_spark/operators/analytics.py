@@ -31,11 +31,13 @@ Conditional-aggregate form: the reference writes ``when(cond, avg(x))``
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import fround
 from ..registry import register
-from ..sources.sensor_view import SENSOR_ORACLE_CTE, quality_checked
+from ..sources.sensor_view import SENSOR_ORACLE_CTE, avg_quality, quality_checked
 
 _R = 6  # rounding for floating aggregates, applied identically in oracle SQL
 
@@ -101,15 +103,25 @@ GROUP BY 1, 2, 3
     doc="A1: tumbling 1-min window × sensor_type aggregate",
 )
 def a1_windowed_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q = quality_checked(spark, sf_dir)
-    w = F.window("ts", "1 minute")
+    return a1_window_aggregate(quality_checked(spark, sf_dir), F.countDistinct)
+
+
+def a1_window_aggregate(
+    df: DataFrame, distinct: Callable[[str], F.Column]
+) -> DataFrame:
+    """A1's aggregate per 1-minute tumbling window × sensor_type over a
+    quality-checked frame, batch or streaming. ``distinct`` maps an id
+    column to its distinct count, because each caller needs a different
+    one: ``countDistinct`` for the batch table, ``size(collect_set)`` for
+    one micro-batch (one shuffle) and ``approx_count_distinct`` for a
+    watermarked stream (exact distinct is unsupported there)."""
     return (
-        q.groupBy(w.alias("w"), "sensor_type")
+        df.groupBy(F.window("ts", "1 minute").alias("w"), "sensor_type")
         .agg(
             F.count("*").alias("record_count"),
-            F.countDistinct("vehicle_id").alias("unique_vehicles"),
-            F.countDistinct("sensor_id").alias("unique_sensors"),
-            fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+            distinct("vehicle_id").alias("unique_vehicles"),
+            distinct("sensor_id").alias("unique_sensors"),
+            fround(avg_quality(), _R).alias("avg_quality_score"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -146,14 +158,19 @@ GROUP BY 1, 2
 
 @register("a2_daily_analytics", oracle=A2_ORACLE, doc="A2: daily × sensor_type analytics")
 def a2_daily_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q = _with_date(quality_checked(spark, sf_dir))
-    return q.groupBy("processing_date", "sensor_type").agg(
+    return _a2_aggregate(_with_date(quality_checked(spark, sf_dir)), "processing_date")
+
+
+def _a2_aggregate(q: DataFrame, period: str) -> DataFrame:
+    """A2's aggregate per ``period`` × sensor_type: the daily, weekly and
+    monthly rollups differ only in the period column."""
+    return q.groupBy(period, "sensor_type").agg(
         F.count("*").alias("record_count"),
         F.countDistinct("vehicle_id").alias("unique_vehicles"),
         F.countDistinct("sensor_id").alias("unique_sensors"),
         F.min("ts").alias("first_reading"),
         F.max("ts").alias("last_reading"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         fround(_stddev_quality(), _R).alias("stddev_quality_score"),
     )
 
@@ -236,7 +253,7 @@ def a4_vehicle_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("total_readings"),
         F.countDistinct("sensor_type").alias("sensor_types_used"),
         F.countDistinct("sensor_id").alias("unique_sensors"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         F.min("ts").alias("first_reading"),
         F.max("ts").alias("last_reading"),
         fround(
@@ -278,7 +295,7 @@ def a5_quality_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         high.alias("high_quality_count"),
         F.count(F.when((qs >= 0.6) & (qs < 0.8), 1)).alias("medium_quality_count"),
         F.count(F.when(qs < 0.6, 1)).alias("low_quality_count"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         fround(F.min(qs), _R).alias("min_quality_score"),
         fround(F.max(qs), _R).alias("max_quality_score"),
         fround(_stddev_quality(), _R).alias("stddev_quality_score"),
@@ -352,7 +369,7 @@ def a7_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("vehicle_id").alias("unique_vehicles"),
         F.countDistinct("sensor_id").alias("unique_sensors"),
         F.countDistinct("sensor_type").alias("unique_sensor_types"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         F.count(F.when(F.col("anomaly_score") > 0, 1)).alias("anomaly_count"),
     )
 
@@ -383,7 +400,7 @@ def a8_sensor_type_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("record_count"),
             F.countDistinct("vehicle_id").alias("unique_vehicles"),
-            fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+            fround(avg_quality(), _R).alias("avg_quality_score"),
             fround(
                 F.sum(F.col("value").cast("decimal(12,2)")).cast("double")
                 / F.count("value"),
@@ -421,7 +438,7 @@ def a9_vehicle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("total_readings"),
             F.countDistinct("sensor_type").alias("sensor_types_used"),
-            fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+            fround(avg_quality(), _R).alias("avg_quality_score"),
             fround(
                 (F.max(F.unix_micros("ts")) - F.min(F.unix_micros("ts")))
                 / 3600000000.0,
@@ -460,7 +477,7 @@ def a15_daily_sensor_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("total_records"),
         F.countDistinct("vehicle_id").alias("unique_vehicles"),
         F.countDistinct("sensor_id").alias("unique_sensors"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         F.count(F.when(F.col("anomaly_score") > 0, 1)).alias("anomaly_count"),
     )
 
@@ -490,7 +507,7 @@ def a16_vehicle_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("total_readings"),
         F.countDistinct("sensor_type").alias("sensor_types_used"),
         F.countDistinct("sensor_id").alias("unique_sensors"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         F.min("ts").alias("first_reading"),
         F.max("ts").alias("last_reading"),
     )
@@ -546,7 +563,7 @@ def a2_daily_analytics_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("record_count"),
         ev.alias("unique_vehicles"),
         es.alias("unique_sensors"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         _hll_ok(av, ev).alias("vehicles_within_3rsd"),
         _hll_ok(asn, es).alias("sensors_within_3rsd"),
     )
@@ -624,15 +641,7 @@ def a2_weekly_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quality_checked(spark, sf_dir).withColumn(
         "week_start", F.date_trunc("week", F.col("ts")).cast("date")
     )
-    return q.groupBy("week_start", "sensor_type").agg(
-        F.count("*").alias("record_count"),
-        F.countDistinct("vehicle_id").alias("unique_vehicles"),
-        F.countDistinct("sensor_id").alias("unique_sensors"),
-        F.min("ts").alias("first_reading"),
-        F.max("ts").alias("last_reading"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
-        fround(_stddev_quality(), _R).alias("stddev_quality_score"),
-    )
+    return _a2_aggregate(q, "week_start")
 
 
 @register(
@@ -657,15 +666,7 @@ def a2_monthly_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quality_checked(spark, sf_dir).withColumn(
         "month_start", F.trunc(F.col("ts").cast("date"), "month")
     )
-    return q.groupBy("month_start", "sensor_type").agg(
-        F.count("*").alias("record_count"),
-        F.countDistinct("vehicle_id").alias("unique_vehicles"),
-        F.countDistinct("sensor_id").alias("unique_sensors"),
-        F.min("ts").alias("first_reading"),
-        F.max("ts").alias("last_reading"),
-        fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), _R).alias("avg_quality_score"),
-        fround(_stddev_quality(), _R).alias("stddev_quality_score"),
-    )
+    return _a2_aggregate(q, "month_start")
 
 
 # ---------------------------------------------------------------------------
@@ -799,8 +800,6 @@ def a20_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("record_count"),
         F.countDistinct("vehicle_id").alias("active_vehicles"),
-        fround(
-            F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1))), _R
-        ).alias("avg_quality_score"),
+        fround(avg_quality(), _R).alias("avg_quality_score"),
         F.count(F.when(F.col("anomaly_score") > 0, 1)).alias("anomaly_count"),
     )

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import fround
 from ..registry import register
-from ..sources.sensor_view import SENSOR_ORACLE_CTE, quality_checked
+from ..sources.sensor_view import SENSOR_ORACLE_CTE, avg_quality, quality_checked
 
 _R = 6
 
@@ -41,10 +41,17 @@ THRESHOLDS = {
 _NOW_CTE = ", anchor AS (SELECT max(ts) AS now FROM sensor_quality_checked)"
 
 
-def _with_now(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _trailing(spark: SparkSession, sf_dir: str, interval: str) -> DataFrame:
+    """The quality-checked rows of the trailing ``interval`` (e.g.
+    ``"1 HOUR"``) up to the anchor, with the anchor as column ``now``. The
+    anchor is ``max(ts)``, one row, joined by broadcast (the sanctioned
+    fixed-cardinality hint); the predicate stays on ``ts``, so a
+    date-partitioned layout prunes."""
     q = quality_checked(spark, sf_dir)
     now = q.agg(F.max("ts").alias("now"))
-    return q, now
+    return q.crossJoin(F.broadcast(now)).filter(
+        F.col("ts") >= F.col("now") - F.expr(f"INTERVAL {interval}")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -69,21 +76,16 @@ WHERE ts >= anchor.now - INTERVAL 1 HOUR
     doc="A10: quality stats over the trailing hour (anchor = max(ts))",
 )
 def m10_hourly_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
     low = F.count(F.when(F.col("quality_score") < 0.6, 1))
     n = F.count(F.lit(1))
     # guarded: an empty trailing window has count 0, and ANSI-mode
     # Spark 4 (this repo's default) raises DIVIDE_BY_ZERO instead of
     # returning NULL — both ratios are unknowable there, so emit NULL
-    # explicitly on both engines (m18's template; queued r10 → r11)
+    # explicitly on both engines (m18's template)
     return (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 HOUR"))
+        _trailing(spark, sf_dir, "1 HOUR")
         .agg(
-            F.when(
-                n > 0,
-                fround(F.sum("q_int").cast("double") / (F.lit(5.0) * n), _R),
-            ).alias("avg_quality"),
+            F.when(n > 0, fround(avg_quality(), _R)).alias("avg_quality"),
             F.count("*").alias("total_records"),
             low.alias("low_quality_count"),
             F.when(n > 0, fround(low * 1.0 / n, _R)).alias(
@@ -109,10 +111,8 @@ WHERE ts >= anchor.now - INTERVAL 5 MINUTE
     doc="A11: liveness count over trailing 5 minutes",
 )
 def m11_liveness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
     return (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 5 MINUTES"))
+        _trailing(spark, sf_dir, "5 MINUTES")
         .agg(
             F.count("*").alias("recent_records"),
             (F.count("*") > 0).alias("is_alive"),
@@ -138,13 +138,11 @@ WHERE ts >= anchor.now - INTERVAL 1 HOUR
     doc="A12: event→processed latency over trailing hour",
 )
 def m12_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
     lat = (
         F.unix_micros("processing_timestamp") - F.unix_micros("ts")
     ) / 1000000.0
     return (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 HOUR"))
+        _trailing(spark, sf_dir, "1 HOUR")
         .agg(
             fround(F.avg(lat), _R).alias("avg_latency_seconds"),
             fround(F.max(lat), _R).alias("max_latency_seconds"),
@@ -168,10 +166,8 @@ WHERE ts >= anchor.now - INTERVAL 1 MINUTE
     doc="A13: trailing-minute ingest throughput vs threshold",
 )
 def m13_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
     return (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 MINUTE"))
+        _trailing(spark, sf_dir, "1 MINUTE")
         .agg(
             F.count("*").alias("records_last_minute"),
             (F.count("*") >= THRESHOLDS["min_throughput_per_min"]).alias(
@@ -201,13 +197,11 @@ WHERE ts >= anchor.now - INTERVAL 1 HOUR
     doc="A14: trailing-hour anomaly rate",
 )
 def m14_anomaly_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
     anom = F.count(F.when(F.col("anomaly_score") > 0, 1))
     n = F.count(F.lit(1))
     # empty-window rate guarded → NULL, never DIVIDE_BY_ZERO (see m10)
     return (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 HOUR"))
+        _trailing(spark, sf_dir, "1 HOUR")
         .agg(
             F.count("*").alias("total_records"),
             anom.alias("anomaly_count"),
@@ -283,10 +277,7 @@ def m15_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     violated) structs from that one row — the window is scanned once,
     not once per check (the reference ran five separate SQL queries per
     monitoring cycle, alerting.py:77-106)."""
-    q, now = _with_now(spark, sf_dir)
-    win = q.crossJoin(F.broadcast(now)).filter(
-        F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 HOUR")
-    )
+    win = _trailing(spark, sf_dir, "1 HOUR")
     qs = F.col("quality_score")
     lat = (F.unix_micros("processing_timestamp") - F.unix_micros("ts")) / 1000000.0
     n = F.count(F.lit(1))
@@ -295,9 +286,7 @@ def m15_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silently not firing, exactly the oracle's HAVING-over-NULL shape;
     # low_throughput still fires on an empty window (0 < threshold)
     metrics = win.agg(
-        F.when(
-            n > 0, F.sum("q_int").cast("double") / (F.lit(5.0) * n)
-        ).alias("avg_quality"),
+        F.when(n > 0, avg_quality()).alias("avg_quality"),
         F.when(
             n > 0, F.count(F.when(qs < 0.6, 1)).cast("double") / n
         ).alias("low_rate"),
@@ -416,12 +405,10 @@ WHERE short_total > 0 AND long_anomalies > 0
     doc="A17: multi-window (1d/7d) anomaly burn-rate alerting per sensor type",
 )
 def m16_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
     in_short = F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 DAY")
     anom = F.col("anomaly_score") > 0
     agg = (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 7 DAY"))
+        _trailing(spark, sf_dir, "7 DAY")
         .groupBy("sensor_type")
         .agg(
             F.count("*").alias("long_total"),
@@ -609,21 +596,18 @@ SELECT 'iot_anomaly_rate_1h',
     ),
 )
 def m18_metrics_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, now = _with_now(spark, sf_dir)
-    # m15's single-pass discipline (round-10 review #2 applied twice):
-    # the 1-minute and 5-minute windows NEST inside the hour, so every
-    # metric rides ONE trailing-hour scan with conditional sub-window
-    # counts — the plan carries exactly one window scan plus the one
-    # (unprunable, injectable-by-design) anchor aggregate, instead of a
-    # scan+anchor pair per union branch
+    # m15's single-pass discipline: the 1-minute and 5-minute windows
+    # NEST inside the hour, so every metric rides ONE trailing-hour scan
+    # with conditional sub-window counts — the plan carries exactly one
+    # window scan plus the one (unprunable, injectable-by-design) anchor
+    # aggregate, instead of a scan+anchor pair per union branch
     in5m = F.col("ts") >= F.col("now") - F.expr("INTERVAL 5 MINUTES")
     in1m = F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 MINUTE")
     lat = (
         F.unix_micros("processing_timestamp") - F.unix_micros("ts")
     ) / 1000000.0
     w = (
-        q.crossJoin(F.broadcast(now))
-        .filter(F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 HOUR"))
+        _trailing(spark, sf_dir, "1 HOUR")
         .agg(
             F.count("*").cast("bigint").alias("c1h"),
             F.count(F.when(in5m, 1)).cast("bigint").alias("c5m"),

@@ -33,7 +33,7 @@ Quality stage semantics (reference SensorDataProcessor.scala:141-186):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .tables import load_table
 
@@ -101,6 +101,14 @@ _Q_INT = """((CASE WHEN ts IS NOT NULL THEN 1 ELSE 0 END)
      + (CASE WHEN vehicle_id IS NOT NULL THEN 1 ELSE 0 END)
      + (CASE WHEN sensor_type IS NOT NULL THEN 1 ELSE 0 END)
      + (CASE WHEN value IS NOT NULL THEN 1 ELSE 0 END))"""
+
+
+def avg_quality() -> Column:
+    """Mean quality_score of a group from the exact integer sum of
+    ``q_int``, divided once: order-independent, unlike a double sum of
+    the scores. ``registry`` rewrites every oracle ``avg(quality_score)``
+    into the same arithmetic. Callers round it."""
+    return F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))
 
 # P4 — chained CASE over sensor_type-specific thresholds (reference
 # SensorDataProcessor.scala:176-183).

@@ -1,36 +1,47 @@
-"""Parquet table loaders for the driver testdata (TESTDATA.md).
+"""Parquet table loaders for the testdata tables (TESTDATA.md): the one
+read path for batch tables and for the events file stream.
 
 Parquet is self-describing, so reads use the file's own schema (inferred
-once per file state, see the schema memo below) — but every load is
+once per file state, see the schema memo below) — but every read is
 validated against the declared schema in ``schema.py`` (the reference
 inferred JSON schemas on every batch read, SensorDataAnalytics.scala:92-94;
 at 100 TB an inference pass over JSON is an extra full scan, so all
 non-self-describing reads in this engine take explicit schemas).
+:func:`read_table` does both, for ``load_table`` (``spark.read``) and for
+``streaming.pipeline.events_file_stream`` (``spark.readStream``, which
+demands an explicit schema), so stream and batch decode alike.
 
 Schema memo: resolving a parquet schema costs a Spark job (footer reads in
 ``mergeSchemasInParallel``) on every ``spark.read.parquet`` without a
-schema. ``load_table`` infers once per table path and then reads with
-``spark.read.schema(memo)``, which launches no job. The memo key is the
-path, the ``(relative name, size, mtime_ns, inode)`` of each data file
-(:func:`_data_files`) and the session values of the confs that change
-parquet schema inference (``_SCHEMA_CONFS``), so a rewritten file, a new
-part file or a changed conf re-infers. A rewrite that keeps a file's size,
-mtime and inode is not detected. A path that cannot be statted (e.g.
-``s3://``) is not memoized and infers on every load.
+schema. :func:`_physical_schema` infers once per path, glob and file state;
+the read then passes the memo to ``reader.schema``, which launches no job.
+The memo key is the path and ``pathGlobFilter`` glob, the ``(relative
+name, size, mtime_ns, inode)`` of each data file under the path
+(:func:`_data_files`; all of them, not only the glob's matches) and the
+session values of the confs that change parquet schema inference
+(``_SCHEMA_CONFS``), so a rewritten file, a new part file (a stream's
+landing directory gaining a delivery, too) or a changed conf re-infers. A
+rewrite that keeps a file's size, mtime and inode is not detected. A path
+that cannot be statted (e.g. ``s3://``) is not memoized and infers on
+every read.
 
-Timestamp caveat: the testdata stores TIMESTAMP(NANOS, isAdjustedToUTC=
-false), which Spark's parquet reader rejects outright. With
-``spark.sql.legacy.parquet.nanosAsLong`` (set in session.py) the column
-arrives as int64 nanoseconds; we convert with integer division (``div``,
-never ``/`` — float division loses precision above 2^53) to microsecond
-TimestampType, matching DuckDB's own nanos→micros truncation bit-for-bit.
+Timestamp caveat: the testdata has stored ``ts`` both as TIMESTAMP(NANOS,
+isAdjustedToUTC=false), which Spark's parquet reader rejects outright, and
+as TIMESTAMP_NTZ micros. With ``spark.sql.legacy.parquet.nanosAsLong``
+(set in session.py and before every inference) nanos arrive as int64; we
+convert with integer division (``div``, never ``/`` — float division loses
+precision above 2^53) to microsecond TimestampType, matching DuckDB's own
+nanos→micros truncation bit-for-bit, and cast micros. The branch follows
+the inferred file schema: a hardcoded nanos conversion over a micros file
+silently lands in 1970.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession, types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from ..schema import TABLE_NAMES, TESTDATA_SCHEMAS
 
@@ -43,10 +54,10 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# path -> (memo key, inferred schema); one entry per path, replaced when
-# the key changes. Process-wide on purpose: the key fixes what Spark would
-# infer, so every caller and session may share a hit.
-_SCHEMA_MEMO: dict[str, tuple[tuple, T.StructType]] = {}
+# (path, glob) -> (memo key, inferred schema); one entry per path and
+# glob, replaced when the key changes. Process-wide on purpose: the key
+# fixes what Spark would infer, so every caller and session may share a hit.
+_SCHEMA_MEMO: dict[tuple[str, str | None], tuple[tuple, T.StructType]] = {}
 
 
 def _data_files(path: str) -> list[tuple[str, int, int, int]] | None:
@@ -73,34 +84,45 @@ def _data_files(path: str) -> list[tuple[str, int, int, int]] | None:
         return None
 
 
-def _memo_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The schema Spark infers for ``path``, memoized (module docstring);
-    None when the path cannot be statted."""
+def _physical_schema(spark: SparkSession, path: str, glob: str | None) -> T.StructType:
+    """The schema Spark infers for the parquet at ``path``, reading only
+    the files whose names match ``glob`` when it is set; memoized (module
+    docstring) unless the path cannot be statted."""
+    # runtime-settable SQL conf: the caller may hand us a session built
+    # elsewhere (e.g. a vanilla session, not session.get_spark) — without this,
+    # any TIMESTAMP(NANOS) parquet read throws PARQUET_TYPE_ILLEGAL.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
     files = _data_files(path)
     if files is None:
-        return None
+        return reader.parquet(path).schema
     key = (tuple(files), tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
-    hit = _SCHEMA_MEMO.get(path)
+    hit = _SCHEMA_MEMO.get((path, glob))
     if hit is None or hit[0] != key:
-        hit = (key, spark.read.parquet(path).schema)
-        _SCHEMA_MEMO[path] = hit
+        hit = (key, reader.parquet(path).schema)
+        _SCHEMA_MEMO[(path, glob)] = hit
     return hit[1]
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TESTDATA_SCHEMAS:
-        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    # runtime-settable SQL conf: the caller may hand us a session built
-    # elsewhere (e.g. the verify driver's vanilla session) — without this,
-    # any TIMESTAMP(NANOS) parquet read throws PARQUET_TYPE_ILLEGAL.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/{name}.parquet"
-    schema = _memo_schema(spark, path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        schema = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+def read_table(
+    spark: SparkSession,
+    reader: DataFrameReader | DataStreamReader,
+    path: str,
+    glob: str | None,
+    name: str,
+) -> DataFrame:
+    """The parquet at ``path`` read through ``reader`` (``spark.read``, or
+    ``spark.readStream`` for a file stream) with its memoized physical
+    schema, decoded to table ``name``'s declared schema: a declared
+    timestamp stored as int64 nanos or as TIMESTAMP_NTZ micros becomes
+    TimestampType, and a declared column missing from the files raises
+    ValueError."""
+    schema = _physical_schema(spark, path, glob)
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    df = reader.schema(schema).parquet(path)
     actual = {f.name: f.dataType for f in schema.fields}
     exprs = []
     for field in TESTDATA_SCHEMAS[name].fields:
@@ -120,6 +142,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         else:
             exprs.append(col)
     return df.selectExpr(*exprs)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name not in TESTDATA_SCHEMAS:
+        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
+    return read_table(spark, spark.read, f"{sf_dir}/{name}.parquet", None, name)
 
 
 # Input-size gate threshold for scale-shape plan forms (currently

@@ -24,8 +24,15 @@ Deliberately NOT copied from the reference (SURVEY §4 anti-patterns):
 no ``count() > 0`` guards before writes (each is an extra job per batch),
 no per-record parser allocation, no schema inference.
 
-Run and sink contract, shared by every query in this module:
+Read, run and sink contract, shared by every query in this module:
 
+- **Read.** Every events stream comes from :func:`events_file_stream`,
+  which reads through the batch loader's
+  :func:`~..sources.tables.read_table`: one memoized schema probe per
+  ``(path, glob)`` and file state of the directory (a directory that
+  gains a file re-probes on the next build, an unchanged one launches no
+  job), and one per-column decode, so a streamed ``ts`` equals the batch
+  ``ts`` whatever its physical type.
 - **Run.** Every bounded stream runs through :func:`run_available_now`:
   the availableNow trigger drains the input present at start, in as many
   micro-batches as ``maxFilesPerTrigger`` makes, and stops (st10's first
@@ -72,13 +79,13 @@ from concurrent.futures import ThreadPoolExecutor
 from datetime import timedelta
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..caching import collect_local, scratch_dir, track
 from ..functions.rounding import fround
 from ..operators.advanced import _ADV14_ORACLE, scd2_history_rows, scd2_inputs
-from ..operators.analytics import A1_ORACLE
+from ..operators.analytics import A1_ORACLE, a1_window_aggregate
 from ..operators.joins import _disc_price as _j_disc_price
 from ..operators.sketches import (
     _A21_NBINS,
@@ -110,7 +117,7 @@ from ..sources.sensor_view import (
     quality_checked,
 )
 from ..sources.table_sinks import write_epoch
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_table
 
 # key slices a multi-batch replay splits its input into (write_slices)
 _ST8_N_SPLITS = 3
@@ -164,20 +171,6 @@ def write_slices(
         df.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
 
 
-def _events_raw_schema(
-    spark: SparkSession, path: str, glob: str | None
-) -> T.StructType:
-    """Physical schema of the events parquet, taken from the file footer
-    (a streaming read demands an explicit schema; hardcoding one silently
-    mis-decodes when the testdata generation changes its timestamp
-    physical type — ts has shipped both as TIMESTAMP(NANOS) → int64-nanos
-    under nanosAsLong, and as TIMESTAMP_NTZ micros)."""
-    reader = spark.read
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.parquet(path).schema
-
-
 def events_file_stream(
     spark: SparkSession,
     path: str,
@@ -185,23 +178,15 @@ def events_file_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Bounded file-stream over events parquet (the test/CI stand-in for
-    the Kafka source; same downstream pipeline). ts is normalized to
-    session-TZ TimestampType exactly like the batch loader
-    (sources/tables.py) so stream and batch agree bit-for-bit."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = _events_raw_schema(spark, path, glob)
-    reader = spark.readStream.schema(raw_schema)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
+    the Kafka source; same downstream pipeline). Read through the batch
+    loader's :func:`~..sources.tables.read_table`: the same memoized
+    physical schema (keyed on ``path``, ``glob`` and the directory's file
+    state) and the same per-column decode and declared-schema check, so
+    stream and batch agree bit-for-bit."""
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(path)
-    ts_type = raw_schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        # TIMESTAMP(NANOS) read as int64 nanos: integer-divide to micros
-        # (div, never /: float division loses precision above 2^53)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return read_table(spark, reader, path, glob, "events")
 
 
 def sensor_stream(spark: SparkSession, path: str, **kw) -> DataFrame:
@@ -217,24 +202,8 @@ def batch_windowed_analytics(df: DataFrame) -> DataFrame:
     ``countDistinct`` columns plan an ``Expand`` of every row and two
     shuffles. Each set is bounded by the distinct ids of one window × type
     within one micro-batch."""
-    w = F.window("ts", "1 minute")
-    return (
-        df.groupBy(w.alias("w"), "sensor_type")
-        .agg(
-            F.count("*").alias("record_count"),
-            F.size(F.collect_set("vehicle_id")).cast("bigint").alias("unique_vehicles"),
-            F.size(F.collect_set("sensor_id")).cast("bigint").alias("unique_sensors"),
-            fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), 6).alias("avg_quality_score"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "sensor_type",
-            "record_count",
-            "unique_vehicles",
-            "unique_sensors",
-            "avg_quality_score",
-        )
+    return a1_window_aggregate(
+        df, lambda c: F.size(F.collect_set(c)).cast("bigint")
     )
 
 
@@ -305,24 +274,9 @@ def windowed_analytics_stream(
     approx_count_distinct replaces exact distinct (unsupported in streaming
     aggregates); rsd=0.01 keeps the HLL sketch small enough to ship in
     state-store rows."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 minute").alias("w"), "sensor_type")
-        .agg(
-            F.count("*").alias("record_count"),
-            F.approx_count_distinct("vehicle_id", 0.01).alias("unique_vehicles"),
-            F.approx_count_distinct("sensor_id", 0.01).alias("unique_sensors"),
-            fround((F.sum("q_int").cast("double") / (F.lit(5.0) * F.count(F.lit(1)))), 6).alias("avg_quality_score"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "sensor_type",
-            "record_count",
-            "unique_vehicles",
-            "unique_sensors",
-            "avg_quality_score",
-        )
+    return a1_window_aggregate(
+        stream.withWatermark("ts", watermark),
+        lambda c: F.approx_count_distinct(c, 0.01),
     )
 
 
@@ -361,11 +315,10 @@ def st1_streaming_microbatch_analytics(
     with scratch_dir("iotx_stream_") as out_dir:
         paths = run_microbatch_pipeline(spark, sf_dir, out_dir)
         # Schema-pinned re-read: no inference job, and a sink that holds
-        # only schema-only epochs reads the same way. The pin is captured
-        # from the SAME logical plan the foreachBatch writer runs, plus the
-        # int epoch_id partition column, so it tracks the source's actual
-        # ts physical type instead of hardcoding one (the r3 nanos/micros
-        # lesson).
+        # only schema-only epochs reads the same way. The pin is the output
+        # schema of the SAME logical plan the foreachBatch writer runs, plus
+        # the int epoch_id partition column, so it cannot drift from what
+        # the sink wrote.
         sink_schema = (
             batch_windowed_analytics(sensor_stream(spark, sf_dir))
             .withColumn("epoch_id", F.lit(0))
@@ -1499,33 +1452,28 @@ def st14_streaming_dataset_card(
             .parquet(in_dir)
         )
 
-        # counts non-empty PROJECTED batches, which data_batches (input
-        # rows) does not; counting in the callback also avoids the
-        # recentProgress ring buffer's cap if the split count ever grows
-        n_batches = 0
-
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            nonlocal n_batches
-            d = card_project(batch_df).localCheckpoint()  # one
-            # computation feeding the batch counter + three fragments
-            if not d.isEmpty():
-                n_batches += 1
+            # one computation feeding the three fragments
+            d = card_project(batch_df).localCheckpoint()
             write_epoch(card_counters(d), epoch_id, cnt_dir)
             write_epoch(card_text_keys(d), epoch_id, txt_dir)
             write_epoch(card_lang_counts(d), epoch_id, lng_dir)
 
-        run_available_now(
+        q = run_available_now(
             stream.writeStream.foreachBatch(process_batch).option(
                 "checkpointLocation", os.path.join(tmp, "ckpt")
             )
         )
         # ≥2 data batches certify the cross-epoch merge; exactly 1 still
         # certifies the degenerate one-delta case (as in st11-st13); 0 on
-        # a non-empty input is a loud invariant failure
-        if n_batches < 1:
+        # a non-empty input is a loud invariant failure. card_project is a
+        # pure select, so a projected batch is non-empty exactly when its
+        # input is, and input rows are what data_batches counts.
+        n = data_batches(q)
+        if n < 1:
             raise RuntimeError(
                 f"st14 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {n_batches}"
+                f"arrived; got {n}"
             )
 
         # every batch wrote all three fragments, an empty one as a

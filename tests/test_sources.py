@@ -1,6 +1,7 @@
 """The shared read path: ``load_table``'s schema memo (a repeat load of an
 unchanged table launches no Spark job; a rewritten file or a new part file
-re-infers) and the pinned schema of the quality-checked sensor view, batch
+re-infers), the events file stream reading through the same memo and
+decode, and the pinned schema of the quality-checked sensor view, batch
 and streaming."""
 
 from __future__ import annotations
@@ -10,12 +11,17 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import types as T
 
 from iot_big_data_engineering_spark.schema import TESTDATA_SCHEMAS
 from iot_big_data_engineering_spark.sources.sensor_view import quality_checked
 from iot_big_data_engineering_spark.sources.tables import load_table, table_bytes
-from iot_big_data_engineering_spark.streaming.pipeline import sensor_stream
+from iot_big_data_engineering_spark.streaming.pipeline import (
+    events_file_stream,
+    sensor_stream,
+    to_memory,
+)
 
 from .conftest import SF_SMOKE
 
@@ -110,6 +116,58 @@ def test_directory_table_gaining_a_part_file_is_reinferred(spark, tmp_path):
     assert again_jobs == 0
     parts = sum((table / f"part-{i}.parquet").stat().st_size for i in range(2))
     assert table_bytes(str(tmp_path), "events") == parts
+
+
+def _events_dir(tmp_path, parts, ts_unit="us"):
+    """A directory events table: one parquet part file per ``(n, first_id)``
+    in ``parts``. The directory is both ``load_table``'s table path and an
+    events stream's landing directory."""
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    for i, (n, first_id) in enumerate(parts):
+        pq.write_table(
+            _events(n, first_id, ts_unit=ts_unit), str(table / f"part-{i}.parquet")
+        )
+    return str(table)
+
+
+@pytest.mark.parametrize("ts_unit", ["us", "ns"])
+def test_events_stream_decodes_like_load_table(spark, tmp_path, ts_unit):
+    """Micros and nanos ``ts`` alike: the stream's schema and rows are
+    ``load_table``'s."""
+    table = _events_dir(tmp_path, [(10, 0), (7, 10)], ts_unit)
+    batch = load_table(spark, str(tmp_path), "events")
+    stream = events_file_stream(spark, table, glob="*.parquet")
+    assert stream.isStreaming
+    assert stream.schema == batch.schema == TESTDATA_SCHEMAS["events"]
+    got = to_memory(stream)[1]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
+    assert _ids_and_ts(got)[0][1].year == 2024  # not a 1000x shift
+
+
+def test_events_stream_missing_declared_column_raises_like_load_table(spark, tmp_path):
+    pq.write_table(_events(5).drop_columns(["props"]), str(tmp_path / "events.parquet"))
+    with pytest.raises(ValueError, match="events: missing column props"):
+        load_table(spark, str(tmp_path), "events")
+    with pytest.raises(ValueError, match="events: missing column props"):
+        events_file_stream(spark, str(tmp_path))
+
+
+def test_events_stream_rebuild_reuses_the_schema_memo(spark, tmp_path):
+    table = _events_dir(tmp_path, [(10, 0)])
+
+    def build():
+        return events_file_stream(spark, table, glob="*.parquet")
+
+    _, first_jobs = _jobs(spark, build)
+    _, unchanged_jobs = _jobs(spark, build)
+    assert first_jobs >= 1
+    assert unchanged_jobs == 0
+
+    pq.write_table(_events(5, first_id=10), str(tmp_path / "events.parquet" / "part-1.parquet"))
+    stream, grown_jobs = _jobs(spark, build)
+    assert grown_jobs >= 1
+    assert [i for i, _ in _ids_and_ts(to_memory(stream)[1])] == list(range(15))
 
 
 # (name, type, nullable) of the quality-checked sensor view.

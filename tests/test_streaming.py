@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iot_big_data_engineering_spark.functions.rounding import fround
+from iot_big_data_engineering_spark.plans.checks import plan_str
 from iot_big_data_engineering_spark.sources.sensor_view import quality_checked
 from iot_big_data_engineering_spark.streaming.pipeline import (
     batch_windowed_analytics,
@@ -442,8 +443,7 @@ def test_batch_windowed_analytics_distinct_counts_are_exact(spark):
         (t, "error"): (0, 0),
         (t + 60 * s, "gps"): (1, 1),
     }
-    plan = batch_windowed_analytics(df)._jdf.queryExecution().executedPlan()
-    assert "Expand" not in plan.toString()
+    assert "Expand" not in plan_str(batch_windowed_analytics(df))
 
 
 def test_st7_is_a_true_stream_stream_join(spark):
