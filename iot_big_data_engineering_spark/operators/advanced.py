@@ -304,7 +304,7 @@ def adv5_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `percentile` and DuckDB `quantile_cont` both use linear interpolation
 # over the sorted values → identical doubles (rounded defensively).
 # At 100 TB swap for approx_percentile (t-digest) — provided as the
-# library twin adv6b below (registry-retired r16; band-tested).
+# library twin adv6b below (not registered; band-tested).
 # ---------------------------------------------------------------------------
 @register(
     "adv6_percentiles",
@@ -329,7 +329,7 @@ def adv6_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# adv6b is not registered (registry._RETIRED): it is the approx/sketch
+# adv6b is not registered: it is the approx/sketch
 # twin of adv6 above, whose exact form stays registered. The capability
 # remains as this library function — the sketch-within-rank-band
 # contract (every flag TRUE: approx_percentile's rank error

@@ -138,10 +138,13 @@ def a1_window_aggregate(
 # ---------------------------------------------------------------------------
 # A2 — daily analytics (the flagship query; entry() runs this)
 # ---------------------------------------------------------------------------
-A2_ORACLE = (
-    SENSOR_ORACLE_CTE
-    + f"""
-SELECT CAST(ts AS DATE) AS processing_date,
+def _a2_oracle(period: str, alias: str) -> str:
+    """A2's oracle per ``period`` (a SQL expression over ts) × sensor_type,
+    the twin of :func:`_a2_aggregate`."""
+    return (
+        SENSOR_ORACLE_CTE
+        + f"""
+SELECT {period} AS {alias},
        sensor_type,
        count(*) AS record_count,
        count(DISTINCT vehicle_id) AS unique_vehicles,
@@ -153,7 +156,10 @@ SELECT CAST(ts AS DATE) AS processing_date,
 FROM sensor_quality_checked
 GROUP BY 1, 2
 """
-)
+    )
+
+
+A2_ORACLE = _a2_oracle("CAST(ts AS DATE)", "processing_date")
 
 
 @register("a2_daily_analytics", oracle=A2_ORACLE, doc="A2: daily × sensor_type analytics")
@@ -605,9 +611,9 @@ def a1_windowed_analytics_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # a4_vehicle_analytics_approx and a7_summary_report_approx are not
-# registered (registry._RETIRED): HLL/sketch twins of the registered
-# exact queries a4_vehicle_analytics / a7_summary_report, wrapper-only —
-# the approx-distinct-within-band capability (_RSD + _hll_ok) stays
+# registered: they would be HLL/sketch twins of the registered exact
+# queries a4_vehicle_analytics / a7_summary_report, wrapper-only — the
+# approx-distinct-within-band capability (_RSD + _hll_ok) stays
 # registered via a1_windowed_analytics_approx /
 # a2_daily_analytics_approx, the identical pattern over the same view.
 
@@ -621,20 +627,7 @@ def a1_windowed_analytics_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a2_weekly_analytics",
-    oracle=SENSOR_ORACLE_CTE
-    + f"""
-SELECT CAST(date_trunc('week', ts) AS DATE) AS week_start,
-       sensor_type,
-       count(*) AS record_count,
-       count(DISTINCT vehicle_id) AS unique_vehicles,
-       count(DISTINCT sensor_id) AS unique_sensors,
-       min(ts) AS first_reading,
-       max(ts) AS last_reading,
-       round(avg(quality_score), {_R}) AS avg_quality_score,
-       round({_STDDEV_Q_SQL}, {_R}) AS stddev_quality_score
-FROM sensor_quality_checked
-GROUP BY 1, 2
-""",
+    oracle=_a2_oracle("CAST(date_trunc('week', ts) AS DATE)", "week_start"),
     doc="A2 weekly rollup (SensorDataAnalytics.scala:83-88 'weekly')",
 )
 def a2_weekly_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,20 +639,7 @@ def a2_weekly_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a2_monthly_analytics",
-    oracle=SENSOR_ORACLE_CTE
-    + f"""
-SELECT CAST(date_trunc('month', ts) AS DATE) AS month_start,
-       sensor_type,
-       count(*) AS record_count,
-       count(DISTINCT vehicle_id) AS unique_vehicles,
-       count(DISTINCT sensor_id) AS unique_sensors,
-       min(ts) AS first_reading,
-       max(ts) AS last_reading,
-       round(avg(quality_score), {_R}) AS avg_quality_score,
-       round({_STDDEV_Q_SQL}, {_R}) AS stddev_quality_score
-FROM sensor_quality_checked
-GROUP BY 1, 2
-""",
+    oracle=_a2_oracle("CAST(date_trunc('month', ts) AS DATE)", "month_start"),
     doc="A2 monthly rollup (SensorDataAnalytics.scala:83-88 'monthly')",
 )
 def a2_monthly_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:

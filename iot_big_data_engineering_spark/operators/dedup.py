@@ -1139,14 +1139,14 @@ ORDER BY doc_a, doc_b
 
 
 # d8_jaccard_join_prefix (the unordered-prefix variant) is not
-# registered (registry._RETIRED): it shared _D8_ORACLE literally with
-# d8b below and was bit-identical by construction, so the df-ordered
-# variant subsumes it. The order_by_df=False code path stays
-# brute-force-tested in tests/test_dedup.py.
+# registered: it shared _D8_ORACLE literally with d8b below and was
+# bit-identical by construction, so the df-ordered variant subsumes it.
+# The order_by_df=False code path stays brute-force-tested in
+# tests/test_dedup.py.
 @register(
     "d8b_jaccard_join_df_prefix",
     # any global token order preserves AllPairs exactness, so this oracle
-    # (shared with the retired unordered twin) pins that the df-ordered
+    # (shared with the unregistered unordered twin) pins that the df-ordered
     # refinement is an optimization, never a semantics change
     oracle=_D8_ORACLE,
     doc="D8B: prefix-filtered exact Jaccard>=0.5 join, ascending-df ordering",

@@ -272,6 +272,8 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one pass, so a merge bug (double count / dropped bin) shifts a quantile
 # or a count and fails the hash gate. Full-value oracle: every emitted
 # number is deterministic double/int arithmetic shared by both engines.
+# The streaming twin st10 maintains the same state through the same
+# histogram_binned / histogram_state / histogram_quantiles.
 # ---------------------------------------------------------------------------
 _A21_NBINS = 256
 _A21_PS = [("p50", 0.5), ("p95", 0.95), ("p99", 0.99)]
@@ -316,56 +318,47 @@ FROM qb, cal c
 )
 
 
-@register(
-    "a21_histogram_quantile_rollup",
-    oracle=A21_ORACLE,
-    doc="A21: mergeable fixed-bin histogram state — split ⊕ merge quantiles ≡ one-pass recompute",
-)
-def a21_histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q = track(
-        quality_checked(spark, sf_dir)
-        .withColumn("d", F.to_date("ts"))
-        .persist()
-    )
-    # one calibration aggregate: bin domain + the history/delta split
-    # point, joined in as a 1-row broadcast (no driver collect)
-    cal = q.agg(
-        F.min("value").alias("dmin"),
-        F.max("value").alias("dmax"),
-        F.max("d").alias("split_d"),
-    )
-    width = (F.col("dmax") - F.col("dmin")) / _A21_NBINS
+def _a21_width() -> F.Column:
+    return (F.col("dmax") - F.col("dmin")) / _A21_NBINS
+
+
+def histogram_binned(rows: DataFrame, cal: DataFrame) -> DataFrame:
+    """``rows`` with their fixed ``bin`` against the 1-row calibration
+    ``cal`` (``dmin``, ``dmax``), joined in as a broadcast. Every state
+    that merges must bin against the same ``cal``. NULL readings carry no
+    quantile information and MUST stay out of the histogram: a NULL value
+    bins to a NULL bin, and the cumulative window then diverges
+    cross-engine (Spark sorts NULLS FIRST ascending, DuckDB NULLS LAST),
+    inflating every real bin's cum on one side only. Filtered identically
+    in the oracle (WHERE value IS NOT NULL); min/max calibration already
+    ignores NULLs on both."""
     bin_ = (
         F.when(F.col("dmax") == F.col("dmin"), F.lit(0))
         .otherwise(
             F.least(
-                F.floor((F.col("value") - F.col("dmin")) / width),
+                F.floor((F.col("value") - F.col("dmin")) / _a21_width()),
                 F.lit(_A21_NBINS - 1),
             )
         )
         .cast("int")
     )
-    # NULL readings carry no quantile information and MUST stay out of
-    # the histogram: a NULL value bins to a NULL bin, and the cumulative
-    # window then diverges cross-engine (Spark sorts NULLS FIRST
-    # ascending, DuckDB NULLS LAST), inflating every real bin's cum on
-    # one side only. Filtered identically in the oracle (WHERE value IS
-    # NOT NULL); min/max calibration already ignores NULLs on both.
-    binned = (
-        q.filter(F.col("value").isNotNull())
+    return (
+        rows.filter(F.col("value").isNotNull())
         .join(F.broadcast(cal))
         .withColumn("bin", bin_)
     )
 
-    def state(part: DataFrame) -> DataFrame:
-        return part.groupBy("sensor_type", "bin").agg(F.count("*").alias("cnt"))
 
-    merged = (
-        state(binned.filter(F.col("d") < F.col("split_d")))
-        .unionByName(state(binned.filter(F.col("d") == F.col("split_d"))))
-        .groupBy("sensor_type", "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+def histogram_state(binned: DataFrame) -> DataFrame:
+    """The mergeable (sensor_type, bin, cnt) histogram state."""
+    return binned.groupBy("sensor_type", "bin").agg(F.count("*").alias("cnt"))
+
+
+def histogram_quantiles(states: DataFrame, cal: DataFrame) -> DataFrame:
+    """Merge histogram ``states`` (any number of unioned
+    :func:`histogram_state` rows over one ``cal``) and finalize each
+    sensor_type's row count and the lower edge of its p50/p95/p99 bins."""
+    merged = states.groupBy("sensor_type", "bin").agg(F.sum("cnt").alias("cnt"))
     cum = F.sum("cnt").over(
         Window.partitionBy("sensor_type").orderBy("bin").rowsBetween(
             Window.unboundedPreceding, 0
@@ -389,11 +382,38 @@ def a21_histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
         "sensor_type",
         "n_rows",
         *[
-            fround(F.col("dmin") + F.col(f"{name}_bin") * width, _R).alias(
+            fround(F.col("dmin") + F.col(f"{name}_bin") * _a21_width(), _R).alias(
                 f"{name}_lo"
             )
             for name, _ in _A21_PS
         ],
+    )
+
+
+@register(
+    "a21_histogram_quantile_rollup",
+    oracle=A21_ORACLE,
+    doc="A21: mergeable fixed-bin histogram state — split ⊕ merge quantiles ≡ one-pass recompute",
+)
+def a21_histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    q = track(
+        quality_checked(spark, sf_dir)
+        .withColumn("d", F.to_date("ts"))
+        .persist()
+    )
+    # one calibration aggregate: bin domain + the history/delta split
+    # point, joined in as a 1-row broadcast (no driver collect)
+    cal = q.agg(
+        F.min("value").alias("dmin"),
+        F.max("value").alias("dmax"),
+        F.max("d").alias("split_d"),
+    )
+    binned = histogram_binned(q, cal)
+    return histogram_quantiles(
+        histogram_state(binned.filter(F.col("d") < F.col("split_d"))).unionByName(
+            histogram_state(binned.filter(F.col("d") == F.col("split_d")))
+        ),
+        cal,
     )
 
 
@@ -686,12 +706,20 @@ def a22_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mergeability: two independent half-sketches summed == one-pass.
     # Separate aggregation jobs by construction (different filters), so
     # the equality is a real merge proof, not plan reuse.
-    halves = cms_table(ev.filter(F.pmod("event_id", F.lit(2)) == 0)).unionByName(
-        cms_table(ev.filter(F.pmod("event_id", F.lit(2)) == 1))
+    merged = cms_merge(
+        cms_table(ev.filter(F.pmod("event_id", F.lit(2)) == 0)).unionByName(
+            cms_table(ev.filter(F.pmod("event_id", F.lit(2)) == 1))
+        )
     )
-    merged = halves.groupBy("depth", "bucket").agg(F.sum("cnt").alias("cnt"))
     consistent = cms_merge_consistent(onepass, merged)
     return cms_heavy_hitter_report(ev, onepass, consistent)
+
+
+def cms_merge(sketches: DataFrame) -> DataFrame:
+    """The counter-wise sum of unioned (depth, bucket, cnt) sketch
+    relations. CMS is linear, so the merge of per-part sketches equals the
+    one-pass sketch of the union of the parts."""
+    return sketches.groupBy("depth", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_merge_consistent(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -768,28 +796,36 @@ def a23_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with_split = l.join(F.broadcast(split))
     month = F.date_trunc("month", F.col("l_shipdate"))
+    history = join_view_state(with_split.filter(month < F.col("split_m")), o)
+    delta = join_view_state(with_split.filter(month >= F.col("split_m")), o)
+    return join_view_merge(history.unionByName(delta))
 
-    def partial_state(df: DataFrame) -> DataFrame:
-        return (
-            df.join(o, df["l_orderkey"] == o["o_orderkey"])
-            .groupBy(
-                month.alias("ship_month"), "o_orderpriority"
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(_disc_price()).alias("rev"),  # DECIMAL partial
-            )
+
+def join_view_state(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
+    """The mergeable join-view state of a set of ``lineitem`` rows: joined
+    to the ``orders`` dimension, then (ship_month, o_orderpriority, n, rev)
+    per group, with the revenue partial kept DECIMAL so that the merge is
+    exact whatever the order of the parts."""
+    return (
+        lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
+        .groupBy(
+            F.date_trunc("month", F.col("l_shipdate")).alias("ship_month"),
+            "o_orderpriority",
         )
-
-    history = partial_state(with_split.filter(month < F.col("split_m")))
-    delta = partial_state(with_split.filter(month >= F.col("split_m")))
-    merged = (
-        history.unionByName(delta)
-        .groupBy("ship_month", "o_orderpriority")
         .agg(
-            F.sum("n").cast("bigint").alias("n_items"),
-            F.sum("rev").alias("rev"),
+            F.count("*").alias("n"),
+            F.sum(_disc_price()).alias("rev"),  # DECIMAL partial
         )
+    )
+
+
+def join_view_merge(states: DataFrame) -> DataFrame:
+    """Merge unioned :func:`join_view_state` rows and finalize the view:
+    counts add, the decimal revenue sums add, and the double cast happens
+    once, here."""
+    merged = states.groupBy("ship_month", "o_orderpriority").agg(
+        F.sum("n").cast("bigint").alias("n_items"),
+        F.sum("rev").alias("rev"),
     )
     return merged.select(
         "ship_month",

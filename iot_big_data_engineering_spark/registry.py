@@ -146,41 +146,6 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# RETIRED queries: redundant twins whose @register was deleted. Each
-# retiree's exact twin stays registered and keeps the semantics, and any
-# library core the retiree exercised stays directly tested
-# (tests/test_registry_window.py asserts all three).
-_RETIRED = {
-    "d8_jaccard_join_prefix": (
-        "redundant precision twin: shared _D8_ORACLE literally with "
-        "d8b_jaccard_join_df_prefix, bit-identical output by "
-        "construction; the df-ordered variant subsumes it, and the "
-        "shared core prefix_jaccard_pairs(order_by_df=False) stays "
-        "brute-force-tested in test_dedup.py"
-    ),
-    "adv6b_approx_percentiles": (
-        "approx/sketch twin of adv6_percentiles; the "
-        "sketch-within-rank-band capability stays as an unregistered "
-        "library function with its band test"
-    ),
-    "a7_summary_report_approx": (
-        "HLL/sketch twin of a7_summary_report, wrapper-only (no unique "
-        "core); the approx-distinct-within-band capability (_RSD + "
-        "_hll_ok) stays registered via a1/a2_daily_analytics_approx"
-    ),
-    "a4_vehicle_analytics_approx": (
-        "HLL/sketch twin of a4_vehicle_analytics, wrapper-only; the "
-        "_hll_ok band pattern stays registered via a1/a2_approx"
-    ),
-}
-# Each retiree's exact twin, which must remain registered.
-_RETIRED_TWINS = {
-    "d8_jaccard_join_prefix": "d8b_jaccard_join_df_prefix",
-    "adv6b_approx_percentiles": "adv6_percentiles",
-    "a7_summary_report_approx": "a7_summary_report",
-    "a4_vehicle_analytics_approx": "a4_vehicle_analytics",
-}
-
 
 def _ensure_loaded() -> None:
     """Import every operator module for its registration side effects;

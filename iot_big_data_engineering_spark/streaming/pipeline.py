@@ -26,13 +26,23 @@ no per-record parser allocation, no schema inference.
 
 Read, run and sink contract, shared by every query in this module:
 
-- **Read.** Every events stream comes from :func:`events_file_stream`,
-  which reads through the batch loader's
+- **Read.** Every stream over an external events directory comes from
+  :func:`events_file_stream`, which reads through the batch loader's
   :func:`~..sources.tables.read_table`: one memoized schema probe per
   ``(path, glob)`` and file state of the directory (a directory that
   gains a file re-probes on the next build, an unchanged one launches no
   job), and one per-column decode, so a streamed ``ts`` equals the batch
   ``ts`` whatever its physical type.
+- **Replay.** A query that streams a frame it has already loaded (the
+  mergeable-state twins st8 and st10-st14, and st15) writes the frame's
+  files to its scratch tree and reads them back with
+  :func:`slice_stream`, one file per micro-batch, under the frame's own
+  schema: no probe, no decode and no schema memo entry for a directory
+  that is deleted on exit. :func:`replay_states` is the whole replay for
+  a state twin: key slices (:func:`write_slices`), one ``write_epoch``
+  per state function and micro-batch under :func:`run_available_now`,
+  the data-batch floor, and the state tables read back. st10 alone runs
+  its own stream, because it must kill it mid-way and restart it.
 - **Run.** Every bounded stream runs through :func:`run_available_now`:
   the availableNow trigger drains the input present at start, in as many
   micro-batches as ``maxFilesPerTrigger`` makes, and stops (st10's first
@@ -74,31 +84,35 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from datetime import timedelta
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..caching import collect_local, scratch_dir, track
 from ..functions.rounding import fround
 from ..operators.advanced import _ADV14_ORACLE, scd2_history_rows, scd2_inputs
 from ..operators.analytics import A1_ORACLE, a1_window_aggregate
-from ..operators.joins import _disc_price as _j_disc_price
 from ..operators.sketches import (
-    _A21_NBINS,
-    _A21_PS,
     _A22_ORACLE,
     A17_ORACLE,
     A21_ORACLE,
     A23_ORACLE,
     _partial_state,
     cms_heavy_hitter_report,
+    cms_merge,
     cms_merge_consistent,
     cms_table,
     finalize_rollup,
+    histogram_binned,
+    histogram_quantiles,
+    histogram_state,
+    join_view_merge,
+    join_view_state,
     merge_states,
 )
 from ..operators.textstats import (
@@ -108,6 +122,7 @@ from ..operators.textstats import (
     card_lang_counts,
     card_project,
     card_text_keys,
+    dataset_card,
 )
 from ..registry import register
 from ..sources.sensor_view import (
@@ -169,6 +184,65 @@ def write_slices(
     slice_of = F.pmod(F.xxhash64(key), F.lit(_ST8_N_SPLITS))
     for i in slices:
         df.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
+
+
+def slice_stream(frame: DataFrame, in_dir: str) -> DataFrame:
+    """The parquet files written from ``frame`` to ``in_dir`` (by
+    :func:`write_slices`, or st15's time-ordered writes), streamed one file
+    per micro-batch and read with ``frame``'s own schema: no footer probe,
+    and no schema memo entry for a scratch directory."""
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+
+@contextmanager
+def replay_states(
+    frame: DataFrame,
+    key: str,
+    query: str,
+    *states: Callable[[DataFrame], DataFrame],
+    min_batches: int = 1,
+) -> Iterator[list[DataFrame]]:
+    """Replay ``frame`` as a bounded stream and maintain one epoch state
+    table per function in ``states``. The frame's key slices
+    (:func:`write_slices`) stream back through :func:`slice_stream`, and
+    each micro-batch writes ``state(batch)`` for every state as its epoch
+    (:func:`~..sources.table_sinks.write_epoch`) under
+    :func:`run_available_now`. Raises RuntimeError when fewer than
+    ``min_batches`` micro-batches carried rows. Yields each state table
+    read back, without its ``epoch_id`` column; the tables live in
+    ``query``'s scratch tree, so results leave the block through
+    :func:`~..caching.collect_local`."""
+    spark = frame.sparkSession
+    with scratch_dir(f"iotx_{query}_") as tmp:
+        in_dir = os.path.join(tmp, "in")
+        state_dirs = [os.path.join(tmp, f"state{i}") for i in range(len(states))]
+        write_slices(frame, key, in_dir, range(_ST8_N_SPLITS))
+
+        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+            if len(states) > 1:  # one read of the batch feeds every state
+                batch_df = batch_df.localCheckpoint()
+            for state, path in zip(states, state_dirs):
+                write_epoch(state(batch_df), epoch_id, path)
+
+        q = run_available_now(
+            slice_stream(frame, in_dir)
+            .writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+        )
+        n = data_batches(q)
+        if n < min_batches:
+            raise RuntimeError(
+                f"{query} needs >={min_batches} data micro-batches to "
+                f"certify the cross-batch merge; got {n}"
+                if min_batches > 1
+                else f"{query} saw a non-empty input yet no data "
+                f"micro-batch arrived; got {n}"
+            )
+        yield [spark.read.parquet(d).drop("epoch_id") for d in state_dirs]
 
 
 def events_file_stream(
@@ -750,9 +824,9 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # raw data per run, SensorDataAnalytics.scala:40-44).
 #
 # Unlike st1-st7 (single-file bounded streams pinned to ONE micro-batch),
-# st8 deliberately splits the input into several files (write_slices) and
-# streams them maxFilesPerTrigger=1, then RAISES unless >= 2 data batches
-# ran — a single-batch run would silently certify. So the driver's hash row
+# st8 deliberately replays the input as several files (replay_states),
+# one micro-batch each, and RAISES unless >= 2 data batches ran — a
+# single-batch run would silently certify. So the driver's hash row
 # certifies the cross-batch merge path, not a degenerate single-batch
 # run. Oracle = the full recompute (A17's), so any double-count /
 # dropped-group / sketch-union regression across batch boundaries fails
@@ -764,34 +838,15 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="§2.7/A17: foreachBatch incremental rollup — per-batch delta states merged ≡ full recompute",
 )
 def st8_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with scratch_dir("iotx_st8_") as tmp:
-        in_dir = os.path.join(tmp, "in")
-        state_dir = os.path.join(tmp, "state")
-        # ts round-trips through the slice rewrite unchanged: the stream
-        # reader re-normalizes from the actual footer type
-        ev = load_table(spark, sf_dir, "events")
-        write_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS))
-        stream = sensor_stream(
-            spark, in_dir, glob="*.parquet", max_files_per_trigger=1
-        )
-
-        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # delta state only — one tiny row group per (batch, sensor_type)
-            write_epoch(_partial_state(batch_df), epoch_id, state_dir)
-
-        q = run_available_now(
-            stream.writeStream.foreachBatch(process_batch).option(
-                "checkpointLocation", os.path.join(tmp, "ckpt")
-            )
-        )
-        n = data_batches(q)
-        if n < 2:
-            raise RuntimeError(
-                f"st8 needs >=2 data micro-batches to certify the cross-batch "
-                f"merge; got {n}"
-            )
-
-        merged = merge_states(spark.read.parquet(state_dir).drop("epoch_id"))
+    with replay_states(
+        load_table(spark, sf_dir, "events"),
+        "event_id",
+        "st8",
+        # delta state only — one tiny row group per (batch, sensor_type)
+        lambda batch: _partial_state(apply_quality(map_events(batch))),
+        min_batches=2,
+    ) as (state,):
+        merged = merge_states(state)
         # |sensor_type| rows — bounded
         return collect_local(finalize_rollup(merged, quality_checked(spark, sf_dir)))
 
@@ -888,15 +943,16 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
 # rows as its state; st10 runs that maintenance as a stream: each
 # micro-batch bins its rows against the FIXED calibration domain and
 # writes its own (sensor_type, bin) count delta as its epoch, and the
-# final quantiles
-# finalize from the merged counts alone. The calibration (bin domain)
-# must be shared by every delta — in production it comes from a
-# historical calibration table; here it is one bounded 2-value aggregate
-# over the corpus. Oracle = a21's one-pass recompute: a binning drift,
-# dropped epoch, double-counted replay or cum/total window bug shifts a
-# quantile or a count and fails the hash gate.
+# final quantiles finalize from the merged counts alone, through a21's
+# own histogram_binned / histogram_state / histogram_quantiles. The
+# calibration (bin domain) must be shared by every delta — in production
+# it comes from a historical calibration table; here it is a21's 1-row
+# (dmin, dmax) aggregate over the corpus. Oracle = a21's one-pass
+# recompute: a binning drift, dropped epoch, double-counted replay or
+# cum/total window bug shifts a quantile or a count and fails the hash
+# gate.
 #
-# The flow crosses a REAL stop/restart boundary (VERDICT r6 demand #5):
+# The flow crosses a REAL stop/restart boundary:
 # the first query is kill()ed mid-stream (stop() while unconsumed input
 # remains), then — before the restart — the state table is torn by
 # appending a partial, wrong count partition under the NEXT uncommitted
@@ -905,7 +961,7 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
 # commit. The restarted query must (a) resume the file-source offsets
 # without re-reading phase-1 files (a re-read double-counts and fails
 # the hash gate), and (b) assign its first batch the torn epoch's id so
-# the dynamic partition overwrite replaces the torn partition wholesale
+# the epoch overwrite replaces the torn epoch directory wholesale
 # (a leftover torn row shifts a count and fails the gate). The torn
 # write is deterministic where a raw kill is racy: the crash's
 # externally visible artifacts (committed checkpoint prefix + partial
@@ -928,59 +984,36 @@ def st10_streaming_histogram_rollup(
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         ckpt_dir = os.path.join(tmp, "ckpt")
+        rows = quality_checked(spark, sf_dir)
+        # the shared bin domain: a 1-row aggregate (bounded by construction),
+        # persisted so every batch bins against the SAME domain, without a
+        # corpus scan per batch; otherwise the counts are not mergeable
+        cal = track(
+            rows.agg(F.min("value").alias("dmin"), F.max("value").alias("dmax"))
+            .persist()
+        )
+        if cal.first().dmin is None:
+            # empty/all-NULL corpus: no data batch would ever arrive, and
+            # a21's one-pass form over it is the empty result
+            return histogram_quantiles(
+                histogram_state(histogram_binned(rows, cal)), cal
+            )
         ev = load_table(spark, sf_dir, "events")
         # phase 1 gets slices [0, N-1); the last slice arrives only after the
         # kill, so the restarted query ALWAYS has fresh input to prove the
         # offset recovery on
         write_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS - 1))
-
-        # the shared bin domain: one 2-value aggregate (bounded by
-        # construction); every batch must bin against the SAME domain or the
-        # counts are not mergeable
-        cal = (
-            quality_checked(spark, sf_dir)
-            .agg(F.min("value").alias("dmin"), F.max("value").alias("dmax"))
-            .collect()[0]
-        )
-        if cal.dmin is None:  # empty/all-NULL corpus: no quantiles to
-            # maintain — return empty with the stable schema (a21's
-            # lazy path does the same) instead of float(None) crashing
-            return spark.createDataFrame(
-                [],
-                "sensor_type string, n_rows long, "
-                + ", ".join(f"{name}_lo double" for name, _ in _A21_PS),
-            )
-        dmin, dmax = float(cal.dmin), float(cal.dmax)
-        width = (dmax - dmin) / _A21_NBINS
-        bin_ = (
-            F.lit(0)
-            if dmax == dmin
-            else F.least(
-                F.floor((F.col("value") - F.lit(dmin)) / F.lit(width)),
-                F.lit(_A21_NBINS - 1),
-            ).cast("int")
-        )
-
-        stream = sensor_stream(
-            spark, in_dir, glob="*.parquet", max_files_per_trigger=1
-        )
+        stream = apply_quality(map_events(slice_stream(ev, in_dir)))
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            delta = (
-                batch_df.filter(F.col("value").isNotNull())  # see a21:
-                # NULL bins diverge cross-engine in the cum window
-                .withColumn("bin", bin_)
-                .groupBy("sensor_type", "bin")
-                .agg(F.count("*").alias("cnt"))
-            )
+            delta = histogram_state(histogram_binned(batch_df, cal))
             write_epoch(delta, epoch_id, state_dir)
 
-        # ---- phase 1: run continuously, then KILL the query mid-stream ----
-        q1 = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
+        writer = stream.writeStream.foreachBatch(process_batch).option(
+            "checkpointLocation", ckpt_dir
         )
+        # ---- phase 1: run continuously, then KILL the query mid-stream ----
+        q1 = writer.start()
         deadline = time.monotonic() + 120.0
         while data_batches(q1) < 1 and time.monotonic() < deadline:
             time.sleep(0.2)
@@ -1012,11 +1045,7 @@ def st10_streaming_histogram_rollup(
 
         # ---- phase 2: deliver the last slice, restart from the checkpoint ----
         write_slices(ev, "event_id", in_dir, [_ST8_N_SPLITS - 1])
-        q2 = run_available_now(
-            stream.writeStream.foreachBatch(process_batch).option(
-                "checkpointLocation", ckpt_dir
-            )
-        )
+        q2 = run_available_now(writer)
         n2 = data_batches(q2)
         if n2 < 1 or n1 + n2 < 2:
             raise RuntimeError(
@@ -1027,53 +1056,15 @@ def st10_streaming_histogram_rollup(
         # a surviving sentinel means the epoch overwrite failed (the hash gate
         # would also fail, via the extra sensor_type group; this check names
         # the cause)
-        torn_left = (
-            spark.read.parquet(state_dir)
-            .filter(F.col("sensor_type") == "__torn__")
-            .count()
-        )
+        state = spark.read.parquet(state_dir).drop("epoch_id")
+        torn_left = state.filter(F.col("sensor_type") == "__torn__").count()
         if torn_left:
             raise RuntimeError(
                 f"torn epoch {torn_epoch} survived the restart: the epoch "
                 f"overwrite did not replace the crashed state write"
             )
-
-        merged = (
-            spark.read.parquet(state_dir)
-            .drop("epoch_id")
-            .groupBy("sensor_type", "bin")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        cum = F.sum("cnt").over(
-            Window.partitionBy("sensor_type")
-            .orderBy("bin")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        total = F.sum("cnt").over(Window.partitionBy("sensor_type"))
-        hist = merged.withColumn("cum", cum).withColumn("total", total)
-        qb = hist.groupBy("sensor_type").agg(
-            F.max("total").alias("n_rows"),
-            *[
-                F.min(
-                    F.when(
-                        F.col("cum") >= F.ceil(F.lit(p) * F.col("total")),
-                        F.col("bin"),
-                    )
-                ).alias(f"{name}_bin")
-                for name, p in _A21_PS
-            ],
-        )
-        result = qb.select(
-            "sensor_type",
-            "n_rows",
-            *[
-                fround(F.lit(dmin) + F.col(f"{name}_bin") * F.lit(width), 6).alias(
-                    f"{name}_lo"
-                )
-                for name, _ in _A21_PS
-            ],
-        )
-        return collect_local(result)  # |sensor_type| rows — bounded
+        # |sensor_type| rows — bounded
+        return collect_local(histogram_quantiles(state, cal))
 
 
 # ---------------------------------------------------------------------------
@@ -1082,7 +1073,8 @@ def st10_streaming_histogram_rollup(
 # histograms st10, frequency sketches st11). Each micro-batch reduces to
 # its own bounded CMS delta — ≤ depth·width (depth, bucket, cnt) rows no
 # matter the batch size — written as its epoch. The serving-side
-# sketch is the counter-wise SUM across epochs; CMS is linear, so
+# sketch is the counter-wise SUM across epochs (a22's own cms_table and
+# cms_merge); CMS is linear, so
 # merged-from-deltas must equal the one-pass sketch EXACTLY — that
 # equality is the hashed merge_consistent certificate, and the top-k
 # estimates are probed from the MERGED sketch, so the external oracle
@@ -1110,58 +1102,24 @@ def st10_streaming_histogram_rollup(
 def st11_streaming_cms_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    with scratch_dir("iotx_st11_") as tmp:
-        in_dir = os.path.join(tmp, "in")
-        state_dir = os.path.join(tmp, "state")
-        ev = load_table(spark, sf_dir, "events")
-        if ev.filter(F.col("user_id").isNotNull()).isEmpty():
-            # empty / all-NULL-key corpus: every delta would be empty, no
-            # state epoch would ever be written, and the merged read
-            # below would raise PATH_NOT_FOUND — while the oracle (and
-            # a22) return zero rows. Return the stable-schema empty
-            # report instead.
-            return spark.createDataFrame(
-                [],
-                "user_id long, true_count long, cms_estimate long, "
-                "overestimate long, merge_consistent boolean",
-            )
-        write_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS))
-        stream = events_file_stream(
-            spark, in_dir, glob="*.parquet", max_files_per_trigger=1
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    if ev.isEmpty():
+        # empty / all-NULL-key corpus: no data batch would arrive; a22's
+        # one-pass report over it is the empty report the oracle returns
+        onepass = cms_table(ev)
+        return cms_heavy_hitter_report(
+            ev, onepass, cms_merge_consistent(onepass, onepass)
         )
-
-        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            delta = cms_table(batch_df.filter(F.col("user_id").isNotNull()))
-            write_epoch(delta, epoch_id, state_dir)
-
-        q = run_available_now(
-            stream.writeStream.foreachBatch(process_batch).option(
-                "checkpointLocation", os.path.join(tmp, "ckpt")
-            )
-        )
-        # >=2 data batches certify the cross-epoch sketch merge across
-        # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
-        # where every row lands in one xxhash64 slice) still certifies
-        # the degenerate case — merge of one delta must equal one-pass —
-        # so fall back instead of raising. 0 is unreachable here (the
-        # non-empty guard above ensures at least one slice has rows), so
-        # it stays a loud invariant failure.
-        n = data_batches(q)
-        if n < 1:
-            raise RuntimeError(
-                f"st11 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {n}"
-            )
-
-        merged = (
-            spark.read.parquet(state_dir)
-            .groupBy("depth", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        evb = ev.filter(F.col("user_id").isNotNull())
-        consistent = cms_merge_consistent(cms_table(evb), merged)
+    # >=2 data batches certify the cross-epoch sketch merge; exactly 1
+    # (possible on a tiny or hash-skewed corpus where every row lands in
+    # one xxhash64 slice) still certifies the degenerate case — merge of
+    # one delta must equal one-pass — so the floor is 1. 0 is unreachable
+    # (the input is non-empty), so it stays a loud invariant failure.
+    with replay_states(ev, "event_id", "st11", cms_table) as (deltas,):
+        merged = cms_merge(deltas)
+        consistent = cms_merge_consistent(cms_table(ev), merged)
         # ≤ _CMS_TOPK rows — bounded
-        return collect_local(cms_heavy_hitter_report(evb, merged, consistent))
+        return collect_local(cms_heavy_hitter_report(ev, merged, consistent))
 
 
 # ---------------------------------------------------------------------------
@@ -1187,12 +1145,6 @@ def st11_streaming_cms_maintenance(
 # dumps) without holding the full snapshot in memory — and the nightly
 # compaction of epoch fragments is a17c's contract.
 # ---------------------------------------------------------------------------
-_ST12_SCHEMA = (
-    "c_custkey long, acctbal double, valid_from timestamp, "
-    "valid_to timestamp, is_current boolean, scd_action string"
-)
-
-
 @register(
     "st12_streaming_scd2_maintenance",
     # adv14's oracle VERBATIM: the streamed per-epoch maintenance plus
@@ -1208,86 +1160,54 @@ def st12_streaming_scd2_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     dim, snap = scd2_inputs(spark, sf_dir)
-    if snap.isEmpty():
-        if dim.isEmpty():  # empty corpus: stable-schema empty history
-            return spark.createDataFrame([], _ST12_SCHEMA)
-        # a snapshot stream that delivers nothing retires every dim key —
-        # no epochs exist, so the stream/merge machinery has nothing to do
-        m = dim.withColumn("in_snap", F.lit(False)).withColumn(
-            "bal_new", F.lit(None).cast("double")
-        )
+
+    def retired(unseen: DataFrame) -> DataFrame:
+        # full-snapshot retire semantics: the dim keys the snapshot never
+        # delivered close as 'retired'
         return scd2_history_rows(
-            m.select("c_custkey", "in_dim", "in_snap", "bal_old", "bal_new")
+            unseen.select(
+                "c_custkey",
+                "in_dim",
+                F.lit(False).alias("in_snap"),
+                "bal_old",
+                F.lit(None).cast("double").alias("bal_new"),
+            )
         )
+
+    if snap.isEmpty():
+        # a snapshot stream that delivers nothing retires every dim key (no
+        # rows on an empty corpus); no epoch exists to replay or merge
+        return retired(dim)
+
+    def fragment(batch_df: DataFrame) -> DataFrame:
+        mb = (
+            batch_df.withColumn("in_snap", F.lit(True))
+            .join(dim, "c_custkey", "left")
+            .select(
+                "c_custkey",
+                F.coalesce("in_dim", F.lit(False)).alias("in_dim"),
+                "in_snap",
+                "bal_old",
+                "bal_new",
+            )
+        )
+        return scd2_history_rows(mb)
 
     dim = dim.persist()  # consumed once per micro-batch plus the retired
     # pass — persist so the customer parquet is scanned once, not N+1 times
     try:
-        with scratch_dir("iotx_st12_") as tmp:
-            in_dir = os.path.join(tmp, "in")
-            state_dir = os.path.join(tmp, "state")
-            write_slices(
-                snap.select("c_custkey", "bal_new"),
-                "c_custkey",
-                in_dir,
-                range(_ST8_N_SPLITS),
-            )
-            stream = (
-                spark.readStream.schema("c_custkey long, bal_new double")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-
-            def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-                mb = (
-                    batch_df.withColumn("in_snap", F.lit(True))
-                    .join(dim, "c_custkey", "left")
-                    .select(
-                        "c_custkey",
-                        F.coalesce("in_dim", F.lit(False)).alias("in_dim"),
-                        "in_snap",
-                        "bal_old",
-                        "bal_new",
-                    )
-                )
-                write_epoch(scd2_history_rows(mb), epoch_id, state_dir)
-
-            q = run_available_now(
-                stream.writeStream.foreachBatch(process_batch).option(
-                    "checkpointLocation", os.path.join(tmp, "ckpt")
-                )
-            )
-            # >=2 data batches certify the cross-epoch history assembly;
-            # exactly 1 (a tiny or hash-skewed corpus) certifies the
-            # degenerate one-delta case, as in st11; 0 on a non-empty
-            # snapshot is a loud invariant failure
-            n = data_batches(q)
-            if n < 1:
-                raise RuntimeError(
-                    f"st12 saw a non-empty input yet no data micro-batch "
-                    f"arrived; got {n}"
-                )
-
-            frags = spark.read.parquet(state_dir).select(
-                "c_custkey", "acctbal", "valid_from", "valid_to", "is_current",
-                "scd_action",
-            )
-            # full-snapshot retire semantics: keys the stream NEVER
-            # delivered. Fragment keys only — the anti-join probe is
-            # |snapshot keys|, not history rows
+        # >=2 data batches certify the cross-epoch history assembly;
+        # exactly 1 (a tiny or hash-skewed corpus) certifies the
+        # degenerate one-delta case, as in st11
+        with replay_states(
+            snap.select("c_custkey", "bal_new"), "c_custkey", "st12", fragment
+        ) as (frags,):
+            # fragment keys only — the anti-join probe is |snapshot keys|,
+            # not history rows
             seen = frags.select("c_custkey").distinct()
-            retired_m = (
-                dim.join(seen, "c_custkey", "left_anti")
-                .withColumn("in_snap", F.lit(False))
-                .withColumn("bal_new", F.lit(None).cast("double"))
-            )
-            retired = scd2_history_rows(
-                retired_m.select(
-                    "c_custkey", "in_dim", "in_snap", "bal_old", "bal_new"
-                )
-            )
+            unseen = dim.join(seen, "c_custkey", "left_anti")
             # ~1.1x |customers| rows at gate SFs
-            return collect_local(frags.unionByName(retired))
+            return collect_local(frags.unionByName(retired(unseen)))
     finally:
         dim.unpersist()
 
@@ -1302,7 +1222,8 @@ def st12_streaming_scd2_maintenance(
 # O(|groups-in-batch|) (ship_month, priority, n, DECIMAL rev) rows
 # written as its epoch. The serving view is the groupBy-sum across
 # epochs — exact, because the revenue partials are decimal and addition
-# is order-independent. Registers with a23's oracle VERBATIM (the full
+# is order-independent. State and merge are a23's own
+# (join_view_state, join_view_merge). Registers with a23's oracle VERBATIM (the full
 # join recompute), so the external gate value-checks the streamed
 # maintenance end-to-end.
 #
@@ -1320,77 +1241,23 @@ def st12_streaming_scd2_maintenance(
     ),
 )
 def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with scratch_dir("iotx_st13_") as tmp:
-        in_dir = os.path.join(tmp, "in")
-        state_dir = os.path.join(tmp, "state")
-        o = track(
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .persist()
-        )
-        l = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_shipdate", "l_extendedprice", "l_discount"
-        )
-        if l.isEmpty():
-            return spark.createDataFrame(
-                [],
-                "ship_month timestamp, o_orderpriority string, "
-                "n_items bigint, revenue double",
-            )
-        write_slices(l, "l_orderkey", in_dir, range(_ST8_N_SPLITS))
-        stream = (
-            spark.readStream.schema(
-                "l_orderkey long, l_shipdate timestamp, "
-                "l_extendedprice double, l_discount double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-
-        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            state = (
-                batch_df.join(o, batch_df["l_orderkey"] == o["o_orderkey"])
-                .groupBy(
-                    F.date_trunc("month", "l_shipdate").alias("ship_month"),
-                    "o_orderpriority",
-                )
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(_j_disc_price()).alias("rev"),  # DECIMAL partial
-                )
-            )
-            write_epoch(state, epoch_id, state_dir)
-
-        q = run_available_now(
-            stream.writeStream.foreachBatch(process_batch).option(
-                "checkpointLocation", os.path.join(tmp, "ckpt")
-            )
-        )
-        # >=2 data batches certify the cross-epoch state merge; exactly 1
-        # certifies the degenerate one-delta case, as in st11; 0 on a
-        # non-empty input is a loud invariant failure
-        n = data_batches(q)
-        if n < 1:
-            raise RuntimeError(
-                f"st13 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {n}"
-            )
-
-        merged = (
-            spark.read.parquet(state_dir)
-            .groupBy("ship_month", "o_orderpriority")
-            .agg(
-                F.sum("n").cast("bigint").alias("n_items"),
-                F.sum("rev").alias("rev"),
-            )
-        )
-        result = merged.select(
-            "ship_month",
-            "o_orderpriority",
-            "n_items",
-            fround(F.col("rev").cast("double"), 2).alias("revenue"),
-        )
-        return collect_local(result)  # |months|x|priorities| rows — bounded
+    o = track(
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .persist()
+    )
+    l = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_shipdate", "l_extendedprice", "l_discount"
+    )
+    if l.isEmpty():  # no data batch would arrive: the one-pass empty view
+        return join_view_merge(join_view_state(l, o))
+    # >=2 data batches certify the cross-epoch state merge; exactly 1
+    # certifies the degenerate one-delta case, as in st11
+    with replay_states(
+        l, "l_orderkey", "st13", lambda batch: join_view_state(batch, o)
+    ) as (states,):
+        # |months|x|priorities| rows — bounded
+        return collect_local(join_view_merge(states))
 
 
 # ---------------------------------------------------------------------------
@@ -1412,15 +1279,6 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sketch state and shrink it to |sources|×sketch). a17c's compaction
 # contract bounds the epoch count.
 # ---------------------------------------------------------------------------
-
-_ST14_EMPTY_SCHEMA = (
-    "source string, doc_count bigint, token_sum bigint, "
-    "token_share_ppm bigint, distinct_texts bigint, exact_dup_ppm bigint, "
-    "n_langs bigint, top_lang string, top_lang_docs bigint, "
-    "high_quality_docs bigint, null_text_docs bigint"
-)
-
-
 @register(
     "st14_streaming_dataset_card",
     oracle=_DP16_ORACLE,
@@ -1433,59 +1291,25 @@ _ST14_EMPTY_SCHEMA = (
 def st14_streaming_dataset_card(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    with scratch_dir("iotx_st14_") as tmp:
-        in_dir = os.path.join(tmp, "in")
-        cnt_dir = os.path.join(tmp, "state_counters")
-        txt_dir = os.path.join(tmp, "state_textkeys")
-        lng_dir = os.path.join(tmp, "state_langs")
-        docs = load_table(spark, sf_dir, "documents").select(
-            "source", "lang", "text", "doc_id"
-        )
-        if docs.isEmpty():
-            return spark.createDataFrame([], _ST14_EMPTY_SCHEMA)
-        write_slices(docs, "doc_id", in_dir, range(_ST8_N_SPLITS))
-        stream = (
-            spark.readStream.schema(
-                "source string, lang string, text string, doc_id long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-
-        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # one computation feeding the three fragments
-            d = card_project(batch_df).localCheckpoint()
-            write_epoch(card_counters(d), epoch_id, cnt_dir)
-            write_epoch(card_text_keys(d), epoch_id, txt_dir)
-            write_epoch(card_lang_counts(d), epoch_id, lng_dir)
-
-        q = run_available_now(
-            stream.writeStream.foreachBatch(process_batch).option(
-                "checkpointLocation", os.path.join(tmp, "ckpt")
-            )
-        )
-        # ≥2 data batches certify the cross-epoch merge; exactly 1 still
-        # certifies the degenerate one-delta case (as in st11-st13); 0 on
-        # a non-empty input is a loud invariant failure. card_project is a
-        # pure select, so a projected batch is non-empty exactly when its
-        # input is, and input rows are what data_batches counts.
-        n = data_batches(q)
-        if n < 1:
-            raise RuntimeError(
-                f"st14 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {n}"
-            )
-
-        # every batch wrote all three fragments, an empty one as a
-        # schema-only part file, so each state dir reads with its schema
-        # even when every text in the corpus is NULL
-        result = card_assemble(
-            *(
-                spark.read.parquet(d).drop("epoch_id")
-                for d in (cnt_dir, txt_dir, lng_dir)
-            )
-        )
-        return collect_local(result)  # |sources| rows — bounded
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", "lang", "text", "doc_id"
+    )
+    if docs.isEmpty():  # no data batch would arrive: dp16's empty card
+        return dataset_card(docs)
+    # ≥2 data batches certify the cross-epoch merge; exactly 1 still
+    # certifies the degenerate one-delta case (as in st11-st13). Every
+    # batch writes all three fragments, an empty one as a schema-only part
+    # file, so each state table reads with its schema even when every
+    # text in the corpus is NULL.
+    with replay_states(
+        docs,
+        "doc_id",
+        "st14",
+        lambda batch: card_counters(card_project(batch)),
+        lambda batch: card_text_keys(card_project(batch)),
+        lambda batch: card_lang_counts(card_project(batch)),
+    ) as fragments:
+        return collect_local(card_assemble(*fragments))  # |sources| rows — bounded
 
 
 # ---------------------------------------------------------------------------
@@ -1582,8 +1406,8 @@ def st15_stateful_session_eviction(
         batches = [
             ev.filter(F.col("ts") < F.lit(mid)),
             ev.filter(F.col("ts") >= F.lit(mid)),
-            spark.createDataFrame([(-1, sent1)], "user_id long, ts timestamp"),
-            spark.createDataFrame([(-2, sent2)], "user_id long, ts timestamp"),
+            spark.createDataFrame([(-1, sent1)], ev.schema),
+            spark.createDataFrame([(-2, sent2)], ev.schema),
         ]
         t0 = time.time()
         for i, sl in enumerate(batches):
@@ -1597,12 +1421,7 @@ def st15_stateful_session_eviction(
             # pin the replay order: the file source takes oldest-first,
             # and path order agrees as a tiebreak
             os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .withWatermark("ts", "1 second")
-        )
+        stream = slice_stream(ev, in_dir).withWatermark("ts", "1 second")
         q, out = to_memory(sessionize_with_eviction(stream))
         n = data_batches(q)
         if n < 4:

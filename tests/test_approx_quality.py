@@ -39,8 +39,8 @@ def test_approx_percentiles_close_to_exact(spark):
     """adv6b embeds the rank-band check in its own output (the sketch
     guarantees RANK error ≤ 1/accuracy, so the estimate must fall inside
     the exact [p−0.01, p+0.01] quantile band): every flag must be TRUE and
-    the exact columns must agree with adv6's. adv6b was registry-retired
-    r16 (redundant sketch twin of the gated adv6) but the capability stays
+    the exact columns must agree with adv6's. adv6b is not registered (a
+    redundant sketch twin of the registered adv6), but the capability stays
     as a library function — imported directly here."""
     from iot_big_data_engineering_spark.operators.advanced import (
         adv6b_approx_percentiles,

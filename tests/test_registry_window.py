@@ -1,7 +1,6 @@
 """The registry contract: every registered query carries a DuckDB oracle
-(so tests/test_oracle_parity.py checks all of them), the registry keeps
-registration order, and retired queries stay retired while the exact twin
-each one duplicated stays registered."""
+(so tests/test_oracle_parity.py checks all of them), and the registry keeps
+registration order."""
 
 from __future__ import annotations
 
@@ -34,19 +33,3 @@ def test_every_query_has_an_oracle_in_registration_order():
     with pytest.raises(TypeError):
         registry.register("x")  # the oracle is required
 
-
-def test_executed_retirements():
-    """Every retired name is GONE from the registry, carries a note in
-    registry._RETIRED, and is twinned with a still-registered exact
-    sibling."""
-    retired = registry._RETIRED
-    assert set(retired) == set(registry._RETIRED_TWINS)
-    names = set(registry.all_queries())
-    for retiree, note in retired.items():
-        assert retiree not in names, f"{retiree} must be deregistered"
-        assert note, "each retirement carries a one-line note"
-        twin = registry._RETIRED_TWINS[retiree]
-        assert twin in names, (
-            f"{retiree}'s exact sibling {twin} must remain registered "
-            "(the twin condition)"
-        )

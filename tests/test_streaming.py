@@ -593,7 +593,7 @@ def test_st11_on_all_null_user_ids(spark, tmp_path):
     """An events corpus whose user_id is entirely NULL streams real
     input rows but produces only empty sketch deltas; st11 must return
     the stable-schema empty report (matching a22 and the oracle), not
-    crash on a never-created state directory (r8 code-review)."""
+    crash on a never-created state directory."""
     import pandas as pd
 
     from iot_big_data_engineering_spark.sources.tables import load_table
@@ -745,8 +745,8 @@ def test_st11_single_data_batch_fallback(spark, tmp_path):
     """A 1-row events corpus lands in exactly one xxhash64 slice, so
     only ONE data micro-batch arrives. st11 must certify the degenerate
     case (merge of one delta equals one-pass — merge_consistent TRUE)
-    instead of raising, per the r8 advice: a valid single-batch answer
-    exists, and the batch twin a22 would succeed on the same corpus."""
+    instead of raising: a valid single-batch answer exists, and the batch
+    twin a22 would succeed on the same corpus."""
     import pandas as pd
 
     from iot_big_data_engineering_spark.sources.tables import load_table
@@ -865,6 +865,29 @@ def test_scratch_trees_removed_on_every_exit(spark, tmp_path, monkeypatch):
     assert list(scratch.iterdir()) == []
 
 
+def test_state_replays_add_no_schema_memo_entry(spark):
+    """st8, st10 and st11 stream key slices of the events frame from a
+    fresh scratch directory on every run. Reading them with the frame's
+    own schema leaves the process-wide schema memo as it was: an entry
+    per run would outlive its deleted directory."""
+    from iot_big_data_engineering_spark.sources import tables
+    from iot_big_data_engineering_spark.streaming.pipeline import (
+        st8_streaming_incremental_rollup,
+        st10_streaming_histogram_rollup,
+        st11_streaming_cms_maintenance,
+    )
+
+    tables.load_table(spark, SF_SMOKE, "events")  # the corpus's own entry
+    before = set(tables._SCHEMA_MEMO)
+    for query in (
+        st8_streaming_incremental_rollup,
+        st10_streaming_histogram_rollup,
+        st11_streaming_cms_maintenance,
+    ):
+        assert query(spark, SF_SMOKE).count() > 0, query.__name__
+        assert set(tables._SCHEMA_MEMO) == before, query.__name__
+
+
 def test_streaming_plumbing_lives_only_in_its_helpers():
     """The availableNow run, the scratch tree, the memory sink and the
     epoch-keyed overwrite each have one helper; a copy of any of them
@@ -873,7 +896,11 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
     neither set an overwrite mode nor clear epochs by hand. Threads live
     only in ``run_microbatch_pipeline``'s sink fan-out, and every task it
     submits goes through ``inheritable_thread_target``: a pool thread
-    without the stream's local properties runs outside its job group."""
+    without the stream's local properties runs outside its job group. A
+    foreachBatch sink is started only by ``run_microbatch_pipeline``, the
+    state replay ``replay_states`` and st10's kill/restart run, and a
+    stream is read only by ``events_file_stream``, the replay source
+    ``slice_stream`` and the generator's rate source."""
     import ast
     import re
     from pathlib import Path
@@ -893,12 +920,14 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
     epoch_dir_owners = []
     write_epoch_defs = []
     thread_owners = []
+    stream_owners = {"foreachBatch": [], "readStream": []}
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         src = path.read_text()
+        tree = ast.parse(src)
         funcs = [
             n
-            for n in ast.walk(ast.parse(src))
+            for n in ast.walk(tree)
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
         ]
 
@@ -910,6 +939,9 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
             inside = enclosing(lineno)
             return inside[-1].name if inside else None
 
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in stream_owners:
+                stream_owners[node.attr].append((rel, owner(node.lineno)))
         for lineno, line in enumerate(src.splitlines(), 1):
             for pattern in homes:
                 if re.search(pattern, line):
@@ -950,3 +982,13 @@ def test_streaming_plumbing_lives_only_in_its_helpers():
     assert thread_owners == [
         ("streaming/pipeline.py", ["run_microbatch_pipeline", "process_batch"])
     ], thread_owners
+    assert sorted(stream_owners["foreachBatch"]) == [
+        ("streaming/pipeline.py", "replay_states"),
+        ("streaming/pipeline.py", "run_microbatch_pipeline"),
+        ("streaming/pipeline.py", "st10_streaming_histogram_rollup"),
+    ], stream_owners["foreachBatch"]
+    assert sorted(stream_owners["readStream"]) == [
+        ("sources/generator.py", "rate_sensor_stream"),
+        ("streaming/pipeline.py", "events_file_stream"),
+        ("streaming/pipeline.py", "slice_stream"),
+    ], stream_owners["readStream"]
