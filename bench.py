@@ -45,16 +45,16 @@ HEADLINE = [
     "adv2_asof_join",
     "adv6_percentiles",
     "mm2_media_type_stats",
-    # round 2 additions: deepest star fan-in, profit rollup, left-join
-    # histogram, dedup clustering, tf-idf, one-pass profile
+    # deepest star fan-in, profit rollup, left-join histogram, dedup
+    # clustering, tf-idf, one-pass profile
     "j8_market_share",
     "j9_profit_by_nation",
     "j13b_order_count_distribution",
     "d7_dedup_clusters",
     "t6_tfidf_top_terms",
     "t7_documents_profile",
-    # round 3 additions: bucketed range join, payload dedup, prefix-filter
-    # exact-Jaccard join, grouping sets
+    # bucketed range join, payload dedup, prefix-filter exact-Jaccard
+    # join, grouping sets
     "adv11_range_join",
     "mm5_payload_dedup",
     # d8_jaccard_join_prefix is not registered (redundant twin); d8b
@@ -65,8 +65,8 @@ HEADLINE = [
     "dp1_corpus_clean",
     "s4_label_centroids",
     "mm6_shard_plan",
-    # round 4 additions: full-corpus dedup clustering, LSH ANN + SimHash
-    # certificates, BPE token stats, decile windows
+    # full-corpus dedup clustering, LSH ANN + SimHash certificates, BPE
+    # token stats, decile windows
     "d7_dedup_clusters_full",
     "s3_knn_lsh",
     "d5_simhash_neardup",
@@ -100,25 +100,23 @@ HEADLINE = [
     "s6_knn_ivf_sq8",
     "adv12_robust_outliers",
     "t13_vocab_growth",
-    # round 5 additions: multi-period backfill through the state table,
-    # histogram-quantile merge, incremental delta dedup, semi-join
-    # pre-filter
+    # multi-period backfill through the state table, histogram-quantile
+    # merge, incremental delta dedup, semi-join pre-filter
     "a17b_rollup_backfill",
     "a21_histogram_quantile_rollup",
     "d10_dedup_delta",
     "dq4_semijoin_prefilter",
     "dp8_document_chunking",
-    # round 6 additions: state compaction proof, leakage-safe split
+    # state compaction proof, leakage-safe split
     "a17c_rollup_compaction",
     "dp9_leakage_safe_split",
-    # round 7 additions: filtered ANN, incremental IVF delta-add,
-    # staged event funnel
+    # filtered ANN, incremental IVF delta-add, staged event funnel
     "s7_knn_filtered",
     "s8_knn_ivf_delta_add",
     "w7_event_funnel",
     "adv13_salted_join",
-    # round 8 additions: cross-document boilerplate removal, Zipf
-    # profile, count-min heavy hitters, product-quantization ANN
+    # cross-document boilerplate removal, Zipf profile, count-min heavy
+    # hitters, product-quantization ANN
     "dp10_boilerplate_removal",
     "t14_zipf_profile",
     "a22_cms_heavy_hitters",
@@ -133,15 +131,15 @@ HEADLINE = [
     "a23_incremental_join_view",
     "d11_neardup_keep_best",
     "t15_vocab_coverage",
-    # round 9 additions: bigram-LM quality screen, script-mix profile,
-    # cross-snapshot drift audit, exact MIPS baseline
+    # bigram-LM quality screen, script-mix profile, cross-snapshot drift
+    # audit, exact MIPS baseline
     "dp15_bigram_lm_screen",
     "t16_script_mix",
     "dq6_snapshot_drift",
     "s12_mips_topk",
-    # round 9, second batch: PMI collocations, BM25 retrieval, frequent
-    # pairs, Markov transitions, dataset card, DSIR importance weights,
-    # duplicated-span audit, fixed-point PageRank
+    # PMI collocations, BM25 retrieval, frequent pairs, Markov
+    # transitions, dataset card, DSIR importance weights, duplicated-span
+    # audit, fixed-point PageRank
     "t17_collocations_pmi",
     "t18_bm25_topk",
     "j23_frequent_pairs",
@@ -151,38 +149,33 @@ HEADLINE = [
     "d12_duplicate_span_ratio",
     "adv15_pagerank",
     "dq7_expectation_audit",
-    # round 10 additions: the log-space scoring twins (overflow-free
-    # production forms of t17/j23) and the range-search serving primitive
+    # the log-space scoring twins (overflow-free production forms of
+    # t17/j23) and the range-search serving primitive
     "t17b_collocations_pmi_log",
     "j23b_frequent_pairs_log",
     "s13_range_search",
-    # round 10, post-pin batch (registered after the idle r10 pin was
-    # written; they enter the pinned record with r11's pin — VERDICT r10
-    # Next #6): the embedding-column audit and the Prometheus-surface
-    # metrics export
+    # the embedding-column audit and the Prometheus-surface metrics
+    # export
     "dq8_embedding_audit",
     "m18_metrics_export",
-    # round 11 additions: the production-scale PageRank twin and the
-    # IVF cell-pruned range search (exact bound, s13's serving path)
+    # the production-scale PageRank twin and the IVF cell-pruned range
+    # search (exact bound, s13's serving path)
     "adv15b_pagerank_scale9",
     "s13b_range_search_ivf",
-    # round 12 addition: hybrid BM25+cosine RRF fusion (st15, the other
-    # r12 registration, is excluded with the rest of the st* flows —
-    # its wall is micro-batch commit latency, not plan cost)
+    # hybrid BM25+cosine RRF fusion (st15 is excluded with the rest of
+    # the st* flows: its wall is micro-batch commit latency, not plan
+    # cost)
     "s14_hybrid_rrf",
-    # round 13 additions: the exact-bound IVF twin of s14 and the MMR
-    # diversified rerank over the bounded candidate list
+    # the exact-bound IVF twin of s14 and the MMR diversified rerank over
+    # the bounded candidate list
     "s16_hybrid_rrf_ivf",
     "s15_mmr_rerank",
-    # round 14 addition: one distributed BPE merge step (vocab-scale
-    # pair aggregation)
+    # one distributed BPE merge step (vocab-scale pair aggregation)
     "t19_bpe_merge_step",
-    # round 16 additions: the map-only PII rewrite and the cross-source
-    # duplicate matrix
+    # the map-only PII rewrite and the cross-source duplicate matrix
     "dp18_pii_redaction",
     "u5_source_overlap_matrix",
-    # round 17 additions: the per-type PSI drift audit and the A-ES
-    # weighted reservoir sample
+    # the per-type PSI drift audit and the A-ES weighted reservoir sample
     "dq9_psi_drift",
     "dp19_weighted_reservoir",
     # s9 (index persist/reload) is registered + oracled but, like the

@@ -13,11 +13,13 @@ identical input double, so the result is bit-identical by construction.
 For negative inputs this is half-up toward +∞, not half-away-from-zero —
 which is exactly why any quantity that CAN go negative (the t17b/j23b
 log-space sort keys: PMI/log-lift < 0 is routine) must round through
-``fround`` on the Spark side AND ``sql_fround`` in its oracle, never
-DuckDB's native ``round`` (half away from zero): on a negative .5
-boundary the two conventions land one quantum apart and can reorder
-near-ties in a rank-compared surface (ADVICE r10). With both engines on
-the same floor expression the convention difference is unobservable.
+``fround`` on the Spark side, never Spark's or DuckDB's native ``round``
+(half away from zero): on a negative .5 boundary the two conventions
+land one quantum apart and can reorder near-ties in a rank-compared
+surface. Oracle SQL writes plain ``round(x, n)``: ``registry.register``
+rewrites every such call into the same floor expression
+(``registry._rewrite_rounds``), so with both engines on one formula the
+convention difference is unobservable.
 
 The second determinism hazard — double summation ORDER across partitions —
 is handled at the query level: money sums go through exact DECIMAL
@@ -34,8 +36,3 @@ def fround(col: Column | str, n: int = 6) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     p = float(10**n)
     return F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)
-
-
-def sql_fround(expr: str, n: int = 6) -> str:
-    p = float(10**n)
-    return f"(floor(({expr}) * {p} + 0.5) / {p})"

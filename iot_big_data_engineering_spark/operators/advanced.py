@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..caching import track
 from ..functions import hashing, vectors as V
-from ..functions.rounding import fround, sql_fround
+from ..functions.rounding import fround
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -2140,7 +2140,7 @@ edges AS (
   SELECT event_type,
          list_transform(
            quantile_cont(value, {_DQ9_EDGE_LIST}),
-           x -> {sql_fround('x')}
+           x -> round(x, 6)
          ) AS eds
   FROM e WHERE side = 0 GROUP BY event_type
 ),
@@ -2182,7 +2182,7 @@ terms AS (
 ),
 psi AS (
   SELECT event_type,
-         {sql_fround("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY bin)), (acc, x) -> acc + x)")}
+         round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY bin)), (acc, x) -> acc + x), 6)
            AS psi
   FROM terms GROUP BY event_type
 )
@@ -2384,20 +2384,17 @@ terms AS (
   FROM p
 ),
 total AS (
-  SELECT {sql_fround(
-      "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-      " list(js_term ORDER BY event_type)), (acc, x) -> acc + x)"
-  )} AS js_total
+  SELECT round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(js_term ORDER BY event_type)), (acc, x) -> acc + x), 6) AS js_total
   FROM terms
 )
 SELECT tm.event_type, tm.cnt_a, tm.cnt_b,
-       {sql_fround("tm.p_a")} AS p_a,
-       {sql_fround("tm.p_b")} AS p_b,
-       {sql_fround("tm.p_b - tm.p_a")} AS share_delta,
-       {sql_fround("tm.js_term")} AS js_term,
+       round(tm.p_a, 6) AS p_a,
+       round(tm.p_b, 6) AS p_b,
+       round(tm.p_b - tm.p_a, 6) AS share_delta,
+       round(tm.js_term, 6) AS js_term,
        tt.js_total,
-       CASE WHEN abs({sql_fround("tm.p_b - tm.p_a")}) >= 0.05 THEN 'alert'
-            WHEN abs({sql_fround("tm.p_b - tm.p_a")}) >= 0.01 THEN 'watch'
+       CASE WHEN abs(round(tm.p_b - tm.p_a, 6)) >= 0.05 THEN 'alert'
+            WHEN abs(round(tm.p_b - tm.p_a, 6)) >= 0.01 THEN 'watch'
             ELSE 'stable' END AS type_verdict,
        CASE WHEN tt.js_total >= 0.05 THEN 'alert'
             WHEN tt.js_total >= 0.01 THEN 'watch'
@@ -2604,13 +2601,13 @@ best AS (
 )
 SELECT event_type, n_days,
        days[k] AS cp_day,
-       {sql_fround("abs(s)")} AS cusum_max,
-       {sql_fround("mb")} AS mean_before,
-       {sql_fround("ma")} AS mean_after,
-       {sql_fround("ma - mb")} AS mean_shift,
-       {sql_fround("rel")} AS rel_shift,
-       CASE WHEN {sql_fround("rel")} >= {_DQ11_ALERT} THEN 'alert'
-            WHEN {sql_fround("rel")} >= {_DQ11_WATCH} THEN 'watch'
+       round(abs(s), 6) AS cusum_max,
+       round(mb, 6) AS mean_before,
+       round(ma, 6) AS mean_after,
+       round(ma - mb, 6) AS mean_shift,
+       round(rel, 6) AS rel_shift,
+       CASE WHEN round(rel, 6) >= {_DQ11_ALERT} THEN 'alert'
+            WHEN round(rel, 6) >= {_DQ11_WATCH} THEN 'watch'
             ELSE 'stable' END AS cp_verdict
 FROM best WHERE rn = 1
 ORDER BY event_type
@@ -2793,24 +2790,15 @@ terms AS (
 ),
 stats AS (
   SELECT
-    {sql_fround(
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        " list(abs(dev) ORDER BY digit)), (acc, x) -> acc + x) / 9.0"
-    )} AS mad,
-    {sql_fround(
-        "0.5 * list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        " list(abs(dev) ORDER BY digit)), (acc, x) -> acc + x)"
-    )} AS tvd,
-    {sql_fround(
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        " list(chi_term ORDER BY digit)), (acc, x) -> acc + x)"
-    )} AS chi2
+    round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(abs(dev) ORDER BY digit)), (acc, x) -> acc + x) / 9.0, 6) AS mad,
+    round(0.5 * list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(abs(dev) ORDER BY digit)), (acc, x) -> acc + x), 6) AS tvd,
+    round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(chi_term ORDER BY digit)), (acc, x) -> acc + x), 6) AS chi2
   FROM terms
 )
 SELECT t.digit, t.n_obs,
-       {sql_fround("t.p_obs")} AS p_obs,
-       {sql_fround("t.p_exp")} AS p_exp,
-       {sql_fround("t.dev")} AS dev,
+       round(t.p_obs, 6) AS p_obs,
+       round(t.p_exp, 6) AS p_exp,
+       round(t.dev, 6) AS dev,
        s.mad, s.tvd, s.chi2,
        CASE WHEN s.mad < {_DQ12_CLOSE} THEN 'close'
             WHEN s.mad < {_DQ12_OK} THEN 'acceptable'

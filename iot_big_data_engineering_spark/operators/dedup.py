@@ -97,9 +97,44 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _D3_CAP = 1000
-_D8_TAU = 0.5  # shared by d7/d7_full/d8 (defined here: oracle f-strings
-# above the d8 section interpolate it at module-import time)
+_D8_TAU = 0.5  # the near-dup Jaccard threshold of d7/d7_full/d8b/d11 and
+# textstats' dp2/dp7/dp9 (defined here: oracle f-strings above the d8
+# section interpolate it at module-import time)
 _SH = X.sql_shingles_from_tokens("toks", 3)
+# The oracle twin of connected_components(near_dup_edges(documents)): d8's
+# exact co-occurrence edge set at _D8_TAU, closed transitively by a
+# recursive CTE (viable because the near-dup graph is tiny relative to the
+# corpus at any SF). A CTE list for a WITH RECURSIVE head; it ends in
+# comp(doc_id, cluster_id = min reachable doc_id) over clustered docs only.
+_NEAR_DUP_COMP_SQL = f"""tok AS (
+  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
+),
+shs AS (SELECT doc_id, {_SH} AS sh FROM tok),
+szs AS (SELECT doc_id, sh, len(sh) AS sz FROM shs WHERE len(sh) > 0),
+exs AS (SELECT doc_id, sz, unnest(sh) AS s FROM szs),
+co AS (
+  SELECT a.doc_id AS src, b.doc_id AS dst,
+         a.sz AS sz_a, b.sz AS sz_b, count(*) AS o
+  FROM exs a JOIN exs b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2, 3, 4
+),
+edges AS (
+  SELECT src, dst FROM co
+  WHERE CAST(o AS DOUBLE) / (sz_a + sz_b - o) >= {_D8_TAU}
+),
+sym AS (SELECT src AS a, dst AS b FROM edges
+        UNION SELECT dst, src FROM edges),
+reach AS (
+  SELECT a AS node, b AS peer FROM sym
+  UNION
+  SELECT r.node, s.b FROM reach r JOIN sym s ON r.peer = s.a
+),
+comp AS (
+  SELECT node AS doc_id, least(node, min(peer)) AS cluster_id
+  FROM reach GROUP BY node
+)"""
+
+
 @register(
     "d3_jaccard_pairs",
     oracle=f"""
@@ -762,7 +797,6 @@ def connected_components(
     dst: str = "dst",
     max_iters: int = 50,
     driver_cap: int = _CC_DRIVER_EDGE_CAP,
-    pre_materialized: bool = False,
 ) -> DataFrame:
     """(src, dst) undirected edges → (node, component) with component =
     min node id reachable. Converges in <= diameter iterations; each
@@ -778,31 +812,19 @@ def connected_components(
     Small graphs finish on the driver: every distributed round is a
     join + groupBy + materialize + count — ~4 scheduled jobs of pure
     round-trip latency when the edge set is tiny (measured 1.4 s/round
-    on a 256-edge graph at sf0.1, the bulk of dp2's r5 drift). When the
-    materialized edge list is under _CC_DRIVER_EDGE_CAP it is collected
-    and solved with one union-find pass — the same size regime in which
-    Spark itself would broadcast a join side, and the count is free
-    because the checkpoint has already materialized the rows. Near-dup
-    edge graphs at 100 TB exceed the cap and take the distributed path;
-    the semantics (component = min reachable node id) are identical.
+    on a 256-edge graph at sf0.1). When the edge list is under
+    _CC_DRIVER_EDGE_CAP it is collected and solved with one union-find
+    pass — the same size regime in which Spark itself would broadcast a
+    join side. Near-dup edge graphs at 100 TB exceed the cap and take
+    the distributed path; the semantics (component = min reachable node
+    id) are identical.
 
-    ``pre_materialized``: caller contract — pass True ONLY when the edge
-    frame is already checkpointed/cached (dp9 localCheckpoints it for its
-    own certificate join). The flag skips this function's defensive
-    localCheckpoint, so an UNMATERIALIZED expensive edge plan passed with
-    True silently recomputes up to 3× (the count gate plus both unionAll
-    branches) — exactly the duplication the checkpoint exists to prevent
-    (r17 ADVICE #1)."""
-    # materialize the edge list once — the unionAll below references it
-    # twice, and callers hand us arbitrarily expensive edge plans (d7's is
-    # a similarity join); without this the edge computation runs 2×.
-    # ``pre_materialized=True`` skips the checkpoint when the CALLER
-    # already materialized the edge frame (dp9 localCheckpoints it for its
-    # own certificate join) — the former unconditional checkpoint copied
-    # those rows a second time for nothing (r17 job-count audit).
+    The input is read up to three times: the size count, then either
+    the driver collect or both branches of the symmetrizing unionAll.
+    It is not materialized here — callers pass ``near_dup_edges``'
+    output, which is checkpointed once where it is built, so an
+    expensive edge plan (a similarity join) never runs more than once."""
     edges = edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
-    if not pre_materialized:
-        edges = edges.localCheckpoint()
     if edges.count() <= driver_cap:
         return _cc_driver_finish(edges, src, dst)
     sym = (
@@ -860,7 +882,7 @@ edges AS (
   FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
   WHERE len(a.sh) > 0 AND len(b.sh) > 0
     AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5
+        / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= {_D8_TAU}
 ),
 sym AS (SELECT src AS a, b FROM (SELECT src, dst AS b FROM edges) t
         UNION SELECT dst, src FROM edges),
@@ -878,15 +900,12 @@ FROM reach GROUP BY node
 )
 def d7_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge generation reuses the d8 prefix-filtered similarity join
-    # (lang-blocked, same tau=0.5 semantics as the quadratic form the
-    # oracle computes) — near-linear instead of all-pairs-within-lang
+    # (lang-blocked, same tau semantics as the quadratic form the oracle
+    # computes) — near-linear instead of all-pairs-within-lang
     d = _docs_par(spark, sf_dir).filter(F.col("doc_id") < _D3_CAP)
-    edges = prefix_jaccard_pairs(
-        d, 0.5, block_col="lang", carry_arrays=True
-    ).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    comp = connected_components(
+        near_dup_edges(d, block_col="lang", carry_arrays=True)
     )
-    comp = connected_components(edges)
     return comp.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),
@@ -906,41 +925,14 @@ def d7_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "d7_dedup_clusters_full",
     oracle=f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
-),
-sh AS (SELECT doc_id, {_SH} AS sh FROM tok),
-sz AS (SELECT doc_id, sh, len(sh) AS sz FROM sh WHERE len(sh) > 0),
-ex AS (SELECT doc_id, sz, unnest(sh) AS s FROM sz),
-co AS (
-  SELECT a.doc_id AS src, b.doc_id AS dst,
-         a.sz AS sz_a, b.sz AS sz_b, count(*) AS o
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-),
-edges AS (
-  SELECT src, dst FROM co
-  WHERE CAST(o AS DOUBLE) / (sz_a + sz_b - o) >= {_D8_TAU}
-),
-sym AS (SELECT src AS a, dst AS b FROM edges
-        UNION SELECT dst, src FROM edges),
-reach AS (
-  SELECT a AS node, b AS peer FROM sym
-  UNION
-  SELECT r.node, s.b FROM reach r JOIN sym s ON r.peer = s.a
-)
-SELECT node AS doc_id,
-       least(node, min(peer)) AS cluster_id,
-       node = least(node, min(peer)) AS is_canonical
-FROM reach GROUP BY node
+WITH RECURSIVE {_NEAR_DUP_COMP_SQL}
+SELECT doc_id, cluster_id, doc_id = cluster_id AS is_canonical
+FROM comp
 """,
     doc="D7-full: near-dup clusters over the FULL corpus (d8 edges → CC)",
 )
 def d7_dedup_clusters_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = prefix_jaccard_pairs(_docs_par(spark, sf_dir), _D8_TAU).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    comp = connected_components(edges)
+    comp = connected_components(near_dup_edges(_docs_par(spark, sf_dir)))
     return comp.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),
@@ -1108,6 +1100,25 @@ def prefix_jaccard_pairs(
         verified.withColumn("jc", jc)
         .filter(F.col("jc") >= F.lit(tau))
         .select("doc_a", "doc_b", "jc")
+    )
+
+
+def near_dup_edges(
+    docs: DataFrame, block_col: str | None = None, carry_arrays: bool = False
+) -> DataFrame:
+    """The near-duplicate graph of a (doc_id, text[, block_col]) frame:
+    (src, dst) pairs with word-trigram Jaccard >= _D8_TAU, from
+    prefix_jaccard_pairs (``block_col`` and ``carry_arrays`` pass
+    through). The edge list is localCheckpointed here, once, because
+    every consumer reads it more than once — connected_components up to
+    three times, dp9 again for its certificate join — and each read of
+    an unmaterialized edge plan would re-run the similarity join."""
+    return (
+        prefix_jaccard_pairs(
+            docs, _D8_TAU, block_col=block_col, carry_arrays=carry_arrays
+        )
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .localCheckpoint()
     )
 
 
@@ -1463,33 +1474,7 @@ def dc1_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "d11_neardup_keep_best",
     oracle=f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
-),
-shs AS (SELECT doc_id, {X.sql_shingles_from_tokens("toks", 3)} AS sh FROM tok),
-szs AS (SELECT doc_id, sh, len(sh) AS sz FROM shs WHERE len(sh) > 0),
-exs AS (SELECT doc_id, sz, unnest(sh) AS s FROM szs),
-co AS (
-  SELECT a.doc_id AS src, b.doc_id AS dst,
-         a.sz AS sz_a, b.sz AS sz_b, count(*) AS o
-  FROM exs a JOIN exs b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-),
-edges AS (
-  SELECT src, dst FROM co
-  WHERE CAST(o AS DOUBLE) / (sz_a + sz_b - o) >= 0.5
-),
-sym AS (SELECT src AS a, dst AS b FROM edges
-        UNION SELECT dst, src FROM edges),
-reach AS (
-  SELECT a AS node, b AS peer FROM sym
-  UNION
-  SELECT r.node, s.b FROM reach r JOIN sym s ON r.peer = s.a
-),
-comp AS (
-  SELECT node AS doc_id, least(node, min(peer)) AS cluster_id
-  FROM reach GROUP BY node
-),
+WITH RECURSIVE {_NEAR_DUP_COMP_SQL},
 members AS (
   SELECT c.cluster_id, d.doc_id,
          round({X.sql_quality_score("text")}, {_R}) AS q
@@ -1520,9 +1505,7 @@ def d11_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    edges = prefix_jaccard_pairs(_docs_par(spark, sf_dir), 0.5).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
+    edges = near_dup_edges(_docs_par(spark, sf_dir))
     comp = connected_components(edges).select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),

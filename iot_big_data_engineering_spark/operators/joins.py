@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..functions.rounding import fround, sql_fround
+from ..functions.rounding import fround
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -2444,10 +2444,7 @@ pairs AS (
 ),
 scored AS (
   SELECT p1, p2, pair_n, c1, c2,
-         {sql_fround(
-             "((ln(CAST(pair_n AS DOUBLE)) + ln(CAST(n.n AS DOUBLE)))"
-             " - ln(CAST(c1 AS DOUBLE))) - ln(CAST(c2 AS DOUBLE))", 6
-         )} AS k
+         round(((ln(CAST(pair_n AS DOUBLE)) + ln(CAST(n.n AS DOUBLE))) - ln(CAST(c1 AS DOUBLE))) - ln(CAST(c2 AS DOUBLE)), 6) AS k
   FROM pairs CROSS JOIN n
   WHERE pair_n >= {_J23_PAIR_SUPPORT}
 ),

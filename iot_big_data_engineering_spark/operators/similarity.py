@@ -2221,10 +2221,10 @@ lexr AS (
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 qv AS (SELECT v AS qv FROM e WHERE vec_id = {_S14_QVEC}),
 semsc AS (
-  -- round() here is rewritten to the floor half-up formula (== sql_fround)
-  -- by registry._rewrite_rounds at registration, so the negative-cosine
-  -- half-boundary class (ADVICE r12) is excluded by construction: DuckDB's
-  -- native half-away-from-zero round never runs on this oracle.
+  -- round() here is rewritten to the floor half-up formula (fround on
+  -- the Spark side) by registry._rewrite_rounds at registration, so the
+  -- negative-cosine half-boundary class is excluded by construction: the
+  -- native DuckDB half-away-from-zero round never runs on this oracle.
   SELECT e.vec_id AS doc_id,
          round({V.sql_cosine("qv.qv", "e.v")}, {_R}) AS cosine
   FROM e CROSS JOIN qv
@@ -2550,10 +2550,10 @@ def s16_hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines (1−0.7 in double is 0.30000000000000004 — never computed);
 # the per-step argmax compares the same unrounded double expression
 # with a doc_id tiebreak; scores can be negative (rel ∈ [−1,1]), so the
-# output rounds through sql_fround in the oracle, never DuckDB's
-# half-away-from-zero round (the t17b discipline). The oracle unrolls
-# the k greedy steps as generated CTEs — no recursion, no engine
-# iteration semantics to match.
+# output rounds through the oracle's round(), which registration rewrites
+# into fround's floor formula, never DuckDB's half-away-from-zero round
+# (the t17b discipline). The oracle unrolls the k greedy steps as
+# generated CTEs — no recursion, no engine iteration semantics to match.
 # ---------------------------------------------------------------------------
 _S15_K = 10      # picks
 _S15_LAM = 0.7   # relevance weight (λ); diversity weight is the
@@ -2561,10 +2561,8 @@ _S15_OML = 0.3   # SEPARATE literal 0.3, never 1−λ (double 1−0.7 ≠ 0.3)
 
 
 def _s15_oracle() -> str:
-    from ..functions.rounding import sql_fround
-
-    cand_cos = sql_fround(V.sql_cosine("qv.qv", "e.v"), _R)
-    pair_cos = sql_fround(V.sql_cosine("a.v", "b.v"), _R)
+    cand_cos = f"round({V.sql_cosine('qv.qv', 'e.v')}, {_R})"
+    pair_cos = f"round({V.sql_cosine('a.v', 'b.v')}, {_R})"
     steps = []
     finals = []
     for i in range(1, _S15_K + 1):
@@ -2587,7 +2585,7 @@ def _s15_oracle() -> str:
             )
         finals.append(
             f"SELECT CAST({i} AS INTEGER) AS mmr_rank, doc_id,"
-            f" rel AS relevance, {sql_fround('score', _R)} AS mmr_score"
+            f" rel AS relevance, round(score, {_R}) AS mmr_score"
             f" FROM s{i}"
         )
     return (

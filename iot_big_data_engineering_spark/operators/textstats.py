@@ -17,9 +17,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..caching import track
 from ..functions import hashing
 from ..functions import text as X
-from ..functions.rounding import fround, sql_fround
+from ..functions.rounding import fround
 from ..registry import register
 from ..sources.tables import load_table
+from .dedup import (
+    _NEAR_DUP_COMP_SQL,
+    _docs_par,
+    connected_components,
+    near_dup_edges,
+)
 
 _R = 6
 
@@ -402,6 +408,37 @@ def t8_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _DP1_MIN_TOKENS = 10
 _DP1_MIN_QUALITY = 0.5
+# the oracle twin of gate_and_dedup over a `scored` CTE (doc_id, text,
+# token_count, q, ...): a CTE list that ends in ranked(rn, dup_count);
+# the survivors are its rn = 1 rows
+_DP1_GATE_SQL = f"""gated AS (
+  SELECT * FROM scored
+  WHERE token_count >= {_DP1_MIN_TOKENS} AND q >= {_DP1_MIN_QUALITY}
+),
+ranked AS (
+  SELECT *,
+         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn,
+         CAST(count(*) OVER (PARTITION BY md5(text)) AS BIGINT) AS dup_count
+  FROM gated
+)"""
+
+
+def gate_and_dedup(scored: DataFrame) -> DataFrame:
+    """dp1's cleaning gate and exact dedup over a scored (doc_id, text,
+    token_count, q, ...) frame: keeps docs with token_count >=
+    _DP1_MIN_TOKENS and q >= _DP1_MIN_QUALITY, then the lowest doc_id
+    per md5(text), with dup_count = the gated docs sharing that text."""
+    from pyspark.sql import Window
+
+    gated = scored.filter(
+        (F.col("token_count") >= _DP1_MIN_TOKENS)
+        & (F.col("q") >= _DP1_MIN_QUALITY)
+    ).withColumn("text_md5", F.md5("text"))
+    w = Window.partitionBy("text_md5")
+    ranked = gated.withColumn(
+        "rn", F.row_number().over(w.orderBy("doc_id"))
+    ).withColumn("dup_count", F.count("*").over(w))
+    return ranked.filter(F.col("rn") == 1)
 
 
 @register(
@@ -416,16 +453,7 @@ WITH scored AS (
               THEN 'en_like' ELSE 'unknown' END AS predicted_lang
   FROM documents
 ),
-gated AS (
-  SELECT * FROM scored
-  WHERE token_count >= {_DP1_MIN_TOKENS} AND q >= {_DP1_MIN_QUALITY}
-),
-ranked AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn,
-         CAST(count(*) OVER (PARTITION BY md5(text)) AS BIGINT) AS dup_count
-  FROM gated
-)
+{_DP1_GATE_SQL}
 SELECT doc_id, lang, predicted_lang, token_count,
        round(q, {_R}) AS quality_score, dup_count
 FROM ranked WHERE rn = 1
@@ -433,8 +461,6 @@ FROM ranked WHERE rn = 1
     doc="DP1: quality + lang-ID + length gate + exact dedup, one plan",
 )
 def dp1_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     ratio = X.stopword_count("text").cast("double") / X.token_count("text")
     scored = d.select(
@@ -447,15 +473,7 @@ def dp1_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
             "predicted_lang"
         ),
     )
-    gated = scored.filter(
-        (F.col("token_count") >= _DP1_MIN_TOKENS)
-        & (F.col("q") >= _DP1_MIN_QUALITY)
-    ).withColumn("text_md5", F.md5("text"))
-    w = Window.partitionBy("text_md5")
-    ranked = gated.withColumn(
-        "rn", F.row_number().over(w.orderBy("doc_id"))
-    ).withColumn("dup_count", F.count("*").over(w))
-    return ranked.filter(F.col("rn") == 1).select(
+    return gate_and_dedup(scored).select(
         "doc_id",
         "lang",
         "predicted_lang",
@@ -549,36 +567,9 @@ def t9_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: stage 1 is d8+CC (near-linear, bucketed); stages 2-3 are one
 # scan + one md5 window — nothing quadratic anywhere.
 # ---------------------------------------------------------------------------
-@register(
-    "dp2_corpus_clean_neardup",
-    oracle=f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
-),
-shs AS (SELECT doc_id, {X.sql_shingles_from_tokens("toks", 3)} AS sh FROM tok),
-szs AS (SELECT doc_id, sh, len(sh) AS sz FROM shs WHERE len(sh) > 0),
-exs AS (SELECT doc_id, sz, unnest(sh) AS s FROM szs),
-co AS (
-  SELECT a.doc_id AS src, b.doc_id AS dst,
-         a.sz AS sz_a, b.sz AS sz_b, count(*) AS o
-  FROM exs a JOIN exs b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-),
-edges AS (
-  SELECT src, dst FROM co
-  WHERE CAST(o AS DOUBLE) / (sz_a + sz_b - o) >= 0.5
-),
-sym AS (SELECT src AS a, dst AS b FROM edges
-        UNION SELECT dst, src FROM edges),
-reach AS (
-  SELECT a AS node, b AS peer FROM sym
-  UNION
-  SELECT r.node, s.b FROM reach r JOIN sym s ON r.peer = s.a
-),
-comp AS (
-  SELECT node AS doc_id, least(node, min(peer)) AS cluster_id
-  FROM reach GROUP BY node
-),
+# dp2's cleaning chain in oracle SQL (dp7 packs its survivors): a WITH
+# head whose CTE list ends in ranked(rn, dup_count, was_clustered)
+_DP2_CLEAN_SQL = f"""WITH RECURSIVE {_NEAR_DUP_COMP_SQL},
 survivors AS (
   SELECT d.*, c.doc_id IS NOT NULL AS was_clustered
   FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
@@ -590,16 +581,13 @@ scored AS (
          {X.sql_quality_score("text")} AS q
   FROM survivors
 ),
-gated AS (
-  SELECT * FROM scored
-  WHERE token_count >= {_DP1_MIN_TOKENS} AND q >= {_DP1_MIN_QUALITY}
-),
-ranked AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn,
-         CAST(count(*) OVER (PARTITION BY md5(text)) AS BIGINT) AS dup_count
-  FROM gated
-)
+{_DP1_GATE_SQL}"""
+
+
+@register(
+    "dp2_corpus_clean_neardup",
+    oracle=f"""
+{_DP2_CLEAN_SQL}
 SELECT doc_id, lang, token_count,
        round(q, {_R}) AS quality_score, dup_count, was_clustered
 FROM ranked WHERE rn = 1
@@ -607,14 +595,8 @@ FROM ranked WHERE rn = 1
     doc="DP2: near-dup canonical filter + quality gates + exact dedup",
 )
 def dp2_corpus_clean_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .dedup import _docs_par, connected_components, prefix_jaccard_pairs
-
     d = load_table(spark, sf_dir, "documents")
-    edges = prefix_jaccard_pairs(_docs_par(spark, sf_dir), 0.5).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
+    edges = near_dup_edges(_docs_par(spark, sf_dir))
     comp = connected_components(edges).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
@@ -634,15 +616,7 @@ def dp2_corpus_clean_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         X.token_count("text").alias("token_count"),
         X.quality_score("text").alias("q"),
     )
-    gated = scored.filter(
-        (F.col("token_count") >= _DP1_MIN_TOKENS)
-        & (F.col("q") >= _DP1_MIN_QUALITY)
-    ).withColumn("text_md5", F.md5("text"))
-    w = Window.partitionBy("text_md5")
-    ranked = gated.withColumn(
-        "rn", F.row_number().over(w.orderBy("doc_id"))
-    ).withColumn("dup_count", F.count("*").over(w))
-    return ranked.filter(F.col("rn") == 1).select(
+    return gate_and_dedup(scored).select(
         "doc_id",
         "lang",
         "token_count",
@@ -1133,12 +1107,14 @@ def t12_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DP5_SEQ_TOKENS = 2048
 
 
-@register(
-    "dp5_sequence_packing",
-    oracle=f"""
-WITH d AS (
+def _dp5_pack_sql(src: str) -> str:
+    """The oracle twin of pack_sequences' placement and span explode over
+    the (doc_id, lang, text) relation ``src``: a CTE list that ends in
+    x(lang, doc_id, tok, start_tok, first_seq, seq_id), one row per
+    (doc, sequence it touches); _DP5_PACK_AGG_SQL aggregates it."""
+    return f"""d AS (
   SELECT doc_id, lang, {X.sql_bpe_token_count("text")} AS tok
-  FROM documents
+  FROM {src}
   WHERE {X.sql_bpe_token_count("text")} > 0
 ),
 placed AS (
@@ -1157,8 +1133,10 @@ x AS (
   SELECT lang, doc_id, tok, start_tok, first_seq,
          unnest(generate_series(first_seq, last_seq)) AS seq_id
   FROM spans
-)
-SELECT lang, seq_id,
+)"""
+
+
+_DP5_PACK_AGG_SQL = f"""SELECT lang, seq_id,
        count(*) AS n_docs,
        count(CASE WHEN first_seq = seq_id THEN 1 END) AS n_starts,
        min(start_tok) < seq_id * {_DP5_SEQ_TOKENS} AS starts_with_carry,
@@ -1167,18 +1145,20 @@ SELECT lang, seq_id,
          AS filled_tokens
 FROM x
 GROUP BY lang, seq_id
-""",
-    doc="DP5: concat-and-chunk sequence packing plan with straddle accounting",
-)
-def dp5_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+"""
+
+
+def pack_sequences(docs: DataFrame) -> DataFrame:
+    """dp5's concat-and-chunk packing over a (doc_id, lang, text) frame:
+    per lang, docs with BPE tokens concatenate in doc_id order into
+    _DP5_SEQ_TOKENS-token sequences; one row per (lang, seq_id) with
+    n_docs, n_starts, starts_with_carry and filled_tokens."""
     from ..functions.prefix import exclusive_prefix_sum
 
     B = _DP5_SEQ_TOKENS
-    d = (
-        _docs(spark, sf_dir)
-        .select("doc_id", "lang", X.bpe_token_count("text").alias("tok"))
-        .filter(F.col("tok") > 0)  # a 0-token doc occupies no chunk span
-    )
+    d = docs.select(
+        "doc_id", "lang", X.bpe_token_count("text").alias("tok")
+    ).filter(F.col("tok") > 0)  # a 0-token doc occupies no chunk span
     placed = exclusive_prefix_sum(
         d,
         group_col="lang",
@@ -1208,6 +1188,17 @@ def dp5_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("filled_tokens"),
     )
+
+
+@register(
+    "dp5_sequence_packing",
+    oracle=f"""
+WITH {_dp5_pack_sql("documents")}
+{_DP5_PACK_AGG_SQL}""",
+    doc="DP5: concat-and-chunk sequence packing plan with straddle accounting",
+)
+def dp5_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return pack_sequences(_docs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1279,120 +1270,19 @@ def t13_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dp7_training_shards",
     oracle=f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
-),
-shs AS (SELECT doc_id, {X.sql_shingles_from_tokens("toks", 3)} AS sh FROM tok),
-szs AS (SELECT doc_id, sh, len(sh) AS sz FROM shs WHERE len(sh) > 0),
-exs AS (SELECT doc_id, sz, unnest(sh) AS s FROM szs),
-co AS (
-  SELECT a.doc_id AS src, b.doc_id AS dst,
-         a.sz AS sz_a, b.sz AS sz_b, count(*) AS o
-  FROM exs a JOIN exs b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-),
-edges AS (
-  SELECT src, dst FROM co
-  WHERE CAST(o AS DOUBLE) / (sz_a + sz_b - o) >= 0.5
-),
-sym AS (SELECT src AS a, dst AS b FROM edges
-        UNION SELECT dst, src FROM edges),
-reach AS (
-  SELECT a AS node, b AS peer FROM sym
-  UNION
-  SELECT r.node, s.b FROM reach r JOIN sym s ON r.peer = s.a
-),
-comp AS (
-  SELECT node AS doc_id, least(node, min(peer)) AS cluster_id
-  FROM reach GROUP BY node
-),
-survivors AS (
-  SELECT d.* FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-  WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
-),
-scored AS (
-  SELECT doc_id, lang, text,
-         {X.sql_token_count("text")} AS token_count,
-         {X.sql_quality_score("text")} AS q
-  FROM survivors
-),
-gated AS (
-  SELECT * FROM scored
-  WHERE token_count >= {_DP1_MIN_TOKENS} AND q >= {_DP1_MIN_QUALITY}
-),
-kept AS (
-  SELECT doc_id, lang, text FROM (
-    SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM gated
-  ) WHERE rn = 1
-),
-d5 AS (
-  SELECT doc_id, lang, {X.sql_bpe_token_count("text")} AS tok
-  FROM kept WHERE {X.sql_bpe_token_count("text")} > 0
-),
-placed AS (
-  SELECT doc_id, lang, tok,
-         CAST(sum(tok) OVER w - tok AS BIGINT) AS start_tok
-  FROM d5
-  WINDOW w AS (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-),
-spans AS (
-  SELECT lang, doc_id, tok, start_tok,
-         start_tok // {_DP5_SEQ_TOKENS} AS first_seq,
-         (start_tok + tok - 1) // {_DP5_SEQ_TOKENS} AS last_seq
-  FROM placed
-),
-x AS (
-  SELECT lang, doc_id, tok, start_tok, first_seq,
-         unnest(generate_series(first_seq, last_seq)) AS seq_id
-  FROM spans
-)
-SELECT lang, seq_id,
-       count(*) AS n_docs,
-       count(CASE WHEN first_seq = seq_id THEN 1 END) AS n_starts,
-       CAST(sum(least(start_tok + tok, (seq_id + 1) * {_DP5_SEQ_TOKENS})
-                - greatest(start_tok, seq_id * {_DP5_SEQ_TOKENS})) AS BIGINT)
-         AS filled_tokens
-FROM x
-GROUP BY lang, seq_id
+{_DP2_CLEAN_SQL},
+kept AS (SELECT doc_id, lang, text FROM ranked WHERE rn = 1),
+{_dp5_pack_sql("kept")},
+packed AS (
+{_DP5_PACK_AGG_SQL})
+SELECT lang, seq_id, n_docs, n_starts, filled_tokens FROM packed
 """,
     doc="DP7: cleaned-corpus training shards — dp2 cleaning composed with dp5 packing",
 )
 def dp7_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.prefix import exclusive_prefix_sum
-
-    B = _DP5_SEQ_TOKENS
     kept = dp2_corpus_clean_neardup(spark, sf_dir).select("doc_id")
-    d = (
-        _docs(spark, sf_dir)
-        .join(kept, "doc_id")
-        .select("doc_id", "lang", X.bpe_token_count("text").alias("tok"))
-        .filter(F.col("tok") > 0)
-    )
-    placed = exclusive_prefix_sum(
-        d, group_col="lang", order_col="doc_id", value_col="tok",
-        out_col="start_tok",
-    )
-    end_tok = F.col("start_tok") + F.col("tok")
-    spans = placed.withColumn(
-        "first_seq", F.floor(F.col("start_tok") / B)
-    ).withColumn("last_seq", F.floor((end_tok - 1) / B))
-    x = spans.withColumn(
-        "seq_id", F.explode(F.sequence("first_seq", "last_seq"))
-    )
-    seq_lo = F.col("seq_id") * B
-    seq_hi = (F.col("seq_id") + 1) * B
-    return x.groupBy("lang", "seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.count(F.when(F.col("first_seq") == F.col("seq_id"), 1)).alias(
-            "n_starts"
-        ),
-        F.sum(
-            F.least(F.col("start_tok") + F.col("tok"), seq_hi)
-            - F.greatest(F.col("start_tok"), seq_lo)
-        )
-        .cast("bigint")
-        .alias("filled_tokens"),
+    return pack_sequences(_docs(spark, sf_dir).join(kept, "doc_id")).drop(
+        "starts_with_carry"
     )
 
 
@@ -1463,8 +1353,8 @@ def dp8_document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training-data pipeline runs AFTER near-dup detection. A random per-doc
 # split leaks: two near-duplicate documents can land on opposite sides,
 # and the eval set then scores memorization. The unit of assignment must
-# be the near-dup CLUSTER (d8 edges at tau=0.5 → connected components,
-# dp2's stage-1 machinery), with the side chosen by a deterministic hash
+# be the near-dup CLUSTER (near_dup_edges at _D8_TAU → connected
+# components, dp2's stage-1 machinery), with the side chosen by a deterministic hash
 # of the cluster id — here the Knuth multiplicative hash
 # (cluster_id·2654435761 mod 2^32, shared exactly by both engines as
 # plain BIGINT arithmetic; no engine-native hash is cross-checkable)
@@ -1473,9 +1363,9 @@ def dp8_document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cluster_id * 2654435761 exceeds 2^63 for ids ≥ ~3.5e9 — Spark
 # (non-ANSI) would wrap silently while DuckDB promotes to HUGEINT, so
 # the two engines would assign DIFFERENT splits exactly at the
-# billions-of-docs scale this is designed for (VERDICT r6 demand #3).
-# The chunked multiply now lives in functions/hashing.py, shared with
-# dp3/mm7/adv8 (VERDICT r7 demand #3) and unit-tested against a
+# billions-of-docs scale this is designed for. The chunked multiply
+# lives in functions/hashing.py, shared with dp3/mm7/adv8 and
+# unit-tested against a
 # Python-bigint reference at planted 2^35/2^40/2^62-scale ids on both
 # engines (tests/test_textstats.py).
 #
@@ -1505,33 +1395,7 @@ _dp9_hash_sql = hashing.knuth_hash32_sql
 @register(
     "dp9_leakage_safe_split",
     oracle=f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
-),
-shs AS (SELECT doc_id, {X.sql_shingles_from_tokens("toks", 3)} AS sh FROM tok),
-szs AS (SELECT doc_id, sh, len(sh) AS sz FROM shs WHERE len(sh) > 0),
-exs AS (SELECT doc_id, sz, unnest(sh) AS s FROM szs),
-co AS (
-  SELECT a.doc_id AS src, b.doc_id AS dst,
-         a.sz AS sz_a, b.sz AS sz_b, count(*) AS o
-  FROM exs a JOIN exs b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-),
-edges AS (
-  SELECT src, dst FROM co
-  WHERE CAST(o AS DOUBLE) / (sz_a + sz_b - o) >= 0.5
-),
-sym AS (SELECT src AS a, dst AS b FROM edges
-        UNION SELECT dst, src FROM edges),
-reach AS (
-  SELECT a AS node, b AS peer FROM sym
-  UNION
-  SELECT r.node, s.b FROM reach r JOIN sym s ON r.peer = s.a
-),
-comp AS (
-  SELECT node AS doc_id, least(node, min(peer)) AS cluster_id
-  FROM reach GROUP BY node
-),
+WITH RECURSIVE {_NEAR_DUP_COMP_SQL},
 splits AS (
   SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
          CASE WHEN {_dp9_hash_sql("COALESCE(c.cluster_id, d.doc_id)")}
@@ -1553,17 +1417,11 @@ FROM splits GROUP BY split ORDER BY split
     doc="DP9: near-dup-cluster-keyed train/eval split — no d8 edge crosses the split",
 )
 def dp9_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par, connected_components, prefix_jaccard_pairs
-
     d = load_table(spark, sf_dir, "documents")
-    # one materialization, two consumers (CC + the certificate join) —
-    # without it the d8 prefix-join subplan would execute twice
-    edges = (
-        prefix_jaccard_pairs(_docs_par(spark, sf_dir), 0.5)
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .localCheckpoint()
-    )
-    comp = connected_components(edges, pre_materialized=True).select(
+    # materialized once by the builder; CC and the certificate join both
+    # read it
+    edges = near_dup_edges(_docs_par(spark, sf_dir))
+    comp = connected_components(edges).select(
         F.col("node").alias("doc_id"), F.col("component")
     )
     splits = track(
@@ -1930,8 +1788,6 @@ FROM counts ORDER BY split
     ),
 )
 def dp11_split_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par
-
     return split_decontamination(_docs_par(spark, sf_dir))
 
 
@@ -2553,8 +2409,6 @@ LIMIT {_DP15_TOPN}
     ),
 )
 def dp15_bigram_lm_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par
-
     return bigram_lm_screen(_docs_par(spark, sf_dir))
 
 
@@ -2833,10 +2687,12 @@ _T17_MIN_SUPPORT = 5  # apriori floor: pair must occur ≥ 5 times
 _T17_TOPN = 20
 
 
-@register(
-    "t17_collocations_pmi",
-    oracle=f"""
-WITH t AS (
+def _pmi_scored_sql(score: str) -> str:
+    """The oracle twin of _pmi_counted plus one score column: a WITH
+    head whose CTE list ends in scored(w1, w2, pair_count, <score>),
+    where ``score`` is a select item over c12.c, a.c, b.c (the unigram
+    counts of w1, w2) and the totals n1.n, n2.n."""
+    return f"""WITH t AS (
   SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
 ),
 uni AS (SELECT unnest(toks) AS w FROM t),
@@ -2854,14 +2710,24 @@ c12 AS (
 n2 AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM c12),
 scored AS (
   SELECT c12.w1, c12.w2, c12.c AS pair_count,
-         round(ln(CAST(c12.c * n1.n * n1.n AS DOUBLE)
-                  / CAST(n2.n * a.c * b.c AS DOUBLE)), {_R}) AS pmi
+         {score}
   FROM c12
   JOIN c1 a ON c12.w1 = a.w
   JOIN c1 b ON c12.w2 = b.w
   CROSS JOIN n1 CROSS JOIN n2
   WHERE c12.c >= {_T17_MIN_SUPPORT}
-)
+)"""
+
+
+# t17's score: ln of the exact int64 count ratio
+_T17_PMI_SQL = f"""round(ln(CAST(c12.c * n1.n * n1.n AS DOUBLE)
+                  / CAST(n2.n * a.c * b.c AS DOUBLE)), {_R}) AS pmi"""
+
+
+@register(
+    "t17_collocations_pmi",
+    oracle=f"""
+{_pmi_scored_sql(_T17_PMI_SQL)}
 SELECT w1, w2, pair_count, pmi
 FROM scored
 ORDER BY pmi DESC, w1 ASC, w2 ASC
@@ -2873,8 +2739,6 @@ LIMIT {_T17_TOPN}
     ),
 )
 def t17_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par
-
     return collocations_pmi(_docs_par(spark, sf_dir))
 
 
@@ -2965,7 +2829,7 @@ def _pmi_counted(d: DataFrame, min_support: int) -> DataFrame:
 # 100 TB. The production fix is scoring in log space, lpmi =
 # ln c12 + 2·ln N1 − ln N2 − ln c1 − ln c2 — no product ever formed, no
 # overflow at any corpus size. This twin REGISTERS that form so the
-# gate proves it runs (VERDICT r9 Next #5).
+# gate proves it runs.
 #
 # Compared surface: INTEGERS ONLY (w1, w2, pair_count, rank). The
 # lpmi double is a five-term sum of ln() outputs; ln is engine libm —
@@ -2984,38 +2848,18 @@ def _pmi_counted(d: DataFrame, min_support: int) -> DataFrame:
 # rank assignment windows over the COLLECTED 20 rows only — no global
 # single-partition sort.
 # ---------------------------------------------------------------------------
+# t17b's score: t17's ratio as a fixed-order five-term ln sum
+_T17B_KEY_SQL = (
+    "round(((((ln(CAST(c12.c AS DOUBLE)) + ln(CAST(n1.n AS DOUBLE)))"
+    " + ln(CAST(n1.n AS DOUBLE))) - ln(CAST(n2.n AS DOUBLE)))"
+    " - ln(CAST(a.c AS DOUBLE))) - ln(CAST(b.c AS DOUBLE)), 6) AS k"
+)
+
+
 @register(
     "t17b_collocations_pmi_log",
     oracle=f"""
-WITH t AS (
-  SELECT doc_id, {X.sql_tokens("text")} AS toks FROM documents
-),
-uni AS (SELECT unnest(toks) AS w FROM t),
-c1 AS (SELECT w, count(*) AS c FROM uni WHERE w <> '' GROUP BY w),
-n1 AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM c1),
-big AS (
-  SELECT toks[g.i] AS w1, toks[g.i + 1] AS w2
-  FROM t, unnest(range(1, len(toks))) AS g(i)
-  WHERE len(toks) >= 2
-),
-c12 AS (
-  SELECT w1, w2, count(*) AS c FROM big
-  WHERE w1 <> '' AND w2 <> '' GROUP BY w1, w2
-),
-n2 AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM c12),
-scored AS (
-  SELECT c12.w1, c12.w2, c12.c AS pair_count,
-         {sql_fround(
-             "((((ln(CAST(c12.c AS DOUBLE)) + ln(CAST(n1.n AS DOUBLE)))"
-             " + ln(CAST(n1.n AS DOUBLE))) - ln(CAST(n2.n AS DOUBLE)))"
-             " - ln(CAST(a.c AS DOUBLE))) - ln(CAST(b.c AS DOUBLE))", 6
-         )} AS k
-  FROM c12
-  JOIN c1 a ON c12.w1 = a.w
-  JOIN c1 b ON c12.w2 = b.w
-  CROSS JOIN n1 CROSS JOIN n2
-  WHERE c12.c >= {_T17_MIN_SUPPORT}
-),
+{_pmi_scored_sql(_T17B_KEY_SQL)},
 ranked AS (
   SELECT w1, w2, pair_count,
          row_number() OVER (ORDER BY k DESC, w1, w2) AS rank
@@ -3031,8 +2875,6 @@ FROM ranked WHERE rank <= {_T17_TOPN}
     ),
 )
 def t17b_collocations_pmi_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par
-
     return collocations_pmi_log(_docs_par(spark, sf_dir))
 
 
@@ -3164,8 +3006,6 @@ LIMIT {_T18_TOPN}
     ),
 )
 def t18_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par
-
     return bm25_topk(_docs_par(spark, sf_dir))
 
 
@@ -3607,8 +3447,6 @@ LIMIT {_DP17_TOPN}
     ),
 )
 def dp17_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _docs_par
-
     return dsir_importance(_docs_par(spark, sf_dir))
 
 
@@ -3911,6 +3749,11 @@ def t19_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _DP19_K = 20
 _DP19_SALT = 8
+# the A-ES key u^(1/w), u = (knuth_hash32(doc_id) + 1) / 2^32
+_DP19_KEY_SQL = (
+    f"pow(CAST(({hashing.knuth_hash32_sql('doc_id')} + 1) AS DOUBLE)"
+    f" / {hashing.HASH32_MOD}.0, 1.0 / CAST(w AS DOUBLE))"
+)
 
 _DP19_ORACLE = f"""
 WITH d AS (
@@ -3918,12 +3761,7 @@ WITH d AS (
 ),
 s AS (
   SELECT source, doc_id, CAST(w AS BIGINT) AS token_count,
-         {sql_fround(
-             "pow(CAST(("
-             + hashing.knuth_hash32_sql("doc_id")
-             + " + 1) AS DOUBLE) / " + str(hashing.HASH32_MOD) + ".0, "
-             "1.0 / CAST(w AS DOUBLE))"
-         )} AS aes_key
+         round({_DP19_KEY_SQL}, 6) AS aes_key
   FROM d WHERE w >= 1
 ),
 r AS (
@@ -4056,15 +3894,12 @@ perdoc AS (
   FROM tf GROUP BY doc_id
 )
 SELECT doc_id, n_tokens, n_distinct,
-       {sql_fround("ln(CAST(n_tokens AS DOUBLE)) - sum_clnc / n_tokens")}
+       round(ln(CAST(n_tokens AS DOUBLE)) - sum_clnc / n_tokens, 6)
          AS entropy,
        CASE WHEN n_distinct > 1 THEN
-         {sql_fround(
-             "(ln(CAST(n_tokens AS DOUBLE)) - sum_clnc / n_tokens)"
-             " / ln(CAST(n_distinct AS DOUBLE))"
-         )}
+         round((ln(CAST(n_tokens AS DOUBLE)) - sum_clnc / n_tokens) / ln(CAST(n_distinct AS DOUBLE)), 6)
        ELSE 0.0 END AS norm_entropy,
-       {sql_fround("CAST(top_c AS DOUBLE) / n_tokens")} AS top_token_share
+       round(CAST(top_c AS DOUBLE) / n_tokens, 6) AS top_token_share
 FROM perdoc
 ORDER BY doc_id
 """
@@ -4148,7 +3983,7 @@ hit AS (
   GROUP BY k.source, k.decile, k.total_mass
 )
 SELECT source, decile, tokens_le, cum_mass, total_mass,
-       {sql_fround("CAST(cum_mass AS DOUBLE) / total_mass")} AS mass_share
+       round(CAST(cum_mass AS DOUBLE) / total_mass, 6) AS mass_share
 FROM hit
 ORDER BY source, decile
 """

@@ -14,6 +14,8 @@ Scale notes (100 TB design):
   at runtime — important for hot keys (e.g. a vehicle_id that dominates).
 - ``spark.sql.files.maxPartitionBytes`` left at default 128 MB: at 100 TB
   that is ~800k input splits, the right granularity for parquet scans.
+- ``spark.driver.memory`` defaults to half the host's physical memory;
+  ``SPARK_DRIVER_MEMORY`` (or ``extra_conf``) overrides it.
 """
 
 from __future__ import annotations
@@ -23,6 +25,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _half_host_memory() -> str:
+    """Half the host's physical memory, in Spark's ``<n>m`` form: the
+    default ``spark.driver.memory``. In local mode the driver JVM runs the
+    whole engine, and the other half stays free for the Python workers
+    and whatever else shares the host."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{host // 2 // 2**20}m"
 
 
 def get_spark(
@@ -45,7 +56,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _half_host_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver testdata stores TIMESTAMP(NANOS) parquet, which Spark's

@@ -23,7 +23,8 @@ session values of the confs that change parquet schema inference
 landing directory gaining a delivery, too) or a changed conf re-infers. A
 rewrite that keeps a file's size, mtime and inode is not detected. A path
 that cannot be statted (e.g. ``s3://``) is not memoized and infers on
-every read.
+every read. Each miss drops the entries of paths that no longer exist,
+so an entry outlives its table only until the next miss.
 
 Timestamp caveat: the testdata has stored ``ts`` both as TIMESTAMP(NANOS,
 isAdjustedToUTC=false), which Spark's parquet reader rejects outright, and
@@ -101,6 +102,10 @@ def _physical_schema(spark: SparkSession, path: str, glob: str | None) -> T.Stru
     key = (tuple(files), tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
     hit = _SCHEMA_MEMO.get((path, glob))
     if hit is None or hit[0] != key:
+        # a miss also drops the entries of paths that are gone (a test
+        # corpus under a deleted temp dir), so no entry outlives its table
+        for gone in [k for k in _SCHEMA_MEMO if not os.path.exists(k[0])]:
+            del _SCHEMA_MEMO[gone]
         hit = (key, reader.parquet(path).schema)
         _SCHEMA_MEMO[(path, glob)] = hit
     return hit[1]

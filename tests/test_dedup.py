@@ -152,10 +152,10 @@ def test_connected_components_driver_vs_distributed_random_graphs(spark):
         assert fast == slow, f"seed {seed}: driver path diverged"
 
 
-def test_connected_components_pre_materialized_identical(spark):
-    """pre_materialized=True (the caller already localCheckpointed the
-    edge frame — dp9's r17 job-count optimization) must be observationally
-    identical to the default checkpointing path, on BOTH the driver
+def test_connected_components_checkpointed_input_identical(spark):
+    """connected_components reads its input as given (near_dup_edges
+    checkpoints the edge list where it is built): a localCheckpointed
+    edge frame and a raw one give the same labels, on BOTH the driver
     union-find and the distributed min-label loop."""
     from iot_big_data_engineering_spark.operators.dedup import (
         connected_components,
@@ -167,17 +167,74 @@ def test_connected_components_pre_materialized_identical(spark):
     )
     checked = edges.localCheckpoint()
     for cap in (1_000_000, 0):  # driver path, then distributed path
-        default = {
+        raw = {
             r.node: r.component
             for r in connected_components(edges, driver_cap=cap).collect()
         }
         pre = {
             r.node: r.component
-            for r in connected_components(
-                checked, driver_cap=cap, pre_materialized=True
-            ).collect()
+            for r in connected_components(checked, driver_cap=cap).collect()
         }
-        assert default == pre, f"driver_cap={cap}: pre_materialized diverged"
+        assert raw == pre, f"driver_cap={cap}: checkpointed input diverged"
+
+
+def test_near_dup_clustering_lives_only_in_its_builder():
+    """The near-dup edge list has one builder, ``near_dup_edges``, which
+    checkpoints it once where it is built. ``prefix_jaccard_pairs`` is
+    called only there and in d8b (which returns the pairs themselves),
+    and every ``connected_components`` call in the package clusters the
+    builder's output: passed directly, or through a name bound only to
+    it in the calling function."""
+    import ast
+    from pathlib import Path
+
+    import iot_big_data_engineering_spark as pkg
+
+    def callee(call):
+        f = call.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    def is_builder_call(node):
+        return isinstance(node, ast.Call) and callee(node) == "near_dup_edges"
+
+    pair_callers, cc_args, builder_defs = [], [], []
+    root = Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        builder_defs += [rel for f in funcs if f.name == "near_dup_edges"]
+
+        def owner(node):  # the innermost def around node
+            inside = [f for f in funcs if f.lineno <= node.lineno <= f.end_lineno]
+            return max(inside, key=lambda f: f.lineno, default=None)
+
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = owner(node)
+            if callee(node) == "prefix_jaccard_pairs":
+                pair_callers.append((rel, fn and fn.name))
+            elif callee(node) == "connected_components":
+                arg = node.args[0] if node.args else None
+                if isinstance(arg, ast.Name) and fn is not None:
+                    bound = [
+                        a.value
+                        for a in ast.walk(fn)
+                        if isinstance(a, ast.Assign)
+                        and any(getattr(t, "id", None) == arg.id for t in a.targets)
+                    ]
+                    ok = bool(bound) and all(map(is_builder_call, bound))
+                else:
+                    ok = is_builder_call(arg)
+                cc_args.append((rel, fn and fn.name, ok))
+    assert sorted(pair_callers) == [
+        ("operators/dedup.py", "d8b_jaccard_join_df_prefix"),
+        ("operators/dedup.py", "near_dup_edges"),
+    ], pair_callers
+    assert cc_args, "no connected_components call found"
+    assert [c for c in cc_args if not c[2]] == [], cc_args
+    assert builder_defs == ["operators/dedup.py"], builder_defs
 
 
 def test_connected_components_raises_instead_of_partial_labels(spark):

@@ -118,6 +118,30 @@ def test_directory_table_gaining_a_part_file_is_reinferred(spark, tmp_path):
     assert table_bytes(str(tmp_path), "events") == parts
 
 
+def test_schema_memo_drops_entries_of_deleted_tables(spark, tmp_path):
+    """A memo miss drops the entries of paths that no longer exist: a
+    corpus in a deleted temp dir does not keep its entry for the life of
+    the process."""
+    import shutil
+
+    from iot_big_data_engineering_spark.sources import tables
+
+    gone, live = tmp_path / "gone", tmp_path / "live"
+    for d in (gone, live):
+        d.mkdir()
+        pq.write_table(_events(10), str(d / "events.parquet"))
+
+    def keys(d):
+        return [k for k in tables._SCHEMA_MEMO if k[0].startswith(str(d) + "/")]
+
+    load_table(spark, str(gone), "events")
+    assert keys(gone)
+    shutil.rmtree(gone)
+    load_table(spark, str(live), "events")  # a miss: a new path
+    assert keys(gone) == []
+    assert keys(live)
+
+
 def _events_dir(tmp_path, parts, ts_unit="us"):
     """A directory events table: one parquet part file per ``(n, first_id)``
     in ``parts``. The directory is both ``load_table``'s table path and an
