@@ -2019,10 +2019,9 @@ FROM p GROUP BY label
     ),
 )
 def dq8_embedding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "label", V.to_double("embedding").alias("v")
-    )
-    return embedding_audit(e)
+    from .similarity import load_embeddings
+
+    return embedding_audit(load_embeddings(spark, sf_dir, "label"))
 
 
 def embedding_audit(e: DataFrame) -> DataFrame:

@@ -686,13 +686,13 @@ LIMIT 50
     doc="D6: embedding cosine near-dup anchor, top-50 pairs (capped slice)",
 )
 def d6_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    par = spark.sparkContext.defaultParallelism
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _D6_CAP)
-        .repartition(par, "vec_id")
-        .select("vec_id", "label", V.to_double("embedding").alias("v"))
-    )
+    from .similarity import load_embeddings
+
+    # the cap filter pushes below the repartition, so only the capped
+    # slice is shuffled
+    e = load_embeddings(
+        spark, sf_dir, "vec_id", "label", repartition=True
+    ).filter(F.col("vec_id") < _D6_CAP)
     a, b = e.alias("a"), e.alias("b")
     cos = V.cosine(F.col("a.v"), F.col("b.v"))
     return (

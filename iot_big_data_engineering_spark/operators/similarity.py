@@ -12,7 +12,7 @@ training-data pipeline extension (BASELINE.json north star).
       cell id, so a probe is a partition-pruned scan of nprobe/nlist of
       the data. The registered query is a self-certifying planted-
       duplicate probe (oracle-checked; see the certificate block comment
-      below) — raw top-k via ivf_search; recall on planted near-
+      below) — raw top-k via ivf_topk; recall on planted near-
       duplicates is additionally property-tested (the testdata embeddings
       are isotropic-random — label is NOT a geometric cluster — so recall
       on random neighbors would measure the data, not the operator).
@@ -25,7 +25,7 @@ training-data pipeline extension (BASELINE.json north star).
       matching buckets — no index training step at all, the trade being
       data-blind buckets (lower recall per probe than IVF at equal read
       volume). Registered as a planted-duplicate certificate like s2
-      (oracle-checked); raw top-k via lsh_search.
+      (oracle-checked); raw top-k via lsh_topk.
 - s4: per-label centroid + dispersion rollup (exact DECIMAL sums).
 - s5: SQ8 scalar-quantization calibration + worst-case reconstruction
       error audit (full-value oracle).
@@ -36,13 +36,28 @@ training-data pipeline extension (BASELINE.json north star).
 - numpy_topk: Arrow-batched mapInPandas matmul kernel, the vectorized
       form when Python-side scoring is unavoidable; tests assert it agrees
       exactly with s1.
+
+Every query composes one definition per search step:
+- ``load_embeddings`` reads the corpus (d6 and dq8 read through it too;
+  only s5's posexplode read is its own), ``query_set`` takes the first
+  N_QUERIES rows as queries and ``_s14_query`` the fixed s14/s15/s16
+  query vector;
+- ``_score`` is the rounded similarity (cosine, or s12's inner product)
+  and ``_score_pairs`` scores query × corpus pairs without the self pair;
+- ``_topk`` is the per-query rank window, ``_top_c``/``_rank_c`` the
+  single-query top-C and its ≤C-row rank window;
+- ``assign_cells`` is the one IVF cell kernel (``cell`` and ``ccos``),
+  ``_ivf_index`` the probe prologue (query collect, persist, k-means,
+  empty guards, assignment) and ``cell_min_ccos`` the per-cell radius;
+- ``certify_planted`` builds every planted-copy certificate (s2, s3,
+  s6–s11, d9) from one aggregation over the search output.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..caching import collect_local, scratch_dir, track
 from ..functions import text as X
@@ -54,18 +69,62 @@ from ..sources.tables import load_table
 _R = 6
 K = 10
 N_QUERIES = 5  # query set: vec_id < 5
+_TOPK_SCHEMA = "query_id long, vec_id long, cosine double, rank int"
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the testdata parquet is a single ~200 KB split → one task; the vector
-    # folds (interpreted higher-order exprs) would run single-threaded.
-    # Repartition to the session's parallelism — at real scale the input
-    # arrives in many splits and this is a no-op decision.
-    par = spark.sparkContext.defaultParallelism
+def load_embeddings(
+    spark: SparkSession, sf_dir: str, *cols: str, repartition: bool = False
+) -> DataFrame:
+    """The embeddings corpus as ``cols`` plus ``v``, the embedding as
+    array<double>. Callers that feed an Arrow kernel name exactly the
+    columns the kernel batch needs.
+
+    ``repartition`` spreads the rows over the session's parallelism by
+    vec_id BEFORE the projection: the testdata parquet is a single
+    ~200 KB split → one task, and the vector folds (interpreted
+    higher-order exprs) would run single-threaded. The Arrow-kernel
+    queries leave it off — their per-row work is trivial, so task count
+    should track input splits rather than pay per-task Python worker
+    start-up; at real scale the input arrives in many splits either way."""
+    t = load_table(spark, sf_dir, "embeddings")
+    if repartition:
+        t = t.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    return t.select(*cols, V.to_double("embedding").alias("v"))
+
+
+def query_set(e: DataFrame) -> DataFrame:
+    """(query_id, qv): the corpus rows with vec_id < N_QUERIES as queries."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
+def _score(fn=V.cosine, a: str = "qv", b: str = "v") -> Column:
+    """The rounded similarity every ranking and range filter compares:
+    ``fn`` (V.cosine, or V.dot for s12) floor-rounded to _R places — the
+    oracle's round(…, 6) after registration's rewrite."""
+    return fround(fn(F.col(a), F.col(b)), _R)
+
+
+def _score_pairs(pairs: DataFrame, name: str = "cosine", fn=V.cosine) -> DataFrame:
+    """(query_id, vec_id, ``name``) over query × corpus pairs carrying
+    (qv, v), the query's own corpus row dropped."""
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", _score(fn).alias(name)
+    )
+
+
+def _topk(scored: DataFrame, k: int = K, order: tuple | None = None) -> DataFrame:
+    """Per-query top-k of ``scored`` (query_id, vec_id, score) plus a
+    dense ``rank``. ``order`` defaults to the score (third column)
+    descending with a vec_id tie-break — the oracle's ORDER BY score
+    DESC, vec_id."""
+    order = order or (F.col(scored.columns[2]).desc(), F.col("vec_id"))
+    w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(par, "vec_id")
-        .select("vec_id", "label", V.to_double("embedding").alias("v"))
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*scored.columns, "rank")
     )
 
 
@@ -96,27 +155,8 @@ FROM ranked WHERE rank <= {K}
     doc="S1: exact brute-force cosine top-10 for 5 query vectors",
 )
 def s1_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    e = load_embeddings(spark, sf_dir, "vec_id", "label", repartition=True)
+    return _topk(_score_pairs(e.crossJoin(F.broadcast(query_set(e)))))
 
 
 # ---------------------------------------------------------------------------
@@ -212,19 +252,25 @@ def kmeans_centroids(e: DataFrame, nlist: int = 16, iters: int = 1):
 
 
 def assign_cells(e: DataFrame, cent) -> DataFrame:
-    """Adds `cell` = argmax_centroid(dot(normalize(v), centroid)) via an
-    Arrow-batched kernel against the broadcast (nlist, dim) matrix. Pure
-    map-side — no shuffle; at scale this column becomes the storage
-    partition key so probes are partition-pruned scans."""
-    import pandas as pd
+    """Adds `cell` = argmax_centroid(dot(normalize(v), centroid)) and
+    `ccos` = that maximum, the row's cosine to its own centroid (the
+    per-row ingredient of the per-cell angular radius, cell_min_ccos),
+    via an Arrow-batched kernel against the broadcast (nlist, dim)
+    matrix. Pure map-side — no shuffle; at scale `cell` becomes the
+    storage partition key so probes are partition-pruned scans. Zero-norm
+    rows normalize to themselves and score ccos = 0 (radius π/2 —
+    maximally conservative: their cell is never pruned on their account,
+    and the exact filter drops them via the NULL-cosine guard)."""
+    import pandas as pd  # noqa: F401 — Arrow batch interface
 
     np = _np()
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     bc = e.sparkSession.sparkContext.broadcast(cent)
     # fresh StructType — StructType.add would MUTATE the df's cached schema
     out_schema = StructType(
-        list(e.schema.fields) + [StructField("cell", LongType())]
+        list(e.schema.fields)
+        + [StructField("cell", LongType()), StructField("ccos", DoubleType())]
     )
 
     def kernel(batches):
@@ -233,11 +279,49 @@ def assign_cells(e: DataFrame, cent) -> DataFrame:
             if not len(pdf):
                 continue
             m = _normalize_rows(np.stack(pdf["v"].to_numpy()).astype(np.float64))
+            sims = m @ c.T
             pdf = pdf.copy()
-            pdf["cell"] = np.argmax(m @ c.T, axis=1)
+            pdf["cell"] = np.argmax(sims, axis=1)
+            pdf["ccos"] = np.max(sims, axis=1)
             yield pdf
 
     return e.mapInPandas(kernel, schema=out_schema)
+
+
+def cell_min_ccos(indexed: DataFrame) -> DataFrame:
+    """(cell, m): each cell's smallest member ``ccos`` — the cell's
+    angular radius is arccos(m). A |cells|-row aggregate with map-side
+    partials."""
+    return indexed.groupBy("cell").agg(F.min("ccos").alias("m"))
+
+
+def _min_ccos_array(pairs, n_cells: int):
+    """(cell, m) pairs → the (n_cells,) min-ccos vector; an absent cell
+    keeps 1.0, radius 0 (it is empty, so pruning it drops no member)."""
+    min_ccos = _np().ones(n_cells)
+    for cell, m in pairs:
+        min_ccos[cell] = m
+    return min_ccos
+
+
+def _ivf_index(e: DataFrame, queries: DataFrame, nlist: int, iters: int):
+    """The IVF probe prologue of ivf_topk, ivf_range_search and s16:
+    (query rows, centroids, cell-assigned corpus), or None when the query
+    set or the corpus is empty.
+
+    The query set is collected first (ANN queries are small by
+    construction; the corpus never is): ONE collect serves the empty-set
+    gate and the caller's driver-side probe selection, and an empty query
+    set pays no index training. The corpus is persisted because the
+    k-means seed, every Lloyd iteration and the assignment all read it."""
+    qrows = queries.collect()
+    if not qrows:
+        return None
+    e = track(e.persist())
+    cent = kmeans_centroids(e, nlist=nlist, iters=iters)
+    if cent.shape[0] == 0:
+        return None
+    return qrows, cent, assign_cells(e, cent)
 
 
 def ivf_topk(
@@ -252,28 +336,14 @@ def ivf_topk(
     probe the nprobe closest cells per query, exact-rerank inside them.
     `queries` must have (query_id, qv).
 
-    The query set is collected to the driver (ANN queries are small by
-    construction; the corpus never is) so probe selection is a driver-side
-    (nq × nlist) matmul; the candidate scan is then a broadcast join on
+    Probe selection is a driver-side (nq × nlist) matmul over the
+    collected query set; the candidate scan is then a broadcast join on
     `cell` — at real scale, a partition-pruned read of nprobe/nlist of the
     corpus."""
-    spark = e.sparkSession
-    empty = spark.createDataFrame(
-        [], "query_id long, vec_id long, cosine double, rank int"
-    )
-    # ONE collect serves both the empty-set gate and probe selection
-    # (r18: the former isEmpty() preflight was a separate job over the
-    # same query plan — for index-derived query sets like s6's that was
-    # a second scan); still before persist + k-means, so an empty query
-    # set does not pay (and then discard) index training
-    qrows = queries.collect()
-    if not qrows:
-        return empty
-    e = track(e.persist())
-    cent = kmeans_centroids(e, nlist=nlist, iters=iters)
-    if cent.shape[0] == 0:  # empty corpus → empty result, stable schema
-        return empty
-    indexed = assign_cells(e, cent)
+    index = _ivf_index(e, queries, nlist, iters)
+    if index is None:
+        return e.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    qrows, cent, indexed = index
     return ivf_probe_search(
         indexed, cent, queries, k=k, nprobe=nprobe, qrows=qrows
     )
@@ -300,20 +370,18 @@ def ivf_probe_search(
     label == qlabel BETWEEN the cell scan and the rerank — the standard
     filtered-ANN shape: the predicate rides the probed-cell scan (at
     scale: partition-pruned on cell, predicate-pushed on label), never a
-    post-rerank filter that could return < k survivors."""
+    post-rerank filter that could return < k survivors.
+
+    ``qrows``: pre-collected query rows (ivf_topk passes its own single
+    collect through so the query plan is not executed a second time)."""
     np = _np()
     spark = indexed.sparkSession
-    empty = spark.createDataFrame(
-        [], "query_id long, vec_id long, cosine double, rank int"
-    )
-    # ``qrows``: pre-collected query rows (ivf_topk passes its own single
-    # collect through so the query plan is not executed a second time)
     if qrows is None:
         qrows = queries.collect()
-    if not qrows:  # empty query set → np.asarray([]) is 1-D and
-        return empty  # _normalize_rows would raise AxisError
-    if cent.shape[0] == 0:
-        return empty
+    # empty query set → np.asarray([]) is 1-D and _normalize_rows would
+    # raise AxisError
+    if not qrows or cent.shape[0] == 0:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     qn = _normalize_rows(
         np.asarray([r.qv for r in qrows], dtype=np.float64)
     )
@@ -329,22 +397,10 @@ def ivf_probe_search(
         "query_id long, qv array<double>, cell long"
         + (", qlabel long" if match_label else ""),
     )
-    cand = indexed.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
+    cand = indexed.join(F.broadcast(probes), "cell")
     if match_label:
         cand = cand.filter(F.col("label") == F.col("qlabel"))
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _topk(_score_pairs(cand), k)
 
 
 # ---------------------------------------------------------------------------
@@ -360,12 +416,14 @@ def ivf_probe_search(
 # row per query; the DuckDB oracle states the guarantee (TRUE per query
 # id). A pipeline regression (cell assignment drift, bucket mismatch,
 # rerank bug, dropped candidates) flips a boolean and fails the driver's
-# hash gate. Raw top-k output stays available via ivf_search / lsh_search
+# hash gate. Raw top-k output stays available via ivf_topk / lsh_topk
 # and is property-tested (rank density, cosine monotonicity, bucket-
-# collision proofs) in tests/test_similarity.py.
+# collision proofs) in tests/test_similarity.py. Every certificate is
+# built by certify_planted.
 # ---------------------------------------------------------------------------
 _PLANT_OFFSET = 10_000_000  # far above any real vec_id at any SF
 _PERTURB_OFFSET = 2 * _PLANT_OFFSET  # near-copies for the recall column
+_RECALL_MIN = 0.8  # share of perturbed near-copies the recall column asks
 
 # s6 (quantized stack) keeps the exact-copy-only certificate
 _ANN_CERT_ORACLE = f"""
@@ -391,16 +449,61 @@ ORDER BY query_id
 """
 
 
-def _corpus_queries_planted(spark: SparkSession, sf_dir: str):
-    """(corpus ∪ planted exact copies, query set) for the ANN certificates.
+def certify_planted(
+    found: DataFrame,
+    ids: DataFrame,
+    key: str = "query_id",
+    hit: str = "planted_dup_found",
+    recall: str | None = None,
+    **flags: Column,
+) -> DataFrame:
+    """One certificate row per ``key`` in ``ids``, ordered by it. ``hit``
+    says the planted exact copy (key + _PLANT_OFFSET) is among ``found``'s
+    vec_ids for that key; each named ``flags`` column is that per-key
+    boolean aggregate over ``found``. A key with no ``found`` row gets
+    FALSE everywhere (hash-fails loudly, never silently drops the row).
 
-    The plant/query relations are driver-local (one memoized collect per
-    session, _PLANT_MEMO) — before r6 each was its own filter branch over
-    the parquet scan, so every certified query paid two extra scan passes
-    (VERDICT r5 demand #6)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", V.to_double("embedding").alias("v")
-    )
+    With ``recall``, a column of that name adds the aggregate near-dup
+    recall: the perturbed plants (key + _PERTURB_OFFSET) found must reach
+    _RECALL_MIN of the keys. It is one scalar repeated per row (the
+    oracle states TRUE), so the driver hashes the recall guarantee, not
+    just the exact-copy one.
+
+    All flags come from ONE aggregation over ``found`` — a single plan
+    reference, so the search subtree is neither duplicated in the plan
+    nor behind a persist() barrier."""
+    aggs = [F.max(F.col("vec_id") == F.col(key) + F.lit(_PLANT_OFFSET)).alias(hit)]
+    if recall:
+        aggs.append(
+            F.max(
+                F.col("vec_id") == F.col(key) + F.lit(_PERTURB_OFFSET)
+            ).alias("phit")
+        )
+    aggs += [c.alias(n) for n, c in flags.items()]
+    base = ids.select(key).join(found.groupBy(key).agg(*aggs), key, "left")
+    cols = [F.coalesce(n, F.lit(False)).alias(n) for n in (hit, *flags)]
+    if recall:
+        # attach the aggregate as an UNPARTITIONED window over the
+        # certificate frame — safe precisely because that frame is
+        # plant-count-sized (bounded by construction, never corpus-sized),
+        # and it keeps the plan free of the BroadcastNestedLoopJoin a
+        # 1-row crossJoin would add
+        w_all = Window.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        phits = F.sum(F.coalesce("phit", F.lit(False)).cast("int")).over(w_all)
+        cols.append(
+            (phits >= F.lit(_RECALL_MIN) * F.count("*").over(w_all)).alias(recall)
+        )
+    return base.select(key, *cols).orderBy(key)
+
+
+def _corpus_queries_planted(spark: SparkSession, sf_dir: str):
+    """(corpus ∪ planted exact copies, query set) for the ANN
+    certificates. The plant and query relations are driver-local (one
+    memoized collect per session, _PLANT_MEMO), so a certified query pays
+    no extra scan branch over the parquet for them."""
+    e = load_embeddings(spark, sf_dir, "vec_id", "label")
     q = plant_queries(spark, sf_dir, N_QUERIES)
     planted = planted_exact_copies(spark, sf_dir, N_QUERIES)
     return e.unionByName(planted, allowMissingColumns=True), q
@@ -409,9 +512,8 @@ def _corpus_queries_planted(spark: SparkSession, sf_dir: str):
 # driver-side memo of the PLANT rows (the first n_plant embeddings rows,
 # already to_double-projected), keyed by (sf_dir, n_plant): s2, s3 and d9
 # all derive their query set, exact-copy plants AND perturbed near-copies
-# from these same rows, and before r6 each derivation was its own scan
-# branch or collect job — r5 measured the regenerations at ~+0.8 s/query
-# combined (VERDICT r5 demand #6). The memo is the session-lifetime
+# from these same rows; deriving each from its own scan branch or collect
+# job cost ~0.8 s per query. The memo is the session-lifetime
 # stand-in for the persisted planted table a production pipeline would
 # materialize once; it survives catalog.clearCache() because it is plain
 # Python data, and it is bounded by construction (≤50 rows × dim per
@@ -425,7 +527,7 @@ def _embeddings_fingerprint(sf_dir: str) -> tuple:
     """(mtime_ns, size) of the embeddings parquet — cheap stat, part of
     the memo key so a testdata regeneration WITHIN a session invalidates
     the memo instead of certifying against rows that no longer exist in
-    the corpus (ADVICE r6)."""
+    the corpus."""
     path = os.path.join(sf_dir, "embeddings.parquet")
     try:
         st = os.stat(path)
@@ -442,9 +544,7 @@ def _plant_rows(spark: SparkSession, sf_dir: str, n_plant: int) -> list:
     (vec_id, v) unpack the first two fields."""
     key = (sf_dir, n_plant, _embeddings_fingerprint(sf_dir))
     if key not in _PLANT_MEMO:
-        base = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", V.to_double("embedding").alias("v"), "label"
-        )
+        base = load_embeddings(spark, sf_dir, "vec_id", "label")
         _PLANT_MEMO[key] = [
             (int(r.vec_id), list(r.v), int(r.label))
             for r in base.filter(F.col("vec_id") < n_plant).collect()
@@ -477,9 +577,9 @@ def perturbed_plants(
     n_plant: int,
     offset: int = _PERTURB_OFFSET,
 ) -> DataFrame:
-    """Memoized perturbed near-copies of the first ``n_plant`` embeddings
-    rows (see :func:`perturbed_copies` for the math), shared across
-    s2/s3/d9."""
+    """Deterministic NEAR-copies of the first ``n_plant`` embeddings rows
+    at vec_id + offset (see :func:`_perturb_one` for the math), built
+    from the memoized plant rows and shared across s2/s3/d9."""
     np = _np()
     data = [
         _perturb_one(np, vid, v, offset)
@@ -488,25 +588,11 @@ def perturbed_plants(
     return spark.createDataFrame(data, "vec_id long, v array<double>")
 
 
-def perturbed_copies(
-    base: DataFrame, n_plant: int, offset: int = _PERTURB_OFFSET
-) -> DataFrame:
-    """Deterministic NEAR-copies of vec_id < n_plant at id + offset:
-    roll the vector for a pseudo-random direction, orthogonalize against
-    it, scale to 2.5% of the norm → cosine ≈ 0.9997 with the original.
-    Pure data-derived (no RNG), so identical on every run/engine.
-
-    Driver-side numpy over the COLLECTED plant rows — bounded by
-    construction (n_plant ≤ 50, independent of corpus size)."""
-    np = _np()
-    rows = base.filter(F.col("vec_id") < n_plant).select("vec_id", "v").collect()
-    data = [_perturb_one(np, int(r.vec_id), r.v, offset) for r in rows]
-    return base.sparkSession.createDataFrame(
-        data, "vec_id long, v array<double>"
-    )
-
-
 def _perturb_one(np, vec_id: int, v_in, offset: int) -> tuple:
+    """Roll the vector for a pseudo-random direction, orthogonalize
+    against it, scale to 2.5% of the norm → cosine ≈ 0.9997 with the
+    original. Pure data-derived (no RNG), so identical on every
+    run/engine."""
     v = np.asarray(v_in, dtype=np.float64)
     d = np.roll(v, 7)
     vv = float(v @ v)
@@ -517,88 +603,6 @@ def _perturb_one(np, vec_id: int, v_in, offset: int) -> tuple:
     return (vec_id + offset, [float(x) for x in p])
 
 
-def _certify_planted_recall(
-    topk: DataFrame, q: DataFrame, threshold: float = 0.8
-) -> DataFrame:
-    """_certify_planted plus the aggregate near-dup recall boolean: the
-    fraction of perturbed plants (query_id + _PERTURB_OFFSET) retrieved
-    in the top-k must reach ``threshold``. Emitted as one scalar repeated
-    per row (the oracle states TRUE) so the driver hashes the recall
-    guarantee, not just the exact-copy one.
-
-    Both flags come from ONE aggregation over topk — the r5 form read
-    topk twice (exact-hit filter + perturbed-hit filter), duplicating
-    the entire index-pipeline subtree in the plan; at scale that is 2×
-    the work, and the persist() that would fix it costs a serial
-    materialization barrier locally. A single groupBy reference needs
-    neither."""
-    flags = topk.groupBy("query_id").agg(
-        F.max(
-            F.col("vec_id") == F.col("query_id") + F.lit(_PLANT_OFFSET)
-        ).alias("hit"),
-        F.max(
-            F.col("vec_id") == F.col("query_id") + F.lit(_PERTURB_OFFSET)
-        ).alias("phit"),
-    )
-    base = q.select("query_id").join(flags, "query_id", "left")
-    # attach the aggregate as an UNPARTITIONED window over the certificate
-    # frame — safe precisely because that frame is plant-count-sized
-    # (bounded by construction, never corpus-sized), and it keeps the plan
-    # free of the BroadcastNestedLoopJoin a 1-row crossJoin would add
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    phits = F.sum(
-        F.coalesce(F.col("phit"), F.lit(False)).cast("int")
-    ).over(w_all)
-    return (
-        base.select(
-            "query_id",
-            F.coalesce("hit", F.lit(False)).alias("planted_dup_found"),
-            (phits >= F.lit(threshold) * F.count("*").over(w_all)).alias(
-                "near_dup_recall_ok"
-            ),
-        )
-        .orderBy("query_id")
-    )
-
-
-def _certify_planted(topk: DataFrame, q: DataFrame) -> DataFrame:
-    """One row per query: was the planted copy (query_id + offset)
-    returned in the top-k? Missing → explicit FALSE (hash-fails loudly,
-    never silently drops the row)."""
-    found = (
-        topk.filter(F.col("vec_id") == F.col("query_id") + F.lit(_PLANT_OFFSET))
-        .select("query_id")
-        .withColumn("hit", F.lit(True))
-    )
-    return (
-        q.select("query_id")
-        .join(found, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("hit", F.lit(False)).alias("planted_dup_found"),
-        )
-        .orderBy("query_id")
-    )
-
-
-def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw IVF ANN top-k over the corpus (the pre-certificate s2 form).
-
-    No repartition (unlike s1): the Arrow kernels do trivial per-row work,
-    so task count should track input splits — 1 split locally; at 100 TB
-    the parquet arrives in ~128 MB splits and parallelism is free. Forcing
-    32 tasks here just pays 32× Python-worker spin-up for a tiny corpus."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", V.to_double("embedding").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_topk(e, q)
-
-
 @register(
     "s2_knn_ivf",
     oracle=_ANN_CERT_RECALL_ORACLE,
@@ -607,11 +611,11 @@ def ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s2_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, q = _corpus_queries_planted(spark, sf_dir)
     # memoized plain-table near-copies (one collect per session, shared
-    # with s3/d9 — VERDICT r5 demand #6); collecting through the union
-    # corpus would evaluate the planted branch too, measured ~0.5 s waste
+    # with s3/d9); collecting through the union corpus would evaluate the
+    # planted branch too, measured ~0.5 s waste
     pert = perturbed_plants(spark, sf_dir, N_QUERIES)
     topk = ivf_topk(corpus.unionByName(pert, allowMissingColumns=True), q)
-    return _certify_planted_recall(topk, q)
+    return certify_planted(topk, q, recall="near_dup_recall_ok")
 
 
 # ---------------------------------------------------------------------------
@@ -627,13 +631,13 @@ def numpy_topk(e: DataFrame, queries: list[tuple[int, list[float]]], k: int = K)
     spark = e.sparkSession
     qids = [q[0] for q in queries]
     qmat = np.asarray([q[1] for q in queries], dtype=np.float64)
-    # zero-norm-safe normalization (r11's dq8 hazard class): a raw
-    # divide would emit NaN rows that rank nondeterministically.
+    # zero-norm-safe normalization (dq8's hazard class): a raw divide
+    # would emit NaN rows that rank nondeterministically.
     # The norm masks carry the NULL semantics: V.cosine's nullif guard
     # scores a zero-norm vector NULL (sorted last under DESC), so the
     # kernel must emit NULL too — not the 0.0 a pass-through row would
     # score, which on a corpus with negative cosines RANKS DIFFERENTLY
-    # than NULL (ADVICE r11).
+    # than NULL.
     qok = np.linalg.norm(qmat, axis=1) > 0.0
     qnorm = _normalize_rows(qmat)
     bc = spark.sparkContext.broadcast((qids, qnorm, qok))
@@ -662,14 +666,11 @@ def numpy_topk(e: DataFrame, queries: list[tuple[int, list[float]]], k: int = K)
     scored = e.select("vec_id", "v").mapInPandas(
         score, schema="query_id long, vec_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        fround("cosine", _R).desc(), F.col("vec_id")
-    )
-    return (
-        scored.filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", fround("cosine", _R).alias("cosine"), "rank")
+    return _topk(
+        scored.filter(F.col("vec_id") != F.col("query_id")).select(
+            "query_id", "vec_id", fround("cosine", _R).alias("cosine")
+        ),
+        k,
     )
 
 
@@ -748,9 +749,7 @@ def lsh_topk(
     inherent to hash-bucketed search (raise ntables for recall)."""
     np = _np()
     spark = e.sparkSession
-    empty = spark.createDataFrame(
-        [], "query_id long, vec_id long, cosine double, rank int"
-    )
+    empty = spark.createDataFrame([], _TOPK_SCHEMA)
     qrows = queries.collect()
     if not qrows:
         return empty
@@ -776,36 +775,12 @@ def lsh_topk(
         ],
         "query_id long, qv array<double>, table int, bucket long",
     )
-    cand = (
-        bucketed.join(F.broadcast(probes), ["table", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # a pair can collide in several tables; every duplicate row is
-        # identical in (qv, v) so keep-any semantics are deterministic
-        .dropDuplicates(["query_id", "vec_id"])
+    # a pair can collide in several tables; every duplicate row is
+    # identical in (qv, v) so keep-any semantics are deterministic
+    cand = bucketed.join(F.broadcast(probes), ["table", "bucket"]).dropDuplicates(
+        ["query_id", "vec_id"]
     )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
-def lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw LSH ANN top-k over the corpus (the pre-certificate s3 form).
-    Like ivf_search: no repartition — task count tracks input splits."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", V.to_double("embedding").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return lsh_topk(e, q)
+    return _topk(_score_pairs(cand), k)
 
 
 @register(
@@ -820,7 +795,7 @@ def s3_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, q = _corpus_queries_planted(spark, sf_dir)
     pert = perturbed_plants(spark, sf_dir, N_QUERIES)  # memoized, as in s2
     topk = lsh_topk(corpus.unionByName(pert, allowMissingColumns=True), q)
-    return _certify_planted_recall(topk, q)
+    return certify_planted(topk, q, recall="near_dup_recall_ok")
 
 
 # ---------------------------------------------------------------------------
@@ -880,7 +855,7 @@ ORDER BY p.label
     doc="S4: per-label centroid norm + mean squared dispersion, exact sums",
 )
 def s4_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_embeddings(spark, sf_dir, "vec_id", "label", repartition=True)
     dims = e.select(
         "vec_id", "label", F.posexplode("v").alias("pos", "x")
     )
@@ -995,12 +970,9 @@ ORDER BY orig_id
     doc="D9: SemDeDup via IVF cells — exact-removal + near-dup-recall certificate",
 )
 def d9_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
+    e = load_embeddings(spark, sf_dir, "vec_id")
     # plant/perturbed/expected all come from the memoized driver-local
-    # plant rows (one collect per session, shared with s2/s3) — before r6
-    # each was another filter branch over the parquet scan
+    # plant rows (one collect per session, shared with s2/s3)
     planted = planted_exact_copies(spark, sf_dir, _N_PLANT_D9)
     pert = perturbed_plants(spark, sf_dir, _N_PLANT_D9)
     dropped = semantic_dedup_dropped(
@@ -1009,40 +981,18 @@ def d9_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected = plant_queries(spark, sf_dir, _N_PLANT_D9).select(
         F.col("query_id").alias("orig_id")
     )
-    # both flags from ONE aggregation over dropped (single plan
-    # reference — no duplicated kernel subtree, no persist barrier;
-    # same rationale as _certify_planted_recall)
-    is_pert = F.col("vec_id") >= _PERTURB_OFFSET
-    flags = (
-        dropped.filter(F.col("vec_id") >= _PLANT_OFFSET)
-        .select(
-            F.when(is_pert, F.col("vec_id") - F.lit(_PERTURB_OFFSET))
-            .otherwise(F.col("vec_id") - F.lit(_PLANT_OFFSET))
-            .alias("orig_id"),
-            is_pert.alias("is_pert"),
-        )
-        .groupBy("orig_id")
-        .agg(
-            F.max(~F.col("is_pert")).alias("h"),
-            F.max(F.col("is_pert")).alias("ph"),
-        )
+    # every plant's id is its original's plus a multiple of _PLANT_OFFSET,
+    # so the modulus recovers the original; a dropped CORPUS id keeps its
+    # own id and can only add FALSE flags to its group
+    found = dropped.select(
+        (F.col("vec_id") % _PLANT_OFFSET).alias("orig_id"), "vec_id"
     )
-    base = expected.join(flags, "orig_id", "left")
-    # unpartitioned window over the plant-count-sized certificate frame
-    # (bounded by construction) — no BroadcastNestedLoopJoin in the plan
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    phits = F.sum(F.coalesce(F.col("ph"), F.lit(False)).cast("int")).over(w_all)
-    return (
-        base.select(
-            "orig_id",
-            F.coalesce("h", F.lit(False)).alias("planted_removed"),
-            (phits >= F.lit(0.8) * F.count("*").over(w_all)).alias(
-                "near_dup_recall_ok"
-            ),
-        )
-        .orderBy("orig_id")
+    return certify_planted(
+        found,
+        expected,
+        key="orig_id",
+        hit="planted_removed",
+        recall="near_dup_recall_ok",
     )
 
 
@@ -1151,11 +1101,10 @@ def quantize_vectors(e: DataFrame) -> DataFrame:
     calibration. ``dv`` is what an IVF-SQ8 index actually scores.
 
     The calibration DELIBERATELY stays posexplode + 64-group hash
-    aggregate: the r18 "one wide ungrouped aggregate of 2·dim min/max
-    expressions" rewrite was measured SLOWER warm (0.69-0.95 s →
-    1.14-1.24 s at sf0.1) — 128 agg expressions with per-element null
-    checks lose to the exploded hash aggregate's tight loop — and was
-    reverted (OPTIMIZATION_r18.md)."""
+    aggregate: one wide ungrouped aggregate of 2·dim min/max expressions
+    was measured SLOWER warm (0.69-0.95 s → 1.14-1.24 s at sf0.1) — 128
+    agg expressions with per-element null checks lose to the exploded
+    hash aggregate's tight loop."""
     cal = (
         e.select(F.posexplode("v").alias("pos", "x"))
         .groupBy("pos")
@@ -1200,10 +1149,8 @@ def s6_knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary, exclude the cell the quantized copy was assigned to —
     # with identical vectors the copy's argmax cell IS the top-1 probe,
     # restoring the structural s2-style guarantee
-    q = quant.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return _certify_planted(ivf_topk(quant, q), q)
+    q = query_set(quant)
+    return certify_planted(ivf_topk(quant, q), q)
 
 
 # ---------------------------------------------------------------------------
@@ -1224,15 +1171,6 @@ def s6_knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # top-k back to the corpus labels, so a pipeline that drops the filter
 # flips it FALSE on any query whose probed cells are label-mixed).
 # ---------------------------------------------------------------------------
-def _plant_labels(spark: SparkSession, sf_dir: str, n_plant: int) -> dict[int, int]:
-    """{vec_id: label} for the first ``n_plant`` embeddings rows — a
-    view over _plant_rows' single memoized collect (label rides the
-    same scan; no second memo, no second parquet pass)."""
-    return {
-        vid: lab for vid, _, lab in _plant_rows(spark, sf_dir, n_plant)
-    }
-
-
 @register(
     "s7_knn_filtered",
     oracle=f"""
@@ -1244,63 +1182,29 @@ ORDER BY query_id
     doc="S7: filtered ANN — label predicate rides the probed-cell scan; planted-copy + filter-respect certificate",
 )
 def s7_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    labels = _plant_labels(spark, sf_dir, N_QUERIES)
-    if not labels:
-        # empty / sub-N_QUERIES corpus: zero query rows is the correct
-        # certificate (the oracle's vec_id < N predicate returns none),
-        # and the N-way coalesce below would raise on zero args — the
-        # same stable-schema hardening st10/w7 carry (r7 ADVICE)
-        return spark.createDataFrame(
-            [],
-            "query_id long, planted_dup_found boolean, "
-            "results_respect_filter boolean",
-        )
-    planted = planted_exact_copies(spark, sf_dir, N_QUERIES).withColumn(
-        "label",
-        F.coalesce(
-            *[
-                F.when(
-                    F.col("vec_id") == vid + _PLANT_OFFSET, F.lit(lab)
-                )
-                for vid, lab in labels.items()
-            ]
-        ),
+    # the plant rows carry their label, so the planted copies and the
+    # query set both take it from the one memoized collect
+    plant = _plant_rows(spark, sf_dir, N_QUERIES)
+    planted = spark.createDataFrame(
+        [(vid + _PLANT_OFFSET, lab, v) for vid, v, lab in plant],
+        "vec_id long, label int, v array<double>",
     )
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", V.to_double("embedding").alias("v")
-    )
-    corpus = track(e.unionByName(planted.select("vec_id", "label", "v")).persist())
     q = spark.createDataFrame(
-        [
-            (vid, v, labels[vid])
-            for vid, v, _ in _plant_rows(spark, sf_dir, N_QUERIES)
-        ],
+        [(vid, v, lab) for vid, v, lab in plant],
         "query_id long, qv array<double>, qlabel long",
     )
+    e = load_embeddings(spark, sf_dir, "vec_id", "label")
+    corpus = track(e.unionByName(planted).persist())
     cent = kmeans_centroids(corpus)
-    indexed = assign_cells(corpus, cent)
-    topk = ivf_probe_search(indexed, cent, q, match_label=True)
+    topk = ivf_probe_search(assign_cells(corpus, cent), cent, q, match_label=True)
     # filter-respect: every top-k row's corpus label must equal qlabel
     labeled = topk.join(
         corpus.select("vec_id", "label"), "vec_id"
     ).join(q.select("query_id", "qlabel"), "query_id")
-    flags = labeled.groupBy("query_id").agg(
-        F.max(
-            F.col("vec_id") == F.col("query_id") + F.lit(_PLANT_OFFSET)
-        ).alias("hit"),
-        F.min(F.col("label") == F.col("qlabel")).alias("respects"),
-    )
-    return (
-        q.select("query_id")
-        .join(flags, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("hit", F.lit(False)).alias("planted_dup_found"),
-            F.coalesce("respects", F.lit(False)).alias(
-                "results_respect_filter"
-            ),
-        )
-        .orderBy("query_id")
+    return certify_planted(
+        labeled,
+        q,
+        results_respect_filter=F.min(F.col("label") == F.col("qlabel")),
     )
 
 
@@ -1331,9 +1235,7 @@ _S8_N_DELTA = 100  # "today's ingest": the first 100 vec_ids + the plants
     doc="S8: incremental IVF delta-add — new batch indexed map-only with yesterday's centroids; planted-copy certificate",
 )
 def s8_knn_ivf_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", V.to_double("embedding").alias("v")
-    )
+    e = load_embeddings(spark, sf_dir, "vec_id", "label")
     base = track(e.filter(F.col("vec_id") >= _S8_N_DELTA).persist())
     delta = e.filter(F.col("vec_id") < _S8_N_DELTA).unionByName(
         planted_exact_copies(spark, sf_dir, N_QUERIES),
@@ -1344,7 +1246,7 @@ def s8_knn_ivf_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_cells(delta, cent)  # map-only delta add
     )
     q = plant_queries(spark, sf_dir, N_QUERIES)
-    return _certify_planted(ivf_probe_search(indexed, cent, q), q)
+    return certify_planted(ivf_probe_search(indexed, cent, q), q)
 
 
 # ---------------------------------------------------------------------------
@@ -1370,6 +1272,27 @@ def s8_knn_ivf_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (An earlier form ran the search twice and set-compared the top-k;
 # same guarantee, but the second search doubled the query's wall.)
 # ---------------------------------------------------------------------------
+def _index_fingerprint(df: DataFrame) -> tuple:
+    """(row count, order-independent XOR of per-row hashes) of an index
+    table — content equality of two index tables for one map-side
+    aggregate each (s9's reload, s11's compaction). XOR, not sum:
+    overflow-free under ANSI mode, order-independent by construction;
+    the vector participates via its string form, deterministic within
+    Spark on both sides. cell is cast long BEFORE hashing because
+    xxhash64 is input-type-sensitive: a reload that round-trips the
+    partition column as INT would otherwise false-alarm on identical row
+    contents."""
+    return tuple(
+        df.agg(
+            F.count("*").alias("n"),
+            F.expr(
+                "bit_xor(xxhash64(vec_id, cast(cell AS long),"
+                " cast(v AS string)))"
+            ).alias("h"),
+        ).collect()[0]
+    )
+
+
 @register(
     "s9_knn_index_reload",
     oracle=f"""
@@ -1422,38 +1345,14 @@ def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent2 = np.asarray([r.centroid for r in cent_rows], dtype=np.float64)
         indexed2 = spark.read.schema(indexed.schema).parquet(assign_path)
 
-        def _fingerprint(df: DataFrame):
-            # count + order-independent XOR of per-row hashes (XOR, not
-            # sum: overflow-free under ANSI mode, order-independent by
-            # construction); the vector participates via its string
-            # form, deterministic within Spark on both sides
-            # cell is cast long BEFORE hashing because xxhash64 is
-            # input-type-sensitive (the dq4 lesson). Historically the
-            # inferred-schema reload round-tripped the partition column
-            # as INT (false-alarming this fingerprint on identical row
-            # CONTENTS); the r16 schema-pinned read restores BIGINT, so
-            # the cast is retained defensively — it keeps the
-            # fingerprint type-stable even if a reload path ever drops
-            # the pin (ADVICE r16 #1)
-            return df.agg(
-                F.count("*").alias("n"),
-                F.expr(
-                    "bit_xor(xxhash64(vec_id, cast(cell AS long),"
-                    " cast(v AS string)))"
-                ).alias("h"),
-            ).collect()[0]
-
-        fp_mem, fp_reload = _fingerprint(indexed), _fingerprint(indexed2)
         matches = (
-            tuple(fp_mem) == tuple(fp_reload)
+            _index_fingerprint(indexed) == _index_fingerprint(indexed2)
             and cent.shape == cent2.shape
             and bool(np.array_equal(cent, cent2))
         )
         topk_reload = ivf_probe_search(indexed2, cent2, q)
-        out = (
-            _certify_planted(topk_reload, q)
-            .withColumn("index_roundtrip_exact", F.lit(matches))
-            .orderBy("query_id")
+        out = certify_planted(topk_reload, q).withColumn(
+            "index_roundtrip_exact", F.lit(matches)
         )
         # nq rows — the plan reads the reloaded parquet lazily
         return collect_local(out)
@@ -1515,8 +1414,8 @@ def pq_train_codebooks(e: DataFrame, m: int = _PQ_M, ks: int = _PQ_KS):
     # effective k = min(ks, n): with a training sample smaller than ks,
     # the books are SLICED to the k trained codewords rather than padded
     # with zero vectors — an untrained zero codeword can win argmin for
-    # real vectors near the origin, silently degrading quantization
-    # (r8 advice); every consumer reads ks from books.shape, so encode
+    # real vectors near the origin, silently degrading quantization;
+    # every consumer reads ks from books.shape, so encode
     # and the ADC LUTs stay aligned automatically
     k = min(ks, n)
     books = np.zeros((m, k, sub))
@@ -1575,12 +1474,11 @@ def pq_adc_topk(codes_df: DataFrame, books, queries: DataFrame, k: int = K) -> D
 
     np = _np()
     spark = codes_df.sparkSession
-    empty = spark.createDataFrame(
-        [], "query_id long, vec_id long, adc double, rank int"
-    )
     qrows = queries.collect()
     if not qrows or books is None:
-        return empty
+        return spark.createDataFrame(
+            [], "query_id long, vec_id long, adc double, rank int"
+        )
     m, ks, sub = books.shape
     qids = [int(r.query_id) for r in qrows]
     Q = _normalize_rows(np.asarray([r.qv for r in qrows], dtype=np.float64))
@@ -1617,17 +1515,15 @@ def pq_adc_topk(codes_df: DataFrame, books, queries: DataFrame, k: int = K) -> D
     # all sit at the minimum ADC distance, and the planted certificate
     # copy carries the LARGEST vec_id (query_id + plant offset) — an
     # ascending tie-break would let >= k same-code corpus vectors evict
-    # the plant and fail the certificate on a correct implementation
-    # (r8 code-review). Descending ranks the plant first among its
-    # ties; ordering is still total and deterministic.
-    w = Window.partitionBy("query_id").orderBy(
-        fround("adc", 9).asc(), F.col("vec_id").desc()
-    )
-    return (
-        scored.filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", fround("adc", 9).alias("adc"), "rank")
+    # the plant and fail the certificate on a correct implementation.
+    # Descending ranks the plant first among its ties; ordering is still
+    # total and deterministic.
+    return _topk(
+        scored.filter(F.col("vec_id") != F.col("query_id")).select(
+            "query_id", "vec_id", fround("adc", 9).alias("adc")
+        ),
+        k,
+        order=(F.col("adc").asc(), F.col("vec_id").desc()),
     )
 
 
@@ -1643,13 +1539,11 @@ def pq_adc_topk(codes_df: DataFrame, books, queries: DataFrame, k: int = K) -> D
 def s10_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, q = _corpus_queries_planted(spark, sf_dir)
     corpus = track(corpus.persist())  # train sample + encode share the scan
+    # an empty corpus trains no books (None) and plants no queries;
+    # pq_adc_topk then returns the empty top-k and the certificate is
+    # empty with its stable schema
     books = pq_train_codebooks(corpus)
-    if books is None:  # empty corpus → empty certificate, stable schema
-        return spark.createDataFrame(
-            [], "query_id long, planted_dup_found boolean"
-        )
-    topk = pq_adc_topk(pq_encode(corpus, books), books, q)
-    return _certify_planted(topk, q)
+    return certify_planted(pq_adc_topk(pq_encode(corpus, books), books, q), q)
 
 
 # ---------------------------------------------------------------------------
@@ -1698,18 +1592,7 @@ ORDER BY query_id
     ),
 )
 def s11_knn_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    plant = _plant_rows(spark, sf_dir, N_QUERIES)
-    if not plant:
-        # empty / sub-N_QUERIES corpus: zero certificate rows, matching
-        # the oracle's vec_id < N predicate (s7's hardening)
-        return spark.createDataFrame(
-            [],
-            "query_id long, planted_dup_found boolean, "
-            "deleted_absent boolean, compaction_preserves_index boolean",
-        )
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
+    e = load_embeddings(spark, sf_dir, "vec_id")
     kept = planted_exact_copies(spark, sf_dir, N_QUERIES)
     doomed = planted_exact_copies(
         spark, sf_dir, N_QUERIES, offset=_S11_TOMB_OFFSET
@@ -1721,51 +1604,22 @@ def s11_knn_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doomed twins participate in training and hold cell assignments
     cent = kmeans_centroids(corpus)
     indexed = track(assign_cells(corpus, cent).persist())
-    tombs = spark.createDataFrame(
-        [(vid + _S11_TOMB_OFFSET,) for vid, _, _ in plant], "vec_id long"
-    )
+    tombs = doomed.select("vec_id")
     # merge-on-read view: index files untouched, tombstones excluded at
     # scan time by a broadcast anti-join
     live = indexed.join(F.broadcast(tombs), "vec_id", "left_anti")
     # compaction: PHYSICAL rewrite of the live view into a fresh lineage
     compacted = live.localCheckpoint(eager=True)
-
-    def _fp(df: DataFrame):
-        # s9's recipe: count + order-independent XOR of per-row hashes;
-        # cell cast long before hashing (xxhash64 is input-type-
-        # sensitive — the dq4 lesson)
-        return df.agg(
-            F.count("*").alias("n"),
-            F.expr(
-                "bit_xor(xxhash64(vec_id, cast(cell AS long),"
-                " cast(v AS string)))"
-            ).alias("h"),
-        ).collect()[0]
-
-    preserved = tuple(_fp(live)) == tuple(_fp(compacted))
+    preserved = _index_fingerprint(live) == _index_fingerprint(compacted)
     q = plant_queries(spark, sf_dir, N_QUERIES)
     # the ONE search runs against the COMPACTED index — the serving path
     # after compaction; merge-on-read equality follows from content
     # equality + search determinism (module comment)
-    topk = track(ivf_probe_search(compacted, cent, q).persist())
-
-    cert = _certify_planted(topk, q)
-    del_hits = (
-        topk.join(F.broadcast(tombs), "vec_id", "left_semi")
-        .select("query_id")
-        .distinct()
-        .withColumn("dhit", F.lit(True))
-    )
-    return (
-        cert.join(del_hits, "query_id", "left")
-        .select(
-            "query_id",
-            "planted_dup_found",
-            (~F.coalesce("dhit", F.lit(False))).alias("deleted_absent"),
-            F.lit(preserved).alias("compaction_preserves_index"),
-        )
-        .orderBy("query_id")
-    )
+    topk = ivf_probe_search(compacted, cent, q)
+    # every tombstoned id sits at or above _S11_TOMB_OFFSET
+    return certify_planted(
+        topk, q, deleted_absent=F.min(F.col("vec_id") < _S11_TOMB_OFFSET)
+    ).withColumn("compaction_preserves_index", F.lit(preserved))
 
 
 # ---------------------------------------------------------------------------
@@ -1825,27 +1679,8 @@ FROM ranked WHERE rank <= {K}
     ),
 )
 def s12_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            fround(V.dot(F.col("qv"), F.col("v")), _R).alias("ip"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ip").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "vec_id", "ip", "rank")
-    )
+    e = load_embeddings(spark, sf_dir, "vec_id", "label", repartition=True)
+    return _topk(_score_pairs(e.crossJoin(F.broadcast(query_set(e))), "ip", V.dot))
 
 
 def mips_augment(e: DataFrame) -> DataFrame:
@@ -1935,11 +1770,8 @@ FROM scored WHERE cosine >= {_S13_TAU}
     ),
 )
 def s13_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return range_search(e, q)
+    e = load_embeddings(spark, sf_dir, "vec_id", "label", repartition=True)
+    return range_search(e, query_set(e))
 
 
 def range_search(
@@ -1947,23 +1779,17 @@ def range_search(
 ) -> DataFrame:
     """s13 core: all (query, corpus) pairs with rounded cosine ≥ tau —
     separated so tests can plant near-copies and replay brute force."""
-    return (
-        e.crossJoin(F.broadcast(q))  # |Q|-row broadcast, map-only scan
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= tau)
+    # |Q|-row broadcast, map-only scan
+    return _score_pairs(e.crossJoin(F.broadcast(q))).filter(
+        F.col("cosine") >= tau
     )
 
 
 # ---------------------------------------------------------------------------
-# S13B — IVF CELL-PRUNED RANGE SEARCH (s13's 100 TB serving path,
-# VERDICT r10 Next #5): s13's exact anchor scans the WHOLE corpus per
-# radius query — correct, but at 100 TB the serving path must skip the
-# cells that provably cannot contain a match. s13b reuses s2's IVF
+# S13B — IVF CELL-PRUNED RANGE SEARCH (s13's 100 TB serving path): s13's
+# exact anchor scans the WHOLE corpus per radius query — correct, but at
+# 100 TB the serving path must skip the cells that provably cannot
+# contain a match. s13b reuses s2's IVF
 # machinery (k-means cells, map-only Arrow assignment) plus one extra
 # per-cell statistic: the cell's ANGULAR RADIUS r_c = max over members
 # of angle(v, centroid_c). The spherical triangle inequality then gives
@@ -1974,7 +1800,7 @@ def range_search(
 # dwarfing the fround boundary width) is skipped with ZERO recall loss.
 # The pruning is exact, not heuristic: s13b registers against s13's own
 # full-match-set oracle and is set-equality-tested against brute force
-# (recall ≡ 1.0, trivially clearing the demanded ≥ 0.8 certificate).
+# (recall ≡ 1.0, trivially clearing a ≥ 0.8 recall bar).
 #
 # Plan shape at 100 TB: index build is s2's (one kernel pass assigning
 # cell + ccos, amortized across queries; `cell` becomes the storage
@@ -1991,46 +1817,6 @@ def range_search(
 # Ref parity anchor: same serving-layer predicate scan as s13
 # (src/api/sensor_api.py:356-380), with the index-backed access path.
 # ---------------------------------------------------------------------------
-def assign_cells_ccos(e: DataFrame, cent) -> DataFrame:
-    """assign_cells plus ``ccos`` = cosine(normalized row, assigned
-    centroid) — the per-row ingredient of the per-cell angular radius.
-    Same map-only Arrow kernel shape as assign_cells; zero-norm rows
-    normalize to themselves and score ccos = 0 (radius π/2 — maximally
-    conservative: their cell is never pruned on their account, and the
-    final exact filter drops them via the NULL-cosine guard)."""
-    import pandas as pd  # noqa: F401 — Arrow batch interface
-
-    np = _np()
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    bc = e.sparkSession.sparkContext.broadcast(cent)
-    out_schema = StructType(
-        list(e.schema.fields)
-        + [StructField("cell", LongType()), StructField("ccos", DoubleType())]
-    )
-
-    def kernel(batches):
-        c = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = _normalize_rows(
-                np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            )
-            sims = m @ c.T
-            pdf = pdf.copy()
-            pdf["cell"] = np.argmax(sims, axis=1)
-            pdf["ccos"] = np.max(sims, axis=1)
-            yield pdf
-
-    return e.mapInPandas(kernel, schema=out_schema)
-
-
 # float-slack margin for the cell bound: the final filter admits rows
 # down to cos ≈ τ − 5e-7 (fround's half-quantum), and the driver-side
 # arccos/cos round-trip carries ~1e-12 of libm error — 1e-6 dominates
@@ -2063,26 +1849,17 @@ def ivf_range_search(
     path — bit-identical rows to :func:`range_search` on any corpus
     (the bound proof in the header). `q` must carry (query_id, qv)."""
     np = _np()
-    spark = e.sparkSession
-    empty = spark.createDataFrame(
+    empty = e.sparkSession.createDataFrame(
         [], "query_id long, vec_id long, cosine double"
     )
-    qrows = q.collect()  # |Q|-bounded by construction (ANN query sets)
-    if not qrows:
+    index = _ivf_index(e, q, nlist, iters)
+    if index is None:
         return empty
-    e = track(e.persist())  # k-means + assignment both consume it
-    cent = kmeans_centroids(e, nlist=nlist, iters=iters)
-    if cent.shape[0] == 0:
-        return empty
+    qrows, cent, indexed = index
     # two consumers (radius aggregate + candidate scan) — persist, or
     # the kernel assignment pass runs twice
-    indexed = track(assign_cells_ccos(e, cent).persist())
-    min_ccos = np.ones(cent.shape[0])  # absent cell → radius 0 (empty,
-    # pruning it can drop no member)
-    for r in indexed.groupBy("cell").agg(
-        F.min("ccos").alias("m")
-    ).collect():  # |cells|-row aggregate, map-side partials
-        min_ccos[r.cell] = r.m
+    indexed = track(indexed.persist())
+    min_ccos = _min_ccos_array(cell_min_ccos(indexed).collect(), cent.shape[0])
     qn = _normalize_rows(
         np.asarray([r.qv for r in qrows], dtype=np.float64)
     )
@@ -2094,21 +1871,14 @@ def ivf_range_search(
     ]
     if not probe_rows:
         return empty
-    probes = spark.createDataFrame(
+    probes = e.sparkSession.createDataFrame(
         probe_rows, "query_id long, qv array<double>, cell long"
     )
-    return (
-        indexed.join(F.broadcast(probes), "cell")  # partition-pruned at
-        # scale: cell is the storage partition key
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # the IDENTICAL exact filter as s13 — pruning only ever
-            # removes whole cells the bound proves empty of matches
-            fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= tau)
+    # partition-pruned at scale (cell is the storage partition key); the
+    # IDENTICAL exact filter as s13 — pruning only ever removes whole
+    # cells the bound proves empty of matches
+    return _score_pairs(indexed.join(F.broadcast(probes), "cell")).filter(
+        F.col("cosine") >= tau
     )
 
 
@@ -2121,16 +1891,10 @@ def ivf_range_search(
     ),
 )
 def s13b_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # raw load, no repartition: the Arrow kernels want task count to
-    # track input splits (s2's rationale — Python worker spin-up costs
-    # more than a tiny corpus's parallelism buys)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_range_search(e, q)
+    # no repartition: the Arrow kernels want task count to track input
+    # splits (load_embeddings)
+    e = load_embeddings(spark, sf_dir, "vec_id")
+    return ivf_range_search(e, query_set(e))
 
 
 # ---------------------------------------------------------------------------
@@ -2267,6 +2031,34 @@ def s14_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _s14_query(e: DataFrame) -> DataFrame:
+    """(qv): the fixed s14/s15/s16 query embedding, corpus row _S14_QVEC."""
+    return e.filter(F.col("vec_id") == _S14_QVEC).select(F.col("v").alias("qv"))
+
+
+def _top_c(scored: DataFrame, by: str = "cosine") -> DataFrame:
+    """The top-C rows of a single-query (doc_id, ``by``) list, ``by``
+    DESC with NULLs last, doc_id ASC — a distributed
+    TakeOrderedAndProject, never a global sort of the corpus."""
+    return scored.orderBy(
+        F.col(by).desc_nulls_last(), F.col("doc_id").asc()
+    ).limit(_S14_C)
+
+
+def _rank_c(df: DataFrame, by: str, rank: str) -> DataFrame:
+    """Adds ``rank`` (int) = row_number by ``by`` DESC, doc_id ASC — an
+    unpartitioned window, run only over a ≤C (channel) or ≤2C (fused)
+    row list."""
+    w = Window.orderBy(F.col(by).desc_nulls_last(), F.col("doc_id").asc())
+    return df.withColumn(rank, F.row_number().over(w).cast("int"))
+
+
+def _sem_channel(scored: DataFrame) -> DataFrame:
+    """(doc_id, sem_rank): the ranked top-C of (doc_id, cosine)
+    candidates."""
+    return _rank_c(_top_c(scored), "cosine", "sem_rank").drop("cosine")
+
+
 def _s14_lex_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lex_rank): t18's certified BM25 pipeline, depth C; the
     rank window runs over the ≤C TakeOrderedAndProject survivors only."""
@@ -2274,34 +2066,18 @@ def _s14_lex_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import bm25_topk
 
     lex = bm25_topk(_docs_par(spark, sf_dir), terms=_S14_TERMS, topn=_S14_C)
-    wl = Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-    return (
-        lex.select("doc_id", "bm25")
-        .withColumn("lex_rank", F.row_number().over(wl).cast("int"))
-        .drop("bm25")
-    )
+    return _rank_c(lex.select("doc_id", "bm25"), "bm25", "lex_rank").drop("bm25")
 
 
 def _s14_sem_channel_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sem_rank): s1's exact map-only broadcast scan, depth C —
     the registered form's semantic channel (the anchor)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
-    qv = e.filter(F.col("vec_id") == _S14_QVEC).select(F.col("v").alias("qv"))
-    sem_top = (
-        e.crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
+    e = load_embeddings(spark, sf_dir, "vec_id")
+    return _sem_channel(
+        e.crossJoin(F.broadcast(_s14_query(e))).select(
+            F.col("vec_id").alias("doc_id"), _score().alias("cosine")
         )
-        .orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
-        .limit(_S14_C)  # TakeOrderedAndProject — distributed top-C
     )
-    ws = Window.orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
-    return sem_top.withColumn(
-        "sem_rank", F.row_number().over(ws).cast("int")
-    ).drop("cosine")
 
 
 def rrf_fuse(
@@ -2324,47 +2100,14 @@ def rrf_fuse(
     scored = fused.select(
         "doc_id", "lex_rank", "sem_rank", fround(rrf, _R).alias("rrf_score")
     )
-    wf = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-    return scored.withColumn(
-        "fused_rank", F.row_number().over(wf).cast("int")
-    ).filter(F.col("fused_rank") <= topn)
-
-
-def hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s14's 100 TB serving form (library; the registered s14 is the
-    exact anchor): the semantic channel runs through s2's IVF
-    partition-pruned probe instead of the full-corpus scan — sublinear
-    reads at equal fusion semantics. IVF recall < 1 on cell-boundary
-    neighbors means the semantic candidate SET may differ from the
-    exact channel's (the documented ANN trade, property-tested against
-    the anchor); every doc both channels agree on fuses to the
-    identical score, because rrf_fuse and the rank tiebreaks are
-    shared. Stays library-only by design: the REGISTERED index-backed
-    form is s16_hybrid_rrf_ivf below, whose exact pruning bound makes
-    it oracle-checkable; this recall<1 probe is the cheaper serving
-    path when a fixed read budget beats guaranteed exactness."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
+    return _rank_c(scored, "rrf_score", "fused_rank").filter(
+        F.col("fused_rank") <= topn
     )
-    # query_id -1 is NOT a corpus id, so ivf_probe_search's self-exclusion
-    # filter never fires and the query's own corpus row stays eligible —
-    # aligning the channel with the exact anchor, which includes it
-    q = e.filter(F.col("vec_id") == _S14_QVEC).select(
-        F.lit(-1).cast("long").alias("query_id"), F.col("v").alias("qv")
-    )
-    semr = (
-        ivf_topk(e, q, k=_S14_C)
-        .select(F.col("vec_id").alias("doc_id"), F.col("rank"))
-        .withColumn("sem_rank", F.col("rank").cast("int"))
-        .drop("rank")
-    )
-    return rrf_fuse(_s14_lex_channel(spark, sf_dir), semr)
 
 
 # ---------------------------------------------------------------------------
-# S16 — HYBRID RRF THROUGH THE EXACT-BOUND IVF ACCESS PATH (registered
-# round 13; r14 window lead). The semantic channel reads the corpus
-# through IVF cell pruning like hybrid_rrf_ivf, but with s13b's angular
+# S16 — HYBRID RRF THROUGH THE EXACT-BOUND IVF ACCESS PATH. The semantic
+# channel reads the corpus through IVF cell pruning, with s13b's angular
 # bound making the pruned top-C PROVABLY equal to the exact channel's:
 #
 #   phase 1 — probe the query's nprobe closest cells; the candidate
@@ -2412,23 +2155,19 @@ def _s14_sem_channel_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sem_rank): the exact top-C through the cell-pruned access
     path — row-identical to _s14_sem_channel_exact by the bound above."""
     np = _np()
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
-    e = track(e.persist())  # k-means + cell assignment + query lookup
-    qv = e.filter(F.col("vec_id") == _S14_QVEC).select(F.col("v").alias("qv"))
-    cent = kmeans_centroids(e, nlist=_S16_NLIST, iters=1)
-    if cent.shape[0] == 0:  # empty corpus → empty channel, stable schema
+    e = load_embeddings(spark, sf_dir, "vec_id")
+    qv = _s14_query(e)
+    index = _ivf_index(e, qv, _S16_NLIST, 1)
+    if index is None:
+        # empty corpus, or a missing query embedding: an empty semantic
+        # channel, so the fused output degrades to lexical-only EXACTLY
+        # like s14's exact channel (and the shared oracle, whose semsc
+        # CTE goes empty) — raising here would diverge from the certified
+        # degradation path
         return spark.createDataFrame([], "doc_id long, sem_rank int")
+    qrows, cent, indexed = index
     # two consumers (radius aggregate + both phase scans)
-    indexed = track(assign_cells_ccos(e, cent).persist())
-    qrows = qv.collect()  # 1-row by construction (vec_id is unique)
-    if not qrows:
-        # missing query embedding → empty semantic channel, so the fused
-        # output degrades to lexical-only EXACTLY like s14's exact
-        # channel (and the shared oracle, whose semsc CTE goes empty) —
-        # raising here would diverge from the certified degradation path
-        return spark.createDataFrame([], "doc_id long, sem_rank int")
+    indexed = track(indexed.persist())
     qn = _normalize_rows(np.asarray([qrows[0].qv], dtype=np.float64))
     order = np.argsort(-(qn @ cent.T), axis=1, kind="stable")[0]
     probe1 = [int(c) for c in order[:_S16_NPROBE]]
@@ -2439,47 +2178,35 @@ def _s14_sem_channel_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             indexed.filter(F.col("cell").isin(cells))
             .crossJoin(F.broadcast(qv))
-            .select(
-                F.col("vec_id").alias("doc_id"),
-                fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("cosine"),
-            )
+            .select(F.col("vec_id").alias("doc_id"), _score().alias("cosine"))
         )
 
-    def _topc(scored: DataFrame) -> DataFrame:
-        # desc_nulls_last stated explicitly rather than relying on
-        # Spark's desc default (which is already NULLS LAST — this is
-        # plan-identical, not a behavior change): the phase-1
-        # exactness gate below reads the C-th cosine and relies on
-        # any NULL cosine sorting after every real value
-        # (ADVICE r13 #2 — state the invariant in the sort itself)
-        return scored.orderBy(
-            F.col("cosine").desc_nulls_last(), F.col("doc_id").asc()
-        ).limit(_S14_C)  # TakeOrderedAndProject — distributed top-C
-
-    # r18 optimization (guide §1.2/§5): phase 1's scored cells persist and
-    # feed phase 2 directly, so the cosine fold runs ONCE per probed cell;
-    # and the phase-1 top-C + the per-cell radius aggregate — two
-    # independent subtrees both needed before phase 2 — ride ONE tagged
-    # union action (two sequential driver barriers → one job whose
-    # branches schedule concurrently).
+    # phase 1's scored cells persist and feed phase 2 directly, so the
+    # cosine fold runs ONCE per probed cell; and the phase-1 top-C + the
+    # per-cell radius aggregate — two independent subtrees both needed
+    # before phase 2 — ride ONE tagged union action (two sequential
+    # driver barriers → one job whose branches schedule concurrently).
+    # The phase-1 exactness gate below reads the C-th cosine and relies
+    # on any NULL cosine sorting after every real value (_top_c's
+    # NULLS LAST).
     scored1 = track(_cell_scored(probe1).persist())
     merged_rows = (
-        _topc(scored1)
+        _top_c(scored1)
         .select(
             F.lit(0).alias("t"),
             F.col("doc_id").alias("k"),
             F.col("cosine").alias("val"),
         )
         .unionAll(
-            indexed.groupBy("cell")
-            .agg(F.min("ccos").alias("m"))  # |cells| rows, map-side partials
-            .select(F.lit(1).alias("t"), F.col("cell").alias("k"),
-                    F.col("m").alias("val"))
+            cell_min_ccos(indexed).select(
+                F.lit(1).alias("t"), F.col("cell").alias("k"),
+                F.col("m").alias("val"),
+            )
         )
         .collect()
     )
     # re-establish phase-1 candidate order driver-side (≤C rows): cosine
-    # DESC with NULLs last, doc_id ASC — the same total order _topc states
+    # DESC with NULLs last, doc_id ASC — the same total order _top_c states
     cand1 = sorted(
         (r for r in merged_rows if r.t == 0),
         key=lambda r: _desc_nulls_last_key(r.val, r.k),
@@ -2489,10 +2216,9 @@ def _s14_sem_channel_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         tau = last - _S13B_TAU_MARGIN
     else:
         tau = -2.0  # keep every cell — exact by trivial inclusion
-    min_ccos = np.ones(cent.shape[0])  # absent cell → radius 0
-    for r in merged_rows:
-        if r.t == 1:
-            min_ccos[r.k] = r.val
+    min_ccos = _min_ccos_array(
+        ((r.k, r.val) for r in merged_rows if r.t == 1), cent.shape[0]
+    )
     keep = _range_probe_cells(cent, min_ccos, qn, tau)[0]
     cells = [int(c) for c in np.nonzero(keep)[0]]
     # phase 2 scans ONLY the admitted cells phase 1 did not already score;
@@ -2504,13 +2230,7 @@ def _s14_sem_channel_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe1_set = set(probe1)
     rest = [c for c in cells if c not in probe1_set]
     sem_scored = scored1.unionAll(_cell_scored(rest)) if rest else scored1
-    sem_top = _topc(sem_scored)
-    ws = Window.orderBy(
-        F.col("cosine").desc_nulls_last(), F.col("doc_id").asc()
-    )
-    return sem_top.withColumn(
-        "sem_rank", F.row_number().over(ws).cast("int")  # over ≤C rows
-    ).drop("cosine")
+    return _sem_channel(sem_scored)
 
 
 @register(
@@ -2622,19 +2342,12 @@ def s15_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (registered-shape signature; oracle = _S15_ORACLE)."""
     import math
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
-    qv = e.filter(F.col("vec_id") == _S14_QVEC).select(F.col("v").alias("qv"))
-    cand = (
-        e.crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            fround(V.cosine(F.col("qv"), F.col("v")), _R).alias("rel"),
-            "v",
-        )
-        .orderBy(F.col("rel").desc(), F.col("doc_id").asc())
-        .limit(_S14_C)  # TakeOrderedAndProject — distributed top-C
+    e = load_embeddings(spark, sf_dir, "vec_id")
+    cand = _top_c(
+        e.crossJoin(F.broadcast(_s14_query(e))).select(
+            F.col("vec_id").alias("doc_id"), _score().alias("rel"), "v"
+        ),
+        by="rel",
     )
     cand = track(cand.persist())  # feeds the pair join twice + collect
     pair = (
@@ -2643,9 +2356,7 @@ def s15_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("da"),
             F.col("b.doc_id").alias("db"),
-            fround(
-                V.cosine(F.col("a.v"), F.col("b.v")), _R
-            ).alias("sim"),
+            _score(a="a.v", b="b.v").alias("sim"),
         )
     )
     # bounded collects: ≤C candidates and ≤C² rounded sims (C = 50)

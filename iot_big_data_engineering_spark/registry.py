@@ -35,27 +35,51 @@ class Query:
 _REGISTRY: dict[str, Query] = {}
 
 
+def _sql_code_mask(sql: str) -> list[bool]:
+    """``mask[i]`` is True where ``sql[i]`` is SQL code: outside
+    single-quoted string literals (a doubled '' stays inside) and outside
+    ``--`` comments, which run to the end of the line. An apostrophe in a
+    comment therefore opens no literal."""
+    mask = [True] * len(sql)
+    i, n = 0, len(sql)
+    while i < n:
+        if sql[i] == "'":
+            j = i + 1
+            while j < n and (sql[j] != "'" or sql.startswith("''", j)):
+                j += 2 if sql[j] == "'" else 1
+            end = min(j + 1, n)
+        elif sql.startswith("--", i):
+            j = sql.find("\n", i)
+            end = n if j == -1 else j
+        else:
+            i += 1
+            continue
+        mask[i:end] = [False] * (end - i)
+        i = end
+    return mask
+
+
 def _rewrite_rounds(sql: str) -> str:
     """Rewrite every ``round(expr, n)`` in oracle SQL into the shared
     floor-based formula (functions/rounding.py): Spark's round() rounds the
     double's shortest decimal string while DuckDB rounds the binary value,
     so they disagree on boundary values like 0.5183125; floor(x·10ⁿ+0.5)/10ⁿ
     evaluated in double is bit-identical across engines. The Spark side
-    uses functions.rounding.fround, the exact same arithmetic."""
-    def _in_string_literal(pos: int) -> bool:
-        # a match is inside a single-quoted SQL string iff an odd number
-        # of quotes precede it ('' escapes pair up and keep parity even)
-        return sql.count("'", 0, pos) % 2 == 1
+    uses functions.rounding.fround, the exact same arithmetic.
 
+    Only code is rewritten: a ``round(`` inside a string literal or a
+    ``--`` comment stays verbatim, and the argument scan counts only
+    parentheses and commas that are code (_sql_code_mask)."""
+    code = _sql_code_mask(sql)
     out = []
     i = 0
     low = sql.lower()
     while True:
         j = low.find("round(", i)
         # skip matches inside identifiers (e.g. "around(") — require a
-        # non-word char before — and inside quoted string literals
-        while j > 0 and (
-            sql[j - 1].isalnum() or sql[j - 1] == "_" or _in_string_literal(j)
+        # non-word char before — and inside literals and comments
+        while j != -1 and (
+            not code[j] or (j > 0 and (sql[j - 1].isalnum() or sql[j - 1] == "_"))
         ):
             j = low.find("round(", j + 1)
         if j == -1:
@@ -67,7 +91,7 @@ def _rewrite_rounds(sql: str) -> str:
         start = k
         last_comma = -1
         while True:
-            ch = sql[k]
+            ch = sql[k] if code[k] else ""
             if ch == "(":
                 depth += 1
             elif ch == ")":

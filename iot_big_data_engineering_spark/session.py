@@ -16,15 +16,19 @@ Scale notes (100 TB design):
   that is ~800k input splits, the right granularity for parquet scans.
 - ``spark.driver.memory`` defaults to half the host's physical memory;
   ``SPARK_DRIVER_MEMORY`` (or ``extra_conf``) overrides it.
+- The session ships this package to the Python workers (``_ship_package``),
+  so the Arrow kernels run wherever the workers start.
 """
 
 from __future__ import annotations
 
 import os
+import zipfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def _half_host_memory() -> str:
@@ -34,6 +38,41 @@ def _half_host_memory() -> str:
     and whatever else shares the host."""
     host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{host // 2 // 2**20}m"
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Put this package on the Python workers' import path, once per
+    SparkContext. The Arrow kernels (mapInPandas/applyInPandas) pickle
+    the module-level helpers they call by reference, so a worker has to
+    import the package; one that starts outside the repo root, or on
+    another host, fails with ModuleNotFoundError otherwise.
+
+    The package's .py files are zipped into a directory under the
+    context's SparkFiles root (Spark deletes it at shutdown) and added
+    with ``addPyFile``: every executor fetches the zip and puts it on its
+    workers' ``sys.path``, after the worker's own working directory, so a
+    worker started in the repo root still imports the checkout itself.
+    ``addFile`` also fetches the zip into the driver's root, and that
+    copy marks a context that already has it (a plain ``os.path``
+    check; listing the context's files through the JVM costs ~0.4 s on
+    a new context)."""
+    from pyspark import SparkFiles
+
+    root = SparkFiles.getRootDirectory()
+    name = os.path.basename(_PKG_DIR) + ".zip"
+    if os.path.exists(os.path.join(root, name)):
+        return
+    out_dir = os.path.join(root, "_package")
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, name)
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for base, dirs, files in os.walk(_PKG_DIR):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    src = os.path.join(base, f)
+                    z.write(src, os.path.relpath(src, os.path.dirname(_PKG_DIR)))
+    spark.sparkContext.addPyFile(path)
 
 
 def get_spark(
@@ -70,4 +109,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark

@@ -13,12 +13,12 @@ from .conftest import SF_SMOKE
 
 def test_ivf_on_tiny_and_empty_corpus(spark):
     from iot_big_data_engineering_spark.operators.similarity import (
-        _emb,
         ivf_topk,
         kmeans_centroids,
+        load_embeddings,
     )
 
-    e = _emb(spark, SF_SMOKE)
+    e = load_embeddings(spark, SF_SMOKE, "vec_id", "label", repartition=True)
     tiny = e.filter(F.col("vec_id") < 8)  # fewer rows than nlist=16
     q = e.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -279,11 +279,11 @@ def test_bpe_tokenizer_chunking(spark):
 
 def test_semantic_dedup_on_empty_and_tiny_corpus(spark):
     from iot_big_data_engineering_spark.operators.similarity import (
-        _emb,
+        load_embeddings,
         semantic_dedup_dropped,
     )
 
-    e = _emb(spark, SF_SMOKE).select("vec_id", "v")
+    e = load_embeddings(spark, SF_SMOKE, "vec_id", repartition=True)
     empty = e.filter(F.col("vec_id") < 0)
     res = semantic_dedup_dropped(empty)
     assert res.count() == 0

@@ -756,12 +756,12 @@ def test_s10_codes_are_narrow(spark):
     premise)."""
     from iot_big_data_engineering_spark.operators.similarity import (
         _PQ_M,
-        _emb,
+        load_embeddings,
         pq_encode,
         pq_train_codebooks,
     )
 
-    e = _emb(spark, SF_SMOKE)
+    e = load_embeddings(spark, SF_SMOKE, "vec_id", "label", repartition=True)
     books = pq_train_codebooks(e)
     codes = pq_encode(e, books)
     assert [f.name for f in codes.schema.fields] == ["vec_id", "codes"]

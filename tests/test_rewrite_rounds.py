@@ -38,6 +38,39 @@ def test_basic_rewrite_shapes():
         _rewrite_rounds("SELECT 'lit' AS s, round(x, 2) AS r")
         == "SELECT 'lit' AS s, (floor((x) * 100.0 + 0.5) / 100.0) AS r"
     )
+    # an apostrophe in a -- comment opens no literal: the round() on the
+    # next line is code and rewrites
+    assert (
+        _rewrite_rounds("-- Spark's\nround(x, 2)")
+        == "-- Spark's\n(floor((x) * 100.0 + 0.5) / 100.0)"
+    )
+    # ...and a round() inside a comment stays verbatim
+    assert _rewrite_rounds("-- was round(x, 2)\nx") == "-- was round(x, 2)\nx"
+
+
+def test_no_registered_oracle_keeps_a_native_scaled_round():
+    """After registration no oracle may keep a two-argument ``round(``
+    in code: it would run DuckDB's native half-away-from-zero round
+    against fround on the Spark side. Literals and ``--`` comments are
+    blanked by a regex independent of the rewriter's own scanner, then
+    every remaining ``round(`` must be single-argument."""
+    import re
+
+    from iot_big_data_engineering_spark.registry import oracle_sql
+
+    noise = re.compile(r"'(?:[^']|'')*'|--[^\n]*")
+    offenders = []
+    for name, sql in oracle_sql().items():
+        code = noise.sub(lambda m: " " * len(m.group()), sql)
+        for m in re.finditer(r"(?<![\w])round\(", code, re.IGNORECASE):
+            depth, k = 0, m.end()
+            while not (code[k] == ")" and depth == 0):
+                if code[k] == "," and depth == 0:
+                    offenders.append(name)
+                    break
+                depth += {"(": 1, ")": -1}.get(code[k], 0)
+                k += 1
+    assert offenders == [], offenders
 
 
 @given(

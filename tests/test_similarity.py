@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from iot_big_data_engineering_spark.operators.similarity import (
-    _emb,
-    ivf_search,
+    load_embeddings,
     numpy_topk,
+    query_set,
     s1_knn_bruteforce,
     s2_knn_ivf,
 )
@@ -18,11 +18,16 @@ from iot_big_data_engineering_spark.operators.similarity import (
 from .conftest import SF_SMOKE
 
 
+def _corpus(spark):
+    """(vec_id, label, v) at SF_SMOKE, spread over the session like s1's."""
+    return load_embeddings(spark, SF_SMOKE, "vec_id", "label", repartition=True)
+
+
 def test_numpy_kernel_matches_expression_bruteforce(spark):
     exact = {
         (r.query_id, r.vec_id) for r in s1_knn_bruteforce(spark, SF_SMOKE).collect()
     }
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     queries = [
         (r.vec_id, r.v) for r in e.filter(F.col("vec_id") < 5).collect()
     ]
@@ -85,23 +90,24 @@ def test_ivf_planted_duplicate_recall(spark):
     the same k-means cell as its query and return it as the #1 hit."""
     from iot_big_data_engineering_spark.operators.similarity import ivf_topk
 
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     planted = e.filter(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         "label",
         F.transform("v", lambda x: x * 2.0).alias("v"),
     )
     corpus = e.unionAll(planted)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = query_set(e)
     top = ivf_topk(corpus, q)
     rank1 = {r.query_id: r.vec_id for r in top.collect() if r.rank == 1}
     assert rank1 == {i: i + 100000 for i in range(5)}, rank1
 
 
 def test_ivf_runs_on_raw_corpus(spark):
-    rows = ivf_search(spark, SF_SMOKE).collect()
+    from iot_big_data_engineering_spark.operators.similarity import ivf_topk
+
+    e = load_embeddings(spark, SF_SMOKE, "vec_id", "label")
+    rows = ivf_topk(e, query_set(e)).collect()
     by_query = {}
     for r in rows:
         by_query.setdefault(r.query_id, []).append(r)
@@ -146,16 +152,14 @@ def test_lsh_planted_duplicate_recall(spark):
     the #1 hit."""
     from iot_big_data_engineering_spark.operators.similarity import lsh_topk
 
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     planted = e.filter(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         "label",
         F.transform("v", lambda x: x * 2.0).alias("v"),
     )
     corpus = e.unionAll(planted)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = query_set(e)
     top = lsh_topk(corpus, q)
     rank1 = {r.query_id: r.vec_id for r in top.collect() if r.rank == 1}
     assert rank1 == {i: i + 100000 for i in range(5)}, rank1
@@ -171,15 +175,16 @@ def test_lsh_runs_on_raw_corpus(spark):
         _bucket_matrix,
         _normalize_rows,
         lsh_hyperplanes,
-        lsh_search,
+        lsh_topk,
     )
 
-    rows = lsh_search(spark, SF_SMOKE).collect()
+    raw = load_embeddings(spark, SF_SMOKE, "vec_id", "label")
+    rows = lsh_topk(raw, query_set(raw)).collect()
     assert rows, "64-bucket × 4-table LSH on a 500-vector corpus found nothing"
     by_query = {}
     for r in rows:
         by_query.setdefault(r.query_id, []).append(r)
-    e = {r.vec_id: r.v for r in _emb(spark, SF_SMOKE).collect()}
+    e = {r.vec_id: r.v for r in _corpus(spark).collect()}
     ids = sorted(e)
     m = _normalize_rows(np.asarray([e[i] for i in ids], dtype=np.float64))
     buckets = {i: b for i, b in zip(ids, _bucket_matrix(m, lsh_hyperplanes(64)))}
@@ -198,14 +203,10 @@ def test_lsh_runs_on_raw_corpus(spark):
 def test_lsh_empty_query_and_corpus(spark):
     from iot_big_data_engineering_spark.operators.similarity import lsh_topk
 
-    e = _emb(spark, SF_SMOKE)
-    no_q = e.filter(F.col("vec_id") < 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    e = _corpus(spark)
+    no_q = query_set(e.filter(F.col("vec_id") < 0))
     assert lsh_topk(e, no_q).count() == 0
-    some_q = e.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    some_q = query_set(e.filter(F.col("vec_id") < 2))
     assert lsh_topk(e.filter(F.col("vec_id") < 0), some_q).count() == 0
 
 
@@ -243,13 +244,12 @@ def test_d9_near_duplicate_recall_vs_exact(spark):
 
     from iot_big_data_engineering_spark.operators.similarity import (
         _PLANT_OFFSET,
-        _emb,
         semantic_dedup_dropped,
     )
 
     from .conftest import SF_SMOKE
 
-    e = _emb(spark, SF_SMOKE).select("vec_id", "v")
+    e = _corpus(spark).select("vec_id", "v")
     rows = e.filter(F.col("vec_id") < 50).collect()
     planted = []
     for r in rows:
@@ -283,14 +283,16 @@ def test_perturbed_copies_deterministic_and_near(spark):
     guarantee again)."""
     import numpy as np
 
+    from iot_big_data_engineering_spark.operators import similarity as S
     from iot_big_data_engineering_spark.operators.similarity import (
         _PERTURB_OFFSET,
-        perturbed_copies,
+        perturbed_plants,
     )
 
-    e = _emb(spark, SF_SMOKE).select("vec_id", "v")
-    a = {r.vec_id: r.v for r in perturbed_copies(e, 5).collect()}
-    b = {r.vec_id: r.v for r in perturbed_copies(e, 5).collect()}
+    e = _corpus(spark).select("vec_id", "v")
+    a = {r.vec_id: r.v for r in perturbed_plants(spark, SF_SMOKE, 5).collect()}
+    S._PLANT_MEMO.clear()  # the second call re-reads the plant rows
+    b = {r.vec_id: r.v for r in perturbed_plants(spark, SF_SMOKE, 5).collect()}
     assert a == b, "perturbation is not deterministic"
     orig = {r.vec_id: r.v for r in e.filter(F.col("vec_id") < 5).collect()}
     for vid, pv in a.items():
@@ -309,7 +311,7 @@ def test_s7_filter_certificate_not_vacuous(spark):
     while the registered filtered form returns all-TRUE."""
     from iot_big_data_engineering_spark.operators.similarity import (
         N_QUERIES,
-        _plant_labels,
+        _plant_rows,
         assign_cells,
         ivf_probe_search,
         kmeans_centroids,
@@ -320,10 +322,12 @@ def test_s7_filter_certificate_not_vacuous(spark):
     assert len(rows) == N_QUERIES
     assert all(r.planted_dup_found and r.results_respect_filter for r in rows)
 
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     cent = kmeans_centroids(e)
     indexed = assign_cells(e, cent)
-    labels = _plant_labels(spark, SF_SMOKE, N_QUERIES)
+    labels = {
+        vid: lab for vid, _, lab in _plant_rows(spark, SF_SMOKE, N_QUERIES)
+    }
     q = spark.createDataFrame(
         [
             (int(r.vec_id), list(r.v), labels[int(r.vec_id)])
@@ -350,8 +354,8 @@ def test_s8_delta_add_certificate_not_vacuous(spark):
     from iot_big_data_engineering_spark.operators.similarity import (
         _S8_N_DELTA,
         N_QUERIES,
-        _certify_planted,
         assign_cells,
+        certify_planted,
         ivf_probe_search,
         kmeans_centroids,
         plant_queries,
@@ -362,11 +366,11 @@ def test_s8_delta_add_certificate_not_vacuous(spark):
     assert len(rows) == N_QUERIES
     assert all(r.planted_dup_found for r in rows)
 
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     base = e.filter(F.col("vec_id") >= _S8_N_DELTA)
     cent = kmeans_centroids(base)
     q = plant_queries(spark, SF_SMOKE, N_QUERIES)
-    base_only = _certify_planted(
+    base_only = certify_planted(
         ivf_probe_search(assign_cells(base, cent), cent, q), q
     ).collect()
     assert not any(r.planted_dup_found for r in base_only)
@@ -419,7 +423,6 @@ def test_pq_encode_matches_driver_reference(spark):
     import numpy as np
 
     from iot_big_data_engineering_spark.operators.similarity import (
-        _emb,
         _normalize_rows,
         pq_encode,
         pq_train_codebooks,
@@ -427,7 +430,7 @@ def test_pq_encode_matches_driver_reference(spark):
 
     from .conftest import SF_SMOKE
 
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     books = pq_train_codebooks(e)
     m, ks, sub = books.shape
     got = {r.vec_id: r.codes for r in pq_encode(e, books).collect()}
@@ -510,14 +513,10 @@ def test_s11_doomed_twin_surfaces_without_tombstone_filter(spark):
         plant_queries,
         planted_exact_copies,
     )
-    from iot_big_data_engineering_spark.functions import vectors as V
-    from iot_big_data_engineering_spark.sources.tables import load_table
 
     from .conftest import SF_SMOKE
 
-    e = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", V.to_double("embedding").alias("v")
-    )
+    e = load_embeddings(spark, SF_SMOKE, "vec_id")
     corpus = (
         e.unionByName(planted_exact_copies(spark, SF_SMOKE, N_QUERIES))
         .unionByName(
@@ -726,7 +725,7 @@ def test_s13_range_search_matches_numpy_bruteforce(spark):
             acc += x * y
         return acc
 
-    e = {r.vec_id: list(r.v) for r in _emb(spark, SF_SMOKE).collect()}
+    e = {r.vec_id: list(r.v) for r in _corpus(spark).collect()}
     expect = set()
     for qid in range(5):
         qv = e[qid]
@@ -755,16 +754,14 @@ def test_s13_planted_copy_found_self_excluded(spark):
 
     from .conftest import SF_SMOKE
 
-    e = _emb(spark, SF_SMOKE)
+    e = _corpus(spark)
     planted = e.filter(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         "label",
         F.transform("v", lambda x: x * 2.0).alias("v"),
     )
     corpus = e.unionAll(planted)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = query_set(e)
     rows = range_search(corpus, q).collect()
     by_q = {}
     for r in rows:
@@ -871,15 +868,12 @@ def test_s13b_ivf_range_equals_bruteforce(spark):
     bit-identical match set as s13's brute force on the real corpus —
     recall ≡ 1.0, trivially clearing the demanded ≥ 0.8 certificate."""
     from iot_big_data_engineering_spark.operators.similarity import (
-        _emb,
         ivf_range_search,
         range_search,
     )
 
-    e = _emb(spark, SF_SMOKE).select("vec_id", "v")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    e = _corpus(spark).select("vec_id", "v")
+    q = query_set(e)
     exact = {
         (r.query_id, r.vec_id, r.cosine)
         for r in range_search(e, q).collect()
@@ -921,7 +915,7 @@ def test_s13b_clustered_corpus_prunes_and_stays_exact(spark):
     from iot_big_data_engineering_spark.operators.similarity import (
         _normalize_rows,
         _range_probe_cells,
-        assign_cells_ccos,
+        assign_cells,
         ivf_range_search,
         kmeans_centroids,
         range_search,
@@ -953,7 +947,7 @@ def test_s13b_clustered_corpus_prunes_and_stays_exact(spark):
 
     # replay probe selection to assert real pruning happened
     cent = kmeans_centroids(e, nlist=8, iters=2)
-    indexed = assign_cells_ccos(e, cent)
+    indexed = assign_cells(e, cent)
     min_ccos = np.ones(cent.shape[0])
     for r in indexed.groupBy("cell").agg(F.min("ccos").alias("m")).collect():
         min_ccos[r.cell] = r.m
@@ -1211,55 +1205,6 @@ def test_s14_rrf_arithmetic_exhaustive_cross_engine():
         assert float(dd) == math.floor(d * 1e6 + 0.5) / 1e6, (r1, r2, dd)
 
 
-def test_hybrid_rrf_ivf_library_form(spark):
-    """The recall<1 fixed-read-budget serving twin of s14 (library by
-    design; the registered index-backed form is s16, whose exact bound
-    is oracle-checkable): the semantic channel runs through the IVF
-    probe. Anchored properties — the shared lexical channel is
-    bit-identical to the registered s14's; the IVF channel's #1 is the
-    query's own corpus row (cell self-routing, the s2 planted-copy
-    property); within the IVF candidate set the relative order equals
-    the exact anchor's (the rerank is exact); the fused score is the
-    shared RRF formula; and the whole surface is run-to-run
-    deterministic."""
-    from iot_big_data_engineering_spark.operators.similarity import (
-        _S14_K,
-        _S14_QVEC,
-        hybrid_rrf_ivf,
-        s14_hybrid_rrf,
-    )
-
-    rows = hybrid_rrf_ivf(spark, SF_SMOKE).collect()
-    again = hybrid_rrf_ivf(spark, SF_SMOKE).collect()
-    key = lambda r: (r.doc_id, r.lex_rank, r.sem_rank, r.rrf_score, r.fused_rank)
-    assert sorted(map(key, rows)) == sorted(map(key, again))
-
-    anchor = {r.doc_id: r for r in s14_hybrid_rrf(spark, SF_SMOKE).collect()}
-    sem1 = [r for r in rows if r.sem_rank == 1]
-    assert sem1 and sem1[0].doc_id == _S14_QVEC  # self-routing
-    for r in rows:
-        expect = (1.0 / (_S14_K + r.lex_rank) if r.lex_rank else 0.0) + (
-            1.0 / (_S14_K + r.sem_rank) if r.sem_rank else 0.0
-        )
-        assert abs(r.rrf_score - expect) < 5.1e-7, r
-        # the lexical channel is the SAME pipeline: identical rank wherever
-        # the anchor fused the same doc
-        if r.doc_id in anchor and anchor[r.doc_id].lex_rank is not None:
-            assert r.lex_rank == anchor[r.doc_id].lex_rank, r
-    # within the IVF candidate set the order matches the exact anchor's:
-    # docs ranked by BOTH sem channels keep their relative order
-    both = [
-        (r.sem_rank, anchor[r.doc_id].sem_rank)
-        for r in rows
-        if r.sem_rank is not None
-        and r.doc_id in anchor
-        and anchor[r.doc_id].sem_rank is not None
-    ]
-    both.sort()
-    exact_orders = [e for _, e in both]
-    assert exact_orders == sorted(exact_orders), both
-
-
 def test_s15_mmr_matches_generated_oracle(spark):
     """Spark vs the generated unrolled-CTE DuckDB oracle, value-exact,
     through the library function and the un-rewritten oracle."""
@@ -1404,3 +1349,66 @@ def test_s16_driver_sort_key_follows_spark_order(spark):
     ]
     assert got == want
     assert want[:3] == [3, 7, 4]  # non-vacuous: NaN ahead of +Inf
+
+
+def test_vector_search_steps_live_only_in_their_helpers():
+    """Each vector-search step has one definition in similarity.py: the
+    rank windows (``row_number``) live only in the per-query ``_topk``
+    and the single-query ``_rank_c``; comparisons against the plant
+    offsets live only in the certificate builder ``certify_planted``;
+    every cosine is computed through ``_score``; and the package reads
+    the embedding column in one place, ``load_embeddings`` (plus s5's
+    posexplode read)."""
+    import ast
+    from pathlib import Path
+
+    import iot_big_data_engineering_spark as pkg
+
+    def callee(call):
+        f = call.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    root = Path(pkg.__file__).parent
+    rank_sites, offset_sites, cosine_sites, readers = [], [], [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+
+        def owner(node):  # the outermost def around node
+            inside = [f for f in funcs if f.lineno <= node.lineno <= f.end_lineno]
+            return min(inside, key=lambda f: f.lineno, default=None)
+
+        def where(node):
+            fn = owner(node)
+            return (rel, fn and fn.name)
+
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and callee(node) == "to_double"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "embedding"
+            ):
+                readers.append(where(node))
+            if rel != "operators/similarity.py":
+                continue
+            if isinstance(node, ast.Attribute) and node.attr == "row_number":
+                rank_sites.append(where(node))
+            elif isinstance(node, ast.Compare) and any(
+                isinstance(n, ast.Name)
+                and n.id in ("_PLANT_OFFSET", "_PERTURB_OFFSET")
+                for n in ast.walk(node)
+            ):
+                offset_sites.append(where(node))
+            elif isinstance(node, ast.Call) and callee(node) == "cosine":
+                cosine_sites.append(where(node))
+    sim = "operators/similarity.py"
+    assert sorted(set(rank_sites)) == [(sim, "_rank_c"), (sim, "_topk")], rank_sites
+    assert set(offset_sites) == {(sim, "certify_planted")}, offset_sites
+    assert cosine_sites == [], cosine_sites
+    assert sorted(readers) == [
+        (sim, "load_embeddings"),
+        (sim, "s5_scalar_quantization"),
+    ], readers
